@@ -1,26 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkEntry.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC like every other entry point: a micros-layout events file
-      // cast through TimestampType is session-timezone dependent
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The driver parses this process's LAST output line; Spark's
-    // "trivially true equals predicate" WARN (Column construction over
-    // literal fixture args) emitted thousands of lines in round 18 and
-    // flooded the captured tail (BENCH_r18 parsed null). Source sites
-    // were fixed (`isin`), but any future literal compare must not be
-    // able to break the bench parse again.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.Column", org.apache.logging.log4j.Level.ERROR)
+    val spark = SparkEntry.session(SparkEntry.cpus)
     // JIT/codegen warmup so the first measured query doesn't absorb
     // session bring-up (~4s of JVM compile on a cold driver)
     spark.range(1000000).selectExpr("sum(id)").collect()

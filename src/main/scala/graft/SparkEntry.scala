@@ -29,6 +29,38 @@ object SparkEntry {
     .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
       sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION", "64m"))
 
+  /** Local core count the mains size their session by:
+    * `SPARK_GRAFT_CPUS`, default 4.
+    */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4)
+
+  private lazy val warehouseDir =
+    java.nio.file.Files.createTempDirectory("graft-warehouse").toString
+
+  /** The one session posture of every main and spec — Bench's:
+    * [[tune]], `local[cpus]` with one shuffle partition per core, UTC
+    * (a micros-layout events file cast through TimestampType is
+    * session-timezone dependent), UI off, and a fresh per-JVM warehouse
+    * dir so `saveAsTable` never collides with another run's tables.
+    */
+  def session(cpus: Int): SparkSession = {
+    val spark = tune(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir", warehouseDir))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    // Spark's "trivially true equals predicate" WARN (Column
+    // construction over literal fixture args) once emitted thousands of
+    // lines and flooded the captured tail Bench's one-line JSON result
+    // is parsed from (BENCH_r18 parsed null).
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.Column", org.apache.logging.log4j.Level.ERROR)
+    spark
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The flagship is the SCD Type-1/Type-2 merge — the reference's whole
     * reason to exist (reference `SCD_script.txt`).

@@ -670,7 +670,7 @@ object Dedup {
     * (`max(struct(score, -id))` — map-side combinable), not a window:
     * a window partitioned by cluster funnels each cluster through one
     * task, and a planted boilerplate MEGA-CLIQUE (one cluster ≫
-    * partition size — the adversarial shape SkewProbe measures) would
+    * partition size — the adversarial shape in SKEWPROBE_r11.json) would
     * sort corpus-scale rows on a single core. The aggregation's
     * partial combine keeps the hot cluster's traffic at
     * one-row-per-map-partition; semantics are identical to

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * expressions as SQL functions, so SQL users get them too:
   *
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions)...
+  * // session builder: .withExtensions(new GraftExtensions)
   * // or: spark.sql.extensions=graft.functions.GraftExtensions
   * spark.sql("SELECT graft_dot(cast(a as array<double>), cast(b as array<double>))")
   * }}}

@@ -90,8 +90,8 @@ object IncrementalSemantic {
   /** Re-train the centroids from the CURRENT member set (growing `c`
     * with the corpus — c ∝ N is the design's scale path) and re-bucket
     * every member under the new centroids. This is the remedy for
-    * seed-frozen centroid drift: [[graft.tools.SemanticDriftProbe]]
-    * measures that frozen seed centroids barely lose planted-pair
+    * seed-frozen centroid drift: `SEMANTIC_DRIFT_r9.json` records
+    * that frozen seed centroids barely lose planted-pair
     * recall but their seed-sized buckets hold N× the population, so
     * per-batch ingest cost grows linearly with the index where a
     * retrained c ∝ N index keeps bucket populations — and per-batch

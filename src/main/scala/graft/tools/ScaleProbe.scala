@@ -21,13 +21,7 @@ object ScaleProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(8)
     val only = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(SparkEntry.cpus)
     // spill observability: cumulative executor spill bytes, sampled
     // around each measurement so every probe row reports its own delta
     val spillBytes = new java.util.concurrent.atomic.AtomicLong
@@ -72,8 +66,10 @@ object ScaleProbe {
       val t0 = System.nanoTime()
       val n = f
       val dt = (System.nanoTime() - t0) / 1e9
-      // listener events drain asynchronously; settle before sampling
-      Thread.sleep(500)
+      // listener events arrive asynchronously; wait for delivery
+      if (!org.apache.spark.graft.ListenerBridge.tryDrain(spark.sparkContext))
+        System.err.println("[scaleprobe] listener bus not drained: " +
+          "this row's spill bytes may be partial")
       (dt, n, spillBytes.get() - s0)
     }
 

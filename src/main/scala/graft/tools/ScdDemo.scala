@@ -2,8 +2,9 @@ package graft.tools
 
 import java.sql.Timestamp
 
+import graft.SparkEntry
 import graft.scd.{KeyMode, MergeOptions, ScdMerge, ScdSchema}
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 /** Runnable usage example: the reference's worked example end-to-end
@@ -12,16 +13,7 @@ import org.apache.spark.sql.types._
   */
 object ScdDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("scd-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("scd-demo-wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(SparkEntry.cpus)
 
     val prodSchema = StructType(Seq(
       StructField("dim_user_id", IntegerType),

@@ -1,8 +1,8 @@
 package graft.tools
 
+import graft.SparkEntry
 import graft.streaming.StatefulSessionize
 import graft.streaming.StatefulSessionize.Event
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Runnable example: stateful streaming sessionization
@@ -11,13 +11,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   */
 object StreamDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("stream-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.session(SparkEntry.cpus)
     implicit val sq = spark.sqlContext
     import spark.implicits._
 
