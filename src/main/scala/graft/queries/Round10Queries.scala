@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.sources.Tables
+import graft.streaming.StreamFold
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -358,23 +359,13 @@ object Round10Queries {
           }
         Round7bQueries.rmTree(tmp)
       }
-      val stream = s.readStream
-        .schema(s.read.parquet(land).schema)
-        .option("maxFilesPerTrigger", 1).parquet(land)
-      val query = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", cp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.pipeline.Packing.appendShards("doc_id",
-            batch.select(col("doc_id"),
-              posexplode(graft.text.TextAnalysis.tokens(col("text")))
-                .as(Seq("pos", "tok"))),
-            cat, "shards", seqLen = 2048, numGroups = 8)
-          ()
-        }
-        .start()
-      query.awaitTermination()
+      StreamFold[Unit](StreamFold.files(s, land), cp) { (_, batch, _) =>
+        graft.pipeline.Packing.appendShards("doc_id",
+          batch.select(col("doc_id"),
+            posexplode(graft.text.TextAnalysis.tokens(col("text")))
+              .as(Seq("pos", "tok"))),
+          cat, "shards", seqLen = 2048, numGroups = 8)
+      }.getOrElse(throw Round7bQueries.noBatch("q180_stream_export"))
       val (bin, _) = graft.pipeline.Packing.readShards(cat, "shards")
       val out = bin
         .select(col("grp"), col("seq"), col("n_tok"),

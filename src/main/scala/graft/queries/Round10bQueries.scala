@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.sources.Tables
+import graft.streaming.StreamFold
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -230,29 +231,15 @@ object Round10bQueries {
       val emb = Tables(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
       val root = Files.createTempDirectory("graft-q193").toString
-      val land = Files.createTempDirectory("graft-q193-land").toString
+      val land = Round7bQueries.landThirds(emb, "vec_id", "graft-q193",
+        (d, k) => d.select((col("vec_id") + k * 10000000L).as("vec_id"),
+          col("embedding")))
       val cp = Files.createTempDirectory("graft-q193-cp").toString
       val cat = new graft.catalog.ParquetCatalog(s, root)
-      (0 to 2).foreach { k =>
-        emb.filter(col("vec_id") % 3 === k)
-          .select((col("vec_id") + k * 10000000L).as("vec_id"),
-            col("embedding"))
-          .coalesce(1).write.mode("append").parquet(land)
-      }
-      val stream = s.readStream
-        .schema(s.read.parquet(land).schema)
-        .option("maxFilesPerTrigger", 1).parquet(land)
-      val query = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", cp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.similarity.VectorStore.appendVectors(batch, "vec_id",
-            "embedding", cat, "vecs")
-          ()
-        }
-        .start()
-      query.awaitTermination()
+      StreamFold[Unit](StreamFold.files(s, land), cp) { (_, batch, _) =>
+        graft.similarity.VectorStore.appendVectors(batch, "vec_id",
+          "embedding", cat, "vecs")
+      }.getOrElse(throw Round7bQueries.noBatch("q193_stream_vectors"))
       val out = graft.similarity.VectorStore.readVectors(cat, "vecs")
         .select(col("vec_id"), col("dims"),
           graft.functions.VectorBinary.weightedSumI8Col(col("buf"))

@@ -358,8 +358,7 @@ object Round11Queries {
           wrapCol(col("doc_id"), col("text")).as("text"))
         .repartition(3, col("doc_id"))
         .write.mode("overwrite").parquet(stage)
-      val stream = s.readStream.schema(s.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
+      val stream = graft.streaming.StreamFold.files(s, stage)
       val (_, gated, pairs) = graft.streaming.StreamingCorpus.ingest(
         stream, "doc_id", "text", cp, cfg)
       Round7bQueries.rmTree(stage); Round7bQueries.rmTree(cp)

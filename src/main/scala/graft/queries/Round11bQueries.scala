@@ -3,6 +3,7 @@ package graft.queries
 import graft.functions.PortableHash
 import graft.graph.WebGraph
 import graft.sources.Tables
+import graft.streaming.StreamFold
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -263,33 +264,18 @@ object Round11bQueries {
     "q214_stream_links" -> ((s, dir) => {
       import graft.graph.IncrementalGraph
       import java.nio.file.Files
+      import org.apache.spark.sql.types._
       val pages = linkedPages(s, dir)
-      val land = Files.createTempDirectory("graft-q214-land").toString
+      val land = Round7bQueries.landThirds(pages, "doc_id", "graft-q214")
       val cp = Files.createTempDirectory("graft-q214-cp").toString
-      (0 to 2).foreach { k =>
-        pages.filter(col("doc_id") % 3 === k)
-          .coalesce(1).write.mode("append").parquet(land)
-      }
-      var idx = IncrementalGraph.GraphIndex(
-        s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("src",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("dst",
-              org.apache.spark.sql.types.LongType)))))
-      val stream = s.readStream
-        .schema(s.read.parquet(land).schema)
-        .option("maxFilesPerTrigger", 1).parquet(land)
-      val query = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", cp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          idx = IncrementalGraph.addBatch(idx, batch, "doc_id", "html")
-          ()
-        }
-        .start()
-      query.awaitTermination()
+      val empty = IncrementalGraph.GraphIndex(StreamFold.unionOr(s, Nil,
+        StructType(Seq(StructField("src", LongType),
+          StructField("dst", LongType)))))
+      val idx = StreamFold[IncrementalGraph.GraphIndex](
+          StreamFold.files(s, land), cp) { (prev, batch, _) =>
+        IncrementalGraph.addBatch(prev.getOrElse(empty), batch,
+          "doc_id", "html")
+      }.getOrElse(throw Round7bQueries.noBatch("q214_stream_links"))
       val nodes = Tables(s, dir, "documents")
         .select(col("doc_id").as("node"))
       val out = IncrementalGraph.rank(idx, nodes, rounds = 5)
@@ -349,30 +335,14 @@ object Round11bQueries {
       import graft.quality.CmsSketch
       import java.nio.file.Files
       val sh = shingleItems(s, dir)
-      val land = Files.createTempDirectory("graft-q217-land").toString
+      val land = Round7bQueries.landThirds(sh, "doc_id", "graft-q217")
       val cp = Files.createTempDirectory("graft-q217-cp").toString
-      (0 to 2).foreach { k =>
-        sh.filter(col("doc_id") % 3 === k)
-          .coalesce(1).write.mode("append").parquet(land)
-      }
-      var sketch: DataFrame = null
-      val stream = s.readStream
-        .schema(s.read.parquet(land).schema)
-        .option("maxFilesPerTrigger", 1).parquet(land)
-      val query = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", cp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
+      val sketch = StreamFold[DataFrame](StreamFold.files(s, land), cp) {
+        (prev, batch, _) =>
           val part = CmsSketch.partials(batch, "item",
             depth = 4, width = 1024)
-          sketch =
-            (if (sketch == null) part else CmsSketch.merge(sketch, part))
-              .localCheckpoint()
-          ()
-        }
-        .start()
-      query.awaitTermination()
+          prev.fold(part)(CmsSketch.merge(_, part)).localCheckpoint()
+      }.getOrElse(throw Round7bQueries.noBatch("q217_stream_cms"))
       val probes = sh.filter(col("doc_id") < 5)
         .select(col("item")).distinct()
       val exact = sh.groupBy(col("item"))
@@ -638,32 +608,16 @@ object Round11bQueries {
     "q227_stream_paragraph_scrub" -> ((s, dir) => {
       import java.nio.file.Files
       val planted = paraPlanted(s, dir)
-      val land = Files.createTempDirectory("graft-q227-land").toString
+      val land = Round7bQueries.landThirds(planted, "doc_id", "graft-q227")
       val cp = Files.createTempDirectory("graft-q227-cp").toString
-      (0 to 2).foreach { k =>
-        planted.filter(col("doc_id") % 3 === k)
-          .coalesce(1).write.mode("append").parquet(land)
-      }
-      var pdf: DataFrame = null
-      val stream = s.readStream
-        .schema(s.read.parquet(land).schema)
-        .option("maxFilesPerTrigger", 1).parquet(land)
-      val query = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", cp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val part = graft.dedup.Dedup.paragraphDf(
-            graft.dedup.Dedup.paragraphs(batch, "doc_id", "ptext"),
-            "doc_id")
-          pdf = (if (pdf == null) part
-                 else pdf.unionByName(part).groupBy(col("ph"))
-                   .agg(sum(col("pdf")).as("pdf")))
-            .localCheckpoint()
-          ()
-        }
-        .start()
-      query.awaitTermination()
+      val pdf = StreamFold[DataFrame](StreamFold.files(s, land), cp) {
+        (prev, batch, _) =>
+          StreamFold.addPartials(prev, graft.dedup.Dedup.paragraphDf(
+              graft.dedup.Dedup.paragraphs(batch, "doc_id", "ptext"),
+              "doc_id"),
+            Seq("ph"), Seq("pdf"))
+      }.getOrElse(throw Round7bQueries.noBatch(
+        "q227_stream_paragraph_scrub"))
       val landed = s.read.parquet(land)
       val out = graft.dedup.Dedup.scrubParagraphsWith(
           landed, "doc_id",

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.sources.Tables
+import graft.streaming.StreamFold
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -612,41 +613,20 @@ object Round14Queries {
     "q251_stream_host_scrub" -> ((s, dir) => {
       import java.nio.file.Files
       val planted = Round13bQueries.boilPages(s, dir)
-      val land = Files.createTempDirectory("graft-q251-land").toString
+      val land = Round7bQueries.landThirds(planted, "doc_id", "graft-q251")
       val cp = Files.createTempDirectory("graft-q251-cp").toString
-      (0 to 2).foreach { k =>
-        planted.filter(col("doc_id") % 3 === k)
-          .coalesce(1).write.mode("append").parquet(land)
-      }
-      var pdf: DataFrame = null
-      var hn: DataFrame = null
-      val stream = s.readStream
-        .schema(s.read.parquet(land).schema)
-        .option("maxFilesPerTrigger", 1).parquet(land)
-      val query = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", cp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val paras = graft.dedup.Dedup
-            .paragraphs(batch, "doc_id", "ptext")
-            .join(batch.select(col("doc_id"), col("host")), Seq("doc_id"))
-          val pPart = graft.dedup.Dedup.hostParagraphDf(paras,
-            "doc_id", "host")
-          val hPart = graft.dedup.Dedup.hostDocCounts(batch, "host")
-          pdf = (if (pdf == null) pPart
-                 else pdf.unionByName(pPart)
-                   .groupBy(col("host"), col("ph"))
-                   .agg(sum(col("pdf")).as("pdf")))
-            .localCheckpoint()
-          hn = (if (hn == null) hPart
-                else hn.unionByName(hPart).groupBy(col("host"))
-                  .agg(sum(col("__hn")).as("__hn")))
-            .localCheckpoint()
-          ()
-        }
-        .start()
-      query.awaitTermination()
+      val (pdf, hn) = StreamFold[(DataFrame, DataFrame)](
+          StreamFold.files(s, land), cp) { (prev, batch, _) =>
+        val paras = graft.dedup.Dedup
+          .paragraphs(batch, "doc_id", "ptext")
+          .join(batch.select(col("doc_id"), col("host")), Seq("doc_id"))
+        (StreamFold.addPartials(prev.map(_._1),
+            graft.dedup.Dedup.hostParagraphDf(paras, "doc_id", "host"),
+            Seq("host", "ph"), Seq("pdf")),
+          StreamFold.addPartials(prev.map(_._2),
+            graft.dedup.Dedup.hostDocCounts(batch, "host"),
+            Seq("host"), Seq("__hn")))
+      }.getOrElse(throw Round7bQueries.noBatch("q251_stream_host_scrub"))
       val landed = s.read.parquet(land)
       val out = graft.dedup.Dedup.scrubHostBoilerplateWith(
           landed, "doc_id", "host", "ptext", pdf, hn,

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.sources.Tables
+import graft.streaming.StreamFold
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -213,66 +214,43 @@ object Round15Queries {
       import java.nio.file.Files
       import graft.graph.WebGraph
       val pages = Round14Queries.capstonePages(s, dir)
-      val land = Files.createTempDirectory("graft-q259-land").toString
+      val land = Round7bQueries.landThirds(pages, "doc_id", "graft-q259")
       val cp = Files.createTempDirectory("graft-q259-cp").toString
-      (0 to 2).foreach { k =>
-        pages.filter(col("doc_id") % 3 === k)
-          .coalesce(1).write.mode("append").parquet(land)
-      }
       def hostOf(df: DataFrame): DataFrame =
         graft.text.Html.extract(df, "doc_id", "html")
           .select(col("doc_id"), col("text"),
             concat(lit("d"), (col("doc_id") % 20).cast("string"),
               lit(".example.com")).as("host"))
-      var pdf: DataFrame = null
-      var hn: DataFrame = null
-      var edges: DataFrame = null
-      var exs: DataFrame = null
-      val stream = s.readStream
-        .schema(s.read.parquet(land).schema)
-        .option("maxFilesPerTrigger", 1).parquet(land)
-      val query = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", cp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // HTML extraction is the batch's dominant per-row cost and
-          // feeds THREE consumers in this frame (paragraphs, the host
-          // projection, host doc counts) plus the end-of-stream scrub
-          // — checkpoint it ONCE per batch (guide §1.3/§5: reuse, not
-          // recompute; extraction is per-row, so the accumulated
-          // batches equal one extraction pass over the landed corpus)
-          val ex = hostOf(batch).localCheckpoint()
-          val paras = graft.dedup.Dedup.paragraphs(ex, "doc_id", "text")
-            .join(ex.select(col("doc_id"), col("host")), Seq("doc_id"))
-          val pPart = graft.dedup.Dedup.hostParagraphDf(paras,
-            "doc_id", "host")
-          val hPart = graft.dedup.Dedup.hostDocCounts(ex, "host")
-          val ePart = WebGraph.docEdges(
-            WebGraph.links(batch, "doc_id", "html"))
-          pdf = (if (pdf == null) pPart
-                 else pdf.unionByName(pPart)
-                   .groupBy(col("host"), col("ph"))
-                   .agg(sum(col("pdf")).as("pdf")))
-            .localCheckpoint()
-          hn = (if (hn == null) hPart
-                else hn.unionByName(hPart).groupBy(col("host"))
-                  .agg(sum(col("__hn")).as("__hn")))
-            .localCheckpoint()
-          edges = (if (edges == null) ePart
-                   else edges.unionByName(ePart))
-            .localCheckpoint()
-          exs = if (exs == null) ex else exs.unionByName(ex)
-          ()
-        }
-        .start()
-      query.awaitTermination()
-      // the accumulated per-batch extractions ARE the corpus
-      // extraction (per-row, batches doc-disjoint and exhaustive) —
-      // the end-of-stream scrub reads them instead of re-extracting
-      // the landed corpus (which its hosts/paragraphs consumers would
-      // then re-run 3×)
-      val exAll = exs
+      // fold state: (host-paragraph df, host doc counts, edges,
+      // per-batch extractions)
+      type Acc = (DataFrame, DataFrame, DataFrame, DataFrame)
+      val (pdf, hn, edges, exAll) = StreamFold[Acc](
+          StreamFold.files(s, land), cp) { (prev, batch, _) =>
+        // HTML extraction is the batch's dominant per-row cost and
+        // feeds THREE consumers in this frame (paragraphs, the host
+        // projection, host doc counts) plus the end-of-stream scrub
+        // — checkpoint it ONCE per batch (guide §1.3/§5: reuse, not
+        // recompute; extraction is per-row, so the accumulated
+        // batches equal one extraction pass over the landed corpus)
+        val ex = hostOf(batch).localCheckpoint()
+        val paras = graft.dedup.Dedup.paragraphs(ex, "doc_id", "text")
+          .join(ex.select(col("doc_id"), col("host")), Seq("doc_id"))
+        val ePart = WebGraph.docEdges(
+          WebGraph.links(batch, "doc_id", "html"))
+        (StreamFold.addPartials(prev.map(_._1),
+            graft.dedup.Dedup.hostParagraphDf(paras, "doc_id", "host"),
+            Seq("host", "ph"), Seq("pdf")),
+          StreamFold.addPartials(prev.map(_._2),
+            graft.dedup.Dedup.hostDocCounts(ex, "host"),
+            Seq("host"), Seq("__hn")),
+          prev.fold(ePart)(_._3.unionByName(ePart)).localCheckpoint(),
+          // the accumulated per-batch extractions ARE the corpus
+          // extraction (per-row, batches doc-disjoint and exhaustive) —
+          // the end-of-stream scrub reads them instead of re-extracting
+          // the landed corpus (which its hosts/paragraphs consumers
+          // would then re-run 3×)
+          prev.fold(ex)(_._4.unionByName(ex)))
+      }.getOrElse(throw Round7bQueries.noBatch("q259_stream_crawl_release"))
       val scrub = graft.dedup.Dedup.scrubHostBoilerplateWith(exAll,
           "doc_id", "host", "text", pdf, hn,
           minPpm = 500000L, minDf = 2L)

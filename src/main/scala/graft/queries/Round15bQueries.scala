@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.sources.Tables
+import graft.streaming.StreamFold
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -510,21 +511,10 @@ object Round15bQueries {
         urlOf(col("doc_id")).as("uri"),
         Warc.httpResponseBytes(lit(200), lit("text/html"), cs,
           lit(""), body).as("payload"))
-      val land = Files.createTempDirectory("graft-q268-land").toString
+      val land = Round7bQueries.landThirds(pages, "doc_id", "graft-q268")
       val cp = Files.createTempDirectory("graft-q268-cp").toString
-      (0 to 2).foreach { k =>
-        pages.filter(col("doc_id") % 3 === k)
-          .coalesce(1).write.mode("append").parquet(land)
-      }
-      var agg: DataFrame = null
-      val stream = s.readStream
-        .schema(s.read.parquet(land).schema)
-        .option("maxFilesPerTrigger", 1).parquet(land)
-      val query = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", cp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
+      val agg = StreamFold[DataFrame](StreamFold.files(s, land), cp) {
+        (prev, batch, _) =>
           val parsed = batch.select(col("doc_id"),
               Warc.payloadText(col("payload")).as("pt"),
               Warc.bodyBytes(col("payload")).as("bb"))
@@ -547,18 +537,9 @@ object Round15bQueries {
                 .as("n_clean"),
               sum(col("hi")).as("sum_hi"),
               sum(col("nch")).as("sum_chars"))
-          agg = (if (agg == null) part
-                 else agg.unionByName(part).groupBy(col("dom"))
-                   .agg(sum(col("n_records")).as("n_records"),
-                     sum(col("n_latin1")).as("n_latin1"),
-                     sum(col("n_clean")).as("n_clean"),
-                     sum(col("sum_hi")).as("sum_hi"),
-                     sum(col("sum_chars")).as("sum_chars")))
-            .localCheckpoint()
-          ()
-        }
-        .start()
-      query.awaitTermination()
+          StreamFold.addPartials(prev, part, Seq("dom"), Seq("n_records",
+            "n_latin1", "n_clean", "sum_hi", "sum_chars"))
+      }.getOrElse(throw Round7bQueries.noBatch("q268_stream_charset_ingest"))
       val out = agg
         .select(col("dom"), col("n_records"), col("n_latin1"),
           col("n_clean"), col("sum_hi"), col("sum_chars"))

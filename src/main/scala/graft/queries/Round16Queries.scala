@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.sources.Tables
+import graft.streaming.StreamFold
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -557,21 +558,10 @@ object Round16Queries {
         when(is304, Warc.httpResponse(lit(304), lit("text/html"),
           lit(""))).otherwise(Warc.httpResponse(lit(200),
           lit("text/html"), cur)).as("payload"))
-      val land = Files.createTempDirectory("graft-q276-land").toString
+      val land = Round7bQueries.landThirds(pages, "doc_id", "graft-q276")
       val cp = Files.createTempDirectory("graft-q276-cp").toString
-      (0 to 2).foreach { k =>
-        pages.filter(col("doc_id") % 3 === k)
-          .coalesce(1).write.mode("append").parquet(land)
-      }
-      var agg: DataFrame = null
-      val stream = s.readStream
-        .schema(s.read.parquet(land).schema)
-        .option("maxFilesPerTrigger", 1).parquet(land)
-      val query = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", cp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
+      val agg = StreamFold[DataFrame](StreamFold.files(s, land), cp) {
+        (prev, batch, _) =>
           val back = batch.select(col("url"), col("doc_id"),
             Warc.httpStatus(col("payload")).as("st"),
             Warc.httpBody(col("payload")).as("fetched"))
@@ -598,19 +588,9 @@ object Round16Queries {
                 .cast("long").as("bytes_saved"),
               sum(when(col("cm"), 1).otherwise(0)).cast("long")
                 .as("n_clean"))
-          agg = (if (agg == null) part
-                 else agg.unionByName(part).groupBy(col("dom"))
-                   .agg(sum(col("n_urls")).as("n_urls"),
-                     sum(col("n_200")).as("n_200"),
-                     sum(col("n_304")).as("n_304"),
-                     sum(col("bytes_fetched")).as("bytes_fetched"),
-                     sum(col("bytes_saved")).as("bytes_saved"),
-                     sum(col("n_clean")).as("n_clean")))
-            .localCheckpoint()
-          ()
-        }
-        .start()
-      query.awaitTermination()
+          StreamFold.addPartials(prev, part, Seq("dom"), Seq("n_urls",
+            "n_200", "n_304", "bytes_fetched", "bytes_saved", "n_clean"))
+      }.getOrElse(throw Round7bQueries.noBatch("q276_stream_conditional"))
       val out = agg
         .select(col("dom"), col("n_urls"), col("n_200"), col("n_304"),
           col("bytes_fetched"), col("bytes_saved"), col("n_clean"))

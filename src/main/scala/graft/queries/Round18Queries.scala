@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.sources.Tables
+import graft.streaming.StreamFold
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -850,32 +851,14 @@ object Round18Queries {
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val pages = cjkPages(s, dir)
-      val land = Files.createTempDirectory("graft-q296-land").toString
+      val land = Round7bQueries.landThirds(pages, "doc_id", "graft-q296")
       val cp = Files.createTempDirectory("graft-q296-cp").toString
-      (0 to 2).foreach { k =>
-        pages.filter(col("doc_id") % 3 === k)
-          .coalesce(1).write.mode("append").parquet(land)
-      }
-      var agg: DataFrame = null
-      val stream = s.readStream
-        .schema(s.read.parquet(land).schema)
-        .option("maxFilesPerTrigger", 1).parquet(land)
-      val query = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", cp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val part = cjkPartials(
-            batch.select(col("doc_id"), col("payload")), docs)
-          val folds = CjkCols.map(c => sum(col(c)).as(c))
-          agg = (if (agg == null) part
-                 else agg.unionByName(part).groupBy(col("dom"))
-                   .agg(folds.head, folds.tail: _*))
-            .localCheckpoint()
-          ()
-        }
-        .start()
-      query.awaitTermination()
+      val agg = StreamFold[DataFrame](StreamFold.files(s, land), cp) {
+        (prev, batch, _) =>
+          StreamFold.addPartials(prev, cjkPartials(
+              batch.select(col("doc_id"), col("payload")), docs),
+            Seq("dom"), CjkCols)
+      }.getOrElse(throw Round7bQueries.noBatch("q296_stream_cjk_ingest"))
       val out = agg
         .select((col("dom") +: CjkCols.map(col)): _*)
         .orderBy(col("dom"))

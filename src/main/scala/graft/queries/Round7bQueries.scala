@@ -2,6 +2,7 @@ package graft.queries
 
 import java.nio.file.Files
 
+import graft.streaming.StreamFold
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,6 +25,27 @@ object Round7bQueries {
     }
   }
 
+  /** Land `df` in a fresh `<prefix>-land` temp directory as three
+    * single-file slices, `key % 3` = 0, 1, 2 in that order, each mapped
+    * by `slice(part, k)` first: the file split the inline streaming
+    * doors drain one file per micro-batch.
+    */
+  private[graft] def landThirds(df: DataFrame, key: String, prefix: String,
+      slice: (DataFrame, Int) => DataFrame = (d, _) => d): String = {
+    val land = Files.createTempDirectory(s"$prefix-land").toString
+    (0 to 2).foreach { k =>
+      slice(df.filter(col(key) % 3 === k), k)
+        .coalesce(1).write.mode("append").parquet(land)
+    }
+    land
+  }
+
+  /** The error an inline streaming door raises when its fold saw no
+    * micro-batch, in place of a null accumulator.
+    */
+  private[graft] def noBatch(query: String): IllegalStateException =
+    new IllegalStateException(s"$query: stream delivered no micro-batch")
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Streaming near-dup ingestion, run FOR REAL: the planted corpus
@@ -43,11 +65,8 @@ object Round7bQueries {
       PipelineQueries.corpus(s, dir)
         .repartition(3, col("doc_id"))
         .write.mode("overwrite").parquet(stage)
-      val schema = s.read.parquet(stage).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
       val (_, pairs) = graft.streaming.StreamingLsh.ingest(
-        stream, "doc_id", "text", cp)
+        StreamFold.files(s, stage), "doc_id", "text", cp)
       // pairs + index relations are localCheckpoint-materialized, so the
       // staging corpus and stream checkpoint are deletable immediately
       // (a bench sweep would otherwise leave ~12 corpus copies in /tmp)
@@ -85,8 +104,7 @@ object Round7bQueries {
       full.filter(col("vec_id") % 3 =!= 0)
         .repartition(2, col("vec_id"))
         .write.mode("overwrite").parquet(stage)
-      val stream = s.readStream.schema(s.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
+      val stream = StreamFold.files(s, stage)
       val (idx, streamed) = graft.streaming.StreamingSemantic.ingest(
         stream, "vec_id", "embedding", cp, i0, threshold = 0.99)
       rmTree(stage); rmTree(cp)

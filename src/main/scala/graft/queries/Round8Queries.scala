@@ -63,8 +63,7 @@ object Round8Queries {
       PipelineQueries.corpus(s, dir)
         .repartition(3, col("doc_id"))
         .write.mode("overwrite").parquet(stage)
-      val stream = s.readStream.schema(s.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
+      val stream = graft.streaming.StreamFold.files(s, stage)
       val (_, gated, pairs) = graft.streaming.StreamingCorpus.ingest(
         stream, "doc_id", "text", cp)
       // gated/pairs are per-batch localCheckpoint'd — the resolve plan
@@ -165,8 +164,7 @@ object Round8Queries {
       audioMedia(s, dir).toDF()
         .repartition(3, col("doc_id"))
         .write.mode("overwrite").parquet(stage)
-      val stream = s.readStream.schema(s.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
+      val stream = graft.streaming.StreamFold.files(s, stage)
       val (idx, pairs) = graft.streaming.StreamingAudio.ingest(stream, cp)
       Round7bQueries.rmTree(stage); Round7bQueries.rmTree(cp)
       IncrementalAudio.clusters(idx, pairs).orderBy(col("id"))

@@ -166,9 +166,7 @@ object Round9Queries {
         "snap0.parquet", 1700000000000L)
       land(secondSnapshot(s, dir).withColumn("seq", lit(2L)),
         "snap1.parquet", 1700000100000L)
-      val stream = s.readStream
-        .schema(s.read.parquet(stage.toString).schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage.toString)
+      val stream = graft.streaming.StreamFold.files(s, stage.toString)
       val asOfs = Map(
         0L -> Timestamp.valueOf("2024-07-01 00:00:00"),
         1L -> Timestamp.valueOf("2024-08-01 00:00:00"))
@@ -292,8 +290,7 @@ object Round9Queries {
       PipelineQueries.corpus(s, dir)
         .repartition(3, col("doc_id"))
         .write.mode("overwrite").parquet(stage)
-      val stream = s.readStream.schema(s.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
+      val stream = graft.streaming.StreamFold.files(s, stage)
       val (idx, gated, pairs) = graft.streaming.StreamingCorpus.ingest(
         stream, "doc_id", "text", cp, cfg)
       Round7bQueries.rmTree(stage); Round7bQueries.rmTree(cp)
@@ -362,8 +359,7 @@ object Round9Queries {
       Tables(s, dir, "documents").select(col("doc_id"), col("text"))
         .repartition(3, col("doc_id"))
         .write.mode("overwrite").parquet(stage)
-      val stream = s.readStream.schema(s.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
+      val stream = graft.streaming.StreamFold.files(s, stage)
       val (_, matches) = graft.streaming.StreamingWinnow.ingest(
         stream, "doc_id", "text", cp)
       val out = matches.orderBy(col("a"), col("b")).localCheckpoint()

@@ -66,8 +66,7 @@ object Round9bQueries {
       Round7Queries.bmpMedia(s, dir).toDF()
         .repartition(3, col("doc_id"))
         .write.mode("overwrite").parquet(stage)
-      val stream = s.readStream.schema(s.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
+      val stream = graft.streaming.StreamFold.files(s, stage)
       val (idx, pairs) = graft.streaming.StreamingImage.ingest(stream, cp)
       Round7bQueries.rmTree(stage); Round7bQueries.rmTree(cp)
       IncrementalPerceptual.clusters(idx, pairs).orderBy(col("id"))

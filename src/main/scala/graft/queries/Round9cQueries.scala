@@ -77,8 +77,7 @@ object Round9cQueries {
       val cp = Files.createTempDirectory("graft-q159-cp").toString
       PipelineQueries.corpus(s, dir).repartition(3, col("doc_id"))
         .write.mode("overwrite").parquet(stage)
-      val stream = s.readStream.schema(s.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
+      val stream = graft.streaming.StreamFold.files(s, stage)
       val (_, gated, pairs) = graft.streaming.StreamingCorpus.ingest(
         stream, "doc_id", "text", cp, cfg)
       Round7bQueries.rmTree(stage); Round7bQueries.rmTree(cp)
@@ -143,8 +142,7 @@ object Round9cQueries {
       docs.filter(srcnum % 2 === 0).select(col("doc_id"), col("text"))
         .repartition(3, col("doc_id"))
         .write.mode("overwrite").parquet(stage)
-      val stream = s.readStream.schema(s.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
+      val stream = graft.streaming.StreamFold.files(s, stage)
       val counts = graft.streaming.StreamingLm.ingest(stream, "doc_id",
         "text", cp)
       val out = graft.text.Repetition.backoffScoreWith(counts,
@@ -225,8 +223,7 @@ object Round9cQueries {
       planted.filter(expr("(doc_id div 20) % 2") === 1)
         .repartition(3, col("doc_id"))
         .write.mode("overwrite").parquet(stage)
-      val stream = s.readStream.schema(s.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
+      val stream = graft.streaming.StreamFold.files(s, stage)
       val cur = graft.streaming.StreamingDrift.ingest(stream, "doc_id",
         "source", "text", cp, Round9bQueries.DsirDim)
       val out = graft.quality.Drift.fromCounts(base, cur, "source")

@@ -1,10 +1,8 @@
 package graft.streaming
 
-import scala.collection.mutable.ArrayBuffer
-
 import graft.multimodal.{AudioFp, IncrementalAudio}
 import graft.multimodal.IncrementalAudio.AudioIndex
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -24,9 +22,6 @@ import org.apache.spark.sql.types._
   */
 object StreamingAudio {
 
-  val PairsSchema: StructType = StructType(Seq(
-    StructField("a", LongType), StructField("b", LongType)))
-
   /** Drain a stream of `(doc_id: long, payload: binary, n_bytes: int)`
     * rows into an incremental audio index; returns the final index and
     * ALL near-pairs discovered across the run. Blocks until the stream
@@ -37,38 +32,30 @@ object StreamingAudio {
       maxHamming: Int = 3, bands: Int = 4,
       trigger: Trigger = Trigger.AvailableNow(),
       onBatch: AudioIndex => Unit = _ => ()): (AudioIndex, DataFrame) = {
-    val spark = stream.sparkSession
-    @volatile var idx: Option[AudioIndex] = None
-    val pairBatches = ArrayBuffer.empty[DataFrame]
-    val query = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        implicit val sp: SparkSession = spark
-        import sp.implicits._
-        val media = batch
-          .select(col("doc_id"), col("payload"), col("n_bytes"))
-          .as[AudioFp.AudioMedia]
-        val fps = AudioFp.fingerprints(media)
-        val (next, newPairs) = idx match {
-          case None => IncrementalAudio.build(fps, maxHamming, bands)
-          case Some(i) => IncrementalAudio.addBatch(i, fps, maxHamming)
-        }
-        idx = Some(next)
-        pairBatches += newPairs.localCheckpoint()
-        onBatch(next)
+    implicit val spark: SparkSession = stream.sparkSession
+    import spark.implicits._
+    val folded = StreamFold[(AudioIndex, Vector[DataFrame])](stream,
+        checkpointDir, trigger) { (prev, batch, _) =>
+      val media = batch
+        .select(col("doc_id"), col("payload"), col("n_bytes"))
+        .as[AudioFp.AudioMedia]
+      val fps = AudioFp.fingerprints(media)
+      val (next, newPairs) = prev match {
+        case None => IncrementalAudio.build(fps, maxHamming, bands)
+        case Some((i, _)) => IncrementalAudio.addBatch(i, fps, maxHamming)
       }
-      .start()
-    query.awaitTermination()
-    val pairs = pairBatches.reduceOption(_ unionByName _)
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], PairsSchema))
+      val pairBatches = prev.toVector.flatMap(_._2) :+
+        newPairs.localCheckpoint()
+      onBatch(next)
+      (next, pairBatches)
+    }
+    val pairs = StreamFold.unionOr(spark, folded.toSeq.flatMap(_._2),
+      StreamFold.PairsSchema)
     lazy val emptyIdx = IncrementalAudio.build(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StreamFold.unionOr(spark, Nil,
         StructType(Seq(StructField("id", LongType),
           StructField("afp", LongType)))),
       maxHamming, bands)._1
-    (idx.getOrElse(emptyIdx), pairs)
+    (folded.fold(emptyIdx)(_._1), pairs)
   }
 }

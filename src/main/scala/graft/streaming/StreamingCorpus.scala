@@ -1,10 +1,8 @@
 package graft.streaming
 
-import scala.collection.mutable.ArrayBuffer
-
 import graft.dedup.{Dedup, IncrementalLsh, LshIndex}
 import graft.pipeline.CorpusPipeline
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -51,41 +49,35 @@ object StreamingCorpus {
       trigger: Trigger = Trigger.AvailableNow(),
       onBatch: LshIndex => Unit = _ => ()): (LshIndex, DataFrame, DataFrame) = {
     val spark = stream.sparkSession
-    @volatile var idx: Option[LshIndex] = None
-    val gatedBatches = ArrayBuffer.empty[DataFrame]
-    val pairBatches = ArrayBuffer.empty[DataFrame]
-    val query = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val gated = CorpusPipeline.bandStages(
-          CorpusPipeline.rowGates(batch, idCol, textCol, cfg),
-          idCol, textCol, cfg).localCheckpoint()
-        val (next, newPairs) = idx match {
-          case None => IncrementalLsh.build(gated, idCol, textCol,
-            cfg.jaccardThreshold)
-          case Some(i) => IncrementalLsh.addBatch(i, gated, idCol, textCol,
-            cfg.jaccardThreshold)
-        }
-        idx = Some(next)
-        gatedBatches += gated
-        pairBatches += newPairs.localCheckpoint()
-        onBatch(next)
+    val folded = StreamFold[(LshIndex, Vector[DataFrame], Vector[DataFrame])](
+        stream, checkpointDir, trigger) { (prev, batch, _) =>
+      val gated = CorpusPipeline.bandStages(
+        CorpusPipeline.rowGates(batch, idCol, textCol, cfg),
+        idCol, textCol, cfg).localCheckpoint()
+      val (next, newPairs) = prev match {
+        case None => IncrementalLsh.build(gated, idCol, textCol,
+          cfg.jaccardThreshold)
+        case Some((i, _, _)) => IncrementalLsh.addBatch(i, gated, idCol,
+          textCol, cfg.jaccardThreshold)
       }
-      .start()
-    query.awaitTermination()
+      val gatedBatches = prev.toVector.flatMap(_._2) :+ gated
+      val pairBatches = prev.toVector.flatMap(_._3) :+
+        newPairs.localCheckpoint()
+      onBatch(next)
+      (next, gatedBatches, pairBatches)
+    }
     val gatedSchema = StructType(Seq(
       stream.schema(idCol), stream.schema(textCol),
       StructField("quality", DoubleType), StructField("lang_pred", StringType)))
-    val gated = gatedBatches.reduceOption(_ unionByName _)
-      .getOrElse(empty(spark, gatedSchema))
-    val pairs = pairBatches.reduceOption(_ unionByName _)
-      .getOrElse(empty(spark, StreamingLsh.PairsSchema))
+    val gated = StreamFold.unionOr(spark, folded.toSeq.flatMap(_._2),
+      gatedSchema)
+    val pairs = StreamFold.unionOr(spark, folded.toSeq.flatMap(_._3),
+      StreamingLsh.PairsSchema)
     lazy val emptyIdx = IncrementalLsh.build(
-      empty(spark, StructType(Seq(stream.schema(idCol), stream.schema(textCol)))),
+      StreamFold.unionOr(spark, Nil,
+        StructType(Seq(stream.schema(idCol), stream.schema(textCol)))),
       idCol, textCol, cfg.jaccardThreshold)._1
-    (idx.getOrElse(emptyIdx), gated, pairs)
+    (folded.fold(emptyIdx)(_._1), gated, pairs)
   }
 
   /** Resolve the final survivors from accumulated gate survivors and
@@ -136,15 +128,19 @@ object StreamingCorpus {
     * quantity is per-doc-pair, so restricting accumulated pairs to
     * exact-dedup survivors recovers exactly the one-shot pair set —
     * q147's oracle is q144's SQL verbatim under a different batching.
-    */
-  /** @param trainShingles optional per-doc hashed-shingle relation
+    *
+    * @param trainShingles optional per-doc hashed-shingle relation
     *   covering AT LEAST the gate survivors — the ingest INDEX already
     *   accumulated exactly this (`idx.shingles`, checkpointed per
     *   batch), so the caller passes it and decontamination reuses it
     *   via a semi-join restriction instead of re-shingling the
     *   released corpus (shingling is per-doc, so the restriction
     *   equals shingling the survivors directly — the q172/q173
-    *   shared-chain argument applied to the streaming door).
+    *   shared-chain argument applied to the streaming door). It must
+    *   be shingled at `n = 3`: the eval side is shingled at
+    *   [[Dedup.hashedShingles]]' default `n = 3`, which is also the `n`
+    *   [[ingest]] always builds its index with. A relation shingled at
+    *   any other `n` would give an asymmetric Jaccard.
     */
   def resolveRelease(gated: DataFrame, pairs: DataFrame,
       evalDocs: DataFrame, idCol: String, textCol: String,
@@ -190,7 +186,4 @@ object StreamingCorpus {
       .select(id, col("quality"), col("lang_pred"), col("cluster"),
         col("split"), col("n_tok"))
   }
-
-  private def empty(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
 import graft.quality.Drift
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
@@ -45,36 +44,17 @@ object StreamingDrift {
       textCol: String, checkpointDir: String, dim: Int = 256,
       trigger: Trigger = Trigger.AvailableNow(),
       baseline: Option[DataFrame] = None,
-      onBatch: (Long, DataFrame) => Unit = (_, _) => ()): DataFrame = {
-    val spark = stream.sparkSession
-    // @volatile for the cross-thread handoff: appended on the streaming
-    // micro-batch thread, read on the caller thread after
-    // awaitTermination (the StreamingLm pattern).
-    @volatile var acc: Option[DataFrame] = None
-    val query = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val part = Drift.bucketCounts(batch, idCol, srcCol, textCol, dim)
-        val merged = acc match {
-          case Some(prev) => prev.unionByName(part)
-            .groupBy(col(srcCol), col("bucket"))
-            .agg(sum(col("n")).as("n"))
-          case None => part
-        }
-        val mat = merged.localCheckpoint()
-        acc = Some(mat)
+      onBatch: (Long, DataFrame) => Unit = (_, _) => ()): DataFrame =
+    StreamFold[DataFrame](stream, checkpointDir, trigger) {
+      (prev, batch, batchId) =>
+        val acc = StreamFold.addPartials(prev,
+          Drift.bucketCounts(batch, idCol, srcCol, textCol, dim),
+          Seq(srcCol, "bucket"), Seq("n"))
         baseline.foreach { base =>
-          onBatch(batchId, Drift.fromCounts(base, mat, srcCol))
+          onBatch(batchId, Drift.fromCounts(base, acc, srcCol))
         }
-        ()
-      }
-      .start()
-    query.awaitTermination()
-    val schema = StructType(Seq(stream.schema(srcCol),
-      StructField("bucket", LongType), StructField("n", LongType)))
-    acc.getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema))
-  }
+        acc
+    }.getOrElse(StreamFold.unionOr(stream.sparkSession, Nil,
+      StructType(Seq(stream.schema(srcCol),
+        StructField("bucket", LongType), StructField("n", LongType)))))
 }

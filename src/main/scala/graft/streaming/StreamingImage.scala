@@ -1,10 +1,8 @@
 package graft.streaming
 
-import scala.collection.mutable.ArrayBuffer
-
 import graft.multimodal.{IncrementalPerceptual, Multimodal, Perceptual}
 import graft.multimodal.IncrementalPerceptual.PerceptualIndex
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -25,9 +23,6 @@ import org.apache.spark.sql.types._
   */
 object StreamingImage {
 
-  val PairsSchema: StructType = StructType(Seq(
-    StructField("a", LongType), StructField("b", LongType)))
-
   /** Drain a stream of `(doc_id: long, payload: binary, n_bytes: int)`
     * rows into an incremental perceptual index; returns the final
     * index and ALL near-pairs discovered across the run. Blocks until
@@ -40,38 +35,31 @@ object StreamingImage {
       trigger: Trigger = Trigger.AvailableNow(),
       onBatch: PerceptualIndex => Unit = _ => ())
       : (PerceptualIndex, DataFrame) = {
-    val spark = stream.sparkSession
-    @volatile var idx: Option[PerceptualIndex] = None
-    val pairBatches = ArrayBuffer.empty[DataFrame]
-    val query = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        implicit val sp: SparkSession = spark
-        import sp.implicits._
-        val media = batch
-          .select(col("doc_id"), col("payload"), col("n_bytes"))
-          .as[Multimodal.BmpMedia]
-        val hashes = Perceptual.dHashes(media)
-        val (next, newPairs) = idx match {
-          case None => IncrementalPerceptual.build(hashes, maxHamming, bands)
-          case Some(i) => IncrementalPerceptual.addBatch(i, hashes, maxHamming)
-        }
-        idx = Some(next)
-        pairBatches += newPairs.localCheckpoint()
-        onBatch(next)
+    implicit val spark: SparkSession = stream.sparkSession
+    import spark.implicits._
+    val folded = StreamFold[(PerceptualIndex, Vector[DataFrame])](stream,
+        checkpointDir, trigger) { (prev, batch, _) =>
+      val media = batch
+        .select(col("doc_id"), col("payload"), col("n_bytes"))
+        .as[Multimodal.BmpMedia]
+      val hashes = Perceptual.dHashes(media)
+      val (next, newPairs) = prev match {
+        case None => IncrementalPerceptual.build(hashes, maxHamming, bands)
+        case Some((i, _)) =>
+          IncrementalPerceptual.addBatch(i, hashes, maxHamming)
       }
-      .start()
-    query.awaitTermination()
-    val pairs = pairBatches.reduceOption(_ unionByName _)
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], PairsSchema))
+      val pairBatches = prev.toVector.flatMap(_._2) :+
+        newPairs.localCheckpoint()
+      onBatch(next)
+      (next, pairBatches)
+    }
+    val pairs = StreamFold.unionOr(spark, folded.toSeq.flatMap(_._2),
+      StreamFold.PairsSchema)
     lazy val emptyIdx = IncrementalPerceptual.build(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StreamFold.unionOr(spark, Nil,
         StructType(Seq(StructField("id", LongType),
           StructField("dhash", LongType)))),
       maxHamming, bands)._1
-    (idx.getOrElse(emptyIdx), pairs)
+    (folded.fold(emptyIdx)(_._1), pairs)
   }
 }

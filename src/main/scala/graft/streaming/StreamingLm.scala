@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.text.Repetition
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
@@ -22,28 +22,13 @@ object StreamingLm {
     */
   def ingest(stream: DataFrame, idCol: String, textCol: String,
       checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): Repetition.LmCounts = {
-    val spark = stream.sparkSession
-    @volatile var acc: Option[Repetition.LmCounts] = None
-    val query = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      trigger: Trigger = Trigger.AvailableNow()): Repetition.LmCounts =
+    StreamFold[Repetition.LmCounts](stream, checkpointDir, trigger) {
+      (prev, batch, _) =>
         val c = Repetition.fitBackoffMaterialized(batch, idCol, textCol)
-        acc = Some(acc.map(_.merge(c).checkpointed()).getOrElse(c))
-        ()
-      }
-      .start()
-    query.awaitTermination()
-    acc.getOrElse {
-      val empty = emptyLike(spark,
-        StructType(Seq(stream.schema(idCol), stream.schema(textCol))))
-      Repetition.fitBackoff(empty, idCol, textCol)
-    }
-  }
-
-  private def emptyLike(spark: SparkSession,
-      schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+        prev.fold(c)(_.merge(c).checkpointed())
+    }.getOrElse(Repetition.fitBackoff(
+      StreamFold.unionOr(stream.sparkSession, Nil,
+        StructType(Seq(stream.schema(idCol), stream.schema(textCol)))),
+      idCol, textCol))
 }

@@ -1,9 +1,7 @@
 package graft.streaming
 
-import scala.collection.mutable.ArrayBuffer
-
 import graft.dedup.{IncrementalLsh, LshIndex}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -54,39 +52,29 @@ object StreamingLsh {
       trigger: Trigger = Trigger.AvailableNow(),
       onBatch: LshIndex => Unit = _ => ()): (LshIndex, DataFrame) = {
     val spark = stream.sparkSession
-    @volatile var idx: Option[LshIndex] = None
-    val pairBatches = ArrayBuffer.empty[DataFrame]
-    val query = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.select(col(idCol), col(textCol))
-        val (next, newPairs) = idx match {
-          case None => IncrementalLsh.build(b, idCol, textCol,
-            threshold, bands, rowsPerBand, n)
-          case Some(i) => IncrementalLsh.addBatch(i, b, idCol, textCol,
-            threshold, bands, rowsPerBand, n)
-        }
-        idx = Some(next)
-        pairBatches += newPairs.localCheckpoint()
-        onBatch(next)
+    val b = (df: DataFrame) => df.select(col(idCol), col(textCol))
+    val folded = StreamFold[(LshIndex, Vector[DataFrame])](stream,
+        checkpointDir, trigger) { (prev, batch, _) =>
+      val (next, newPairs) = prev match {
+        case None => IncrementalLsh.build(b(batch), idCol, textCol,
+          threshold, bands, rowsPerBand, n)
+        case Some((i, _)) => IncrementalLsh.addBatch(i, b(batch), idCol,
+          textCol, threshold, bands, rowsPerBand, n)
       }
-      .start()
-    query.awaitTermination()
-    val pairs = pairBatches.reduceOption(_ unionByName _)
-      .getOrElse(emptyPairs(spark))
+      val pairBatches = prev.toVector.flatMap(_._2) :+
+        newPairs.localCheckpoint()
+      onBatch(next)
+      (next, pairBatches)
+    }
+    val pairs = StreamFold.unionOr(spark, folded.toSeq.flatMap(_._2),
+      PairsSchema)
     // A drain with zero micro-batches still returns a USABLE (empty)
     // index: build over an empty relation with the stream's column
     // types, so addBatch on it later unions cleanly.
     lazy val emptyIdx = IncrementalLsh.build(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StreamFold.unionOr(spark, Nil,
         StructType(Seq(stream.schema(idCol), stream.schema(textCol)))),
       idCol, textCol, threshold, bands, rowsPerBand, n)._1
-    (idx.getOrElse(emptyIdx), pairs)
+    (folded.fold(emptyIdx)(_._1), pairs)
   }
-
-  private def emptyPairs(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], PairsSchema)
 }

@@ -1,12 +1,9 @@
 package graft.streaming
 
-import scala.collection.mutable.ArrayBuffer
-
 import graft.similarity.{IncrementalSemantic, SemanticIndex}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types._
 
 /** [[StreamingLsh]]'s continuous-ingest shape applied to the EMBEDDING
   * index: a stream of (id, vector) rows drains through `foreachBatch`,
@@ -27,9 +24,6 @@ import org.apache.spark.sql.types._
   */
 object StreamingSemantic {
 
-  val PairsSchema: StructType = StructType(Seq(
-    StructField("a", LongType), StructField("b", LongType)))
-
   /** Drain `stream` (columns `idCol`, `vecCol`) into `init` and return
     * the grown index plus ALL near-dup pairs discovered across the run
     * (pairs with at least one streamed member; seed-corpus-internal
@@ -43,27 +37,18 @@ object StreamingSemantic {
       checkpointDir: String, init: SemanticIndex, threshold: Double,
       trigger: Trigger = Trigger.AvailableNow(),
       onBatch: SemanticIndex => Unit = _ => ()): (SemanticIndex, DataFrame) = {
-    val spark = stream.sparkSession
-    @volatile var idx: SemanticIndex = init
-    val pairBatches = ArrayBuffer.empty[DataFrame]
-    val query = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val (next, newPairs) = IncrementalSemantic.addBatch(idx,
-          batch.select(col(idCol), col(vecCol)), idCol, vecCol, threshold)
-        idx = next
-        // a foreachBatch frame is only valid during its micro-batch;
-        // the index relations are already materialized by addBatch
-        pairBatches += newPairs.localCheckpoint()
-        onBatch(next)
-      }
-      .start()
-    query.awaitTermination()
-    val pairs = pairBatches.reduceOption(_ unionByName _)
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], PairsSchema))
-    (idx, pairs)
+    val folded = StreamFold[(SemanticIndex, Vector[DataFrame])](stream,
+        checkpointDir, trigger) { (prev, batch, _) =>
+      val (next, newPairs) = IncrementalSemantic.addBatch(
+        prev.fold(init)(_._1), batch.select(col(idCol), col(vecCol)),
+        idCol, vecCol, threshold)
+      // the index relations are already materialized by addBatch
+      val pairBatches = prev.toVector.flatMap(_._2) :+
+        newPairs.localCheckpoint()
+      onBatch(next)
+      (next, pairBatches)
+    }
+    (folded.fold(init)(_._1), StreamFold.unionOr(stream.sparkSession,
+      folded.toSeq.flatMap(_._2), StreamFold.PairsSchema))
   }
 }

@@ -1,11 +1,8 @@
 package graft.streaming
 
-import scala.collection.mutable.ArrayBuffer
-
 import graft.text.IncrementalWinnow
 import graft.text.IncrementalWinnow.WinnowIndex
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
@@ -38,33 +35,26 @@ object StreamingWinnow {
       trigger: Trigger = Trigger.AvailableNow(),
       onBatch: WinnowIndex => Unit = _ => ()): (WinnowIndex, DataFrame) = {
     val spark = stream.sparkSession
-    @volatile var idx: Option[WinnowIndex] = None
-    val matchBatches = ArrayBuffer.empty[DataFrame]
-    val query = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val (next, newMatches) = idx match {
-          case None => IncrementalWinnow.build(batch, idCol, textCol,
-            k, w, minShared)
-          case Some(i) => IncrementalWinnow.addBatch(i, batch, idCol,
-            textCol, minShared)
-        }
-        idx = Some(next)
-        matchBatches += newMatches.localCheckpoint()
-        onBatch(next)
+    val folded = StreamFold[(WinnowIndex, Vector[DataFrame])](stream,
+        checkpointDir, trigger) { (prev, batch, _) =>
+      val (next, newMatches) = prev match {
+        case None => IncrementalWinnow.build(batch, idCol, textCol,
+          k, w, minShared)
+        case Some((i, _)) => IncrementalWinnow.addBatch(i, batch, idCol,
+          textCol, minShared)
       }
-      .start()
-    query.awaitTermination()
-    val matches = matchBatches.reduceOption(_ unionByName _)
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], MatchesSchema))
+      val matchBatches = prev.toVector.flatMap(_._2) :+
+        newMatches.localCheckpoint()
+      onBatch(next)
+      (next, matchBatches)
+    }
+    val matches = StreamFold.unionOr(spark, folded.toSeq.flatMap(_._2),
+      MatchesSchema)
     lazy val emptyIdx = IncrementalWinnow.build(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StreamFold.unionOr(spark, Nil,
         StructType(Seq(StructField(idCol, LongType),
           StructField(textCol, StringType)))),
       idCol, textCol, k, w, minShared)._1
-    (idx.getOrElse(emptyIdx), matches)
+    (folded.fold(emptyIdx)(_._1), matches)
   }
 }

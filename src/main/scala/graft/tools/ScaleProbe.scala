@@ -703,9 +703,7 @@ object ScaleProbe {
         languages = Seq("en", "de", "fr", "es", "und"))
       d.repartition(3, col("doc_id"))
         .write.mode("overwrite").parquet(stage)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
+      val stream = graft.streaming.StreamFold.files(spark, stage)
       val (_, gated, pairs) = graft.streaming.StreamingCorpus.ingest(
         stream, "doc_id", "text", cp, cfg)
       graft.queries.Round7bQueries.rmTree(stage)

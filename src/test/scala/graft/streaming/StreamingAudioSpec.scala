@@ -43,8 +43,7 @@ class StreamingAudioSpec extends SparkSpec {
       val cp = Files.createTempDirectory("graft-sa-cp").toString
       m.toDF().repartition(nFiles, col("doc_id"))
         .write.mode("overwrite").parquet(stage)
-      val stream = spark.readStream.schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
+      val stream = StreamFold.files(spark, stage)
       val (idx, pairs) = StreamingAudio.ingest(stream, cp)
       assert(clusterSet(IncrementalAudio.clusters(idx, pairs)) === oneShot,
         s"$nFiles files")
@@ -56,8 +55,7 @@ class StreamingAudioSpec extends SparkSpec {
     val cp = Files.createTempDirectory("graft-sa-empty-cp").toString
     // schema-only staging: write zero rows
     media.toDF().limit(0).write.mode("overwrite").parquet(stage)
-    val stream = spark.readStream.schema(spark.read.parquet(stage).schema)
-      .option("maxFilesPerTrigger", 1).parquet(stage)
+    val stream = StreamFold.files(spark, stage)
     val (idx, pairs) = StreamingAudio.ingest(stream, cp)
     assert(pairs.count() === 0)
     // the empty index still accepts a batch

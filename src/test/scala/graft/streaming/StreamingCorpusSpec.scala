@@ -36,8 +36,7 @@ class StreamingCorpusSpec extends SparkSpec {
     val cp = Files.createTempDirectory("graft-sc-cp").toString
     corpus.repartition(nFiles, col("doc_id"))
       .write.mode("overwrite").parquet(stage)
-    val stream = spark.readStream.schema(spark.read.parquet(stage).schema)
-      .option("maxFilesPerTrigger", 1).parquet(stage)
+    val stream = StreamFold.files(spark, stage)
     val (_, gated, pairs) = StreamingCorpus.ingest(
       stream, "doc_id", "text", cp, cfg)
     collectOut(StreamingCorpus.resolveSurvivors(
@@ -96,9 +95,7 @@ class StreamingCorpusSpec extends SparkSpec {
       val cp = Files.createTempDirectory("graft-sr-cp").toString
       corpus.repartition(nFiles, col("doc_id"))
         .write.mode("overwrite").parquet(stage)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
+      val stream = StreamFold.files(spark, stage)
       val (_, gated, pairs) = StreamingCorpus.ingest(stream, "doc_id",
         "text", cp, CorpusPipeline.Config(jaccardThreshold = 0.3))
       releaseRows(StreamingCorpus.resolveRelease(

@@ -34,9 +34,7 @@ class StreamingDriftSpec extends SparkSpec {
       val cp = Files.createTempDirectory("graft-sd-cp").toString
       b.repartition(nFiles, col("doc_id"))
         .write.mode("overwrite").parquet(stage)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
+      val stream = StreamFold.files(spark, stage)
       val cur = StreamingDrift.ingest(stream, "doc_id", "source",
         "text", cp)
       rep(Drift.fromCounts(base, cur, "source"))
@@ -72,9 +70,7 @@ class StreamingDriftSpec extends SparkSpec {
             new java.io.File(s"$land/s$k-$i.parquet").toPath)
         }
     }
-    val stream = spark.readStream
-      .schema(spark.read.parquet(land).schema)
-      .option("maxFilesPerTrigger", 1).parquet(land)
+    val stream = StreamFold.files(spark, land)
     val reports = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Set[(String, Long, Long, Long)])]
     val fin = StreamingDrift.ingest(stream, "doc_id", "source", "text",
@@ -102,9 +98,7 @@ class StreamingDriftSpec extends SparkSpec {
     val stage = Files.createTempDirectory("graft-sd-empty").toString
     val cp = Files.createTempDirectory("graft-sd-empty-cp").toString
     docs.limit(0).write.mode("overwrite").parquet(stage)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(stage).schema)
-      .option("maxFilesPerTrigger", 1).parquet(stage)
+    val stream = StreamFold.files(spark, stage)
     val cur = StreamingDrift.ingest(stream, "doc_id", "source", "text", cp)
     assert(cur.count() == 0)
   }

@@ -42,8 +42,7 @@ class StreamingImageSpec extends SparkSpec {
       val cp = Files.createTempDirectory("graft-si-cp").toString
       m.toDF().repartition(nFiles, col("doc_id"))
         .write.mode("overwrite").parquet(stage)
-      val stream = spark.readStream.schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
+      val stream = StreamFold.files(spark, stage)
       val (idx, pairs) = StreamingImage.ingest(stream, cp)
       assert(clusterSet(IncrementalPerceptual.clusters(idx, pairs))
         === oneShot, s"$nFiles files")
@@ -54,8 +53,7 @@ class StreamingImageSpec extends SparkSpec {
     val stage = Files.createTempDirectory("graft-si-empty").toString
     val cp = Files.createTempDirectory("graft-si-empty-cp").toString
     media.toDF().limit(0).write.mode("overwrite").parquet(stage)
-    val stream = spark.readStream.schema(spark.read.parquet(stage).schema)
-      .option("maxFilesPerTrigger", 1).parquet(stage)
+    val stream = StreamFold.files(spark, stage)
     val (idx, pairs) = StreamingImage.ingest(stream, cp)
     assert(pairs.count() === 0)
     val (_, np) = IncrementalPerceptual.addBatch(idx,

@@ -80,9 +80,7 @@ class StreamingLshSpec extends SparkSpec {
     val nFiles = new java.io.File(stage).listFiles
       .count(f => f.getName.startsWith("part-") &&
         f.getName.endsWith(".parquet"))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(stage).schema)
-      .option("maxFilesPerTrigger", 1).parquet(stage)
+    val stream = StreamFold.files(spark, stage)
     var folds = 0
     val (idx, pairs) = StreamingLsh.ingest(stream, "doc_id", "text", cp,
       onBatch = _ => folds += 1)

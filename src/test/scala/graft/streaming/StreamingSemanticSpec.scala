@@ -63,9 +63,7 @@ class StreamingSemanticSpec extends SparkSpec {
     val nFiles = new java.io.File(stage).listFiles
       .count(f => f.getName.startsWith("part-") &&
         f.getName.endsWith(".parquet"))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(stage).schema)
-      .option("maxFilesPerTrigger", 1).parquet(stage)
+    val stream = StreamFold.files(spark, stage)
     var folds = 0
     val (idx, streamed) = StreamingSemantic.ingest(stream, "vec_id",
       "embedding", cp, i0, Th, onBatch = _ => folds += 1)

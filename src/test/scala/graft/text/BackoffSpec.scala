@@ -99,9 +99,7 @@ class BackoffSpec extends SparkSpec {
       val cp = Files.createTempDirectory("graft-lm-cp").toString
       train.repartition(nFiles, col("doc_id"))
         .write.mode("overwrite").parquet(stage)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
+      val stream = graft.streaming.StreamFold.files(spark, stage)
       val counts = graft.streaming.StreamingLm.ingest(stream, "doc_id",
         "text", cp)
       Repetition.backoffScoreWith(counts, docs, "doc_id", "text")

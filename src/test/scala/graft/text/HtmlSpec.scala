@@ -133,9 +133,7 @@ class HtmlSpec extends SparkSpec {
     val cp = Files.createTempDirectory("graft-html-cp").toString
     wrapped.repartition(3, col("doc_id"))
       .write.mode("overwrite").parquet(stage)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(stage).schema)
-      .option("maxFilesPerTrigger", 1).parquet(stage)
+    val stream = graft.streaming.StreamFold.files(spark, stage)
     val (_, gated, pairs) = graft.streaming.StreamingCorpus.ingest(
       stream, "doc_id", "text", cp, cfg)
     val streamed = outSet(graft.streaming.StreamingCorpus
