@@ -68,69 +68,29 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q13_scd_merge")(spark, "/root/testdata/sf0.001")
 
+  /** The 29 query groups, each named once. Building the registry
+    * throws, naming the query, on a name two groups declare or on a
+    * group whose build and oracle key sets differ.
+    */
+  private lazy val registry = {
+    import graft.queries._
+    QueryGroup.registry(Seq(
+      CoreQueries, ScdQueries, PipelineQueries, VectorQueries,
+      ExtendedQueries, Round3Queries, Round3bQueries, Round5Queries,
+      Round6Queries, Round7Queries, Round7bQueries, Round7cQueries,
+      Round8Queries, Round9Queries, Round9bQueries, Round9cQueries,
+      Round10Queries, Round10bQueries, Round11Queries, Round11bQueries,
+      Round13Queries, Round13bQueries, Round14Queries, Round15Queries,
+      Round15bQueries, Round16Queries, Round17Queries, Round18Queries,
+      Round19Queries))
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.CoreQueries.queries ++
-      graft.queries.ScdQueries.queries ++
-      graft.queries.PipelineQueries.queries ++
-      graft.queries.VectorQueries.queries ++
-      graft.queries.ExtendedQueries.queries ++
-      graft.queries.Round3Queries.queries ++
-      graft.queries.Round3bQueries.queries ++
-      graft.queries.Round5Queries.queries ++
-      graft.queries.Round6Queries.queries ++
-      graft.queries.Round7Queries.queries ++
-      graft.queries.Round7bQueries.queries ++
-      graft.queries.Round7cQueries.queries ++
-      graft.queries.Round8Queries.queries ++
-      graft.queries.Round9Queries.queries ++
-      graft.queries.Round9bQueries.queries ++
-      graft.queries.Round9cQueries.queries ++
-      graft.queries.Round10Queries.queries ++
-      graft.queries.Round10bQueries.queries ++
-      graft.queries.Round11Queries.queries ++
-      graft.queries.Round11bQueries.queries ++
-      graft.queries.Round13Queries.queries ++
-      graft.queries.Round13bQueries.queries ++
-      graft.queries.Round14Queries.queries ++
-      graft.queries.Round15Queries.queries ++
-      graft.queries.Round15bQueries.queries ++
-      graft.queries.Round16Queries.queries ++
-      graft.queries.Round17Queries.queries ++
-      graft.queries.Round18Queries.queries ++
-      graft.queries.Round19Queries.queries
+    registry.queries
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
+    * the same parquet tables.
     */
-  def oracleSql: Map[String, String] =
-    graft.queries.CoreQueries.oracleSql ++
-      graft.queries.ScdQueries.oracleSql ++
-      graft.queries.PipelineQueries.oracleSql ++
-      graft.queries.VectorQueries.oracleSql ++
-      graft.queries.ExtendedQueries.oracleSql ++
-      graft.queries.Round3Queries.oracleSql ++
-      graft.queries.Round3bQueries.oracleSql ++
-      graft.queries.Round5Queries.oracleSql ++
-      graft.queries.Round6Queries.oracleSql ++
-      graft.queries.Round7Queries.oracleSql ++
-      graft.queries.Round7bQueries.oracleSql ++
-      graft.queries.Round7cQueries.oracleSql ++
-      graft.queries.Round8Queries.oracleSql ++
-      graft.queries.Round9Queries.oracleSql ++
-      graft.queries.Round9bQueries.oracleSql ++
-      graft.queries.Round9cQueries.oracleSql ++
-      graft.queries.Round10Queries.oracleSql ++
-      graft.queries.Round10bQueries.oracleSql ++
-      graft.queries.Round11Queries.oracleSql ++
-      graft.queries.Round11bQueries.oracleSql ++
-      graft.queries.Round13Queries.oracleSql ++
-      graft.queries.Round13bQueries.oracleSql ++
-      graft.queries.Round14Queries.oracleSql ++
-      graft.queries.Round15Queries.oracleSql ++
-      graft.queries.Round15bQueries.oracleSql ++
-      graft.queries.Round16Queries.oracleSql ++
-      graft.queries.Round17Queries.oracleSql ++
-      graft.queries.Round18Queries.oracleSql ++
-      graft.queries.Round19Queries.oracleSql
+  def oracleSql: Map[String, String] = registry.oracleSql
 }

@@ -329,9 +329,13 @@ final class ParquetCatalog(spark: SparkSession, root: String) {
     * the pointer version is monotonic: late stalled writers lose, which
     * IS last-swap-wins restricted to swaps that move time forward.
     * (java.nio FileLock is advisory but all writers go through here.)
+    * A FileLock belongs to the whole JVM: a second thread asking for it
+    * gets `OverlappingFileLockException` instead of waiting. So threads
+    * of one JVM first queue on [[ParquetCatalog.PointerMonitor]]; the
+    * file lock then only arbitrates between processes.
     */
   private[catalog] def swapPointerMonotonic(name: String, next: Long,
-      nonce: String): Unit = {
+      nonce: String): Unit = ParquetCatalog.PointerMonitor.synchronized {
     import java.nio.file.StandardOpenOption.{CREATE, WRITE}
     val ch = java.nio.channels.FileChannel.open(
       tableDir(name).resolve("_CURRENT.lockfile"), CREATE, WRITE)
@@ -413,6 +417,14 @@ final class ParquetCatalog(spark: SparkSession, root: String) {
     try walk.sorted(Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
     finally walk.close()
   }
+}
+
+object ParquetCatalog {
+
+  /** Serializes pointer swaps across every catalog instance in the
+    * JVM, ahead of the per-table file lock.
+    */
+  private object PointerMonitor
 }
 
 /** See [[ParquetCatalog.stats]]. */

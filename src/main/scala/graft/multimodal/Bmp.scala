@@ -1,5 +1,7 @@
 package graft.multimodal
 
+import LittleEndian._
+
 /** Minimal REAL codec for 24-bit uncompressed BMP (the public Windows
   * BITMAPFILEHEADER + BITMAPINFOHEADER format): pure JVM, no external
   * library. API-side pixels are RGB triplets in top-down row order; the
@@ -18,25 +20,6 @@ object Bmp {
 
   /** 14-byte file header + 40-byte BITMAPINFOHEADER. */
   val HeaderSize: Int = 54
-
-  private def putIntLE(a: Array[Byte], off: Int, v: Int): Unit = {
-    a(off) = (v & 0xff).toByte
-    a(off + 1) = ((v >>> 8) & 0xff).toByte
-    a(off + 2) = ((v >>> 16) & 0xff).toByte
-    a(off + 3) = ((v >>> 24) & 0xff).toByte
-  }
-
-  private def putShortLE(a: Array[Byte], off: Int, v: Int): Unit = {
-    a(off) = (v & 0xff).toByte
-    a(off + 1) = ((v >>> 8) & 0xff).toByte
-  }
-
-  private def getIntLE(a: Array[Byte], off: Int): Int =
-    (a(off) & 0xff) | ((a(off + 1) & 0xff) << 8) |
-      ((a(off + 2) & 0xff) << 16) | ((a(off + 3) & 0xff) << 24)
-
-  private def getShortLE(a: Array[Byte], off: Int): Int =
-    (a(off) & 0xff) | ((a(off + 1) & 0xff) << 8)
 
   private def rowStride(width: Int): Int = {
     val rowBytes = width * 3

@@ -1,5 +1,7 @@
 package graft.multimodal
 
+import LittleEndian._
+
 /** Minimal REAL codec for 16-bit PCM WAV (the public RIFF/WAVE
   * container): pure JVM, no external library — the audio sibling of
   * [[Bmp]]. [[decode]] genuinely walks the RIFF chunk list (tolerating
@@ -19,25 +21,6 @@ object Wav {
   }
 
   val HeaderSize: Int = 44
-
-  private def putIntLE(a: Array[Byte], off: Int, v: Int): Unit = {
-    a(off) = (v & 0xff).toByte
-    a(off + 1) = ((v >>> 8) & 0xff).toByte
-    a(off + 2) = ((v >>> 16) & 0xff).toByte
-    a(off + 3) = ((v >>> 24) & 0xff).toByte
-  }
-
-  private def putShortLE(a: Array[Byte], off: Int, v: Int): Unit = {
-    a(off) = (v & 0xff).toByte
-    a(off + 1) = ((v >>> 8) & 0xff).toByte
-  }
-
-  private def getIntLE(a: Array[Byte], off: Int): Int =
-    (a(off) & 0xff) | ((a(off + 1) & 0xff) << 8) |
-      ((a(off + 2) & 0xff) << 16) | ((a(off + 3) & 0xff) << 24)
-
-  private def getShortLE(a: Array[Byte], off: Int): Int =
-    (a(off) & 0xff) | ((a(off + 1) & 0xff) << 8)
 
   private def tag(a: Array[Byte], off: Int): String =
     new String(a, off, 4, java.nio.charset.StandardCharsets.US_ASCII)

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.DecimalType
   * bit-identical between Spark and DuckDB; the final value is cast back to
   * double. Every query has a deterministic total ORDER BY.
   */
-object CoreQueries {
+object CoreQueries extends QueryGroup {
 
   private def dec2(c: Column): Column = c.cast(DecimalType(18, 2))
   private def dec6(c: Column): Column = c.cast(DecimalType(18, 6))

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.functions.{KmvSketch, PortableHash, TextHash}
+import graft.queries.fixtures.Vectors._
 import graft.similarity.Similarity
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -15,7 +16,7 @@ import org.apache.spark.sql.types.DecimalType
   * regex tokenization, RANGE window frames, exact percentiles, and the
   * oracle-portable LSH ANN.
   */
-object ExtendedQueries {
+object ExtendedQueries extends QueryGroup {
 
   private def dec2(c: Column): Column = c.cast(DecimalType(18, 2))
   private def dec6(c: Column): Column = c.cast(DecimalType(18, 6))
@@ -32,15 +33,6 @@ object ExtendedQueries {
   private val BpeOther = "[^A-Za-z0-9 \\t\\n\\x0B\\f\\r]"
   private val BpeAll = s"$BpeWord|$BpeDigit|$BpeOther"
 
-  /** ±1 hyperplanes shared by the q41 engine plan and its oracle SQL. */
-  private[queries] val AnnBits = 8
-  private[queries] val annPlanes = Similarity.hyperplanes(AnnBits, 64, signsOnly = true)
-
-  /** q42 IVF parameters shared by the engine call and the oracle SQL
-    * (and by q95's semantic-dedup replay in [[Round5Queries]]).
-    */
-  private[queries] val IvfC = 16
-  private[queries] val IvfIters = 2
   private val IvfProbe = 4
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -350,41 +342,6 @@ object ExtendedQueries {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  private[queries] val dotSql = (a: String, b: String) =>
-    s"list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i]), (x,y) -> x+y)"
-
-  private[queries] def planeListSql(p: Array[Double]): String =
-    p.map(v => if (v > 0) "1.0" else "-1.0").mkString("([", ",", "]::DOUBLE[])")
-
-  /** L2 ranking key `-2·(v·cent) + |cent|²` — the same op sequence as
-    * [[Similarity.nearestCentroids]] (|v|² is row-constant, dropped).
-    */
-  private def ivfDistSql(v: String, cent: String): String =
-    s"-2.0 * ${dotSql(v, cent)} + ${dotSql(cent, cent)}"
-
-  /** One Lloyd iteration as CTE text: assign every quantized vector to
-    * its nearest `c$prev` centroid (ties → lower cluster id), then the
-    * per-dimension mean as EXACT integer sum / count, both converted to
-    * double (correctly rounded in every IEEE engine); empty clusters
-    * keep their previous centroid. Mirrors
-    * [[Similarity.ivfCentroidsPortable]] step for step.
-    */
-  private[queries] def ivfStepSql(i: Int): String =
-    s"""a$i AS (SELECT vec_id, qd, cluster FROM (
-       |  SELECT z.vec_id, z.qd, c.cluster,
-       |    ROW_NUMBER() OVER (PARTITION BY z.vec_id
-       |      ORDER BY ${ivfDistSql("z.qd", "c.cent")} ASC, c.cluster ASC) AS rn
-       |  FROM qz z CROSS JOIN c${i - 1} c) WHERE rn = 1),
-       |m$i AS (SELECT cluster, ii.p AS pos,
-       |    CAST(SUM(CAST(qd[ii.p] AS BIGINT)) AS DOUBLE)
-       |      / CAST(COUNT(*) AS DOUBLE) AS m
-       |  FROM a$i CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS p) ii
-       |  GROUP BY cluster, ii.p),
-       |c$i AS (SELECT p.cluster, COALESCE(u.cent, p.cent) AS cent
-       |  FROM c${i - 1} p LEFT JOIN (SELECT cluster, list(m ORDER BY pos) AS cent
-       |                              FROM m$i GROUP BY cluster) u
-       |    ON p.cluster = u.cluster)""".stripMargin
-
   val oracleSql: Map[String, String] = Map(
     "q34_cube" ->
       """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
@@ -571,12 +528,12 @@ object ExtendedQueries {
          |cb AS (SELECT vec_id, e, cluster AS bucket FROM (
          |  SELECT z.vec_id, z.e, c.cluster,
          |    ROW_NUMBER() OVER (PARTITION BY z.vec_id
-         |      ORDER BY ${ivfDistSql("z.qd", "c.cent")} ASC, c.cluster ASC) AS rn
+         |      ORDER BY ${distSql("z.qd", "c.cent")} ASC, c.cluster ASC) AS rn
          |  FROM qz z CROSS JOIN c$IvfIters c) WHERE rn = 1),
          |qb AS (SELECT vec_id AS q_id, e AS qe, cluster AS bucket FROM (
          |  SELECT z.vec_id, z.e, c.cluster,
          |    ROW_NUMBER() OVER (PARTITION BY z.vec_id
-         |      ORDER BY ${ivfDistSql("z.qd", "c.cent")} ASC, c.cluster ASC) AS rn
+         |      ORDER BY ${distSql("z.qd", "c.cent")} ASC, c.cluster ASC) AS rn
          |  FROM qz z CROSS JOIN c$IvfIters c WHERE z.vec_id < 50)
          |  WHERE rn <= $IvfProbe),
          |cos AS (SELECT q.q_id, c.vec_id AS n_id,

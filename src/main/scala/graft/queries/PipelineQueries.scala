@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.dedup.Dedup
 import graft.functions.PortableHash
+import graft.queries.fixtures.Corpus._
 import graft.sources.Tables
 import graft.text.TextAnalysis
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -17,15 +18,9 @@ import org.apache.spark.sql.functions._
   * (doc_id%11, id+2e6) — the identical derivation appears in the oracle
   * SQL.
   */
-object PipelineQueries {
+object PipelineQueries extends QueryGroup {
 
   private val enStops = Seq("the", "a", "of", "and", "is")
-
-  /** Planted-duplicate corpus over the full documents table (also the
-    * q97 incremental-LSH input in [[Round5Queries]]).
-    */
-  private[queries] def corpus(s: SparkSession, dir: String): DataFrame =
-    plant(Tables(s, dir, "documents").select(col("doc_id"), col("text")))
 
   /** Same planting on a 1-in-20 restricted base — for the exact all-pairs
     * Jaccard join, whose shingle-join cost is quadratic in docs-per-
@@ -34,15 +29,6 @@ object PipelineQueries {
   private def corpusSmall(s: SparkSession, dir: String): DataFrame =
     plant(Tables(s, dir, "documents").select(col("doc_id"), col("text"))
       .filter(col("doc_id") % 20 === 0))
-
-  private def plant(d: DataFrame): DataFrame =
-    d.unionByName(
-        d.filter(col("doc_id") % 7 === 0)
-          .select((col("doc_id") + 1000000).as("doc_id"), col("text")))
-      .unionByName(
-        d.filter(col("doc_id") % 11 === 0)
-          .select((col("doc_id") + 2000000).as("doc_id"),
-            concat(col("text"), lit(" zz tail marker")).as("text")))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Row-local text-quality signals: no shuffle at all, pure codegen.
@@ -196,15 +182,6 @@ object PipelineQueries {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  private[queries] val corpusSql =
-    """corpus AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 7 = 0
-      |  UNION ALL
-      |  SELECT doc_id + 2000000, text || ' zz tail marker' FROM documents
-      |  WHERE doc_id % 11 = 0)""".stripMargin
-
   private val corpusSmallSql =
     """base AS (SELECT doc_id, text FROM documents WHERE doc_id % 20 = 0),
       |corpus AS (
@@ -214,9 +191,6 @@ object PipelineQueries {
       |  UNION ALL
       |  SELECT doc_id + 2000000, text || ' zz tail marker' FROM base
       |  WHERE doc_id % 11 = 0)""".stripMargin
-
-  private val toksExpr =
-    """list_filter(string_split_regex(text, '\s+'), x -> x <> '')"""
 
   /** SimHash-16 fingerprint CTE chain ending in `fp(doc_id, simhash)` —
     * shared by q21 (fingerprints) and q68 (hamming<=1 pairs).
@@ -234,138 +208,6 @@ object PipelineQueries {
        |  CAST(SUM(CASE WHEN v > 0 THEN CAST(pow(2, j) AS BIGINT) ELSE 0 END)
        |    AS BIGINT) AS simhash
        |  FROM votes GROUP BY doc_id)""".stripMargin
-
-  /** Quality-score expression over a `text` column — shared by q16 and
-    * the q46 pipeline gate so both replay the same arithmetic.
-    */
-  private[queries] val qualityExprSql =
-    s"""(CASE WHEN len($toksExpr) BETWEEN 5 AND 5000 THEN 0.4::DOUBLE ELSE 0.0::DOUBLE END
-       |   + CASE WHEN len(list_filter($toksExpr, t -> list_contains(['the','a','of','and','is'], lower(t))))::DOUBLE
-       |         / greatest(len($toksExpr), 1) > 0.01 THEN 0.3::DOUBLE ELSE 0.0::DOUBLE END
-       |   + CASE WHEN length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g'))::DOUBLE
-       |         / greatest(length(text), 1) < 0.2 THEN 0.3::DOUBLE ELSE 0.0::DOUBLE END)""".stripMargin
-
-  /** Per-language marker-hit columns + argmax CASE (shared q17 / q46). */
-  private[queries] val langHitColsSql: String = TextAnalysis.langMarkers.map {
-    case (code, words) =>
-      "    len(regexp_extract_all(lower(text), '" +
-        words.mkString("\\b(", "|", ")\\b") + s"')) AS h_$code"
-  }.mkString(",\n")
-
-  private[queries] val langCaseSql =
-    """CASE WHEN greatest(h_en, h_de, h_fr, h_es) = 0 THEN 'und'
-      |       WHEN h_en >= h_de AND h_en >= h_fr AND h_en >= h_es THEN 'en'
-      |       WHEN h_de >= h_fr AND h_de >= h_es THEN 'de'
-      |       WHEN h_fr >= h_es THEN 'fr'
-      |       ELSE 'es' END""".stripMargin
-
-  /** Shared shingle pipeline (docs -> distinct (doc_id, 60-bit shingle
-    * hash)) — mirror of Dedup.hashedShingles: the dedup happens on the
-    * HASH, exactly as the engine's ShingleHash60 expression dedupes
-    * in-expression (distinct-then-hash and hash-then-distinct coincide
-    * unless two distinct shingles of one doc collide in 60 bits).
-    */
-  /** Shingle CTE chain ending in `sh<sfx>(doc_id, shh)`. The `sfx`
-    * suffixes every CTE name so two chains (e.g. a train and an eval
-    * corpus, q120) can coexist in one statement; "" keeps the original
-    * names for the single-corpus oracles.
-    */
-  private[queries] def shinglesSql(src: String, sfx: String = ""): String =
-    s"""toks$sfx AS (SELECT doc_id, $toksExpr AS toks FROM $src),
-       |grams$sfx AS (SELECT doc_id,
-       |    unnest(CASE WHEN len(toks) >= 3
-       |      THEN list_transform(generate_series(1, len(toks)-2),
-       |             i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-       |      ELSE []::VARCHAR[] END) AS shingle
-       |  FROM toks$sfx),
-       |sh$sfx AS (SELECT DISTINCT doc_id,
-       |  ${PortableHash.hash60BaseSql("shingle")} AS shh FROM grams$sfx)""".stripMargin
-
-  /** MinHash signature + LSH bucket CTEs over `sh<sfx>`, ending in
-    * `buckets<sfx>(doc_id, band, bucket)` (mirrors
-    * Dedup.minhashSignatures + bucketsFrom: 12 affine hashes, 6 bands x 2).
-    */
-  private[queries] def sigBucketsSql(sfx: String = ""): String =
-    s"""mh$sfx AS (
-       |  SELECT doc_id,
-       |${(0 until 12).map(i =>
-          s"    min(${PortableHash.minhashSql("shh % 2147483647", i)}) AS mh_$i")
-          .mkString(",\n")}
-       |  FROM sh$sfx GROUP BY doc_id),
-       |buckets$sfx AS (
-       |  SELECT doc_id,
-       |    unnest([0,1,2,3,4,5]) AS band,
-       |    unnest([${(0 until 6).map(b =>
-            s"md5(mh_${2 * b}::VARCHAR||','||mh_${2 * b + 1}::VARCHAR)")
-            .mkString(", ")}]) AS bucket
-       |  FROM mh$sfx)""".stripMargin
-
-  /** Signatures + banding + SELF-join candidates over `sh`
-    * (mirrors Dedup.minhashCandidates).
-    */
-  private[queries] def minhashCtesSql: String =
-    s"""${sigBucketsSql()},
-       |cand AS (
-       |  SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-       |  FROM buckets l JOIN buckets r
-       |    ON l.band = r.band AND l.bucket = r.bucket AND l.doc_id < r.doc_id)""".stripMargin
-
-  /** q46's stage-1/stage-2 chain as CTE text — row gates (quality +
-    * language) then exact dedup — ending in `ex(doc_id, text, quality,
-    * lang_pred)`, the gate-and-exact-dedup survivors over `corpus`.
-    * Shared by the q46 pipeline replay and the q144 release manifest.
-    */
-  private[queries] val gateExactCtesSql: String =
-    s"""scored AS (
-       |  SELECT doc_id, text,
-       |  $qualityExprSql AS quality,
-       |$langHitColsSql
-       |  FROM corpus),
-       |gated AS (
-       |  SELECT doc_id, text, quality,
-       |  $langCaseSql AS lang_pred
-       |  FROM scored),
-       |g2 AS (SELECT doc_id, text, quality, lang_pred FROM gated
-       |       WHERE quality >= 0.7::DOUBLE AND lang_pred = 'en'),
-       |fp AS (SELECT doc_id, text, quality, lang_pred,
-       |    md5(trim(regexp_replace(regexp_replace(lower(text),
-       |      '[^a-z0-9\\s]', '', 'g'), '\\s+', ' ', 'g'))) AS f
-       |  FROM g2),
-       |keep AS (SELECT min(doc_id) AS doc_id FROM fp GROUP BY f),
-       |ex AS (SELECT fp.* FROM fp WHERE fp.doc_id IN (SELECT doc_id FROM keep))""".stripMargin
-
-  /** Exact-jaccard verification of `cand` as a `pairs` CTE. */
-  private[queries] def pairsCteSql(threshold: String): String =
-    s"""sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-       |common AS (
-       |  SELECT c.a, c.b, count(*) AS n_common
-       |  FROM cand c
-       |  JOIN sh x ON x.doc_id = c.a
-       |  JOIN sh y ON y.doc_id = c.b AND y.shh = x.shh
-       |  GROUP BY c.a, c.b),
-       |pairs AS (
-       |  SELECT cm.a, cm.b
-       |  FROM common cm
-       |  JOIN sizes sa ON sa.doc_id = cm.a
-       |  JOIN sizes sb ON sb.doc_id = cm.b
-       |  WHERE cm.n_common::DOUBLE / (sa.n_sh + sb.n_sh - cm.n_common)
-       |    >= $threshold)""".stripMargin
-
-  private[queries] def jaccardTailSql(threshold: String): String =
-    s"""sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-       |common AS (
-       |  SELECT c.a, c.b, count(*) AS n_common
-       |  FROM cand c
-       |  JOIN sh x ON x.doc_id = c.a
-       |  JOIN sh y ON y.doc_id = c.b AND y.shh = x.shh
-       |  GROUP BY c.a, c.b)
-       |SELECT cm.a, cm.b,
-       |  cm.n_common::DOUBLE / (sa.n_sh + sb.n_sh - cm.n_common) AS jaccard
-       |FROM common cm
-       |JOIN sizes sa ON sa.doc_id = cm.a
-       |JOIN sizes sb ON sb.doc_id = cm.b
-       |WHERE cm.n_common::DOUBLE / (sa.n_sh + sb.n_sh - cm.n_common) >= $threshold
-       |ORDER BY a, b""".stripMargin
 
   val oracleSql: Map[String, String] = Map(
     "q16_text_stats" ->
@@ -498,26 +340,7 @@ object PipelineQueries {
          |  SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.node)
          |SELECT node AS doc_id, min(lab) AS cluster
          |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin,
-    "q46_pipeline" ->
-      s"""WITH RECURSIVE $corpusSql,
-         |$gateExactCtesSql,
-         |${shinglesSql("ex")},
-         |$minhashCtesSql,
-         |${pairsCteSql("0.5")},
-         |edges AS (
-         |  SELECT a AS src, b AS dst FROM pairs
-         |  UNION SELECT b, a FROM pairs),
-         |reach(node, lab) AS (
-         |  SELECT src, src FROM edges
-         |  UNION
-         |  SELECT e2.dst, r.lab FROM reach r JOIN edges e2 ON e2.src = r.node),
-         |losers AS (
-         |  SELECT node AS doc_id FROM reach
-         |  GROUP BY node HAVING node <> min(lab))
-         |SELECT e.doc_id, e.quality, e.lang_pred
-         |FROM ex e
-         |WHERE NOT EXISTS (SELECT 1 FROM losers l WHERE l.doc_id = e.doc_id)
-         |ORDER BY e.doc_id""".stripMargin,
+    "q46_pipeline" -> pipelineSql,
     "q21_simhash" ->
       s"""WITH $simhashFpCte
          |SELECT doc_id, simhash FROM fp ORDER BY doc_id""".stripMargin,

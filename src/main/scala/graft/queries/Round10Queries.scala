@@ -1,5 +1,8 @@
 package graft.queries
 
+import graft.queries.fixtures.Corpus.toksExpr
+import graft.queries.fixtures.Vectors.dotSql
+import graft.queries.fixtures.{Corpus, Media, Scd, Streams, Text}
 import graft.sources.Tables
 import graft.streaming.StreamFold
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -10,13 +13,7 @@ import org.apache.spark.sql.functions._
   * release-over-release operations. Every query replays bit-identically
   * in the DuckDB oracle.
   */
-object Round10Queries {
-
-  private val toksExpr =
-    """list_filter(string_split_regex(text, '\s+'), x -> x <> '')"""
-
-  private val dotSql = (a: String, b: String) =>
-    s"list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i]), (x,y) -> x+y)"
+object Round10Queries extends QueryGroup {
 
   /** Small planted corpus for the DOUBLE-release-replay oracles
     * (q172/q173): base = every 4th document, plus the exact-copy and
@@ -101,21 +98,17 @@ object Round10Queries {
     // ('split_moved') — exactly the churn a training run must audit.
     // Oracle: BOTH release chains replayed + the full-outer diff.
     "q172_release_diff" -> ((s, dir) => {
-      import java.nio.file.Files
       val (relA, relB) = twoReleases(s, dir)
-      val root = Files.createTempDirectory("graft-q172").toString
-      val cat = new graft.catalog.ParquetCatalog(s, root)
-      cat.create("release", relA.schema)
-      cat.overwrite("release", relA)
-      val vA = cat.currentVersion("release").get
-      cat.overwrite("release", relB)
-      val vB = cat.currentVersion("release").get
-      val out = graft.pipeline.CorpusPipeline
-        .releaseDiffAt(cat, "release", vA, vB, "doc_id")
-        .orderBy(col("doc_id"))
-        .localCheckpoint()
-      Round7bQueries.rmTree(root)
-      out
+      Streams.withCatalog(s, "q172") { cat =>
+        cat.create("release", relA.schema)
+        cat.overwrite("release", relA)
+        val vA = cat.currentVersion("release").get
+        cat.overwrite("release", relB)
+        val vB = cat.currentVersion("release").get
+        graft.pipeline.CorpusPipeline
+          .releaseDiffAt(cat, "release", vA, vB, "doc_id")
+          .orderBy(col("doc_id"))
+      }
     }),
 
     // ...and its per-source roll-up: the release-review dashboard row
@@ -139,22 +132,18 @@ object Round10Queries {
     // q101's MERGE. Two statements run against a catalog table seeded
     // from documents; the oracle replays both as plain relational SQL.
     "q176_sql_dml" -> ((s, dir) => {
-      import java.nio.file.Files
-      val root = Files.createTempDirectory("graft-q176").toString
-      val cat = new graft.catalog.ParquetCatalog(s, root)
-      val docs = Tables(s, dir, "documents")
-        .select(col("doc_id"), col("text"), col("source"))
-      cat.create("docs_t", docs.schema)
-      cat.overwrite("docs_t", docs)
-      graft.scd.DmlSql.execute(s, cat,
-        "DELETE FROM docs_t WHERE doc_id % 5 = 3")
-      graft.scd.DmlSql.execute(s, cat,
-        "UPDATE docs_t SET text = concat(text, ' [redacted]') " +
-          "WHERE source = 'src5'")
-      val out = cat.table("docs_t").orderBy(col("doc_id"))
-        .localCheckpoint()
-      Round7bQueries.rmTree(root)
-      out
+      Streams.withCatalog(s, "q176") { cat =>
+        val docs = Tables(s, dir, "documents")
+          .select(col("doc_id"), col("text"), col("source"))
+        cat.create("docs_t", docs.schema)
+        cat.overwrite("docs_t", docs)
+        graft.scd.DmlSql.execute(s, cat,
+          "DELETE FROM docs_t WHERE doc_id % 5 = 3")
+        graft.scd.DmlSql.execute(s, cat,
+          "UPDATE docs_t SET text = concat(text, ' [redacted]') " +
+            "WHERE source = 'src5'")
+        cat.table("docs_t").orderBy(col("doc_id"))
+      }
     }),
 
     // HYBRID RETRIEVAL: BM25 top-50 (q99's ranker) fused with exact
@@ -224,7 +213,6 @@ object Round10Queries {
     // chain AND the tape checksum as one statement: from raw corpus to
     // the bytes a loader maps, every stage bit-certified.
     "q185_release_export" -> ((s, dir) => {
-      import java.nio.file.Files
       val corpus = smallCorpus(s, dir).select(col("doc_id"), col("text"))
         .localCheckpoint()
       val rel = graft.pipeline.CorpusPipeline.release(
@@ -232,19 +220,11 @@ object Round10Queries {
       val train = rel.filter(col("split") === "train")
         .select(col("doc_id"))
       val docs = corpus.join(train, Seq("doc_id"), "left_semi")
-      val root = Files.createTempDirectory("graft-q185").toString
-      val cat = new graft.catalog.ParquetCatalog(s, root)
-      graft.pipeline.Packing.exportShards(docs, "doc_id", "text", cat,
-        "shards", seqLen = 2048, numGroups = 8)
-      val (bin, _) = graft.pipeline.Packing.readShards(cat, "shards")
-      val out = bin
-        .select(col("grp"), col("seq"), col("n_tok"),
-          graft.functions.TokenBinary.weightedSumCol(col("tokens"))
-            .as("tok_wsum"))
-        .orderBy(col("grp"), col("seq"))
-        .localCheckpoint()
-      Round7bQueries.rmTree(root)
-      out
+      Streams.withCatalog(s, "q185") { cat =>
+        graft.pipeline.Packing.exportShards(docs, "doc_id", "text", cat,
+          "shards", seqLen = 2048, numGroups = 8)
+        Streams.tapeSums(cat)
+      }
     }),
 
     // The VOCAB-ID export: the third loader artifact. Real loaders
@@ -255,27 +235,18 @@ object Round10Queries {
     // ids in the buffers, and the vocab table publishes alongside.
     // Oracle replays training + vocab ranking + tape + checksum.
     "q183_export_vocab_ids" -> ((s, dir) => {
-      import java.nio.file.Files
       val docs = Tables(s, dir, "documents")
       val merges = graft.text.Bpe.trainMerges(docs, "text",
-        Round7Queries.BpeK)
+        Text.BpeK)
       val stream = graft.text.Bpe.symbolStream(docs, "doc_id", "text",
         merges)
       val voc = graft.text.Bpe.vocab(docs, "text", merges)
-      val root = Files.createTempDirectory("graft-q183").toString
-      val cat = new graft.catalog.ParquetCatalog(s, root)
-      graft.pipeline.Packing.exportShardsOf("doc_id", stream, cat,
-        "shards", seqLen = 2048, numGroups = 8,
-        vocabIds = Some(voc))
-      val (bin, _) = graft.pipeline.Packing.readShards(cat, "shards")
-      val out = bin
-        .select(col("grp"), col("seq"), col("n_tok"),
-          graft.functions.TokenBinary.weightedSumCol(col("tokens"))
-            .as("tok_wsum"))
-        .orderBy(col("grp"), col("seq"))
-        .localCheckpoint()
-      Round7bQueries.rmTree(root)
-      out
+      Streams.withCatalog(s, "q183") { cat =>
+        graft.pipeline.Packing.exportShardsOf("doc_id", stream, cat,
+          "shards", seqLen = 2048, numGroups = 8,
+          vocabIds = Some(voc))
+        Streams.tapeSums(cat)
+      }
     }),
 
     // ...and the published vocab table itself, read back: the
@@ -283,18 +254,15 @@ object Round10Queries {
     // engines must agree on every (token, id, n) row or the binary
     // buffers mean different text).
     "q184_vocab_table" -> ((s, dir) => {
-      import java.nio.file.Files
       val docs = Tables(s, dir, "documents")
       val merges = graft.text.Bpe.trainMerges(docs, "text",
-        Round7Queries.BpeK)
+        Text.BpeK)
       val voc = graft.text.Bpe.vocab(docs, "text", merges)
-      val root = Files.createTempDirectory("graft-q184").toString
-      val cat = new graft.catalog.ParquetCatalog(s, root)
-      cat.create("vocab", voc.schema)
-      cat.overwrite("vocab", voc)
-      val out = cat.table("vocab").orderBy(col("id")).localCheckpoint()
-      Round7bQueries.rmTree(root)
-      out
+      Streams.withCatalog(s, "q184") { cat =>
+        cat.create("vocab", voc.schema)
+        cat.overwrite("vocab", voc)
+        cat.table("vocab").orderBy(col("id"))
+      }
     }),
 
     // INCREMENTAL export: a second batch (fresh higher ids, the
@@ -304,29 +272,20 @@ object Round10Queries {
     // tokens. Oracle = the ONE-SHOT export replay over the union:
     // "appended == exported from scratch", checksummed per sequence.
     "q179_incremental_export" -> ((s, dir) => {
-      import java.nio.file.Files
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val batch2 = docs.filter(col("doc_id") % 2 === 0)
         .select((col("doc_id") + 10000000L).as("doc_id"), col("text"))
-      val root = Files.createTempDirectory("graft-q179").toString
-      val cat = new graft.catalog.ParquetCatalog(s, root)
-      graft.pipeline.Packing.exportShards(docs, "doc_id", "text", cat,
-        "shards", seqLen = 2048, numGroups = 8)
-      graft.pipeline.Packing.appendShards("doc_id",
-        batch2.select(col("doc_id"),
-          posexplode(graft.text.TextAnalysis.tokens(col("text")))
-            .as(Seq("pos", "tok"))),
-        cat, "shards", seqLen = 2048, numGroups = 8)
-      val (bin, _) = graft.pipeline.Packing.readShards(cat, "shards")
-      val out = bin
-        .select(col("grp"), col("seq"), col("n_tok"),
-          graft.functions.TokenBinary.weightedSumCol(col("tokens"))
-            .as("tok_wsum"))
-        .orderBy(col("grp"), col("seq"))
-        .localCheckpoint()
-      Round7bQueries.rmTree(root)
-      out
+      Streams.withCatalog(s, "q179") { cat =>
+        graft.pipeline.Packing.exportShards(docs, "doc_id", "text", cat,
+          "shards", seqLen = 2048, numGroups = 8)
+        graft.pipeline.Packing.appendShards("doc_id",
+          batch2.select(col("doc_id"),
+            posexplode(graft.text.TextAnalysis.tokens(col("text")))
+              .as(Seq("pos", "tok"))),
+          cat, "shards", seqLen = 2048, numGroups = 8)
+        Streams.tapeSums(cat)
+      }
     }),
 
     // ...and the STREAMING door: slices land as files (mtimes pin the
@@ -357,7 +316,7 @@ object Round10Queries {
             Files.setLastModifiedTime(dst,
               FileTime.fromMillis(1000000000000L + k * 60000L))
           }
-        Round7bQueries.rmTree(tmp)
+        Streams.rmTree(tmp)
       }
       StreamFold[Unit](StreamFold.files(s, land), cp) { (_, batch, _) =>
         graft.pipeline.Packing.appendShards("doc_id",
@@ -365,7 +324,7 @@ object Round10Queries {
             posexplode(graft.text.TextAnalysis.tokens(col("text")))
               .as(Seq("pos", "tok"))),
           cat, "shards", seqLen = 2048, numGroups = 8)
-      }.getOrElse(throw Round7bQueries.noBatch("q180_stream_export"))
+      }.getOrElse(throw Streams.noBatch("q180_stream_export"))
       val (bin, _) = graft.pipeline.Packing.readShards(cat, "shards")
       val out = bin
         .select(col("grp"), col("seq"), col("n_tok"),
@@ -373,8 +332,8 @@ object Round10Queries {
             .as("tok_wsum"))
         .orderBy(col("grp"), col("seq"))
         .localCheckpoint()
-      Round7bQueries.rmTree(root); Round7bQueries.rmTree(land)
-      Round7bQueries.rmTree(cp)
+      Streams.rmTree(root); Streams.rmTree(land)
+      Streams.rmTree(cp)
       out
     }),
 
@@ -388,25 +347,16 @@ object Round10Queries {
     // tokenization, packing, and binary materialization verified as
     // ONE chain.
     "q178_export_bpe" -> ((s, dir) => {
-      import java.nio.file.Files
       val docs = Tables(s, dir, "documents")
       val merges = graft.text.Bpe.trainMerges(docs, "text",
-        Round7Queries.BpeK)
+        Text.BpeK)
       val stream = graft.text.Bpe.symbolStream(docs, "doc_id", "text",
         merges)
-      val root = Files.createTempDirectory("graft-q178").toString
-      val cat = new graft.catalog.ParquetCatalog(s, root)
-      graft.pipeline.Packing.exportShardsOf("doc_id", stream, cat,
-        "shards", seqLen = 2048, numGroups = 8)
-      val (bin, _) = graft.pipeline.Packing.readShards(cat, "shards")
-      val out = bin
-        .select(col("grp"), col("seq"), col("n_tok"),
-          graft.functions.TokenBinary.weightedSumCol(col("tokens"))
-            .as("tok_wsum"))
-        .orderBy(col("grp"), col("seq"))
-        .localCheckpoint()
-      Round7bQueries.rmTree(root)
-      out
+      Streams.withCatalog(s, "q178") { cat =>
+        graft.pipeline.Packing.exportShardsOf("doc_id", stream, cat,
+          "shards", seqLen = 2048, numGroups = 8)
+        Streams.tapeSums(cat)
+      }
     }),
 
     // BINARY LOADER EXPORT, index side: export the packed corpus
@@ -416,18 +366,14 @@ object Round10Queries {
     // (same oracle SQL), proving the artifact a loader maps carries
     // exactly the placement the manifest promised.
     "q170_export_idx" -> ((s, dir) => {
-      import java.nio.file.Files
-      val root = Files.createTempDirectory("graft-q170").toString
-      val cat = new graft.catalog.ParquetCatalog(s, root)
-      graft.pipeline.Packing.exportShards(
-        Tables(s, dir, "documents"), "doc_id", "text", cat, "shards",
-        seqLen = 2048, numGroups = 8)
-      val (_, idx) = graft.pipeline.Packing.readShards(cat, "shards")
-      val out = idx
-        .orderBy(col("grp"), col("seq"), col("seq_from"), col("doc_id"))
-        .localCheckpoint()
-      Round7bQueries.rmTree(root)
-      out
+      Streams.withCatalog(s, "q170") { cat =>
+        graft.pipeline.Packing.exportShards(
+          Tables(s, dir, "documents"), "doc_id", "text", cat, "shards",
+          seqLen = 2048, numGroups = 8)
+        val (_, idx) = graft.pipeline.Packing.readShards(cat, "shards")
+        idx
+          .orderBy(col("grp"), col("seq"), col("seq_from"), col("doc_id"))
+      }
     }),
 
     // BINARY LOADER EXPORT, token side: read the published .bin back
@@ -440,21 +386,12 @@ object Round10Queries {
     // encode → parquet publish → decode chain preserves every token
     // id, its order, and the sequence boundaries.
     "q171_export_bin" -> ((s, dir) => {
-      import java.nio.file.Files
-      val root = Files.createTempDirectory("graft-q171").toString
-      val cat = new graft.catalog.ParquetCatalog(s, root)
-      graft.pipeline.Packing.exportShards(
-        Tables(s, dir, "documents"), "doc_id", "text", cat, "shards",
-        seqLen = 2048, numGroups = 8)
-      val (bin, _) = graft.pipeline.Packing.readShards(cat, "shards")
-      val out = bin
-        .select(col("grp"), col("seq"), col("n_tok"),
-          graft.functions.TokenBinary.weightedSumCol(col("tokens"))
-            .as("tok_wsum"))
-        .orderBy(col("grp"), col("seq"))
-        .localCheckpoint()
-      Round7bQueries.rmTree(root)
-      out
+      Streams.withCatalog(s, "q171") { cat =>
+        graft.pipeline.Packing.exportShards(
+          Tables(s, dir, "documents"), "doc_id", "text", cat, "shards",
+          seqLen = 2048, numGroups = 8)
+        Streams.tapeSums(cat)
+      }
     })
   )
 
@@ -465,7 +402,7 @@ object Round10Queries {
     * split, n_tok)`. The q144 chain, parameterized.
     */
   private def releaseChain(x: String): String = {
-    import PipelineQueries.{langCaseSql, langHitColsSql, qualityExprSql,
+    import Corpus.{langCaseSql, langHitColsSql, qualityExprSql,
       shinglesSql, sigBucketsSql}
     val nTokSql =
       """CAST(len(list_filter(string_split_regex(r.text, '\s+'),
@@ -574,7 +511,7 @@ object Round10Queries {
     * release-replay oracle opens with (q172/q173/q185).
     */
   private lazy val releasePreamble: String = {
-    import PipelineQueries.{shinglesSql, sigBucketsSql}
+    import Corpus.{shinglesSql, sigBucketsSql}
     s"""baseS AS (SELECT doc_id, text FROM documents WHERE doc_id % 4 = 0),
        |plant AS (
        |  SELECT doc_id, text FROM baseS
@@ -635,7 +572,7 @@ object Round10Queries {
     // SQL verbatim: the decoded pixels, and therefore every hash,
     // pair, and cluster, must be identical under the new container.
     "q174_png_perceptual" -> ((s, dir) => {
-      perceptualClusters(Round7Queries.mediaCorpus(s, dir,
+      perceptualClusters(Media.mediaCorpus(s, dir,
         graft.multimodal.Png.encode _, graft.multimodal.Png.decode _), s)
     }),
 
@@ -649,7 +586,7 @@ object Round10Queries {
       implicit val sp: SparkSession = s
       import s.implicits._
       import graft.multimodal.{Bmp, Multimodal, Png}
-      val media = Round7Queries.bmpMedia(s, dir).mapPartitions(_.map { m =>
+      val media = Media.bmpMedia(s, dir).mapPartitions(_.map { m =>
         if (m.doc_id % 2 == 1) {
           val p = Png.encode(Bmp.decode(m.payload))
           Multimodal.BmpMedia(m.doc_id, p, p.length)
@@ -690,10 +627,10 @@ object Round10Queries {
   val oracleSql: Map[String, String] = Map(
 
     "q174_png_perceptual" ->
-      Round7Queries.oracleSql("q110_perceptual_dedup"),
+      Media.perceptualDedupSql,
 
     "q175_mixed_format_dedup" ->
-      Round7Queries.oracleSql("q110_perceptual_dedup"),
+      Media.perceptualDedupSql,
 
     "q185_release_export" ->
       s"""WITH RECURSIVE $releasePreamble,
@@ -705,50 +642,19 @@ object Round10Queries {
          |$exportWsumCoreSql""".stripMargin,
 
     "q183_export_vocab_ids" ->
-      s"""WITH ${Round7Queries.bpeCtes(Round7Queries.BpeK)},
-         |dt AS (SELECT doc_id, $toksExpr AS ts FROM documents),
-         |dw AS (SELECT doc_id, i AS wpos, ts[i] AS word
-         |  FROM dt, UNNEST(generate_series(1, len(ts))) AS u(i)),
-         |ws AS (SELECT d.doc_id, d.wpos,
-         |    list_filter(string_split(w.seg, chr(31)), x -> x <> '')
-         |      AS syms
-         |  FROM dw d JOIN w${Round7Queries.BpeK} w USING (word)),
-         |sy AS (SELECT doc_id, wpos, j AS spos, syms[j] AS sym
-         |  FROM ws, UNNEST(generate_series(1, len(syms))) AS u(j)),
-         |vc AS (SELECT sym AS token, CAST(COUNT(*) AS BIGINT) AS n
-         |  FROM sy GROUP BY sym),
-         |vid AS (SELECT token,
-         |    ROW_NUMBER() OVER (ORDER BY n DESC, token) - 1 AS vid
-         |  FROM vc),
-         |g AS (SELECT doc_id, sym,
-         |    ROW_NUMBER() OVER (PARTITION BY doc_id
-         |      ORDER BY wpos, spos) - 1 AS gpos
-         |  FROM sy),
-         |cnt AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tok
-         |  FROM g GROUP BY doc_id),
-         |p AS (SELECT doc_id, doc_id % 8 AS grp, n_tok,
-         |    CAST(SUM(n_tok) OVER (PARTITION BY doc_id % 8
-         |      ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |      AS BIGINT) - n_tok AS start_tok
-         |  FROM cnt),
-         |tok AS (SELECT p.grp, (p.start_tok + g.gpos) // 2048 AS seq,
-         |    (p.start_tok + g.gpos) % 2048 AS off, v.vid AS tid
-         |  FROM g JOIN p USING (doc_id)
-         |  JOIN vid v ON v.token = g.sym)
-         |SELECT grp, seq, CAST(COUNT(*) AS BIGINT) AS n_tok,
-         |  CAST(SUM((off + 1) * tid) AS BIGINT) AS tok_wsum
-         |FROM tok GROUP BY grp, seq ORDER BY grp, seq""".stripMargin,
+      s"""WITH ${Text.bpeCtes(Text.BpeK)},
+         |${Text.bpeSymsSql},
+         |${Text.vocabTapeSql}""".stripMargin,
 
     "q184_vocab_table" ->
-      s"""WITH ${Round7Queries.bpeCtes(Round7Queries.BpeK)},
+      s"""WITH ${Text.bpeCtes(Text.BpeK)},
          |dt AS (SELECT doc_id, $toksExpr AS ts FROM documents),
          |dw AS (SELECT doc_id, ts[i] AS word
          |  FROM dt, UNNEST(generate_series(1, len(ts))) AS u(i)),
          |ws AS (SELECT d.doc_id,
          |    list_filter(string_split(w.seg, chr(31)), x -> x <> '')
          |      AS syms
-         |  FROM dw d JOIN w${Round7Queries.BpeK} w USING (word)),
+         |  FROM dw d JOIN w${Text.BpeK} w USING (word)),
          |sy AS (SELECT syms[j] AS sym
          |  FROM ws, UNNEST(generate_series(1, len(syms))) AS u(j)),
          |vc AS (SELECT sym AS token, CAST(COUNT(*) AS BIGINT) AS n
@@ -758,7 +664,7 @@ object Round10Queries {
          |FROM vc ORDER BY id""".stripMargin,
 
     "q182_calibrated_gate" -> {
-      import PipelineQueries.qualityExprSql
+      import Corpus.qualityExprSql
       s"""WITH scored AS (SELECT doc_id, source,
          |  $qualityExprSql AS quality
          |  FROM documents),
@@ -821,14 +727,7 @@ object Round10Queries {
          |FROM documents c LEFT JOIN agg a USING (doc_id)
          |ORDER BY c.doc_id""".stripMargin,
 
-    "q176_sql_dml" ->
-      """SELECT doc_id,
-        |  CASE WHEN source = 'src5' THEN text || ' [redacted]'
-        |       ELSE text END AS text,
-        |  source
-        |FROM documents
-        |WHERE NOT (doc_id % 5 = 3)
-        |ORDER BY doc_id""".stripMargin,
+    "q176_sql_dml" -> Scd.dmlSql,
 
     "q177_hybrid_rrf" ->
       s"""WITH toks AS (SELECT doc_id, unnest($toksExpr) AS token
@@ -885,35 +784,9 @@ object Round10Queries {
          |WHERE rank <= 20 ORDER BY rank""".stripMargin,
 
     "q178_export_bpe" ->
-      s"""WITH ${Round7Queries.bpeCtes(Round7Queries.BpeK)},
-         |dt AS (SELECT doc_id, $toksExpr AS ts FROM documents),
-         |dw AS (SELECT doc_id, i AS wpos, ts[i] AS word
-         |  FROM dt, UNNEST(generate_series(1, len(ts))) AS u(i)),
-         |ws AS (SELECT d.doc_id, d.wpos,
-         |    list_filter(string_split(w.seg, chr(31)), x -> x <> '')
-         |      AS syms
-         |  FROM dw d JOIN w${Round7Queries.BpeK} w USING (word)),
-         |sy AS (SELECT doc_id, wpos, j AS spos, syms[j] AS sym
-         |  FROM ws, UNNEST(generate_series(1, len(syms))) AS u(j)),
-         |g AS (SELECT doc_id, sym,
-         |    ROW_NUMBER() OVER (PARTITION BY doc_id
-         |      ORDER BY wpos, spos) - 1 AS gpos
-         |  FROM sy),
-         |cnt AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tok
-         |  FROM g GROUP BY doc_id),
-         |p AS (SELECT doc_id, doc_id % 8 AS grp, n_tok,
-         |    CAST(SUM(n_tok) OVER (PARTITION BY doc_id % 8
-         |      ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |      AS BIGINT) - n_tok AS start_tok
-         |  FROM cnt),
-         |tok AS (SELECT p.grp, (p.start_tok + g.gpos) // 2048 AS seq,
-         |    (p.start_tok + g.gpos) % 2048 AS off,
-         |    ${graft.pipeline.Packing.tokenIdSql("g.sym")} AS tid
-         |  FROM g JOIN p USING (doc_id))
-         |SELECT grp, seq, CAST(COUNT(*) AS BIGINT) AS n_tok,
-         |  CAST(SUM((off + 1) * tid) AS BIGINT) AS tok_wsum
-         |FROM tok GROUP BY grp, seq ORDER BY grp, seq""".stripMargin,
+      s"""WITH ${Text.bpeCtes(Text.BpeK)},
+         |${Text.bpeSymsSql},
+         |${Text.symTapeSql}""".stripMargin,
 
     "q172_release_diff" ->
       s"""WITH RECURSIVE $releaseDiffCtes
@@ -945,7 +818,7 @@ object Round10Queries {
     // the export/import round trip IS the oracle: q106's manifest SQL
     // verbatim (the artifact's idx must match the manifest it claims
     // to materialize)
-    "q170_export_idx" -> Round6Queries.oracleSql("q106_seq_manifest"),
+    "q170_export_idx" -> Corpus.seqManifestSql,
 
     "q171_export_bin" -> exportWsumSql(
       "uc AS (SELECT doc_id, text FROM documents)"),

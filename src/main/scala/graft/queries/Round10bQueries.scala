@@ -1,5 +1,7 @@
 package graft.queries
 
+import graft.queries.fixtures.Corpus.toksExpr
+import graft.queries.fixtures.{Corpus, Streams, Text, Vectors}
 import graft.sources.Tables
 import graft.streaming.StreamFold
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -10,10 +12,7 @@ import org.apache.spark.sql.functions._
   * rank buckets (q188), and the quantized-vector loader artifact
   * (q189). Every query replays bit-identically in the DuckDB oracle.
   */
-object Round10bQueries {
-
-  private val toksExpr =
-    """list_filter(string_split_regex(text, '\s+'), x -> x <> '')"""
+object Round10bQueries extends QueryGroup {
 
   /** The q186 eval plant: whole-doc train copies (coverage 10⁶ ppm),
     * 12-token train prefixes + an unseen suffix (partial coverage —
@@ -145,7 +144,7 @@ object Round10bQueries {
       val counts = graft.text.Repetition.fitBackoffMaterialized(
         docs.filter(srcnum % 2 === 0).select(col("doc_id"), col("text")),
         "doc_id", "text")
-      CorpusPipeline.clean(PipelineQueries.corpus(s, dir), "doc_id",
+      CorpusPipeline.clean(Corpus.corpus(s, dir), "doc_id",
           "text", CorpusPipeline.Config(familiarity = Some(
             CorpusPipeline.FamiliarityGate(counts, minScorePpm = 40000L))))
         .select(col("doc_id"), col("quality"), col("lang_pred"))
@@ -161,38 +160,30 @@ object Round10bQueries {
     // quantization from the float originals — export → publish →
     // decode → serve changes nothing.
     "q190_artifact_ann" -> ((s, dir) => {
-      import java.nio.file.Files
-      val root = Files.createTempDirectory("graft-q190").toString
-      val cat = new graft.catalog.ParquetCatalog(s, root)
-      graft.similarity.VectorStore.exportVectors(
-        Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding")),
-        "vec_id", "embedding", cat, "vecs")
-      val dec = graft.similarity.VectorStore.vectorsDecoded(
-          graft.similarity.VectorStore.readVectors(cat, "vecs"))
-        .select(col("vec_id"), col("qvec"))
-      val out = graft.similarity.VectorStore.servedTopK(dec,
-          dec.filter(col("vec_id") < 50), "vec_id", "qvec", k = 10)
-        .orderBy(col("q_id"), col("rank"))
-        .localCheckpoint()
-      Round7bQueries.rmTree(root)
-      out
+      Streams.withCatalog(s, "q190") { cat =>
+        graft.similarity.VectorStore.exportVectors(
+          Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding")),
+          "vec_id", "embedding", cat, "vecs")
+        val dec = graft.similarity.VectorStore.vectorsDecoded(
+            graft.similarity.VectorStore.readVectors(cat, "vecs"))
+          .select(col("vec_id"), col("qvec"))
+        graft.similarity.VectorStore.servedTopK(dec,
+            dec.filter(col("vec_id") < 50), "vec_id", "qvec", k = 10)
+          .orderBy(col("q_id"), col("rank"))
+      }
     }),
 
     "q189_vector_artifact" -> ((s, dir) => {
-      import java.nio.file.Files
-      val root = Files.createTempDirectory("graft-q189").toString
-      val cat = new graft.catalog.ParquetCatalog(s, root)
-      graft.similarity.VectorStore.exportVectors(
-        Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding")),
-        "vec_id", "embedding", cat, "vecs")
-      val out = graft.similarity.VectorStore.readVectors(cat, "vecs")
-        .select(col("vec_id"), col("dims"),
-          graft.functions.VectorBinary.weightedSumI8Col(col("buf"))
-            .as("q_wsum"))
-        .orderBy(col("vec_id"))
-        .localCheckpoint()
-      Round7bQueries.rmTree(root)
-      out
+      Streams.withCatalog(s, "q189") { cat =>
+        graft.similarity.VectorStore.exportVectors(
+          Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding")),
+          "vec_id", "embedding", cat, "vecs")
+        graft.similarity.VectorStore.readVectors(cat, "vecs")
+          .select(col("vec_id"), col("dims"),
+            graft.functions.VectorBinary.weightedSumI8Col(col("buf"))
+              .as("q_wsum"))
+          .orderBy(col("vec_id"))
+      }
     }),
 
     // INCREMENTAL vector-artifact append: a second batch (fresh ids)
@@ -201,25 +192,21 @@ object Round10bQueries {
     // an existing byte; unlike the token tape there is no placement to
     // re-derive). Oracle = the one-shot export replay over the union.
     "q192_incremental_vectors" -> ((s, dir) => {
-      import java.nio.file.Files
       val emb = Tables(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
       val batch2 = emb.filter(col("vec_id") % 2 === 0)
         .select((col("vec_id") + 10000000L).as("vec_id"), col("embedding"))
-      val root = Files.createTempDirectory("graft-q192").toString
-      val cat = new graft.catalog.ParquetCatalog(s, root)
-      graft.similarity.VectorStore.exportVectors(emb, "vec_id",
-        "embedding", cat, "vecs")
-      graft.similarity.VectorStore.appendVectors(batch2, "vec_id",
-        "embedding", cat, "vecs")
-      val out = graft.similarity.VectorStore.readVectors(cat, "vecs")
-        .select(col("vec_id"), col("dims"),
-          graft.functions.VectorBinary.weightedSumI8Col(col("buf"))
-            .as("q_wsum"))
-        .orderBy(col("vec_id"))
-        .localCheckpoint()
-      Round7bQueries.rmTree(root)
-      out
+      Streams.withCatalog(s, "q192") { cat =>
+        graft.similarity.VectorStore.exportVectors(emb, "vec_id",
+          "embedding", cat, "vecs")
+        graft.similarity.VectorStore.appendVectors(batch2, "vec_id",
+          "embedding", cat, "vecs")
+        graft.similarity.VectorStore.readVectors(cat, "vecs")
+          .select(col("vec_id"), col("dims"),
+            graft.functions.VectorBinary.weightedSumI8Col(col("buf"))
+              .as("q_wsum"))
+          .orderBy(col("vec_id"))
+      }
     }),
 
     // ...and the STREAMING door: embedding slices land as files, each
@@ -231,7 +218,7 @@ object Round10bQueries {
       val emb = Tables(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
       val root = Files.createTempDirectory("graft-q193").toString
-      val land = Round7bQueries.landThirds(emb, "vec_id", "graft-q193",
+      val land = Streams.landThirds(emb, "vec_id", "graft-q193",
         (d, k) => d.select((col("vec_id") + k * 10000000L).as("vec_id"),
           col("embedding")))
       val cp = Files.createTempDirectory("graft-q193-cp").toString
@@ -239,15 +226,15 @@ object Round10bQueries {
       StreamFold[Unit](StreamFold.files(s, land), cp) { (_, batch, _) =>
         graft.similarity.VectorStore.appendVectors(batch, "vec_id",
           "embedding", cat, "vecs")
-      }.getOrElse(throw Round7bQueries.noBatch("q193_stream_vectors"))
+      }.getOrElse(throw Streams.noBatch("q193_stream_vectors"))
       val out = graft.similarity.VectorStore.readVectors(cat, "vecs")
         .select(col("vec_id"), col("dims"),
           graft.functions.VectorBinary.weightedSumI8Col(col("buf"))
             .as("q_wsum"))
         .orderBy(col("vec_id"))
         .localCheckpoint()
-      Round7bQueries.rmTree(root); Round7bQueries.rmTree(land)
-      Round7bQueries.rmTree(cp)
+      Streams.rmTree(root); Streams.rmTree(land)
+      Streams.rmTree(cp)
       out
     })
   )
@@ -351,25 +338,14 @@ object Round10bQueries {
 
     // q66's SQL verbatim: the artifact round trip must not move a
     // single ranking
-    "q190_artifact_ann" -> Round3Queries.oracleSql("q66_quantized_ann"),
+    "q190_artifact_ann" -> Vectors.quantizedAnnSql,
 
     // q46's stage-for-stage replay with the backoff-LM gate CTEs
     // (q160's fit arithmetic, fb-prefixed) inserted before exact dedup
     "q191_pipeline_familiarity" -> {
-      import PipelineQueries.{corpusSql, langCaseSql, langHitColsSql,
-        minhashCtesSql, pairsCteSql, qualityExprSql, shinglesSql}
+      import Corpus.{corpusSql, minhashCtesSql, pairsCteSql, shinglesSql}
       s"""WITH RECURSIVE $corpusSql,
-         |scored AS (
-         |  SELECT doc_id, text,
-         |  $qualityExprSql AS quality,
-         |$langHitColsSql
-         |  FROM corpus),
-         |gated AS (
-         |  SELECT doc_id, text, quality,
-         |  $langCaseSql AS lang_pred
-         |  FROM scored),
-         |g2 AS (SELECT doc_id, text, quality, lang_pred FROM gated
-         |       WHERE quality >= 0.7::DOUBLE AND lang_pred = 'en'),
+         |${Corpus.rowGatesSql("corpus")},
          |fbd AS (SELECT doc_id,
          |    CAST(substr(source, 4) AS INT) AS srcnum,
          |    $toksExpr AS t
@@ -464,7 +440,7 @@ object Round10bQueries {
     * oracle (the sampler consumes the bucketed relation verbatim).
     */
   private lazy val bucketsSql: String =
-    s"""WITH base AS (${Round9cQueries.backoff160Sql}),
+    s"""WITH base AS (${Text.backoff160Sql}),
        |j AS (SELECT b.doc_id, d.source, b.score_mean
        |  FROM base b JOIN documents d USING (doc_id)),
        |r AS (SELECT doc_id, source, score_mean,

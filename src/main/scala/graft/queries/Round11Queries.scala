@@ -1,7 +1,13 @@
 package graft.queries
 
+import graft.queries.fixtures.Corpus.toksExpr
+import graft.queries.fixtures.Crawl.{htmlExtractCtes, htmlExtractSql,
+  wrapCol, wrapSqlOf}
+import graft.queries.fixtures.Media.jpegPlantImage
+import graft.queries.fixtures.Text.unigramTrainCtes
+import graft.queries.fixtures.{Corpus, Scd, Streams, Text}
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Round 11: HTML/boilerplate extraction as CorpusPipeline stage 0
@@ -9,200 +15,7 @@ import org.apache.spark.sql.functions._
   * top remaining real-user gap was that the pipeline started at clean
   * text. Every query replays bit-identically in the DuckDB oracle.
   */
-object Round11Queries {
-
-  // ---- the synthetic crawl page -------------------------------------
-  // documents.parquet is clean text, so the HTML corpus is built by
-  // WRAPPING each document in a deterministic page: head metadata +
-  // script + style, a nav bar, a short heading, the article as one <p>,
-  // a related-links box and a link-heavy footer. The identical wrap
-  // expression appears in the oracle SQL, so extraction is judged on
-  // recovering EXACTLY the article text from the boilerplate.
-  // (No single-quote characters in the literals: the same strings embed
-  // in SQL literals verbatim.)
-
-  private val wrapHead = "<html><head><title>Doc "
-  private val wrapMid1 = "</title>" +
-    "<script type=\"text/javascript\">var n = 1; if (n < 2) { n = 3; }</script>" +
-    "<style>.nav { color: red; }</style></head><body>" +
-    "<div class=\"nav\"><a href=\"/\">Home</a> <a href=\"/about\">About</a> " +
-    "<a href=\"/contact\">Contact</a></div><h1>Doc "
-  private val wrapMid2 = "</h1><!-- rendered by graft --><p>"
-  private val wrapTail = "</p>" +
-    "<div class=\"links\"><a href=\"/r1\">first related link</a> " +
-    "<a href=\"/r2\">second related link</a> " +
-    "<a href=\"/r3\">third related link</a></div>" +
-    "<div class=\"footer\">(c) 2026 <a href=\"/terms\">Terms</a> " +
-    "<a href=\"/privacy\">Privacy</a> <a href=\"/imprint\">Imprint</a>" +
-    "</div></body></html>"
-
-  private[graft] def wrapCol(id: Column, text: Column): Column =
-    concat(lit(wrapHead), id.cast("string"), lit(wrapMid1),
-      id.cast("string"), lit(wrapMid2), text, lit(wrapTail))
-
-  private[queries] def wrapSqlOf(id: String, t: String): String =
-    s"'$wrapHead' || $id || '$wrapMid1' || $id || '$wrapMid2' || $t || '$wrapTail'"
-
-  /** Oracle mirror of [[graft.text.Html.extract]] over `src(doc_id,
-    * html)`, ending in `hx(doc_id, text, n_blocks, n_kept)`. Single-line
-    * CTE bodies where they hold `||` (the stripMargin re-strip hazard:
-    * concat operators never at line start).
-    */
-  private[queries] def htmlExtractCtes(src: String): String =
-    s"""hsplit AS (SELECT doc_id, string_split_regex(regexp_replace(regexp_replace(regexp_replace(html, '(?is)<script\\b[^>]*>.*?</script>', ' ', 'g'), '(?is)<style\\b[^>]*>.*?</style>', ' ', 'g'), '(?s)<!--.*?-->', ' ', 'g'), '(?i)</?(?:p|div|h[1-6]|li|ul|ol|br|table|thead|tbody|tr|td|th|header|footer|nav|section|article|blockquote|pre|html|head|body|title|main|aside|form|hr)\\b[^>]*>') AS blocks FROM $src),
-       |hblk0 AS (SELECT doc_id, unnest(generate_series(1, len(blocks))) AS pos, unnest(blocks) AS block FROM hsplit),
-       |hblk AS (SELECT doc_id, pos,
-       |    length(regexp_replace(block, '<[^>]*>', '', 'g')) AS raw_len,
-       |    length(regexp_replace(block, '<[^>]*>', '', 'g')) -
-       |      length(regexp_replace(regexp_replace(block, '(?is)<a\\b[^>]*>.*?</a>', '', 'g'), '<[^>]*>', '', 'g')) AS link_len,
-       |    trim(regexp_replace(replace(replace(replace(replace(replace(regexp_replace(block, '<[^>]*>', '', 'g'), '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''), '&amp;', '&'), '\\s+', ' ', 'g')) AS btext
-       |  FROM hblk0),
-       |hnb AS (SELECT * FROM hblk WHERE length(btext) > 0),
-       |hx AS (SELECT s.doc_id,
-       |    coalesce(k.ktext, '') AS text,
-       |    coalesce(n.n_blocks, CAST(0 AS BIGINT)) AS n_blocks,
-       |    coalesce(k.n_kept, CAST(0 AS BIGINT)) AS n_kept
-       |  FROM $src s
-       |  LEFT JOIN (SELECT doc_id, count(*) AS n_blocks FROM hnb GROUP BY doc_id) n ON n.doc_id = s.doc_id
-       |  LEFT JOIN (SELECT doc_id, count(*) AS n_kept, string_agg(btext, chr(10) ORDER BY pos) AS ktext FROM hnb WHERE length(btext) >= 20 AND link_len * 3 <= raw_len GROUP BY doc_id) k ON k.doc_id = s.doc_id)""".stripMargin
-
-  private val toksExpr =
-    """list_filter(string_split_regex(text, '\s+'), x -> x <> '')"""
-
-  // ---- unigram-LM tokenizer oracle (q198-q200) -----------------------
-  // Mirror of graft.text.Unigram: integer costs, fixed-width (Lmax=4)
-  // Viterbi as a recursive CTE — one row per word per position, the
-  // last four positions' (cost, pieces, seg) carried as columns, the
-  // argmin a CASE chain over row-value comparisons (cost, pieces, l).
-  // Column lists on the dp CTEs keep the dump-time materializer off
-  // recursive members.
-
-  private val UInf = "1099511627776" // 2^40 — UnigramOps.Inf
-
-  /** Base relations: word dict, char alphabet, seed substring counts. */
-  private def unigramBaseCtes(src: String): String =
-    s"""wd AS (SELECT word, CAST(count(*) AS BIGINT) AS freq FROM (SELECT unnest($toksExpr) AS word FROM $src) t GROUP BY word),
-       |wpos AS (SELECT word, freq, unnest(generate_series(1, length(word))) AS i FROM wd),
-       |chars AS (SELECT DISTINCT substr(word, i, 1) AS piece FROM wpos),
-       |subs AS (SELECT piece, CAST(SUM(freq) AS BIGINT) AS cnt FROM (
-       |    SELECT p.freq, substr(p.word, p.i, ls.l) AS piece
-       |    FROM wpos p CROSS JOIN (SELECT unnest(generate_series(1, 4)) AS l) ls
-       |    WHERE p.i + ls.l - 1 <= length(p.word)) t
-       |  GROUP BY piece)""".stripMargin
-
-  /** One inventory round: prune `countsRel` to top `keep` (+ single
-    * chars), recompute integer costs from the kept total.
-    */
-  private def unigramRoundCtes(sfx: String, countsRel: String,
-      keep: Int): String =
-    s"""top$sfx AS (SELECT piece, cnt FROM $countsRel ORDER BY cnt DESC, piece ASC LIMIT $keep),
-       |invm$sfx AS (SELECT piece, MAX(cnt) AS cnt FROM (SELECT piece, cnt FROM top$sfx UNION ALL SELECT c.piece, coalesce(s.cnt, CAST(0 AS BIGINT)) AS cnt FROM chars c LEFT JOIN $countsRel s ON s.piece = c.piece) tu GROUP BY piece),
-       |nn$sfx AS (SELECT CAST(coalesce(SUM(cnt), 0) AS BIGINT) AS n FROM invm$sfx),
-       |inv$sfx AS (SELECT piece, cnt, CAST(length(bin((SELECT n FROM nn$sfx))) - length(bin(greatest(cnt, CAST(1 AS BIGINT)))) AS BIGINT) AS cost FROM invm$sfx),
-       |unk$sfx AS (SELECT CAST(length(bin(n)) + 1 AS BIGINT) AS uc FROM nn$sfx)""".stripMargin
-
-  /** The Viterbi DP over `wd` under inventory `inv<invSfx>` — the
-    * validated fixed-window recursion (see Unigram scaladoc). The
-    * column list keeps recursive members out of the CTE materializer.
-    */
-  private def unigramDpCte(sfx: String, invSfx: String): String = {
-    val inf = s"CAST($UInf AS BIGINT)"
-    s"""dp$sfx(word, len, pos, c1, p1, s1, c2, p2, s2, c3, p3, s3, c4, p4, s4) AS (
-       |  SELECT word, length(word), 0, CAST(0 AS BIGINT), 0, '', $inf, 0, '', $inf, 0, '', $inf, 0, ''
-       |  FROM wd
-       |  UNION ALL
-       |  SELECT word, len, pos + 1,
-       |    CASE best WHEN 1 THEN c1 + k1 WHEN 2 THEN c2 + k2 WHEN 3 THEN c3 + k3 ELSE c4 + k4 END,
-       |    CASE best WHEN 1 THEN p1 + 1 WHEN 2 THEN p2 + 1 WHEN 3 THEN p3 + 1 ELSE p4 + 1 END,
-       |    CASE best WHEN 1 THEN s1 || chr(31) || g1 WHEN 2 THEN s2 || chr(31) || g2 WHEN 3 THEN s3 || chr(31) || g3 ELSE s4 || chr(31) || g4 END,
-       |    c1, p1, s1, c2, p2, s2, c3, p3, s3
-       |  FROM (
-       |    SELECT *,
-       |      CASE
-       |        WHEN (c1 + k1, p1 + 1, 1) <= (c2 + k2, p2 + 1, 2) AND (c1 + k1, p1 + 1, 1) <= (c3 + k3, p3 + 1, 3) AND (c1 + k1, p1 + 1, 1) <= (c4 + k4, p4 + 1, 4) THEN 1
-       |        WHEN (c2 + k2, p2 + 1, 2) <= (c3 + k3, p3 + 1, 3) AND (c2 + k2, p2 + 1, 2) <= (c4 + k4, p4 + 1, 4) THEN 2
-       |        WHEN (c3 + k3, p3 + 1, 3) <= (c4 + k4, p4 + 1, 4) THEN 3
-       |        ELSE 4 END AS best
-       |    FROM (
-       |      SELECT d.word, d.len, d.pos,
-       |        d.c1, d.p1, d.s1, d.c2, d.p2, d.s2, d.c3, d.p3, d.s3, d.c4, d.p4, d.s4,
-       |        substr(d.word, d.pos + 1, 1) AS g1,
-       |        substr(d.word, d.pos, 2) AS g2,
-       |        substr(d.word, d.pos - 1, 3) AS g3,
-       |        substr(d.word, d.pos - 2, 4) AS g4,
-       |        coalesce(CAST(i1.cost AS BIGINT), (SELECT CAST(uc AS BIGINT) FROM unk$invSfx)) AS k1,
-       |        CASE WHEN d.pos >= 1 AND i2.cost IS NOT NULL THEN CAST(i2.cost AS BIGINT) ELSE $inf END AS k2,
-       |        CASE WHEN d.pos >= 2 AND i3.cost IS NOT NULL THEN CAST(i3.cost AS BIGINT) ELSE $inf END AS k3,
-       |        CASE WHEN d.pos >= 3 AND i4.cost IS NOT NULL THEN CAST(i4.cost AS BIGINT) ELSE $inf END AS k4
-       |      FROM dp$sfx d
-       |      LEFT JOIN inv$invSfx i1 ON i1.piece = substr(d.word, d.pos + 1, 1)
-       |      LEFT JOIN inv$invSfx i2 ON i2.piece = substr(d.word, d.pos, 2)
-       |      LEFT JOIN inv$invSfx i3 ON i3.piece = substr(d.word, d.pos - 1, 3)
-       |      LEFT JOIN inv$invSfx i4 ON i4.piece = substr(d.word, d.pos - 2, 4)
-       |      WHERE d.pos < d.len) t) u)""".stripMargin
-  }
-
-  /** Freq-weighted piece counts from dp<sfx>'s final segmentations. */
-  private def unigramCountCtes(sfx: String, dpSfx: String): String =
-    s"""segs$sfx AS (SELECT w.freq, d.s1 FROM dp$dpSfx d JOIN wd w USING (word) WHERE d.pos = d.len),
-       |cnt$sfx AS (SELECT piece, CAST(SUM(freq) AS BIGINT) AS cnt FROM (SELECT freq, unnest(string_split(s1, chr(31))) AS piece FROM segs$sfx) t WHERE piece <> '' GROUP BY piece)""".stripMargin
-
-  /** The full 2-round training chain (seed -> EM -> EM), ending in
-    * `inv2(piece, cnt, cost)` + `dp2` ready for apply-side CTEs.
-    */
-  private[queries] def unigramTrainCtes(src: String): String =
-    s"""${unigramBaseCtes(src)},
-       |${unigramRoundCtes("0", "subs", 256)},
-       |${unigramDpCte("0", "0")},
-       |${unigramCountCtes("1", "0")},
-       |${unigramRoundCtes("1", "cnt1", 128)},
-       |${unigramDpCte("1", "1")},
-       |${unigramCountCtes("2", "1")},
-       |${unigramRoundCtes("2", "cnt2", 128)},
-       |${unigramDpCte("2", "2")}""".stripMargin
-
-  // ---- JPEG perceptual dedup (q201) ----------------------------------
-  // JPEG is LOSSY, so the q110/q174 trick (oracle replays pixels
-  // verbatim) needs a MARGIN argument instead of bit-exact pixels: the
-  // plant is a 64x64 grid of 8x8 CONSTANT cells,
-  //   cell = 24 + 32·(md5 % 6) + 8·((gx+gy) % 2),
-  // plus a ±2 high-frequency texture that is zero at the dHash sample
-  // points (corners x=8gx, y=8gy have (x+y)%2=0). Adjacent cells
-  // differ by >= 8 gray levels (equal md5 digits leave the 8-step
-  // parity offset; different digits dominate it), and baseline-JPEG
-  // roundtrip error at quant 1 is <= 3 (JpegSpec asserts) — so every
-  // dHash BIT, and therefore every pair and cluster, is exact even
-  // though pixels are not, while comparison SIGNS stay md5-random.
-  // (A first cut used low/high checkerboard RANGES: alternation made
-  // every comparison's sign a function of position alone — all 1167
-  // images hashed IDENTICALLY and the "dedup" was one 680k-pair
-  // clique. The r8/r9 generative-formula lesson: margins must not
-  // destroy the entropy the hash is supposed to measure.)
-
-  private[graft] def jpegCell(id0: Long, gx: Int, gy: Int): Int = {
-    val h = graft.functions.TextHash.md5Low60(s"jp:$id0:$gx:$gy")
-    (24 + (h % 6) * 32 + ((gx + gy) % 2) * 8).toInt
-  }
-
-  private[graft] def jpegPlantImage(id0: Long,
-      altCell: Boolean): graft.multimodal.Bmp.Image = {
-    val w = 64; val h = 64
-    val rgb = new Array[Byte](w * h * 3)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val gx = x / 8; val gy = y / 8
-        val idc = if (altCell && gx == 3 && gy == 3) id0 + 999983L else id0
-        val v = (jpegCell(idc, gx, gy) + ((x + y) % 2) * 2).toByte
-        val p = (y * w + x) * 3
-        rgb(p) = v; rgb(p + 1) = v; rgb(p + 2) = v
-        x += 1
-      }
-      y += 1
-    }
-    graft.multimodal.Bmp.Image(w, h, rgb)
-  }
+object Round11Queries extends QueryGroup {
 
   /** rid = doc_id*4 JPEG original; +1 BMP of the SAME pixels (%3 — the
     * cross-format exact twin); +2 JPEG with cell (3,3) re-derived (%5 —
@@ -261,7 +74,7 @@ object Round11Queries {
     // the wrap because the id-bearing title/heading blocks are
     // boilerplate and fall out before fingerprinting.
     "q196_html_pipeline" -> ((s, dir) => {
-      val pages = PipelineQueries.corpus(s, dir)
+      val pages = Corpus.corpus(s, dir)
         .select(col("doc_id"),
           wrapCol(col("doc_id"), col("text")).as("text"))
       graft.pipeline.CorpusPipeline.clean(pages, "doc_id", "text",
@@ -279,27 +92,23 @@ object Round11Queries {
     // a FULL version and reads the result off the materialized bytes.
     // Oracle = q176's SQL verbatim: MoR and CoW must agree exactly.
     "q197_mor_dml" -> ((s, dir) => {
-      import java.nio.file.Files
-      val root = Files.createTempDirectory("graft-q197").toString
-      val cat = new graft.catalog.ParquetCatalog(s, root)
-      val docs = Tables(s, dir, "documents")
-        .select(col("doc_id"), col("text"), col("source"))
-      cat.create("docs_t", docs.schema)
-      cat.overwrite("docs_t", docs)
-      graft.scd.DmlSql.executeMor(s, cat,
-        "DELETE FROM docs_t WHERE doc_id % 5 = 3", "doc_id")
-      graft.scd.DmlSql.executeMor(s, cat,
-        "UPDATE docs_t SET text = concat(text, ' [redacted]') " +
-          "WHERE source = 'src5'", "doc_id")
-      require(cat.deltaChainLength("docs_t") == 2,
-        "DML did not go through the merge-on-read path")
-      cat.compact("docs_t")
-      require(cat.deltaChainLength("docs_t") == 0,
-        "compaction did not fold the delta chain")
-      val out = cat.table("docs_t").orderBy(col("doc_id"))
-        .localCheckpoint()
-      Round7bQueries.rmTree(root)
-      out
+      Streams.withCatalog(s, "q197") { cat =>
+        val docs = Tables(s, dir, "documents")
+          .select(col("doc_id"), col("text"), col("source"))
+        cat.create("docs_t", docs.schema)
+        cat.overwrite("docs_t", docs)
+        graft.scd.DmlSql.executeMor(s, cat,
+          "DELETE FROM docs_t WHERE doc_id % 5 = 3", "doc_id")
+        graft.scd.DmlSql.executeMor(s, cat,
+          "UPDATE docs_t SET text = concat(text, ' [redacted]') " +
+            "WHERE source = 'src5'", "doc_id")
+        require(cat.deltaChainLength("docs_t") == 2,
+          "DML did not go through the merge-on-read path")
+        cat.compact("docs_t")
+        require(cat.deltaChainLength("docs_t") == 0,
+          "compaction did not fold the delta chain")
+        cat.table("docs_t").orderBy(col("doc_id"))
+      }
     }),
 
     // Unigram-LM (SentencePiece-style) tokenizer TRAINING: substring-
@@ -353,7 +162,7 @@ object Round11Queries {
       val stage = Files.createTempDirectory("graft-q202-landing").toString
       val cp = Files.createTempDirectory("graft-q202-cp").toString
       val cfg = graft.pipeline.CorpusPipeline.Config(htmlInput = true)
-      PipelineQueries.corpus(s, dir)
+      Corpus.corpus(s, dir)
         .select(col("doc_id"),
           wrapCol(col("doc_id"), col("text")).as("text"))
         .repartition(3, col("doc_id"))
@@ -361,7 +170,7 @@ object Round11Queries {
       val stream = graft.streaming.StreamFold.files(s, stage)
       val (_, gated, pairs) = graft.streaming.StreamingCorpus.ingest(
         stream, "doc_id", "text", cp, cfg)
-      Round7bQueries.rmTree(stage); Round7bQueries.rmTree(cp)
+      Streams.rmTree(stage); Streams.rmTree(cp)
       graft.streaming.StreamingCorpus
         .resolveSurvivors(gated, pairs, "doc_id", "text", cfg)
         .select(col("doc_id"), col("quality"), col("lang_pred"))
@@ -374,25 +183,16 @@ object Round11Queries {
     // checksum per sequence. The oracle re-derives the symbols from
     // the recursive Viterbi DP and replays the tape arithmetic.
     "q203_export_unigram" -> ((s, dir) => {
-      import java.nio.file.Files
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val model = graft.text.Unigram.train(docs, "text")
       val stream = graft.text.Unigram.symbolStream(docs, "doc_id",
         "text", model)
-      val root = Files.createTempDirectory("graft-q203").toString
-      val cat = new graft.catalog.ParquetCatalog(s, root)
-      graft.pipeline.Packing.exportShardsOf("doc_id", stream, cat,
-        "shards", seqLen = 2048, numGroups = 8)
-      val (bin, _) = graft.pipeline.Packing.readShards(cat, "shards")
-      val out = bin
-        .select(col("grp"), col("seq"), col("n_tok"),
-          graft.functions.TokenBinary.weightedSumCol(col("tokens"))
-            .as("tok_wsum"))
-        .orderBy(col("grp"), col("seq"))
-        .localCheckpoint()
-      Round7bQueries.rmTree(root)
-      out
+      Streams.withCatalog(s, "q203") { cat =>
+        graft.pipeline.Packing.exportShardsOf("doc_id", stream, cat,
+          "shards", seqLen = 2048, numGroups = 8)
+        Streams.tapeSums(cat)
+      }
     }),
 
     // Tokenizer SELECTION report: BPE (q113's merges) and unigram
@@ -403,7 +203,7 @@ object Round11Queries {
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("text"))
       val merges = graft.text.Bpe.trainMerges(docs, "text",
-        Round7Queries.BpeK)
+        Text.BpeK)
       val model = graft.text.Unigram.train(docs, "text")
       val src = col("source")
       val occ = docs.select(src,
@@ -461,26 +261,17 @@ object Round11Queries {
     // read back and checksummed. Completes the unigram artifact set:
     // bin + idx + vocab.
     "q206_unigram_vocab_export" -> ((s, dir) => {
-      import java.nio.file.Files
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val model = graft.text.Unigram.train(docs, "text")
       val stream = graft.text.Unigram.symbolStream(docs, "doc_id",
         "text", model)
       val voc = graft.text.Unigram.vocab(docs, "text", model)
-      val root = Files.createTempDirectory("graft-q206").toString
-      val cat = new graft.catalog.ParquetCatalog(s, root)
-      graft.pipeline.Packing.exportShardsOf("doc_id", stream, cat,
-        "shards", seqLen = 2048, numGroups = 8, vocabIds = Some(voc))
-      val (bin, _) = graft.pipeline.Packing.readShards(cat, "shards")
-      val out = bin
-        .select(col("grp"), col("seq"), col("n_tok"),
-          graft.functions.TokenBinary.weightedSumCol(col("tokens"))
-            .as("tok_wsum"))
-        .orderBy(col("grp"), col("seq"))
-        .localCheckpoint()
-      Round7bQueries.rmTree(root)
-      out
+      Streams.withCatalog(s, "q206") { cat =>
+        graft.pipeline.Packing.exportShardsOf("doc_id", stream, cat,
+          "shards", seqLen = 2048, numGroups = 8, vocabIds = Some(voc))
+        Streams.tapeSums(cat)
+      }
     }),
 
     // JPEG perceptual dedup: REAL baseline-grayscale JPEG payloads
@@ -513,36 +304,18 @@ object Round11Queries {
        |hdocs AS (SELECT doc_id, ${wrapSqlOf("doc_id", "text")} AS html FROM hbase),
        |${htmlExtractCtes("hdocs")},
        |corpus AS (SELECT doc_id, text FROM hx),
-       |${PipelineQueries.gateExactCtesSql},
-       |${PipelineQueries.shinglesSql("ex")},
-       |${PipelineQueries.minhashCtesSql},
-       |${PipelineQueries.pairsCteSql("0.5")},
-       |edges AS (
-       |  SELECT a AS src, b AS dst FROM pairs
-       |  UNION SELECT b, a FROM pairs),
-       |reach(node, lab) AS (
-       |  SELECT src, src FROM edges
-       |  UNION
-       |  SELECT e2.dst, r.lab FROM reach r JOIN edges e2 ON e2.src = r.node),
-       |losers AS (
-       |  SELECT node AS doc_id FROM reach
-       |  GROUP BY node HAVING node <> min(lab))
+       |${Corpus.gateExactCtesSql},
+       |${Corpus.nearDupLosersSql("ex")}
        |SELECT e.doc_id, e.quality, e.lang_pred
        |FROM ex e
        |WHERE NOT EXISTS (SELECT 1 FROM losers l WHERE l.doc_id = e.doc_id)
        |ORDER BY e.doc_id""".stripMargin
 
   lazy val oracleSql: Map[String, String] = Map(
-    "q195_html_extract" ->
-      s"""WITH hdocs AS (SELECT doc_id, text, ${wrapSqlOf("doc_id", "text")} AS html FROM documents),
-         |${htmlExtractCtes("hdocs")}
-         |SELECT h.doc_id, h.n_blocks, h.n_kept, length(h.text) AS text_len,
-         |  CASE WHEN h.text = trim(regexp_replace(d.text, '\\s+', ' ', 'g')) THEN 1 ELSE 0 END AS clean_match
-         |FROM hx h JOIN hdocs d ON d.doc_id = h.doc_id
-         |ORDER BY h.doc_id""".stripMargin,
+    "q195_html_extract" -> htmlExtractSql,
     "q196_html_pipeline" -> htmlPipelineOracle,
     // MoR and CoW must agree exactly: q176's oracle verbatim.
-    "q197_mor_dml" -> Round10Queries.oracleSql("q176_sql_dml"),
+    "q197_mor_dml" -> Scd.dmlSql,
     "q198_unigram_train" ->
       s"""WITH RECURSIVE ${unigramTrainCtes("documents")}
          |SELECT piece, cnt AS n, cost FROM inv2 ORDER BY piece""".stripMargin,
@@ -573,36 +346,12 @@ object Round11Queries {
     "q203_export_unigram" ->
       s"""WITH RECURSIVE ${unigramTrainCtes("documents")},
          |uws AS (SELECT word, list_filter(string_split(s1, chr(31)), x -> x <> '') AS syms FROM dp2 WHERE pos = len),
-         |dt AS (SELECT doc_id, $toksExpr AS ts FROM documents),
-         |dw AS (SELECT doc_id, i AS wpos, ts[i] AS word
-         |  FROM dt, UNNEST(generate_series(1, len(ts))) AS u(i)),
-         |ws AS (SELECT d.doc_id, d.wpos, w.syms
-         |  FROM dw d JOIN uws w USING (word)),
-         |sy AS (SELECT doc_id, wpos, j AS spos, syms[j] AS sym
-         |  FROM ws, UNNEST(generate_series(1, len(syms))) AS u(j)),
-         |g AS (SELECT doc_id, sym,
-         |    ROW_NUMBER() OVER (PARTITION BY doc_id
-         |      ORDER BY wpos, spos) - 1 AS gpos
-         |  FROM sy),
-         |cnt AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tok
-         |  FROM g GROUP BY doc_id),
-         |p AS (SELECT doc_id, doc_id % 8 AS grp, n_tok,
-         |    CAST(SUM(n_tok) OVER (PARTITION BY doc_id % 8
-         |      ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |      AS BIGINT) - n_tok AS start_tok
-         |  FROM cnt),
-         |tok AS (SELECT p.grp, (p.start_tok + g.gpos) // 2048 AS seq,
-         |    (p.start_tok + g.gpos) % 2048 AS off,
-         |    ${graft.pipeline.Packing.tokenIdSql("g.sym")} AS tid
-         |  FROM g JOIN p USING (doc_id))
-         |SELECT grp, seq, CAST(COUNT(*) AS BIGINT) AS n_tok,
-         |  CAST(SUM((off + 1) * tid) AS BIGINT) AS tok_wsum
-         |FROM tok GROUP BY grp, seq ORDER BY grp, seq""".stripMargin,
+         |${Text.dictSymsSql},
+         |${Text.symTapeSql}""".stripMargin,
     "q204_tokenizer_compare" ->
-      s"""WITH RECURSIVE ${Round7Queries.bpeCtes(Round7Queries.BpeK)},
+      s"""WITH RECURSIVE ${Text.bpeCtes(Text.BpeK)},
          |${unigramTrainCtes("documents")},
-         |bstat AS (SELECT word, CAST(len(list_filter(string_split(seg, chr(31)), x -> x <> '')) AS BIGINT) AS b_sym FROM w${Round7Queries.BpeK}),
+         |bstat AS (SELECT word, CAST(len(list_filter(string_split(seg, chr(31)), x -> x <> '')) AS BIGINT) AS b_sym FROM w${Text.BpeK}),
          |ustat AS (SELECT word, CAST(len(list_filter(string_split(s1, chr(31)), x -> x <> '')) AS BIGINT) AS u_sym FROM dp2 WHERE pos = len),
          |docw AS (SELECT doc_id, source, unnest($toksExpr) AS word FROM documents),
          |per AS (SELECT d.source, CAST(count(*) AS BIGINT) AS n_words,
@@ -616,107 +365,17 @@ object Round11Queries {
          |  CAST(p.bpe_tokens AS DOUBLE) / CAST(p.n_words AS DOUBLE) AS bpe_fertility,
          |  CAST(p.uni_tokens AS DOUBLE) / CAST(p.n_words AS DOUBLE) AS uni_fertility
          |FROM nd n JOIN per p USING (source) ORDER BY n.source""".stripMargin,
-    "q205_html_funnel" -> {
-      import PipelineQueries.{langCaseSql, langHitColsSql,
-        minhashCtesSql, pairsCteSql, qualityExprSql, shinglesSql}
-      s"""WITH RECURSIVE corpus AS (
-         |  SELECT doc_id, source, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 1000000, source, text FROM documents
-         |  WHERE doc_id % 7 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 2000000, source, text || ' zz tail marker'
-         |  FROM documents WHERE doc_id % 11 = 0),
+    "q205_html_funnel" ->
+      s"""WITH RECURSIVE ${Corpus.sourceCorpusSql},
          |hdocs AS (SELECT doc_id, ${wrapSqlOf("doc_id", "text")} AS html FROM corpus),
          |${htmlExtractCtes("hdocs")},
          |hxsrc AS (SELECT h.doc_id, c.source, h.text FROM hx h JOIN corpus c USING (doc_id)),
-         |scored AS (
-         |  SELECT doc_id, source, text,
-         |  $qualityExprSql AS quality,
-         |$langHitColsSql
-         |  FROM hxsrc),
-         |gated AS (
-         |  SELECT doc_id, source, text, quality,
-         |  $langCaseSql AS lang_pred
-         |  FROM scored),
-         |g2 AS (SELECT doc_id, source, text, quality, lang_pred
-         |  FROM gated
-         |  WHERE quality >= 0.7::DOUBLE AND lang_pred = 'en'),
-         |fp AS (SELECT doc_id, source, text,
-         |    md5(trim(regexp_replace(regexp_replace(lower(text),
-         |      '[^a-z0-9\\s]', '', 'g'), '\\s+', ' ', 'g'))) AS f
-         |  FROM g2),
-         |keep AS (SELECT min(doc_id) AS doc_id FROM fp GROUP BY f),
-         |ex AS (SELECT fp.* FROM fp
-         |  WHERE fp.doc_id IN (SELECT doc_id FROM keep)),
-         |${shinglesSql("ex")},
-         |$minhashCtesSql,
-         |${pairsCteSql("0.5")},
-         |edges AS (
-         |  SELECT a AS src, b AS dst FROM pairs
-         |  UNION SELECT b, a FROM pairs),
-         |reach(node, lab) AS (
-         |  SELECT src, src FROM edges
-         |  UNION
-         |  SELECT e2.dst, r.lab FROM reach r JOIN edges e2 ON e2.src = r.node),
-         |losers AS (
-         |  SELECT node AS doc_id FROM reach
-         |  GROUP BY node HAVING node <> min(lab)),
-         |fin AS (SELECT e.doc_id, e.source FROM ex e
-         |  WHERE NOT EXISTS (SELECT 1 FROM losers l
-         |                    WHERE l.doc_id = e.doc_id)),
-         |n0 AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_in
-         |  FROM corpus GROUP BY 1),
-         |n1 AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_gated
-         |  FROM g2 GROUP BY 1),
-         |n2 AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_exact
-         |  FROM ex GROUP BY 1),
-         |n3 AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_final
-         |  FROM fin GROUP BY 1)
-         |SELECT n0.source, n0.n_in,
-         |  COALESCE(n1.n_gated, 0) AS n_gated,
-         |  COALESCE(n2.n_exact, 0) AS n_exact,
-         |  COALESCE(n3.n_final, 0) AS n_final
-         |FROM n0
-         |LEFT JOIN n1 ON n1.source = n0.source
-         |LEFT JOIN n2 ON n2.source = n0.source
-         |LEFT JOIN n3 ON n3.source = n0.source
-         |ORDER BY n0.source""".stripMargin
-    },
+         |${Corpus.funnelReportSql("hxsrc")}""".stripMargin,
     "q206_unigram_vocab_export" ->
       s"""WITH RECURSIVE ${unigramTrainCtes("documents")},
          |uws AS (SELECT word, list_filter(string_split(s1, chr(31)), x -> x <> '') AS syms FROM dp2 WHERE pos = len),
-         |dt AS (SELECT doc_id, $toksExpr AS ts FROM documents),
-         |dw AS (SELECT doc_id, i AS wpos, ts[i] AS word
-         |  FROM dt, UNNEST(generate_series(1, len(ts))) AS u(i)),
-         |ws AS (SELECT d.doc_id, d.wpos, w.syms
-         |  FROM dw d JOIN uws w USING (word)),
-         |sy AS (SELECT doc_id, wpos, j AS spos, syms[j] AS sym
-         |  FROM ws, UNNEST(generate_series(1, len(syms))) AS u(j)),
-         |vc AS (SELECT sym AS token, CAST(COUNT(*) AS BIGINT) AS n
-         |  FROM sy GROUP BY sym),
-         |vid AS (SELECT token,
-         |    ROW_NUMBER() OVER (ORDER BY n DESC, token) - 1 AS vid
-         |  FROM vc),
-         |g AS (SELECT doc_id, sym,
-         |    ROW_NUMBER() OVER (PARTITION BY doc_id
-         |      ORDER BY wpos, spos) - 1 AS gpos
-         |  FROM sy),
-         |cnt AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tok
-         |  FROM g GROUP BY doc_id),
-         |p AS (SELECT doc_id, doc_id % 8 AS grp, n_tok,
-         |    CAST(SUM(n_tok) OVER (PARTITION BY doc_id % 8
-         |      ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |      AS BIGINT) - n_tok AS start_tok
-         |  FROM cnt),
-         |tok AS (SELECT p.grp, (p.start_tok + g.gpos) // 2048 AS seq,
-         |    (p.start_tok + g.gpos) % 2048 AS off, v.vid AS tid
-         |  FROM g JOIN p USING (doc_id)
-         |  JOIN vid v ON v.token = g.sym)
-         |SELECT grp, seq, CAST(COUNT(*) AS BIGINT) AS n_tok,
-         |  CAST(SUM((off + 1) * tid) AS BIGINT) AS tok_wsum
-         |FROM tok GROUP BY grp, seq ORDER BY grp, seq""".stripMargin,
+         |${Text.dictSymsSql},
+         |${Text.vocabTapeSql}""".stripMargin,
     "q201_jpeg_perceptual" ->
       s"""WITH RECURSIVE jdims AS (SELECT doc_id FROM documents WHERE doc_id % 10 = 0),
          |jimgs AS (
@@ -750,13 +409,7 @@ object Round11Queries {
          |    FROM jbands x JOIN jbands y
          |      ON x.band = y.band AND x.v = y.v AND x.rid < y.rid) t
          |  WHERE bit_count(xor(ha, hb)) <= 6),
-         |jedges AS (SELECT a AS src, b AS dst FROM jpairs
-         |  UNION SELECT b, a FROM jpairs),
-         |jreach(node, lab) AS (
-         |  SELECT src, src FROM jedges
-         |  UNION
-         |  SELECT e2.dst, r.lab FROM jreach r JOIN jedges e2 ON e2.src = r.node),
-         |jlabels AS (SELECT node, min(lab) AS clus FROM jreach GROUP BY node)
+         |${Corpus.ccCompactSql("j")}
          |SELECT d.rid AS id, d.dhash,
          |  COALESCE(l.clus, d.rid) AS cluster,
          |  (COALESCE(l.clus, d.rid) <> d.rid) AS is_dup

@@ -2,6 +2,10 @@ package graft.queries
 
 import graft.functions.PortableHash
 import graft.graph.WebGraph
+import graft.queries.fixtures.Corpus.toksExpr
+import graft.queries.fixtures.Crawl.{linkCtes, linkedPages, lpagesCte,
+  urlOf, urlSqlOf}
+import graft.queries.fixtures.{Crawl, Streams, Text, Vectors}
 import graft.sources.Tables
 import graft.streaming.StreamFold
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -12,67 +16,7 @@ import org.apache.spark.sql.functions._
   * quality signal, and graph-aware per-domain selection caps. Every
   * query replays bit-identically in the DuckDB oracle.
   */
-object Round11bQueries {
-
-  // ---- the linked synthetic crawl -----------------------------------
-  // documents.parquet is flat text, so the LINKED corpus wraps each
-  // document in a compact page whose references box holds absolute
-  // URLs of three md5-derived target documents (id-linear targets
-  // would alias — the generative-formula lesson; md5 keeps the graph
-  // genuinely random). URL scheme: http://d<dom>.example.com/p/<id>
-  // with dom = id % 20 (the corpus' own doc↔source correlation).
-  // The nav link is relative on purpose: extraction must skip it.
-
-  private val refSeeds = Seq(71, 72, 73)
-
-  private def urlOf(t: Column): Column =
-    concat(lit("http://d"), (t % 20).cast("string"),
-      lit(".example.com/p/"), t.cast("string"))
-
-  private def urlSqlOf(t: String): String =
-    s"'http://d' || CAST(($t) % 20 AS VARCHAR) || '.example.com/p/' || CAST($t AS VARCHAR)"
-
-  /** `(doc_id, html)` — the linked page corpus. `n` is the corpus size
-    * (targets are mod-n; the oracle computes it as a subquery).
-    */
-  private[graft] def linkedPages(s: SparkSession, dir: String)
-      : DataFrame = {
-    val docs = Tables(s, dir, "documents")
-      .select(col("doc_id"), col("text"))
-    val n = Tables.docCount(s, dir)
-    val refs = refSeeds.map { seed =>
-      val t = PortableHash.hash60(col("doc_id").cast("string"), seed) % n
-      concat(lit(s"""<a href=""""), urlOf(t), lit(s"""">about doc """),
-        t.cast("string"), lit("</a>"))
-    }
-    docs.select(col("doc_id"),
-      concat(
-        lit("<html><body><div class=\"nav\"><a href=\"/\">Home</a></div><p>"),
-        col("text"), lit("</p><div class=\"refs\">"),
-        concat_ws(" ", refs: _*),
-        lit("</div></body></html>")).as("html"))
-  }
-
-  /** Oracle CTE: `lpages(doc_id, html)` — the [[linkedPages]] replay.
-    * Concat operators at line END only (stripMargin re-strip hazard).
-    */
-  private[queries] val lpagesCte: String = {
-    val refs = refSeeds.map { seed =>
-      val t = s"(${PortableHash.hash60Sql("CAST(doc_id AS VARCHAR)", seed)} % (SELECT n FROM lpn))"
-      s"""'<a href="' || ${urlSqlOf(t)} || '">about doc ' || CAST($t AS VARCHAR) || '</a>'"""
-    }
-    s"""lpn AS (SELECT count(*) AS n FROM documents),
-       |lpages AS (SELECT doc_id, '<html><body><div class="nav"><a href="/">Home</a></div><p>' ||
-       |    text || '</p><div class="refs">' ||
-       |    ${refs.mkString(" || ' ' ||\n       |    ")} ||
-       |    '</div></body></html>' AS html
-       |  FROM documents)""".stripMargin
-  }
-
-  /** `llinks(src, url)` + `ledges(src, dst)` over `lpages`. */
-  private[queries] val linkCtes: String =
-    s"""llinks AS (${WebGraph.linksSql("lpages", "doc_id", "html")}),
-       |ledges AS (${WebGraph.docEdgesSql("llinks")})""".stripMargin
+object Round11bQueries extends QueryGroup {
 
   private def docEdges(s: SparkSession, dir: String): DataFrame =
     WebGraph.docEdges(
@@ -83,9 +27,6 @@ object Round11bQueries {
   // gram's DOCUMENT FREQUENCY (the maxDf signal), HLL the distinct-gram
   // cardinality. The oracle mirrors Dedup.shingles' gram construction
   // (validated since q18).
-
-  private val toksExpr =
-    """list_filter(string_split_regex(text, '\s+'), x -> x <> '')"""
 
   /** CTEs ending in `citems(doc_id, item)` (doc-distinct grams) over
     * `documents`.
@@ -235,7 +176,6 @@ object Round11bQueries {
     // can change the distinct edge set). Oracle = q208's SQL.
     "q213_incremental_links" -> ((s, dir) => {
       import graft.graph.IncrementalGraph
-      import java.nio.file.Files
       val pages = linkedPages(s, dir)
       var idx = IncrementalGraph.build(
         pages.filter(col("doc_id") % 3 === 0), "doc_id", "html")
@@ -243,19 +183,16 @@ object Round11bQueries {
         idx = IncrementalGraph.addBatch(idx,
           pages.filter(col("doc_id") % 3 === k), "doc_id", "html")
       }
-      val root = Files.createTempDirectory("graft-q213").toString
-      val cat = new graft.catalog.ParquetCatalog(s, root)
-      IncrementalGraph.save(idx, cat, "crawl")
-      val loaded = IncrementalGraph.load(cat, "crawl")
-      val nodes = Tables(s, dir, "documents")
-        .select(col("doc_id").as("node"))
-      val out = IncrementalGraph.rank(loaded, nodes, rounds = 5)
-        .select(col("node"), (col("node") % 20).as("dom"), col("rank"))
-        .orderBy(col("rank").desc, col("node"))
-        .limit(100)
-        .localCheckpoint()
-      Round7bQueries.rmTree(root)
-      out
+      Streams.withCatalog(s, "q213") { cat =>
+        IncrementalGraph.save(idx, cat, "crawl")
+        val loaded = IncrementalGraph.load(cat, "crawl")
+        val nodes = Tables(s, dir, "documents")
+          .select(col("doc_id").as("node"))
+        IncrementalGraph.rank(loaded, nodes, rounds = 5)
+          .select(col("node"), (col("node") % 20).as("dom"), col("rank"))
+          .orderBy(col("rank").desc, col("node"))
+          .limit(100)
+      }
     }),
 
     // ...and the STREAMING door: page slices land as files, each
@@ -266,7 +203,7 @@ object Round11bQueries {
       import java.nio.file.Files
       import org.apache.spark.sql.types._
       val pages = linkedPages(s, dir)
-      val land = Round7bQueries.landThirds(pages, "doc_id", "graft-q214")
+      val land = Streams.landThirds(pages, "doc_id", "graft-q214")
       val cp = Files.createTempDirectory("graft-q214-cp").toString
       val empty = IncrementalGraph.GraphIndex(StreamFold.unionOr(s, Nil,
         StructType(Seq(StructField("src", LongType),
@@ -275,7 +212,7 @@ object Round11bQueries {
           StreamFold.files(s, land), cp) { (prev, batch, _) =>
         IncrementalGraph.addBatch(prev.getOrElse(empty), batch,
           "doc_id", "html")
-      }.getOrElse(throw Round7bQueries.noBatch("q214_stream_links"))
+      }.getOrElse(throw Streams.noBatch("q214_stream_links"))
       val nodes = Tables(s, dir, "documents")
         .select(col("doc_id").as("node"))
       val out = IncrementalGraph.rank(idx, nodes, rounds = 5)
@@ -283,7 +220,7 @@ object Round11bQueries {
         .orderBy(col("rank").desc, col("node"))
         .limit(100)
         .localCheckpoint()
-      Round7bQueries.rmTree(land); Round7bQueries.rmTree(cp)
+      Streams.rmTree(land); Streams.rmTree(cp)
       out
     }),
 
@@ -335,14 +272,14 @@ object Round11bQueries {
       import graft.quality.CmsSketch
       import java.nio.file.Files
       val sh = shingleItems(s, dir)
-      val land = Round7bQueries.landThirds(sh, "doc_id", "graft-q217")
+      val land = Streams.landThirds(sh, "doc_id", "graft-q217")
       val cp = Files.createTempDirectory("graft-q217-cp").toString
       val sketch = StreamFold[DataFrame](StreamFold.files(s, land), cp) {
         (prev, batch, _) =>
           val part = CmsSketch.partials(batch, "item",
             depth = 4, width = 1024)
           prev.fold(part)(CmsSketch.merge(_, part)).localCheckpoint()
-      }.getOrElse(throw Round7bQueries.noBatch("q217_stream_cms"))
+      }.getOrElse(throw Streams.noBatch("q217_stream_cms"))
       val probes = sh.filter(col("doc_id") < 5)
         .select(col("item")).distinct()
       val exact = sh.groupBy(col("item"))
@@ -354,7 +291,7 @@ object Round11bQueries {
           (col("est") - col("exact_df")).as("over"))
         .orderBy(col("item"))
         .localCheckpoint()
-      Round7bQueries.rmTree(land); Round7bQueries.rmTree(cp)
+      Streams.rmTree(land); Streams.rmTree(cp)
       out
     }),
 
@@ -398,7 +335,7 @@ object Round11bQueries {
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("text"))
       val bpe = graft.text.Bpe.trainMerges(docs, "text",
-        Round7Queries.BpeK)
+        Text.BpeK)
       val uni = graft.text.Unigram.train(docs, "text")
       val wp = graft.text.WordPiece.trainMerges(docs, "text", WpK)
       val src = col("source")
@@ -436,25 +373,21 @@ object Round11bQueries {
     // ranks recompute over the surviving node set.
     "q221_graph_purge" -> ((s, dir) => {
       import graft.graph.IncrementalGraph
-      import java.nio.file.Files
       val docs = Tables(s, dir, "documents").select(col("doc_id"))
       var idx = IncrementalGraph.build(
         linkedPages(s, dir), "doc_id", "html")
       idx = IncrementalGraph.delete(idx,
         docs.filter(col("doc_id") % 13 === 5), "doc_id")
-      val root = Files.createTempDirectory("graft-q221").toString
-      val cat = new graft.catalog.ParquetCatalog(s, root)
-      IncrementalGraph.save(idx, cat, "crawl")
-      val survivors = docs.filter(col("doc_id") % 13 =!= 5)
-        .select(col("doc_id").as("node"))
-      val out = IncrementalGraph.rank(
-          IncrementalGraph.load(cat, "crawl"), survivors, rounds = 5)
-        .select(col("node"), (col("node") % 20).as("dom"), col("rank"))
-        .orderBy(col("rank").desc, col("node"))
-        .limit(100)
-        .localCheckpoint()
-      Round7bQueries.rmTree(root)
-      out
+      Streams.withCatalog(s, "q221") { cat =>
+        IncrementalGraph.save(idx, cat, "crawl")
+        val survivors = docs.filter(col("doc_id") % 13 =!= 5)
+          .select(col("doc_id").as("node"))
+        IncrementalGraph.rank(
+            IncrementalGraph.load(cat, "crawl"), survivors, rounds = 5)
+          .select(col("node"), (col("node") % 20).as("dom"), col("rank"))
+          .orderBy(col("rank").desc, col("node"))
+          .limit(100)
+      }
     }),
 
     // CRAWL FRONTIER: 80% of the corpus is fetched (an md5-derived
@@ -521,8 +454,8 @@ object Round11bQueries {
       val emb = Tables(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
       val assign = graft.similarity.Similarity.ivfAssignments(
-        emb, "vec_id", "embedding", c = ExtendedQueries.IvfC,
-        iters = ExtendedQueries.IvfIters)
+        emb, "vec_id", "embedding", c = Vectors.IvfC,
+        iters = Vectors.IvfIters)
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val toks = docs.select(col("doc_id"),
@@ -555,25 +488,16 @@ object Round11bQueries {
     // WordPiece here). Segmentation dictionary-side; tape checksum
     // order-pinned.
     "q225_export_wordpiece" -> ((s, dir) => {
-      import java.nio.file.Files
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val merges = graft.text.WordPiece.trainMerges(docs, "text", WpK)
       val stream = graft.text.WordPiece.symbolStream(docs, "doc_id",
         "text", merges)
-      val root = Files.createTempDirectory("graft-q225").toString
-      val cat = new graft.catalog.ParquetCatalog(s, root)
-      graft.pipeline.Packing.exportShardsOf("doc_id", stream, cat,
-        "shards", seqLen = 2048, numGroups = 8)
-      val (bin, _) = graft.pipeline.Packing.readShards(cat, "shards")
-      val out = bin
-        .select(col("grp"), col("seq"), col("n_tok"),
-          graft.functions.TokenBinary.weightedSumCol(col("tokens"))
-            .as("tok_wsum"))
-        .orderBy(col("grp"), col("seq"))
-        .localCheckpoint()
-      Round7bQueries.rmTree(root)
-      out
+      Streams.withCatalog(s, "q225") { cat =>
+        graft.pipeline.Packing.exportShardsOf("doc_id", stream, cat,
+          "shards", seqLen = 2048, numGroups = 8)
+        Streams.tapeSums(cat)
+      }
     }),
 
     // ROBOTS-style URL rules: each URL takes its LONGEST matching
@@ -608,7 +532,7 @@ object Round11bQueries {
     "q227_stream_paragraph_scrub" -> ((s, dir) => {
       import java.nio.file.Files
       val planted = paraPlanted(s, dir)
-      val land = Round7bQueries.landThirds(planted, "doc_id", "graft-q227")
+      val land = Streams.landThirds(planted, "doc_id", "graft-q227")
       val cp = Files.createTempDirectory("graft-q227-cp").toString
       val pdf = StreamFold[DataFrame](StreamFold.files(s, land), cp) {
         (prev, batch, _) =>
@@ -616,7 +540,7 @@ object Round11bQueries {
               graft.dedup.Dedup.paragraphs(batch, "doc_id", "ptext"),
               "doc_id"),
             Seq("ph"), Seq("pdf"))
-      }.getOrElse(throw Round7bQueries.noBatch(
+      }.getOrElse(throw Streams.noBatch(
         "q227_stream_paragraph_scrub"))
       val landed = s.read.parquet(land)
       val out = graft.dedup.Dedup.scrubParagraphsWith(
@@ -625,7 +549,7 @@ object Round11bQueries {
           pdf, maxDf = 8L)
         .orderBy(col("doc_id"))
         .localCheckpoint()
-      Round7bQueries.rmTree(land); Round7bQueries.rmTree(cp)
+      Streams.rmTree(land); Streams.rmTree(cp)
       out
     }),
 
@@ -679,10 +603,8 @@ object Round11bQueries {
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val pages = docs.select(col("doc_id"),
-        concat(lit("http://d"), (col("doc_id") % 20).cast("string"),
-          lit(".example.com/p/"), col("doc_id").cast("string"))
-          .as("uri"),
-        Round11Queries.wrapCol(col("doc_id"), col("text")).as("html"))
+        urlOf(col("doc_id")).as("uri"),
+        Crawl.wrapCol(col("doc_id"), col("text")).as("html"))
       val land = Files.createTempDirectory("graft-q230-warc").toString
       graft.sources.Warc.writeSegments(
         pages.repartition(4, col("doc_id")), "uri", "html", land,
@@ -700,7 +622,7 @@ object Round11bQueries {
             .otherwise(0).as("clean_match"))
         .orderBy(col("doc_id"))
         .localCheckpoint()
-      Round7bQueries.rmTree(land)
+      Streams.rmTree(land)
       out
     }),
 
@@ -721,26 +643,8 @@ object Round11bQueries {
         qs, emb, "vec_id", "embedding", 10)
       val approx = graft.similarity.Similarity.portableAnnTopK(
         qs, emb, "vec_id", "embedding", k = 10,
-        bits = ExtendedQueries.AnnBits)
-      val ov = exact.select(col("q_id"), col("n_id"))
-        .join(approx.select(col("q_id"), col("n_id")),
-          Seq("q_id", "n_id"))
-        .groupBy(col("q_id")).agg(count(lit(1)).as("n_overlap"))
-      val rr = exact.filter(col("rank") === 1)
-        .select(col("q_id"), col("n_id"))
-        .join(approx.select(col("q_id"), col("n_id"),
-          col("rank").as("arank")), Seq("q_id", "n_id"), "left")
-        .select(col("q_id"),
-          coalesce(expr("1000000 div arank"), lit(0L)).as("rr_ppm"))
-      qs.select(col("vec_id").as("q_id"))
-        .join(ov, Seq("q_id"), "left")
-        .join(rr, Seq("q_id"), "left")
-        .select(col("q_id"),
-          coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
-          expr("coalesce(n_overlap, 0) * 1000000 div 10")
-            .as("recall_ppm"),
-          coalesce(col("rr_ppm"), lit(0L)).as("rr_ppm"))
-        .orderBy(col("q_id"))
+        bits = Vectors.AnnBits)
+      Vectors.recallReport(qs, exact, approx)
     })
   )
 
@@ -780,10 +684,7 @@ object Round11bQueries {
          |  JOIN wsc$i a ON a.sym = p.lhs
          |  JOIN wsc$i b ON b.sym = p.rhs
          |  ORDER BY key DESC, p.lhs ASC, p.rhs ASC LIMIT 1),
-         |ww$i AS MATERIALIZED (SELECT word, freq, replace(seg,
-         |    (SELECT $sep || lhs || $sep || $sep || rhs || $sep FROM wb$i),
-         |    (SELECT $sep || lhs || rhs || $sep FROM wb$i)) AS seg
-         |  FROM ww${i - 1})""".stripMargin
+         |${Text.mergeRoundSql(s"ww$i", "word, freq", s"wb$i", s"ww${i - 1}")}""".stripMargin
     }
     (init +: rounds).mkString(",\n")
   }
@@ -910,10 +811,10 @@ object Round11bQueries {
          |ORDER BY p.dom""".stripMargin,
 
     // container roundtrip == identity: replay q195's report verbatim
-    "q230_warc_ingest" -> Round11Queries.oracleSql("q195_html_extract"),
+    "q230_warc_ingest" -> Crawl.htmlExtractSql,
 
     "q231_ann_recall" -> {
-      import ExtendedQueries.{annPlanes, dotSql, planeListSql}
+      import Vectors.{annPlanes, dotSql, planeListSql}
       s"""WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
          |b AS (SELECT vec_id, e,
          |  ${annPlanes.zipWithIndex.map { case (pl, p) =>
@@ -1036,10 +937,10 @@ object Round11bQueries {
          |ORDER BY o.source""".stripMargin,
 
     "q220_tokenizer_trio" ->
-      s"""WITH RECURSIVE ${Round7Queries.bpeCtes(Round7Queries.BpeK)},
-         |${Round11Queries.unigramTrainCtes("documents")},
+      s"""WITH RECURSIVE ${Text.bpeCtes(Text.BpeK)},
+         |${Text.unigramTrainCtes("documents")},
          |${wpCtes(WpK)},
-         |bstat AS (SELECT word, CAST(len(list_filter(string_split(seg, chr(31)), x -> x <> '')) AS BIGINT) AS b_sym FROM w${Round7Queries.BpeK}),
+         |bstat AS (SELECT word, CAST(len(list_filter(string_split(seg, chr(31)), x -> x <> '')) AS BIGINT) AS b_sym FROM w${Text.BpeK}),
          |ustat AS (SELECT word, CAST(len(list_filter(string_split(s1, chr(31)), x -> x <> '')) AS BIGINT) AS u_sym FROM dp2 WHERE pos = len),
          |wstat AS (SELECT word, CAST(len(list_filter(string_split(seg, chr(31)), x -> x <> '')) AS BIGINT) AS w_sym FROM ww$WpK),
          |docw AS (SELECT doc_id, source, unnest($toksExpr) AS word FROM documents),
@@ -1112,14 +1013,14 @@ object Round11bQueries {
          |  FROM (SELECT vec_id, qd,
          |          ${PortableHash.hash60BaseSql("vec_id::VARCHAR")} AS h
          |        FROM qz))
-         |  WHERE cluster < ${ExtendedQueries.IvfC}),
-         |${(1 to ExtendedQueries.IvfIters)
-             .map(ExtendedQueries.ivfStepSql).mkString(",\n")},
+         |  WHERE cluster < ${Vectors.IvfC}),
+         |${(1 to Vectors.IvfIters)
+             .map(Vectors.ivfStepSql).mkString(",\n")},
          |cb AS (SELECT vec_id, cluster AS bucket FROM (
          |  SELECT z.vec_id, c.cluster,
          |    ROW_NUMBER() OVER (PARTITION BY z.vec_id
-         |      ORDER BY ${lDistSql("z.qd", "c.cent")} ASC, c.cluster ASC) AS rn
-         |  FROM qz z CROSS JOIN c${ExtendedQueries.IvfIters} c)
+         |      ORDER BY ${Vectors.distSql("z.qd", "c.cent")} ASC, c.cluster ASC) AS rn
+         |  FROM qz z CROSS JOIN c${Vectors.IvfIters} c)
          |  WHERE rn = 1),
          |ltoks AS (SELECT doc_id, unnest($toksExpr) AS token FROM documents),
          |ldf AS (SELECT token, CAST(count(*) AS BIGINT) AS df FROM (SELECT DISTINCT doc_id, token FROM ltoks) t GROUP BY token),
@@ -1140,40 +1041,9 @@ object Round11bQueries {
     "q225_export_wordpiece" ->
       s"""WITH ${wpCtes(WpK)},
          |uws AS (SELECT word, list_filter(string_split(seg, chr(31)), x -> x <> '') AS syms FROM ww$WpK),
-         |dt AS (SELECT doc_id, $toksExpr AS ts FROM documents),
-         |dw AS (SELECT doc_id, i AS wpos, ts[i] AS word
-         |  FROM dt, UNNEST(generate_series(1, len(ts))) AS u(i)),
-         |ws AS (SELECT d.doc_id, d.wpos, w.syms
-         |  FROM dw d JOIN uws w USING (word)),
-         |sy AS (SELECT doc_id, wpos, j AS spos, syms[j] AS sym
-         |  FROM ws, UNNEST(generate_series(1, len(syms))) AS u(j)),
-         |g AS (SELECT doc_id, sym,
-         |    ROW_NUMBER() OVER (PARTITION BY doc_id
-         |      ORDER BY wpos, spos) - 1 AS gpos
-         |  FROM sy),
-         |cnt AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tok
-         |  FROM g GROUP BY doc_id),
-         |p AS (SELECT doc_id, doc_id % 8 AS grp, n_tok,
-         |    CAST(SUM(n_tok) OVER (PARTITION BY doc_id % 8
-         |      ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |      AS BIGINT) - n_tok AS start_tok
-         |  FROM cnt),
-         |tok AS (SELECT p.grp, (p.start_tok + g.gpos) // 2048 AS seq,
-         |    (p.start_tok + g.gpos) % 2048 AS off,
-         |    ${graft.pipeline.Packing.tokenIdSql("g.sym")} AS tid
-         |  FROM g JOIN p USING (doc_id))
-         |SELECT grp, seq, CAST(COUNT(*) AS BIGINT) AS n_tok,
-         |  CAST(SUM((off + 1) * tid) AS BIGINT) AS tok_wsum
-         |FROM tok GROUP BY grp, seq ORDER BY grp, seq""".stripMargin
+         |${Text.dictSymsSql},
+         |${Text.symTapeSql}""".stripMargin
   )
-
-  private def lDotSql(a: String, b: String): String =
-    s"list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i]), (x,y) -> x+y)"
-
-  /** L2 rank key (row-constant |v|² dropped) — q42's formulation. */
-  private def lDistSql(v: String, cent: String): String =
-    s"-2.0 * ${lDotSql(v, cent)} + ${lDotSql(cent, cent)}"
 
   private lazy val cmsSql: String =
     s"""WITH $itemsCtes,

@@ -1,5 +1,7 @@
 package graft.queries
 
+import graft.queries.fixtures.Vectors.dotSql
+import graft.queries.fixtures.{Crawl, Streams, Text, Vectors}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -13,79 +15,7 @@ import org.apache.spark.sql.functions._
   * /root/reference/SCD_script.txt — these are the
   * training-data-pipeline operators the north star adds on top.
   */
-object Round13Queries {
-
-  private val toksExpr =
-    """list_filter(string_split_regex(text, '\s+'), x -> x <> '')"""
-
-  /** q232's OOV plant, shared verbatim with its oracle (and q243's —
-    * the byte-fallback twin encodes the same held-out corpus).
-    */
-  private[queries] val PlantedHeldOut = "zeta vortex quiz oxbow the of and zax"
-
-  // ---- the REALISTIC linked crawl (q233) ----------------------------
-  // q207's corpus holds only absolute double-quoted hrefs — the form
-  // WebGraph.links was built for. This one plants the forms a real
-  // crawl is mostly made of: the SAME md5-derived target behind
-  // double-quoted / single-quoted+utm / unquoted+fragment hrefs, a
-  // second target behind root-relative AND ../-relative paths, a
-  // protocol-relative third, plus mailto:/fragment-only noise — so
-  // resolution + canonicalization must collapse 8 href values per page
-  // to 3 doc targets (or the count is wrong).
-
-  private def rUrlOf(t: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column =
-    concat(lit("http://d"), (t % 20).cast("string"),
-      lit(".example.com/p/"), t.cast("string"))
-
-  private def rUrlSqlOf(t: String): String =
-    s"'http://d' || CAST(($t) % 20 AS VARCHAR) || '.example.com/p/' || CAST($t AS VARCHAR)"
-
-  private[graft] def realisticPages(s: SparkSession, dir: String)
-      : DataFrame = {
-    import graft.functions.PortableHash
-    val docs = Tables(s, dir, "documents").select(col("doc_id"))
-    val n = Tables.docCount(s, dir)
-    def t(seed: Int) =
-      PortableHash.hash60(col("doc_id").cast("string"), seed) % n
-    val (t1, t2, t3) = (t(74), t(75), t(76))
-    val html = concat(
-      lit("<html><body><a href=\"/\">Home</a>"),
-      lit("<a href=\""), rUrlOf(t1), lit("\">a</a>"),
-      lit("<a href='"), rUrlOf(t1), lit("?utm_source=feed'>b</a>"),
-      lit("<a href="), rUrlOf(t1), lit("#top>c</a>"),
-      lit("<a href=\"/p/"), t2.cast("string"), lit("\">d</a>"),
-      lit("<a href=\"../p/"), t2.cast("string"), lit("\">e</a>"),
-      lit("<a href=\"//d"), (t3 % 20).cast("string"),
-      lit(".example.com/p/"), t3.cast("string"), lit("\">f</a>"),
-      lit("<a href=\"mailto:ops@example.com\">g</a>"),
-      lit("<a href=\"#top\">h</a></body></html>"))
-    docs.select(col("doc_id"), rUrlOf(col("doc_id")).as("url"),
-      html.as("html"))
-  }
-
-  /** Oracle CTE `rlpages(doc_id, url, html)` — the [[realisticPages]]
-    * replay. Concat operators stay at line END (stripMargin hazard).
-    */
-  private val rlpagesCte: String = {
-    import graft.functions.PortableHash
-    def t(seed: Int) =
-      s"(${PortableHash.hash60Sql("CAST(doc_id AS VARCHAR)", seed)} % (SELECT n FROM rlpn))"
-    val (t1, t2, t3) = (t(74), t(75), t(76))
-    s"""rlpn AS (SELECT count(*) AS n FROM documents),
-       |rlpages AS (SELECT doc_id, ${rUrlSqlOf("doc_id")} AS url,
-       |    '<html><body><a href="/">Home</a><a href="' ||
-       |    ${rUrlSqlOf(t1)} || '">a</a><a href=' || chr(39) ||
-       |    ${rUrlSqlOf(t1)} || '?utm_source=feed' || chr(39) ||
-       |    '>b</a><a href=' ||
-       |    ${rUrlSqlOf(t1)} || '#top>c</a><a href="/p/' ||
-       |    CAST($t2 AS VARCHAR) || '">d</a><a href="../p/' ||
-       |    CAST($t2 AS VARCHAR) || '">e</a><a href="//d' ||
-       |    CAST($t3 % 20 AS VARCHAR) || '.example.com/p/' ||
-       |    CAST($t3 AS VARCHAR) ||
-       |    '">f</a><a href="mailto:ops@example.com">g</a><a href="#top">h</a></body></html>' AS html
-       |  FROM documents)""".stripMargin
-  }
+object Round13Queries extends QueryGroup {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -100,7 +30,6 @@ object Round13Queries {
     // the tape-wide min id (the zero-minus-one proof, read back from
     // the published artifact, not the plan that wrote it).
     "q232_unk_free_export" -> ((s, dir) => {
-      import java.nio.file.Files
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val train = docs.filter(col("doc_id") % 3 =!= 0)
@@ -110,36 +39,34 @@ object Round13Queries {
       // the coalesce execute, not just the happy path)
       import s.implicits._
       val held = docs.filter(col("doc_id") % 3 === 0)
-        .unionByName(Seq((9999991L, PlantedHeldOut)).toDF("doc_id", "text"))
+        .unionByName(
+          Seq((9999991L, Text.PlantedHeldOut)).toDF("doc_id", "text"))
       val merges = graft.text.Bpe.trainMerges(train, "text",
-        Round7Queries.BpeK)
+        Text.BpeK)
       val voc = graft.text.Bpe.vocab(train, "text", merges)
       val reserved = graft.pipeline.Packing.reserveUnk(voc)
       val stream = graft.text.Bpe.symbolStream(held, "doc_id", "text",
         merges)
-      val root = Files.createTempDirectory("graft-q232").toString
-      val cat = new graft.catalog.ParquetCatalog(s, root)
-      graft.pipeline.Packing.exportShardsOf("doc_id", stream, cat,
-        "shards", seqLen = 2048, numGroups = 8,
-        vocabIds = Some(reserved), unkId = Some(0))
-      val (bin, _) = graft.pipeline.Packing.readShards(cat, "shards")
-      // per-sequence HOF lambdas are bounded (<= 2048 elements) and
-      // sequence-count-sized — the Bm25 per-doc exemption, not a
-      // corpus-sized CodegenFallback path
-      val out = bin
-        .select(col("grp"), col("seq"), col("n_tok"),
-          graft.functions.TokenBinary.weightedSumCol(col("tokens"))
-            .as("tok_wsum"),
-          size(filter(
-            graft.functions.TokenBinary.unpackCol(col("tokens")),
-            t => t === 0)).cast("long").as("n_unk"),
-          array_min(
-            graft.functions.TokenBinary.unpackCol(col("tokens")))
-            .cast("long").as("min_tid"))
-        .orderBy(col("grp"), col("seq"))
-        .localCheckpoint()
-      Round7bQueries.rmTree(root)
-      out
+      Streams.withCatalog(s, "q232") { cat =>
+        graft.pipeline.Packing.exportShardsOf("doc_id", stream, cat,
+          "shards", seqLen = 2048, numGroups = 8,
+          vocabIds = Some(reserved), unkId = Some(0))
+        val (bin, _) = graft.pipeline.Packing.readShards(cat, "shards")
+        // per-sequence HOF lambdas are bounded (<= 2048 elements) and
+        // sequence-count-sized — the Bm25 per-doc exemption, not a
+        // corpus-sized CodegenFallback path
+        bin
+          .select(col("grp"), col("seq"), col("n_tok"),
+            graft.functions.TokenBinary.weightedSumCol(col("tokens"))
+              .as("tok_wsum"),
+            size(filter(
+              graft.functions.TokenBinary.unpackCol(col("tokens")),
+              t => t === 0)).cast("long").as("n_unk"),
+            array_min(
+              graft.functions.TokenBinary.unpackCol(col("tokens")))
+              .cast("long").as("min_tid"))
+          .orderBy(col("grp"), col("seq"))
+      }
     }),
 
     // LINK RESOLUTION + canonical edge collapse: realistic extraction
@@ -152,7 +79,7 @@ object Round13Queries {
     // codegen string ops; the report is two keyed aggregations.
     "q233_link_resolution" -> ((s, dir) => {
       import graft.graph.WebGraph
-      val links = WebGraph.resolvedLinks(realisticPages(s, dir),
+      val links = WebGraph.resolvedLinks(Crawl.realisticPages(s, dir),
         "doc_id", "url", "html")
       val canon = links.select(col("src"), col("url"),
         WebGraph.canonicalUrl(col("url")).as("canon"))
@@ -187,7 +114,7 @@ object Round13Queries {
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id").as("node"))
       val edges = WebGraph.docEdges(
-          WebGraph.links(Round11bQueries.linkedPages(s, dir),
+          WebGraph.links(Crawl.linkedPages(s, dir),
             "doc_id", "html"))
         .filter(col("src") % 4 =!= 0)
       val ranks = WebGraph.pageRankConverged(docs, edges,
@@ -217,25 +144,7 @@ object Round13Queries {
       val qs = emb.filter(col("vec_id") < 50)
       val exact = graft.similarity.Similarity.bruteForceTopK(
         qs, emb, "vec_id", "embedding", 10)
-      val ov = exact.select(col("q_id"), col("n_id"))
-        .join(approx.select(col("q_id"), col("n_id")),
-          Seq("q_id", "n_id"))
-        .groupBy(col("q_id")).agg(count(lit(1)).as("n_overlap"))
-      val rr = exact.filter(col("rank") === 1)
-        .select(col("q_id"), col("n_id"))
-        .join(approx.select(col("q_id"), col("n_id"),
-          col("rank").as("arank")), Seq("q_id", "n_id"), "left")
-        .select(col("q_id"),
-          coalesce(expr("1000000 div arank"), lit(0L)).as("rr_ppm"))
-      qs.select(col("vec_id").as("q_id"))
-        .join(ov, Seq("q_id"), "left")
-        .join(rr, Seq("q_id"), "left")
-        .select(col("q_id"),
-          coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
-          expr("coalesce(n_overlap, 0) * 1000000 div 10")
-            .as("recall_ppm"),
-          coalesce(col("rr_ppm"), lit(0L)).as("rr_ppm"))
-        .orderBy(col("q_id"))
+      Vectors.recallReport(qs, exact, approx)
     }),
 
     // ALTER TABLE ADD COLUMN across the version chain: seed → widen
@@ -246,29 +155,25 @@ object Round13Queries {
     // score), so the query only works if every version reads under
     // its own schema.
     "q236_alter_table" -> ((s, dir) => {
-      import java.nio.file.Files
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"),
           length(col("text")).cast("long").as("text_len"))
-      val root = Files.createTempDirectory("graft-q236").toString
-      val cat = new graft.catalog.ParquetCatalog(s, root)
-      cat.create("dd", docs.schema)
-      cat.overwrite("dd", docs)
-      val v0 = cat.currentVersion("dd").get
-      graft.scd.DdlSql.execute(s, cat,
-        "ALTER TABLE dd ADD COLUMNS (lang STRING, score BIGINT DEFAULT 0)")
-      graft.scd.DmlSql.execute(s, cat,
-        "UPDATE dd SET lang = 'en', score = text_len * 2 " +
-          "WHERE doc_id % 2 = 0")
-      val old = cat.tableAsOfVersion("dd", v0)
-        .select(col("doc_id"), col("text_len").as("old_len"))
-      val out = cat.table("dd").join(old, Seq("doc_id"))
-        .select(col("doc_id"), col("text_len"), col("old_len"),
-          col("lang"), col("score"))
-        .orderBy(col("doc_id"))
-        .localCheckpoint()
-      Round7bQueries.rmTree(root)
-      out
+      Streams.withCatalog(s, "q236") { cat =>
+        cat.create("dd", docs.schema)
+        cat.overwrite("dd", docs)
+        val v0 = cat.currentVersion("dd").get
+        graft.scd.DdlSql.execute(s, cat,
+          "ALTER TABLE dd ADD COLUMNS (lang STRING, score BIGINT DEFAULT 0)")
+        graft.scd.DmlSql.execute(s, cat,
+          "UPDATE dd SET lang = 'en', score = text_len * 2 " +
+            "WHERE doc_id % 2 = 0")
+        val old = cat.tableAsOfVersion("dd", v0)
+          .select(col("doc_id"), col("text_len").as("old_len"))
+        cat.table("dd").join(old, Seq("doc_id"))
+          .select(col("doc_id"), col("text_len"), col("old_len"),
+            col("lang"), col("score"))
+          .orderBy(col("doc_id"))
+      }
     }),
 
     // WARM-START rank maintenance, end-to-end oracle-checked: phase 1
@@ -281,7 +186,7 @@ object Round13Queries {
     // join are exact integers, so the maintained ranks hash-check.
     "q237_warm_rank" -> ((s, dir) => {
       import graft.graph.IncrementalGraph
-      val pages = Round11bQueries.linkedPages(s, dir)
+      val pages = Crawl.linkedPages(s, dir)
       val nodes = Tables(s, dir, "documents")
         .select(col("doc_id").as("node"))
       var idx = IncrementalGraph.build(
@@ -316,7 +221,7 @@ object Round13Queries {
             "Disallow:\n# note")
       }.toDF("host", "txt")
       val rules = WebGraph.parseRobots(robots, "host", "txt")
-      val links = WebGraph.links(Round11bQueries.linkedPages(s, dir),
+      val links = WebGraph.links(Crawl.linkedPages(s, dir),
         "doc_id", "html")
       val dec = WebGraph.urlDecisions(links.select(col("url")), rules)
       links.join(dec, Seq("url"))
@@ -340,7 +245,7 @@ object Round13Queries {
       val nodes = Tables(s, dir, "documents")
         .select(col("doc_id").as("node"))
       val edges = WebGraph.docEdges(
-        WebGraph.links(Round11bQueries.linkedPages(s, dir),
+        WebGraph.links(Crawl.linkedPages(s, dir),
           "doc_id", "html"))
       WebGraph.hits(nodes, edges, rounds = 5)
         .select(col("node"), (col("node") % 20).as("dom"),
@@ -357,7 +262,7 @@ object Round13Queries {
     // and the oracle replays the whole composition in one statement.
     "q240_resolved_graph" -> ((s, dir) => {
       import graft.graph.WebGraph
-      val links = WebGraph.resolvedLinks(realisticPages(s, dir),
+      val links = WebGraph.resolvedLinks(Crawl.realisticPages(s, dir),
         "doc_id", "url", "html")
       val edges = WebGraph.docEdges(
         links.select(col("src"),
@@ -381,45 +286,8 @@ object Round13Queries {
     // semantics on words the trainer never saw); the vocab id is
     // ROW_NUMBER() (1-based = the reserveUnk shift), OOV coalesces
     // to 0.
-    "q232_unk_free_export" -> {
-      val sep = "chr(31)"
-      val applyRounds = (1 to Round7Queries.BpeK).map { i =>
-        s"""hw$i AS MATERIALIZED (SELECT word, replace(seg,
-           |    (SELECT $sep || lhs || $sep || $sep || rhs || $sep FROM b$i),
-           |    (SELECT $sep || lhs || rhs || $sep FROM b$i)) AS seg
-           |  FROM hw${i - 1})""".stripMargin
-      }.mkString(",\n")
-      s"""WITH trainc AS MATERIALIZED (
-         |  SELECT doc_id, text FROM documents WHERE doc_id % 3 <> 0),
-         |heldc AS MATERIALIZED (
-         |  SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0
-         |  UNION ALL SELECT 9999991, '$PlantedHeldOut'),
-         |${Round7Queries.bpeCtes(Round7Queries.BpeK, "trainc")},
-         |dtt AS (SELECT doc_id, $toksExpr AS ts FROM trainc),
-         |dwt AS (SELECT doc_id, ts[i] AS word
-         |  FROM dtt, UNNEST(generate_series(1, len(ts))) AS u(i)),
-         |syt AS (SELECT unnest(list_filter(
-         |    string_split(w.seg, $sep), x -> x <> '')) AS sym
-         |  FROM dwt d JOIN w${Round7Queries.BpeK} w USING (word)),
-         |vc AS (SELECT sym AS token, CAST(COUNT(*) AS BIGINT) AS n
-         |  FROM syt GROUP BY sym),
-         |vid AS (SELECT token,
-         |    ROW_NUMBER() OVER (ORDER BY n DESC, token) AS vid
-         |  FROM vc),
-         |hw0 AS MATERIALIZED (
-         |  SELECT word,
-         |    list_reduce(list_transform(generate_series(1, length(word)),
-         |      i -> $sep || word[i] || $sep), (a, b) -> a || b) AS seg
-         |  FROM (SELECT DISTINCT unnest($toksExpr) AS word FROM heldc)),
-         |$applyRounds,
-         |dth AS (SELECT doc_id, $toksExpr AS ts FROM heldc),
-         |dwh AS (SELECT doc_id, i AS wpos, ts[i] AS word
-         |  FROM dth, UNNEST(generate_series(1, len(ts))) AS u(i)),
-         |wsh AS (SELECT d.doc_id, d.wpos,
-         |    list_filter(string_split(h.seg, $sep), x -> x <> '') AS syms
-         |  FROM dwh d JOIN hw${Round7Queries.BpeK} h USING (word)),
-         |syh AS (SELECT doc_id, wpos, j AS spos, syms[j] AS sym
-         |  FROM wsh, UNNEST(generate_series(1, len(syms))) AS u(j)),
+    "q232_unk_free_export" ->
+      s"""WITH ${Text.heldOutSymsSql(9999991, Text.PlantedHeldOut)},
          |g AS (SELECT doc_id, sym,
          |    ROW_NUMBER() OVER (PARTITION BY doc_id
          |      ORDER BY wpos, spos) - 1 AS gpos
@@ -442,11 +310,10 @@ object Round13Queries {
          |  CAST(SUM(CASE WHEN tid = 0 THEN 1 ELSE 0 END) AS BIGINT)
          |    AS n_unk,
          |  CAST(MIN(tid) AS BIGINT) AS min_tid
-         |FROM tok GROUP BY grp, seq ORDER BY grp, seq""".stripMargin
-    },
+         |FROM tok GROUP BY grp, seq ORDER BY grp, seq""".stripMargin,
 
     "q233_link_resolution" ->
-      s"""WITH $rlpagesCte,
+      s"""WITH ${Crawl.rlpagesCte},
          |${graft.graph.WebGraph.resolvedLinksCtes(
              "rlpages", "doc_id", "url", "html")},
          |rcanon AS (SELECT src, url,
@@ -469,8 +336,8 @@ object Round13Queries {
          |ORDER BY l.src_dom""".stripMargin,
 
     "q234_pagerank_converged" ->
-      s"""WITH ${Round11bQueries.lpagesCte},
-         |${Round11bQueries.linkCtes},
+      s"""WITH ${Crawl.lpagesCte},
+         |${Crawl.linkCtes},
          |cedges AS (SELECT src, dst FROM ledges WHERE src % 4 <> 0),
          |${graft.graph.WebGraph.pageRankConvergedCtes(
              "documents", "doc_id", "cedges", 25, 100000L)}
@@ -483,10 +350,8 @@ object Round13Queries {
     // as the approx side, brute-force exact as the truth side, q231's
     // report tail. refineR = 100 is ivfPqTopKRefined's default — the
     // TVF's served configuration.
-    "q235_ann_tvf_recall" -> {
-      val dotSql = (a: String, b: String) =>
-        s"list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i]), (x,y) -> x+y)"
-      s"""WITH ${Round5Queries.pqAdcCtesSql},
+    "q235_ann_tvf_recall" ->
+      s"""WITH ${Vectors.pqAdcCtesSql},
          |cand_r AS (SELECT q_id, n_id FROM (
          |  SELECT q_id, n_id,
          |    ROW_NUMBER() OVER (PARTITION BY q_id
@@ -530,8 +395,7 @@ object Round13Queries {
          |  coalesce(r.rr_ppm, CAST(0 AS BIGINT)) AS rr_ppm
          |FROM qn q LEFT JOIN ov o ON o.q_id = q.q_id
          |LEFT JOIN rr r ON r.q_id = q.q_id
-         |ORDER BY q.q_id""".stripMargin
-    },
+         |ORDER BY q.q_id""".stripMargin,
 
     "q236_alter_table" ->
       s"""SELECT doc_id,
@@ -543,8 +407,8 @@ object Round13Queries {
          |FROM documents ORDER BY doc_id""".stripMargin,
 
     "q237_warm_rank" ->
-      s"""WITH ${Round11bQueries.lpagesCte},
-         |${Round11bQueries.linkCtes},
+      s"""WITH ${Crawl.lpagesCte},
+         |${Crawl.linkCtes},
          |e1 AS (SELECT src, dst FROM ledges WHERE src % 3 <> 2),
          |${graft.graph.WebGraph.pageRankConvergedCtes(
              "documents", "doc_id", "e1", 20, 100000L, pfx = "wa")},
@@ -559,7 +423,7 @@ object Round13Queries {
          |ORDER BY rank DESC, node LIMIT 100""".stripMargin,
 
     "q238_robots_parse" ->
-      s"""WITH ${Round11bQueries.lpagesCte},
+      s"""WITH ${Crawl.lpagesCte},
          |llinks AS (${graft.graph.WebGraph.linksSql(
              "lpages", "doc_id", "html")}),
          |probotsrc AS (SELECT
@@ -583,8 +447,8 @@ object Round13Queries {
          |ORDER BY dst_host""".stripMargin,
 
     "q239_hits" ->
-      s"""WITH ${Round11bQueries.lpagesCte},
-         |${Round11bQueries.linkCtes},
+      s"""WITH ${Crawl.lpagesCte},
+         |${Crawl.linkCtes},
          |${graft.graph.WebGraph.hitsCtes(
              "documents", "doc_id", "ledges", 5)}
          |SELECT h.node, h.node % 20 AS dom, h.hub, a.auth
@@ -592,7 +456,7 @@ object Round13Queries {
          |ORDER BY a.auth DESC, h.node LIMIT 100""".stripMargin,
 
     "q240_resolved_graph" ->
-      s"""WITH $rlpagesCte,
+      s"""WITH ${Crawl.rlpagesCte},
          |${graft.graph.WebGraph.resolvedLinksCtes(
              "rlpages", "doc_id", "url", "html")},
          |rced AS (SELECT DISTINCT src,

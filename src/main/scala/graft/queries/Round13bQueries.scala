@@ -1,7 +1,9 @@
 package graft.queries
 
+import graft.queries.fixtures.Crawl.{urlOf, urlSqlOf}
+import graft.queries.fixtures.{Crawl, Streams, Text}
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Round-13 continuation: the crawl-side companions the round-13 graph
@@ -16,52 +18,7 @@ import org.apache.spark.sql.functions._
   * /root/reference/SCD_script.txt — these are training-data-pipeline
   * operators the north star adds on top.
   */
-object Round13bQueries {
-
-  private def urlOf(t: Column): Column =
-    concat(lit("http://d"), (t % 20).cast("string"),
-      lit(".example.com/p/"), t.cast("string"))
-
-  private def urlSqlOf(t: String): String =
-    s"'http://d' || CAST(($t) % 20 AS VARCHAR) || '.example.com/p/' || CAST($t AS VARCHAR)"
-
-  // ---- q244's per-host boilerplate plant ----------------------------
-  // Host = the doc's domain (doc_id % 20). Three planted lines with
-  // per-host frequencies chosen to straddle the 50% threshold:
-  //   nav     (div-20 % 3 <> 1) → 2/3 of every host's docs → SCRUBBED
-  //   sitemap (div-20 % 4 = 0)  → 1/4 of every host's docs → KEPT
-  //     (host-frequent enough to tempt an absolute-df rule, under the
-  //      fraction threshold)
-  //   newsletter (div-20 % 11 = 0) → ~9% per host but corpus-global
-  //     (~9% of ALL docs — a global absolute cap like q212's maxDf=8
-  //      would scrub it; the host-relative rule keeps it) → KEPT
-  // All three keys ride doc_id div 20: doc_ids within a host step by
-  // 20, so doc_id % 4 would be CONSTANT per host (and % 20 IS the
-  // host) — the div-20 index is the per-host enumeration that
-  // decorrelates the plant from the host id.
-  private[queries] def boilPages(s: SparkSession, dir: String)
-      : DataFrame = {
-    val k = (col("doc_id") % 20).cast("string")
-    val j = expr("doc_id div 20")
-    Tables(s, dir, "documents").select(col("doc_id"),
-      concat(lit("d"), k, lit(".example.com")).as("host"),
-      concat_ws("\n",
-        when(j % 3 =!= 1, concat(lit("Home | About | News on d"), k)),
-        col("text"),
-        when(j % 4 === 0, concat(lit("Site map for d"), k)),
-        when(j % 11 === 0, lit("Subscribe to our newsletter")))
-        .as("ptext"))
-  }
-
-  private val boilPagesCte: String =
-    """bdocs AS (SELECT doc_id,
-      |    'd' || CAST(doc_id % 20 AS VARCHAR) || '.example.com' AS host,
-      |    concat_ws(chr(10),
-      |      CASE WHEN (doc_id // 20) % 3 <> 1 THEN 'Home | About | News on d' || CAST(doc_id % 20 AS VARCHAR) END,
-      |      text,
-      |      CASE WHEN (doc_id // 20) % 4 = 0 THEN 'Site map for d' || CAST(doc_id % 20 AS VARCHAR) END,
-      |      CASE WHEN (doc_id // 20) % 11 = 0 THEN 'Subscribe to our newsletter' END) AS ptext
-      |  FROM documents)""".stripMargin
+object Round13bQueries extends QueryGroup {
 
   // ---- q245's repetition plants --------------------------------------
   // The corpus is single-line ~300-char docs, so the fine Gopher
@@ -136,7 +93,7 @@ object Round13bQueries {
           lit(".example.com")).as("host"), col("xml"))
       val sm = WebGraph.parseSitemaps(maps, "host", "xml")
       val linked = WebGraph.links(
-          Round11bQueries.linkedPages(s, dir), "doc_id", "html")
+          Crawl.linkedPages(s, dir), "doc_id", "html")
         .select(WebGraph.host(col("url")).as("host"), col("url"))
         .distinct()
       val declAgg = sm.groupBy(col("host"))
@@ -172,7 +129,7 @@ object Round13bQueries {
       val nodes = Tables(s, dir, "documents")
         .select(col("doc_id").as("node"))
       val edges = WebGraph.docEdges(
-        WebGraph.links(Round11bQueries.linkedPages(s, dir),
+        WebGraph.links(Crawl.linkedPages(s, dir),
           "doc_id", "html"))
       val seeds = nodes.filter(col("node") % 97 === 0)
       WebGraph.hopDistance(nodes, edges, seeds, maxHops = 6)
@@ -191,42 +148,38 @@ object Round13bQueries {
     // byte-piece count (the fallback actually fired), and the
     // tape-wide min id read back from the published artifact.
     "q243_byte_fallback" -> ((s, dir) => {
-      import java.nio.file.Files
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val train = docs.filter(col("doc_id") % 3 =!= 0)
       import s.implicits._
       val held = docs.filter(col("doc_id") % 3 === 0)
-        .unionByName(Seq((9999991L, Round13Queries.PlantedHeldOut))
+        .unionByName(Seq((9999991L, Text.PlantedHeldOut))
           .toDF("doc_id", "text"))
       val merges = graft.text.Bpe.trainMerges(train, "text",
-        Round7Queries.BpeK)
+        Text.BpeK)
       val voc = graft.text.Bpe.vocab(train, "text", merges)
       val stream = graft.pipeline.Packing.byteFallbackStream(
         graft.text.Bpe.symbolStream(held, "doc_id", "text", merges),
         "doc_id", voc)
-      val root = Files.createTempDirectory("graft-q243").toString
-      val cat = new graft.catalog.ParquetCatalog(s, root)
-      graft.pipeline.Packing.exportShardsOf("doc_id", stream, cat,
-        "shards", seqLen = 2048, numGroups = 8,
-        vocabIds = Some(graft.pipeline.Packing.reserveBytes(voc)))
-      val (bin, _) = graft.pipeline.Packing.readShards(cat, "shards")
-      // per-sequence HOF lambdas are bounded (≤ 2048 elements) — the
-      // per-doc exemption, not a corpus-sized CodegenFallback path
-      val out = bin
-        .select(col("grp"), col("seq"), col("n_tok"),
-          graft.functions.TokenBinary.weightedSumCol(col("tokens"))
-            .as("tok_wsum"),
-          size(filter(
-            graft.functions.TokenBinary.unpackCol(col("tokens")),
-            t => t < 256)).cast("long").as("n_byte"),
-          array_min(
-            graft.functions.TokenBinary.unpackCol(col("tokens")))
-            .cast("long").as("min_tid"))
-        .orderBy(col("grp"), col("seq"))
-        .localCheckpoint()
-      Round7bQueries.rmTree(root)
-      out
+      Streams.withCatalog(s, "q243") { cat =>
+        graft.pipeline.Packing.exportShardsOf("doc_id", stream, cat,
+          "shards", seqLen = 2048, numGroups = 8,
+          vocabIds = Some(graft.pipeline.Packing.reserveBytes(voc)))
+        val (bin, _) = graft.pipeline.Packing.readShards(cat, "shards")
+        // per-sequence HOF lambdas are bounded (≤ 2048 elements) — the
+        // per-doc exemption, not a corpus-sized CodegenFallback path
+        bin
+          .select(col("grp"), col("seq"), col("n_tok"),
+            graft.functions.TokenBinary.weightedSumCol(col("tokens"))
+              .as("tok_wsum"),
+            size(filter(
+              graft.functions.TokenBinary.unpackCol(col("tokens")),
+              t => t < 256)).cast("long").as("n_byte"),
+            array_min(
+              graft.functions.TokenBinary.unpackCol(col("tokens")))
+              .cast("long").as("min_tid"))
+          .orderBy(col("grp"), col("seq"))
+      }
     }),
 
     // HOST-scoped boilerplate scrub: per-site line dedup with a
@@ -238,7 +191,7 @@ object Round13bQueries {
     // under threshold even though its GLOBAL df would trip q212's
     // absolute cap ~1000-fold).
     "q244_host_boilerplate" -> ((s, dir) => {
-      graft.dedup.Dedup.scrubHostBoilerplate(boilPages(s, dir),
+      graft.dedup.Dedup.scrubHostBoilerplate(Crawl.boilPages(s, dir),
           "doc_id", "host", "ptext", minPpm = 500000L, minDf = 2L)
         .orderBy(col("doc_id"))
     }),
@@ -259,7 +212,7 @@ object Round13bQueries {
   val oracleSql: Map[String, String] = Map(
 
     "q241_sitemap_parse" ->
-      s"""WITH ${Round11bQueries.lpagesCte},
+      s"""WITH ${Crawl.lpagesCte},
          |llinks AS (${graft.graph.WebGraph.linksSql(
              "lpages", "doc_id", "html")}),
          |smdecl AS (SELECT doc_id % 20 AS k, doc_id,
@@ -289,7 +242,7 @@ object Round13bQueries {
          |    ON l.host = d.host AND l.url = d.url
          |  GROUP BY d.host),
          |smspine AS (SELECT DISTINCT
-         |    'd' || CAST(doc_id % 20 AS VARCHAR) || '.example.com' AS host
+         |    ${Crawl.docHostSql} AS host
          |  FROM documents)
          |SELECT s.host,
          |  coalesce(d.n_declared, CAST(0 AS BIGINT)) AS n_declared,
@@ -303,8 +256,8 @@ object Round13bQueries {
          |ORDER BY s.host""".stripMargin,
 
     "q242_crawl_depth" ->
-      s"""WITH ${Round11bQueries.lpagesCte},
-         |${Round11bQueries.linkCtes},
+      s"""WITH ${Crawl.lpagesCte},
+         |${Crawl.linkCtes},
          |hseeds AS (SELECT doc_id AS node FROM documents
          |  WHERE doc_id % 97 = 0),
          |${graft.graph.WebGraph.hopDistanceCtes(
@@ -318,47 +271,8 @@ object Round13bQueries {
     // then the byte-fallback id assignment: in-vocab syms take
     // vid + 255 (the 1-based ROW_NUMBER re-based by +256 onto 0-based
     // trained ids), OOV syms explode into per-char byte ids via ord().
-    "q243_byte_fallback" -> {
-      val sep = "chr(31)"
-      val toksExpr =
-        """list_filter(string_split_regex(text, '\s+'), x -> x <> '')"""
-      val applyRounds = (1 to Round7Queries.BpeK).map { i =>
-        s"""hw$i AS MATERIALIZED (SELECT word, replace(seg,
-           |    (SELECT $sep || lhs || $sep || $sep || rhs || $sep FROM b$i),
-           |    (SELECT $sep || lhs || rhs || $sep FROM b$i)) AS seg
-           |  FROM hw${i - 1})""".stripMargin
-      }.mkString(",\n")
-      s"""WITH trainc AS MATERIALIZED (
-         |  SELECT doc_id, text FROM documents WHERE doc_id % 3 <> 0),
-         |heldc AS MATERIALIZED (
-         |  SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0
-         |  UNION ALL SELECT 9999991, '${Round13Queries.PlantedHeldOut}'),
-         |${Round7Queries.bpeCtes(Round7Queries.BpeK, "trainc")},
-         |dtt AS (SELECT doc_id, $toksExpr AS ts FROM trainc),
-         |dwt AS (SELECT doc_id, ts[i] AS word
-         |  FROM dtt, UNNEST(generate_series(1, len(ts))) AS u(i)),
-         |syt AS (SELECT unnest(list_filter(
-         |    string_split(w.seg, $sep), x -> x <> '')) AS sym
-         |  FROM dwt d JOIN w${Round7Queries.BpeK} w USING (word)),
-         |vc AS (SELECT sym AS token, CAST(COUNT(*) AS BIGINT) AS n
-         |  FROM syt GROUP BY sym),
-         |vid AS (SELECT token,
-         |    ROW_NUMBER() OVER (ORDER BY n DESC, token) AS vid
-         |  FROM vc),
-         |hw0 AS MATERIALIZED (
-         |  SELECT word,
-         |    list_reduce(list_transform(generate_series(1, length(word)),
-         |      i -> $sep || word[i] || $sep), (a, b) -> a || b) AS seg
-         |  FROM (SELECT DISTINCT unnest($toksExpr) AS word FROM heldc)),
-         |$applyRounds,
-         |dth AS (SELECT doc_id, $toksExpr AS ts FROM heldc),
-         |dwh AS (SELECT doc_id, i AS wpos, ts[i] AS word
-         |  FROM dth, UNNEST(generate_series(1, len(ts))) AS u(i)),
-         |wsh AS (SELECT d.doc_id, d.wpos,
-         |    list_filter(string_split(h.seg, $sep), x -> x <> '') AS syms
-         |  FROM dwh d JOIN hw${Round7Queries.BpeK} h USING (word)),
-         |syh AS (SELECT doc_id, wpos, j AS spos, syms[j] AS sym
-         |  FROM wsh, UNNEST(generate_series(1, len(syms))) AS u(j)),
+    "q243_byte_fallback" ->
+      s"""WITH ${Text.heldOutSymsSql(9999991, Text.PlantedHeldOut)},
          |bfin AS (SELECT s.doc_id, s.wpos, s.spos, 0 AS cpos,
          |    v.vid + 255 AS tid
          |  FROM syh s JOIN vid v ON v.token = s.sym),
@@ -388,42 +302,9 @@ object Round13bQueries {
          |  CAST(SUM(CASE WHEN tid < 256 THEN 1 ELSE 0 END) AS BIGINT)
          |    AS n_byte,
          |  CAST(MIN(tid) AS BIGINT) AS min_tid
-         |FROM btok GROUP BY grp, seq ORDER BY grp, seq""".stripMargin
-    },
+         |FROM btok GROUP BY grp, seq ORDER BY grp, seq""".stripMargin,
 
-    "q244_host_boilerplate" ->
-      s"""WITH $boilPagesCte,
-         |bpr0 AS (SELECT doc_id, host,
-         |    string_split(ptext, chr(10)) AS ps FROM bdocs),
-         |bpr AS (SELECT doc_id, host,
-         |    unnest(generate_series(1, len(ps))) AS pos,
-         |    unnest(ps) AS para FROM bpr0),
-         |bpn AS (SELECT doc_id, host, pos, para,
-         |    ${graft.functions.PortableHash.hash60BaseSql("para")} AS ph
-         |  FROM bpr WHERE length(trim(para)) > 0),
-         |bhn AS (SELECT host, CAST(count(*) AS BIGINT) AS hn
-         |  FROM bdocs GROUP BY host),
-         |bdf AS (SELECT host, ph, CAST(count(*) AS BIGINT) AS pdf
-         |  FROM (SELECT DISTINCT doc_id, host, ph FROM bpn) t
-         |  GROUP BY host, ph),
-         |bboil AS (SELECT d.host, d.ph
-         |  FROM bdf d JOIN bhn h USING (host)
-         |  WHERE d.pdf >= 2 AND d.pdf * 1000000 >= 500000 * h.hn),
-         |bpd AS (SELECT n.doc_id,
-         |    CAST(count(*) AS BIGINT) AS n_paras,
-         |    CAST(coalesce(count(*) FILTER (WHERE b.ph IS NOT NULL), 0)
-         |      AS BIGINT) AS n_dropped,
-         |    string_agg(n.para, chr(10) ORDER BY n.pos)
-         |      FILTER (WHERE b.ph IS NULL) AS clean_text
-         |  FROM bpn n LEFT JOIN bboil b
-         |    ON b.host = n.host AND b.ph = n.ph
-         |  GROUP BY n.doc_id)
-         |SELECT d.doc_id, d.host,
-         |  coalesce(p.clean_text, '') AS clean_text,
-         |  coalesce(p.n_paras, CAST(0 AS BIGINT)) AS n_paras,
-         |  coalesce(p.n_dropped, CAST(0 AS BIGINT)) AS n_dropped
-         |FROM bdocs d LEFT JOIN bpd p ON p.doc_id = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
+    "q244_host_boilerplate" -> Crawl.hostBoilerplateSql,
 
     // Gram keys join tokens with chr(31) (concatenation without a
     // separator would alias "ab c" with "a bc"); char masses count

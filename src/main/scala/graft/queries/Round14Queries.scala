@@ -1,5 +1,7 @@
 package graft.queries
 
+import graft.queries.fixtures.Crawl.{urlOf, urlSqlOf}
+import graft.queries.fixtures.{Corpus, Crawl, Streams}
 import graft.sources.Tables
 import graft.streaming.StreamFold
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -14,14 +16,7 @@ import org.apache.spark.sql.functions._
   * /root/reference/SCD_script.txt — these extend the web-graph family
   * the north star adds on top.
   */
-object Round14Queries {
-
-  private def urlOf(t: Column): Column =
-    concat(lit("http://d"), (t % 20).cast("string"),
-      lit(".example.com/p/"), t.cast("string"))
-
-  private def urlSqlOf(t: String): String =
-    s"'http://d' || CAST(($t) % 20 AS VARCHAR) || '.example.com/p/' || CAST($t AS VARCHAR)"
+object Round14Queries extends QueryGroup {
 
   // ---- q246's base-href plant ---------------------------------------
   // Page URLs carry a directory (/s<j>/p/<id>) so relative resolution
@@ -140,58 +135,6 @@ object Round14Queries {
         x => x.getField("e")), ""),
       lit("</urlset>"))
 
-  // ---- q249's crawl corpus --------------------------------------------
-  // The capstone fixture: the planted-duplicate corpus (q46's +1M exact
-  // and +2M tail-marker replicas — both ≡ 0 mod 20, so replicas stay on
-  // their host), HTML-wrapped with (a) a link-dense nav div carrying
-  // two md5-derived absolute refs (the GRAPH rides the raw markup; the
-  // extractor drops the block as boilerplate), (b) a per-host promo
-  // paragraph on 2/3 of docs (the HOST-SCRUB plant), (c) the document
-  // text as the article block.
-  private def capHtml(n: Long): Column = {
-    import graft.functions.PortableHash
-    def t(seed: Int) =
-      PortableHash.hash60(col("doc_id").cast("string"), seed) % n
-    val k = (col("doc_id") % 20).cast("string")
-    val promo = when(expr("doc_id div 20") % 3 =!= 1,
-      concat(lit("<p>Special offers for d"), k,
-        lit(" readers appear every single week</p>")))
-      .otherwise(lit(""))
-    concat(
-      lit("<html><body><div class=\"nav\"><a href=\"/\">Home</a> <a href=\""),
-      urlOf(t(83)), lit("\">r1</a> <a href=\""), urlOf(t(84)),
-      lit("\">r2</a></div>"),
-      promo,
-      lit("<p>"), col("text"), lit("</p></body></html>"))
-  }
-
-  /** Oracle CTEs `cbase(doc_id, text)` + `hdocs(doc_id, uri, html)` —
-    * the [[capHtml]] replay over the planted-duplicate corpus.
-    */
-  private val capPagesCte: String = {
-    import graft.functions.PortableHash
-    def t(seed: Int) =
-      s"(${PortableHash.hash60Sql("CAST(doc_id AS VARCHAR)", seed)} % (SELECT n FROM cappn))"
-    s"""cappn AS (SELECT count(*) AS n FROM documents),
-       |cbase AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL
-       |  SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 7 = 0
-       |  UNION ALL
-       |  SELECT doc_id + 2000000, text || ' zz tail marker' FROM documents
-       |  WHERE doc_id % 11 = 0),
-       |hdocs AS (SELECT doc_id,
-       |    '<html><body><div class="nav"><a href="/">Home</a> <a href="' ||
-       |    ${urlSqlOf(t(83))} || '">r1</a> <a href="' ||
-       |    ${urlSqlOf(t(84))} || '">r2</a></div>' ||
-       |    (CASE WHEN (doc_id // 20) % 3 <> 1
-       |      THEN '<p>Special offers for d' || CAST(doc_id % 20 AS VARCHAR) ||
-       |        ' readers appear every single week</p>'
-       |      ELSE '' END) ||
-       |    '<p>' || text || '</p></body></html>' AS html
-       |  FROM cbase)""".stripMargin
-  }
-
   // ---- q250's Gopher-rule plants --------------------------------------
   // One plant per rule keyed on doc_id div 20 (% 20 IS the source):
   //   j%7==1 → all-bullet lines (bullet_frac 1.0 > 0.9)
@@ -291,7 +234,7 @@ object Round14Queries {
     "q247_robots_agents" -> ((s, dir) => {
       import graft.graph.WebGraph
       val robots = robotsTxt(s)
-      val links = WebGraph.links(Round11bQueries.linkedPages(s, dir),
+      val links = WebGraph.links(Crawl.linkedPages(s, dir),
         "doc_id", "html")
       val urls = links.select(col("url"))
       val decBot = WebGraph.urlDecisions(urls,
@@ -410,7 +353,7 @@ object Round14Queries {
         .otherwise(lit("text/html"))
       val body = when(j13 === 6,
         concat(lit("PNGDATA for doc "), col("doc_id").cast("string")))
-        .otherwise(Round11Queries.wrapCol(col("doc_id"), col("text")))
+        .otherwise(Crawl.wrapCol(col("doc_id"), col("text")))
       val pages = docs.select(col("doc_id"),
         urlOf(col("doc_id")).as("uri"),
         Warc.httpResponse(status, ctype, body).as("payload"))
@@ -453,7 +396,7 @@ object Round14Queries {
           coalesce(col("n_clean"), lit(0L)).as("n_clean"))
         .orderBy(col("dom"))
         .localCheckpoint()
-      Round7bQueries.rmTree(land)
+      Streams.rmTree(land)
       out
     }),
 
@@ -472,7 +415,7 @@ object Round14Queries {
       import s.implicits._
       def coin(c: Column) =
         PortableHash.hash60(c.cast("string"), 55) % 5
-      val fetched = Round11bQueries.linkedPages(s, dir)
+      val fetched = Crawl.linkedPages(s, dir)
         .filter(coin(col("doc_id")) =!= 0)
       val edges = WebGraph.docEdges(
         WebGraph.links(fetched, "doc_id", "html"))
@@ -516,7 +459,6 @@ object Round14Queries {
     // gates and exact dedup.
     "q253_pipeline_gopher" -> ((s, dir) => {
       import graft.pipeline.CorpusPipeline
-      import s.implicits._
       val d = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val bullets = d.filter(col("doc_id") % 23 === 0)
@@ -528,7 +470,7 @@ object Round14Queries {
           lit((Seq.fill(6)("the plain story of words here still") ++
             Seq.fill(4)("the next story of words goes on..."))
             .mkString("\n")).as("text"))
-      val corpus = PipelineQueries.corpus(s, dir)
+      val corpus = Corpus.corpus(s, dir)
         .unionByName(bullets).unionByName(ellipses)
       CorpusPipeline.clean(corpus, "doc_id", "text",
           CorpusPipeline.Config(gopher = Some((20L, 100000L))))
@@ -612,8 +554,8 @@ object Round14Queries {
     // layout.
     "q251_stream_host_scrub" -> ((s, dir) => {
       import java.nio.file.Files
-      val planted = Round13bQueries.boilPages(s, dir)
-      val land = Round7bQueries.landThirds(planted, "doc_id", "graft-q251")
+      val planted = Crawl.boilPages(s, dir)
+      val land = Streams.landThirds(planted, "doc_id", "graft-q251")
       val cp = Files.createTempDirectory("graft-q251-cp").toString
       val (pdf, hn) = StreamFold[(DataFrame, DataFrame)](
           StreamFold.files(s, land), cp) { (prev, batch, _) =>
@@ -626,14 +568,14 @@ object Round14Queries {
           StreamFold.addPartials(prev.map(_._2),
             graft.dedup.Dedup.hostDocCounts(batch, "host"),
             Seq("host"), Seq("__hn")))
-      }.getOrElse(throw Round7bQueries.noBatch("q251_stream_host_scrub"))
+      }.getOrElse(throw Streams.noBatch("q251_stream_host_scrub"))
       val landed = s.read.parquet(land)
       val out = graft.dedup.Dedup.scrubHostBoilerplateWith(
           landed, "doc_id", "host", "ptext", pdf, hn,
           minPpm = 500000L, minDf = 2L)
         .orderBy(col("doc_id"))
         .localCheckpoint()
-      Round7bQueries.rmTree(land); Round7bQueries.rmTree(cp)
+      Streams.rmTree(land); Streams.rmTree(cp)
       out
     }),
 
@@ -649,7 +591,7 @@ object Round14Queries {
     "q249_crawl_release" -> ((s, dir) => {
       import java.nio.file.Files
       import graft.graph.WebGraph
-      val pages = capstonePages(s, dir)
+      val pages = Crawl.capstonePages(s, dir)
       val land = Files.createTempDirectory("graft-q249-warc").toString
       graft.sources.Warc.writeSegments(
         pages.repartition(4, col("doc_id")), "uri", "html", land)
@@ -663,9 +605,7 @@ object Round14Queries {
           .cast("long").as("doc_id"), col("body").as("html"))
         .localCheckpoint()
       val ex = graft.text.Html.extract(back, "doc_id", "html")
-        .select(col("doc_id"), col("text"),
-          concat(lit("d"), (col("doc_id") % 20).cast("string"),
-            lit(".example.com")).as("host"))
+        .select(col("doc_id"), col("text"), Crawl.docHost.as("host"))
         .localCheckpoint()
       val scrub = graft.dedup.Dedup.scrubHostBoilerplate(ex,
           "doc_id", "host", "text", minPpm = 500000L, minDf = 2L)
@@ -674,79 +614,12 @@ object Round14Queries {
         "doc_id", "text")
       val edges = WebGraph.docEdges(
         WebGraph.links(back, "doc_id", "html"))
-      val out = capstoneResolve(s, dir, cleaned, edges)
+      val out = Crawl.capstoneResolve(s, dir, cleaned, edges)
         .localCheckpoint()
-      Round7bQueries.rmTree(land)
+      Streams.rmTree(land)
       out
     }),
   )
-
-  /** The capstone's page fixture — the planted-duplicate corpus,
-    * HTML-wrapped by [[capHtml]] — shared by the batch chain (q249)
-    * and the streaming door (q259). `(doc_id, uri, html)`.
-    */
-  private[queries] def capstonePages(s: SparkSession, dir: String)
-      : DataFrame = {
-    val docs = Tables(s, dir, "documents")
-      .select(col("doc_id"), col("text"))
-    val n = Tables.docCount(s, dir)
-    val cbase = docs
-      .unionByName(docs.filter(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-      .unionByName(docs.filter(col("doc_id") % 11 === 0)
-        .select((col("doc_id") + 2000000L).as("doc_id"),
-          concat(col("text"), lit(" zz tail marker")).as("text")))
-    val k = (col("doc_id") % 20).cast("string")
-    cbase.select(col("doc_id"),
-      concat(lit("http://d"), k, lit(".example.com/p/"),
-        col("doc_id").cast("string")).as("uri"),
-      capHtml(n).as("html"))
-  }
-
-  /** The capstone's END-OF-CHAIN resolve — converged-PageRank domain
-    * caps over `edges`, two-phase global rank + token-offset packing
-    * over `cleaned` — ONE implementation shared by the batch chain
-    * (q249) and the streaming door (q259), so the two fronts cannot
-    * diverge on the tail.
-    */
-  private[queries] def capstoneResolve(s: SparkSession, dir: String,
-      cleaned: DataFrame, edges: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.graph.WebGraph
-    val nodes = Tables(s, dir, "documents")
-      .select(col("doc_id").as("node"))
-    val ranks = WebGraph.pageRankConverged(nodes, edges,
-      maxRounds = 15, epsDiv = 100000L)
-    val dmass = ranks.groupBy((col("node") % 20).as("dom"))
-      .agg(sum(col("rank")).as("mass"))
-    // 20-row domain table: the single-partition window is model-sized
-    val drank = dmass.withColumn("drk", row_number().over(
-        Window.orderBy(col("mass").desc, col("dom"))))
-      .withColumn("cap", when(col("drk") <= 10, 15).otherwise(8))
-    val sdoc = cleaned.select(col("doc_id"),
-      (col("doc_id") % 20).as("dom"), col("quality"), col("lang_pred"),
-      length(col("text")).cast("long").as("n_chars"),
-      size(graft.text.TextAnalysis.tokens(col("text"))).cast("long")
-        .as("n_tok"))
-    val kept = sdoc
-      .join(broadcast(drank.select(col("dom"), col("cap"))), Seq("dom"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("dom"))
-          .orderBy(col("n_chars").desc, col("doc_id"))))
-      .filter(col("rk") <= col("cap"))
-      .select(col("doc_id"), col("dom"), col("quality"),
-        col("lang_pred"), col("n_tok"))
-    val ranked = graft.operators.Ranking.globalRowNumber(kept,
-      Seq("dom", "doc_id"), "grank")
-    val packed = graft.operators.TwoPhase.prefixSum(ranked, Nil,
-        Seq("dom", "doc_id"), col("n_tok"), "cum_tok")
-      .withColumn("start_tok", col("cum_tok") - col("n_tok"))
-    packed.select(col("doc_id"), col("dom"), col("quality"),
-        col("lang_pred"), col("n_tok"), col("grank"),
-        expr("start_tok div 2048").as("seq"),
-        expr("start_tok % 2048").as("off"))
-      .orderBy(col("doc_id"))
-  }
 
   val oracleSql: Map[String, String] = Map(
 
@@ -761,16 +634,16 @@ object Round14Queries {
 
     // streamed fold == one-shot: the door replays q244 verbatim
     "q251_stream_host_scrub" ->
-      Round13bQueries.oracleSql("q244_host_boilerplate"),
+      Crawl.hostBoilerplateSql,
 
     // identity through storage: statuses/ctypes recompute from the
     // fixture formulas; the html-OK subset replays q195's extraction
     "q255_http_ingest" ->
       s"""WITH hdocs AS (SELECT doc_id, text,
-         |    ${Round11Queries.wrapSqlOf("doc_id", "text")} AS html
+         |    ${Crawl.wrapSqlOf("doc_id", "text")} AS html
          |  FROM documents
          |  WHERE (doc_id // 20) % 11 <> 5 AND (doc_id // 20) % 13 <> 6),
-         |${Round11Queries.htmlExtractCtes("hdocs")},
+         |${Crawl.htmlExtractCtes("hdocs")},
          |hclean AS (SELECT h.doc_id,
          |    CASE WHEN h.text = trim(regexp_replace(d.text, '\\s+', ' ', 'g')) THEN 1 ELSE 0 END AS cm
          |  FROM hx h JOIN hdocs d ON d.doc_id = h.doc_id),
@@ -791,7 +664,7 @@ object Round14Queries {
     "q254_polite_frontier" -> {
       import graft.graph.WebGraph
       import graft.functions.PortableHash
-      s"""WITH ${Round11bQueries.lpagesCte},
+      s"""WITH ${Crawl.lpagesCte},
          |pfpag AS (SELECT doc_id, html FROM lpages
          |  WHERE ${PortableHash.hash60Sql("CAST(doc_id AS VARCHAR)", 55)} % 5 <> 0),
          |pflnk AS (${WebGraph.linksSql("pfpag", "doc_id", "html")}),
@@ -826,8 +699,7 @@ object Round14Queries {
     },
 
     "q253_pipeline_gopher" -> {
-      import PipelineQueries.{corpusSql, langCaseSql, langHitColsSql,
-        minhashCtesSql, pairsCteSql, qualityExprSql, shinglesSql}
+      import Corpus.corpusSql
       val bulletSql = Seq.fill(10)("- the item of alpha beta chart")
         .mkString("\\n").replace("\\n", "' || chr(10) || '")
       val ellipSql = (Seq.fill(6)("the plain story of words here still") ++
@@ -842,45 +714,13 @@ object Round14Queries {
          |  UNION ALL
          |  SELECT doc_id + 4000000, '$ellipSql'
          |  FROM documents WHERE doc_id % 29 = 0),
-         |scored AS (
-         |  SELECT doc_id, text,
-         |  $qualityExprSql AS quality,
-         |$langHitColsSql
-         |  FROM corpus2),
-         |gated AS (
-         |  SELECT doc_id, text, quality,
-         |  $langCaseSql AS lang_pred
-         |  FROM scored),
-         |g2 AS (SELECT doc_id, text, quality, lang_pred FROM gated
-         |       WHERE quality >= 0.7::DOUBLE AND lang_pred = 'en'),
+         |${Corpus.rowGatesSql("corpus2")},
          |${graft.text.GopherQuality.signalsCtes(
              "g2", "doc_id", "text", minTok = 20L,
              stopwords = Seq("the", "a", "of", "and", "is"))},
          |g3 AS (SELECT g2.* FROM g2 JOIN gqsig USING (doc_id)
          |       WHERE gopher_keep),
-         |fp AS (SELECT doc_id, text, quality, lang_pred,
-         |    md5(trim(regexp_replace(regexp_replace(lower(text),
-         |      '[^a-z0-9\\s]', '', 'g'), '\\s+', ' ', 'g'))) AS f
-         |  FROM g3),
-         |keep AS (SELECT min(doc_id) AS doc_id FROM fp GROUP BY f),
-         |ex AS (SELECT fp.* FROM fp WHERE fp.doc_id IN (SELECT doc_id FROM keep)),
-         |${shinglesSql("ex")},
-         |$minhashCtesSql,
-         |${pairsCteSql("0.5")},
-         |edges AS (
-         |  SELECT a AS src, b AS dst FROM pairs
-         |  UNION SELECT b, a FROM pairs),
-         |reach(node, lab) AS (
-         |  SELECT src, src FROM edges
-         |  UNION
-         |  SELECT e2.dst, r.lab FROM reach r JOIN edges e2 ON e2.src = r.node),
-         |losers AS (
-         |  SELECT node AS doc_id FROM reach
-         |  GROUP BY node HAVING node <> min(lab))
-         |SELECT e.doc_id, e.quality, e.lang_pred
-         |FROM ex e
-         |WHERE NOT EXISTS (SELECT 1 FROM losers l WHERE l.doc_id = e.doc_id)
-         |ORDER BY e.doc_id""".stripMargin
+         |${Corpus.cleanSurvivorsSql("g3")}""".stripMargin
     },
 
     "q252_discovery_chain" -> {
@@ -973,7 +813,7 @@ object Round14Queries {
 
     "q247_robots_agents" -> {
       import graft.graph.WebGraph
-      s"""WITH ${Round11bQueries.lpagesCte},
+      s"""WITH ${Crawl.lpagesCte},
          |llinks AS (${WebGraph.linksSql("lpages", "doc_id", "html")}),
          |$robotsTxtCte,
          |${WebGraph.parseRobotsForCtes("rasrc", "host", "txt",
@@ -1057,89 +897,6 @@ object Round14Queries {
          |ORDER BY h.host""".stripMargin
     },
 
-    "q249_crawl_release" -> {
-      import graft.graph.WebGraph
-      import graft.functions.PortableHash
-      s"""WITH RECURSIVE $capPagesCte,
-         |${Round11Queries.htmlExtractCtes("hdocs")},
-         |cshost AS (SELECT doc_id,
-         |    'd' || CAST(doc_id % 20 AS VARCHAR) || '.example.com' AS host,
-         |    text FROM hx),
-         |csp0 AS (SELECT doc_id, host,
-         |    string_split(text, chr(10)) AS ps FROM cshost),
-         |csp AS (SELECT doc_id, host,
-         |    unnest(generate_series(1, len(ps))) AS pos,
-         |    unnest(ps) AS para FROM csp0),
-         |cspn AS (SELECT doc_id, host, pos, para,
-         |    ${PortableHash.hash60BaseSql("para")} AS ph
-         |  FROM csp WHERE length(trim(para)) > 0),
-         |cshn AS (SELECT host, CAST(count(*) AS BIGINT) AS hn
-         |  FROM cshost GROUP BY host),
-         |csdf AS (SELECT host, ph, CAST(count(*) AS BIGINT) AS pdf
-         |  FROM (SELECT DISTINCT doc_id, host, ph FROM cspn) t
-         |  GROUP BY host, ph),
-         |csb AS (SELECT d.host, d.ph
-         |  FROM csdf d JOIN cshn h USING (host)
-         |  WHERE d.pdf >= 2 AND d.pdf * 1000000 >= 500000 * h.hn),
-         |cscl AS (SELECT n.doc_id,
-         |    string_agg(n.para, chr(10) ORDER BY n.pos)
-         |      FILTER (WHERE b.ph IS NULL) AS clean_text
-         |  FROM cspn n LEFT JOIN csb b
-         |    ON b.host = n.host AND b.ph = n.ph
-         |  GROUP BY n.doc_id),
-         |corpus AS (SELECT h.doc_id, coalesce(c.clean_text, '') AS text
-         |  FROM cshost h LEFT JOIN cscl c ON c.doc_id = h.doc_id),
-         |${PipelineQueries.gateExactCtesSql},
-         |${PipelineQueries.shinglesSql("ex")},
-         |${PipelineQueries.minhashCtesSql},
-         |${PipelineQueries.pairsCteSql("0.5")},
-         |edges AS (
-         |  SELECT a AS src, b AS dst FROM pairs
-         |  UNION SELECT b, a FROM pairs),
-         |reach(node, lab) AS (
-         |  SELECT src, src FROM edges
-         |  UNION
-         |  SELECT e2.dst, r.lab FROM reach r JOIN edges e2 ON e2.src = r.node),
-         |losers AS (
-         |  SELECT node AS doc_id FROM reach
-         |  GROUP BY node HAVING node <> min(lab)),
-         |clnk AS (${WebGraph.linksSql("hdocs", "doc_id", "html")}),
-         |cedges AS (${WebGraph.docEdgesSql("clnk")}),
-         |${WebGraph.pageRankConvergedCtes("documents", "doc_id",
-             "cedges", 15, 100000L, "cp")},
-         |cprank AS (SELECT node, rank FROM cpall
-         |  WHERE k = (SELECT k FROM cpstop)),
-         |cdm AS (SELECT node % 20 AS dom,
-         |    CAST(SUM(rank) AS BIGINT) AS mass
-         |  FROM cprank GROUP BY 1),
-         |cdr AS (SELECT dom, mass,
-         |    row_number() OVER (ORDER BY mass DESC, dom) AS drk
-         |  FROM cdm),
-         |cdc AS (SELECT dom,
-         |    CASE WHEN drk <= 10 THEN 15 ELSE 8 END AS cap FROM cdr),
-         |surv AS (SELECT e.doc_id, e.text, e.quality, e.lang_pred
-         |  FROM ex e
-         |  WHERE NOT EXISTS (SELECT 1 FROM losers l WHERE l.doc_id = e.doc_id)),
-         |sdoc AS (SELECT doc_id, doc_id % 20 AS dom, quality, lang_pred,
-         |    CAST(length(text) AS BIGINT) AS n_chars,
-         |    CAST(len(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS BIGINT) AS n_tok
-         |  FROM surv),
-         |skept AS (SELECT doc_id, dom, quality, lang_pred, n_tok
-         |  FROM (SELECT s.doc_id, s.dom, s.quality, s.lang_pred,
-         |      s.n_chars, s.n_tok, c.cap,
-         |      row_number() OVER (PARTITION BY s.dom
-         |        ORDER BY s.n_chars DESC, s.doc_id) AS rk
-         |    FROM sdoc s JOIN cdc c ON c.dom = s.dom) t
-         |  WHERE rk <= cap),
-         |spack AS (SELECT doc_id, dom, quality, lang_pred, n_tok,
-         |    CAST(row_number() OVER (ORDER BY dom, doc_id) AS BIGINT) AS grank,
-         |    CAST(SUM(n_tok) OVER (ORDER BY dom, doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |      AS BIGINT) - n_tok AS start_tok
-         |  FROM skept)
-         |SELECT doc_id, dom, quality, lang_pred, n_tok, grank,
-         |  start_tok // 2048 AS seq, start_tok % 2048 AS off
-         |FROM spack ORDER BY doc_id""".stripMargin
-    },
+    "q249_crawl_release" -> Crawl.crawlReleaseSql,
   )
 }

@@ -1,5 +1,7 @@
 package graft.queries
 
+import graft.queries.fixtures.Crawl.{urlOf, urlSqlOf}
+import graft.queries.fixtures.{Crawl, Streams, Text}
 import graft.sources.Tables
 import graft.streaming.StreamFold
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -14,14 +16,7 @@ import org.apache.spark.sql.functions._
   * /root/reference/SCD_script.txt — these extend the web-graph /
   * tokenizer-artifact families the north star adds on top.
   */
-object Round15Queries {
-
-  private def urlOf(t: Column): Column =
-    concat(lit("http://d"), (t % 20).cast("string"),
-      lit(".example.com/p/"), t.cast("string"))
-
-  private def urlSqlOf(t: String): String =
-    s"'http://d' || CAST(($t) % 20 AS VARCHAR) || '.example.com/p/' || CAST($t AS VARCHAR)"
+object Round15Queries extends QueryGroup {
 
   // ---- q258's multi-byte plant ---------------------------------------
   // The corpus alphabet is ASCII a-y, so every accented/symbol word is
@@ -98,7 +93,7 @@ object Round15Queries {
       val n = Tables.docCount(s, dir)
       def coin(c: Column) =
         PortableHash.hash60(c.cast("string"), 55) % 5
-      val fetched = Round11bQueries.linkedPages(s, dir)
+      val fetched = Crawl.linkedPages(s, dir)
         .filter(coin(col("doc_id")) =!= 0)
       val isRedir = expr("doc_id div 20") % 9 === 4
       val target =
@@ -148,7 +143,7 @@ object Round15Queries {
           col("rk"))
         .orderBy(col("dom"), col("rk"))
         .localCheckpoint()
-      Round7bQueries.rmTree(land)
+      Streams.rmTree(land)
       out
     }),
 
@@ -160,7 +155,6 @@ object Round15Queries {
     // fallback can produce (ASCII fallback stays under 0x80), read
     // back from the published artifact.
     "q258_utf8_fallback" -> ((s, dir) => {
-      import java.nio.file.Files
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val train = docs.filter(col("doc_id") % 3 =!= 0)
@@ -169,36 +163,33 @@ object Round15Queries {
         .unionByName(Seq((9999992L, PlantedMultiByte))
           .toDF("doc_id", "text"))
       val merges = graft.text.Bpe.trainMerges(train, "text",
-        Round7Queries.BpeK)
+        Text.BpeK)
       val voc = graft.text.Bpe.vocab(train, "text", merges)
       val stream = graft.pipeline.Packing.byteFallbackStream(
         graft.text.Bpe.symbolStream(held, "doc_id", "text", merges),
         "doc_id", voc)
-      val root = Files.createTempDirectory("graft-q258").toString
-      val cat = new graft.catalog.ParquetCatalog(s, root)
-      graft.pipeline.Packing.exportShardsOf("doc_id", stream, cat,
-        "shards", seqLen = 2048, numGroups = 8,
-        vocabIds = Some(graft.pipeline.Packing.reserveBytes(voc)))
-      val (bin, _) = graft.pipeline.Packing.readShards(cat, "shards")
-      // per-sequence HOF lambdas are bounded (≤ 2048 elements) — the
-      // per-doc exemption, not a corpus-sized CodegenFallback path
-      val out = bin
-        .select(col("grp"), col("seq"), col("n_tok"),
-          graft.functions.TokenBinary.weightedSumCol(col("tokens"))
-            .as("tok_wsum"),
-          size(filter(
-            graft.functions.TokenBinary.unpackCol(col("tokens")),
-            t => t < 256)).cast("long").as("n_byte"),
-          size(filter(
-            graft.functions.TokenBinary.unpackCol(col("tokens")),
-            t => t >= 128 && t < 256)).cast("long").as("n_hi"),
-          array_min(
-            graft.functions.TokenBinary.unpackCol(col("tokens")))
-            .cast("long").as("min_tid"))
-        .orderBy(col("grp"), col("seq"))
-        .localCheckpoint()
-      Round7bQueries.rmTree(root)
-      out
+      Streams.withCatalog(s, "q258") { cat =>
+        graft.pipeline.Packing.exportShardsOf("doc_id", stream, cat,
+          "shards", seqLen = 2048, numGroups = 8,
+          vocabIds = Some(graft.pipeline.Packing.reserveBytes(voc)))
+        val (bin, _) = graft.pipeline.Packing.readShards(cat, "shards")
+        // per-sequence HOF lambdas are bounded (≤ 2048 elements) — the
+        // per-doc exemption, not a corpus-sized CodegenFallback path
+        bin
+          .select(col("grp"), col("seq"), col("n_tok"),
+            graft.functions.TokenBinary.weightedSumCol(col("tokens"))
+              .as("tok_wsum"),
+            size(filter(
+              graft.functions.TokenBinary.unpackCol(col("tokens")),
+              t => t < 256)).cast("long").as("n_byte"),
+            size(filter(
+              graft.functions.TokenBinary.unpackCol(col("tokens")),
+              t => t >= 128 && t < 256)).cast("long").as("n_hi"),
+            array_min(
+              graft.functions.TokenBinary.unpackCol(col("tokens")))
+              .cast("long").as("min_tid"))
+          .orderBy(col("grp"), col("seq"))
+      }
     }),
 
     // STREAMING capstone door: q249's crawl-to-release chain with the
@@ -213,14 +204,12 @@ object Round15Queries {
     "q259_stream_crawl_release" -> ((s, dir) => {
       import java.nio.file.Files
       import graft.graph.WebGraph
-      val pages = Round14Queries.capstonePages(s, dir)
-      val land = Round7bQueries.landThirds(pages, "doc_id", "graft-q259")
+      val pages = Crawl.capstonePages(s, dir)
+      val land = Streams.landThirds(pages, "doc_id", "graft-q259")
       val cp = Files.createTempDirectory("graft-q259-cp").toString
       def hostOf(df: DataFrame): DataFrame =
         graft.text.Html.extract(df, "doc_id", "html")
-          .select(col("doc_id"), col("text"),
-            concat(lit("d"), (col("doc_id") % 20).cast("string"),
-              lit(".example.com")).as("host"))
+          .select(col("doc_id"), col("text"), Crawl.docHost.as("host"))
       // fold state: (host-paragraph df, host doc counts, edges,
       // per-batch extractions)
       type Acc = (DataFrame, DataFrame, DataFrame, DataFrame)
@@ -250,16 +239,16 @@ object Round15Queries {
           // the landed corpus (which its hosts/paragraphs consumers
           // would then re-run 3×)
           prev.fold(ex)(_._4.unionByName(ex)))
-      }.getOrElse(throw Round7bQueries.noBatch("q259_stream_crawl_release"))
+      }.getOrElse(throw Streams.noBatch("q259_stream_crawl_release"))
       val scrub = graft.dedup.Dedup.scrubHostBoilerplateWith(exAll,
           "doc_id", "host", "text", pdf, hn,
           minPpm = 500000L, minDf = 2L)
         .select(col("doc_id"), col("clean_text").as("text"))
       val cleaned = graft.pipeline.CorpusPipeline.clean(scrub,
         "doc_id", "text")
-      val out = Round14Queries.capstoneResolve(s, dir, cleaned, edges)
+      val out = Crawl.capstoneResolve(s, dir, cleaned, edges)
         .localCheckpoint()
-      Round7bQueries.rmTree(land); Round7bQueries.rmTree(cp)
+      Streams.rmTree(land); Streams.rmTree(cp)
       out
     }),
   )
@@ -305,7 +294,7 @@ object Round15Queries {
         s"${PortableHash.hash60Sql(s"CAST($t AS VARCHAR)", 55)} % 5"
       val t91 =
         s"(${PortableHash.hash60Sql("CAST(doc_id AS VARCHAR)", 91)} % (SELECT n FROM lpn))"
-      s"""WITH ${Round11bQueries.lpagesCte},
+      s"""WITH ${Crawl.lpagesCte},
          |rfred AS (SELECT ${urlSqlOf("doc_id")} AS url,
          |    ${urlSqlOf(t91)} AS location
          |  FROM documents
@@ -335,47 +324,8 @@ object Round15Queries {
     // each OOV sym's chars expand into their 1-4 UTF-8 bytes via the
     // exact-integer encoding formula (both engines truncate-divide on
     // nonnegative operands); cpos = 4*char + byte keeps byte order.
-    "q258_utf8_fallback" -> {
-      val sep = "chr(31)"
-      val toksExpr =
-        """list_filter(string_split_regex(text, '\s+'), x -> x <> '')"""
-      val applyRounds = (1 to Round7Queries.BpeK).map { i =>
-        s"""hw$i AS MATERIALIZED (SELECT word, replace(seg,
-           |    (SELECT $sep || lhs || $sep || $sep || rhs || $sep FROM b$i),
-           |    (SELECT $sep || lhs || rhs || $sep FROM b$i)) AS seg
-           |  FROM hw${i - 1})""".stripMargin
-      }.mkString(",\n")
-      s"""WITH trainc AS MATERIALIZED (
-         |  SELECT doc_id, text FROM documents WHERE doc_id % 3 <> 0),
-         |heldc AS MATERIALIZED (
-         |  SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0
-         |  UNION ALL SELECT 9999992, '$PlantedMultiByte'),
-         |${Round7Queries.bpeCtes(Round7Queries.BpeK, "trainc")},
-         |dtt AS (SELECT doc_id, $toksExpr AS ts FROM trainc),
-         |dwt AS (SELECT doc_id, ts[i] AS word
-         |  FROM dtt, UNNEST(generate_series(1, len(ts))) AS u(i)),
-         |syt AS (SELECT unnest(list_filter(
-         |    string_split(w.seg, $sep), x -> x <> '')) AS sym
-         |  FROM dwt d JOIN w${Round7Queries.BpeK} w USING (word)),
-         |vc AS (SELECT sym AS token, CAST(COUNT(*) AS BIGINT) AS n
-         |  FROM syt GROUP BY sym),
-         |vid AS (SELECT token,
-         |    ROW_NUMBER() OVER (ORDER BY n DESC, token) AS vid
-         |  FROM vc),
-         |hw0 AS MATERIALIZED (
-         |  SELECT word,
-         |    list_reduce(list_transform(generate_series(1, length(word)),
-         |      i -> $sep || word[i] || $sep), (a, b) -> a || b) AS seg
-         |  FROM (SELECT DISTINCT unnest($toksExpr) AS word FROM heldc)),
-         |$applyRounds,
-         |dth AS (SELECT doc_id, $toksExpr AS ts FROM heldc),
-         |dwh AS (SELECT doc_id, i AS wpos, ts[i] AS word
-         |  FROM dth, UNNEST(generate_series(1, len(ts))) AS u(i)),
-         |wsh AS (SELECT d.doc_id, d.wpos,
-         |    list_filter(string_split(h.seg, $sep), x -> x <> '') AS syms
-         |  FROM dwh d JOIN hw${Round7Queries.BpeK} h USING (word)),
-         |syh AS (SELECT doc_id, wpos, j AS spos, syms[j] AS sym
-         |  FROM wsh, UNNEST(generate_series(1, len(syms))) AS u(j)),
+    "q258_utf8_fallback" ->
+      s"""WITH ${Text.heldOutSymsSql(9999992, PlantedMultiByte)},
          |bfin AS (SELECT s.doc_id, s.wpos, s.spos, 0 AS cpos,
          |    v.vid + 255 AS tid
          |  FROM syh s JOIN vid v ON v.token = s.sym),
@@ -418,11 +368,10 @@ object Round15Queries {
          |  CAST(SUM(CASE WHEN tid >= 128 AND tid < 256 THEN 1 ELSE 0 END) AS BIGINT)
          |    AS n_hi,
          |  CAST(MIN(tid) AS BIGINT) AS min_tid
-         |FROM btok GROUP BY grp, seq ORDER BY grp, seq""".stripMargin
-    },
+         |FROM btok GROUP BY grp, seq ORDER BY grp, seq""".stripMargin,
 
     // streamed fold == one-shot: the door replays q249 verbatim
     "q259_stream_crawl_release" ->
-      Round14Queries.oracleSql("q249_crawl_release"),
+      Crawl.crawlReleaseSql,
   )
 }

@@ -1,5 +1,7 @@
 package graft.queries
 
+import graft.queries.fixtures.Crawl.{urlOf, urlSqlOf}
+import graft.queries.fixtures.{Corpus, Crawl, Streams}
 import graft.sources.Tables
 import graft.streaming.StreamFold
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -14,21 +16,13 @@ import org.apache.spark.sql.functions._
   * /root/reference/SCD_script.txt — these extend the crawl-ingest /
   * quality families the north star adds on top.
   */
-object Round15bQueries {
-
-  private def urlOf(t: Column): Column =
-    concat(lit("http://d"), (t % 20).cast("string"),
-      lit(".example.com/p/"), t.cast("string"))
-
-  private def urlSqlOf(t: String): String =
-    s"'http://d' || CAST(($t) % 20 AS VARCHAR) || '.example.com/p/' || CAST($t AS VARCHAR)"
+object Round15bQueries extends QueryGroup {
 
   /** é/ä plant: every a/e becomes a non-ASCII latin-1 letter, so the
     * decoded text's high-codepoint count is predictable from the
     * source and NEITHER charset's happy path can alias the other's.
     */
   private def accented(t: Column): Column = translate(t, "ae", "éä")
-  private def accentedSql(t: String): String = s"translate($t, 'ae', 'éä')"
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -41,7 +35,6 @@ object Round15bQueries {
     // latin-1 half). Payloads ride binary WARC segments (per-record
     // gzip members) through real storage.
     "q260_charset_ingest" -> ((s, dir) => {
-      import java.nio.file.Files
       import graft.sources.Warc
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"))
@@ -54,9 +47,7 @@ object Round15bQueries {
         urlOf(col("doc_id")).as("uri"),
         Warc.httpResponseBytes(lit(200), lit("text/html"), cs,
           lit(""), body).as("payload"))
-      val land = Files.createTempDirectory("graft-q260-warc").toString
-      Warc.writeSegmentsBinary(pages.repartition(4, col("doc_id")),
-        "uri", "payload", land, gzip = true)
+      val land = Crawl.landWarc(pages, col("doc_id"), "q260")
       val back = Warc.readRecordsBinary(s, land)
         .select(regexp_extract(col("uri"), "/p/([0-9]+)$", 1)
           .cast("long").as("doc_id"),
@@ -84,7 +75,7 @@ object Round15bQueries {
           sum(col("nch")).as("sum_chars"))
         .orderBy(col("dom"))
         .localCheckpoint()
-      Round7bQueries.rmTree(land)
+      Streams.rmTree(land)
       res
     }),
 
@@ -96,7 +87,6 @@ object Round15bQueries {
     // decode; clean match proves transport byte-exactness through
     // compress → land → read → inflate → decode.
     "q261_gzip_bodies" -> ((s, dir) => {
-      import java.nio.file.Files
       import graft.sources.Warc
       import graft.functions.Gzip
       val docs = Tables(s, dir, "documents")
@@ -111,9 +101,7 @@ object Round15bQueries {
           when(gz, lit("gzip")).otherwise(lit("")),
           when(gz, Gzip.deflateCol(utf8)).otherwise(utf8))
           .as("payload"))
-      val land = Files.createTempDirectory("graft-q261-warc").toString
-      Warc.writeSegmentsBinary(pages.repartition(4, col("doc_id")),
-        "uri", "payload", land, gzip = true)
+      val land = Crawl.landWarc(pages, col("doc_id"), "q261")
       val back = Warc.readRecordsBinary(s, land)
         .select(regexp_extract(col("uri"), "/p/([0-9]+)$", 1)
           .cast("long").as("doc_id"),
@@ -137,7 +125,7 @@ object Round15bQueries {
           sum(length(col("decoded"))).cast("long").as("sum_chars"))
         .orderBy(col("dom"))
         .localCheckpoint()
-      Round7bQueries.rmTree(land)
+      Streams.rmTree(land)
       res
     }),
 
@@ -265,7 +253,6 @@ object Round15bQueries {
     // storage, and the mismatch count is exactly the liars whose
     // body is not actually html.
     "q264_mime_audit" -> ((s, dir) => {
-      import java.nio.file.Files
       import graft.sources.{MimeSniff, Warc}
       import graft.functions.Gzip
       val docs = Tables(s, dir, "documents")
@@ -295,9 +282,7 @@ object Round15bQueries {
         urlOf(t).as("uri"),
         Warc.httpResponseBytes(lit(200), declared, lit(""), lit(""),
           body).as("payload"))
-      val land = Files.createTempDirectory("graft-q264-warc").toString
-      Warc.writeSegmentsBinary(pages.repartition(4, col("doc_id")),
-        "uri", "payload", land, gzip = true)
+      val land = Crawl.landWarc(pages, col("doc_id"), "q264")
       val back = Warc.readRecordsBinary(s, land)
         .select(regexp_extract(col("uri"), "/p/([0-9]+)$", 1)
           .cast("long").as("doc_id"),
@@ -320,7 +305,7 @@ object Round15bQueries {
             .cast("long").as("n_mismatch"))
         .orderBy(col("dom"))
         .localCheckpoint()
-      Round7bQueries.rmTree(land)
+      Streams.rmTree(land)
       res
     }),
     // C4 band as pipeline stage 1b3 (Config.c4 inside bandStages —
@@ -341,7 +326,7 @@ object Round15bQueries {
         regexp_replace(t, "(\\S+( \\S+){7}) ", "$1.\n")
       def nl(t: Column) =
         regexp_replace(t, "(\\S+( \\S+){7}) ", "$1\n")
-      val base = PipelineQueries.corpus(s, dir)
+      val base = Corpus.corpus(s, dir)
         .select(col("doc_id"), punct(col("text")).as("text"))
       val noPunct = d.filter(col("doc_id") % 31 === 0)
         .select((col("doc_id") + 5000000L).as("doc_id"),
@@ -368,27 +353,11 @@ object Round15bQueries {
     // declared — the purge candidates). ISO dates compare lexically,
     // so the freshness test is a portable string compare.
     "q266_recrawl_delta" -> ((s, dir) => {
-      import graft.graph.WebGraph
       val docs = Tables(s, dir, "documents").select(col("doc_id"))
       val t = col("doc_id")
-      val j5 = expr("doc_id div 20") % 5
-      val j6 = expr("doc_id div 20") % 6
-      val day0 = (t * 7) % 28 + 1
-      val dayN = day0 + when(t % 3 === 0, 1).otherwise(0)
-      def dstr(d: Column) =
-        concat(lit("2025-01-"), lpad(d.cast("string"), 2, "0"))
-      val host = concat(lit("d"), (t % 20).cast("string"),
-        lit(".example.com"))
-      val entries = docs.filter(j6 =!= 5)
-        .select(host.as("host"),
-          concat(lit("<url><loc>"), urlOf(t), lit("</loc><lastmod>"),
-            dstr(dayN), lit("</lastmod></url>")).as("e"))
-      val maps = entries.groupBy(col("host"))
-        .agg(concat_ws("", collect_list(col("e"))).as("xml"))
-      val inv = WebGraph.parseSitemaps(maps, "host", "xml")
-        .select(col("url"), col("lastmod"))
-      val state = docs.filter(j5 =!= 4)
-        .select(urlOf(t).as("url"), dstr(day0).as("stored_lastmod"))
+      val inv = Crawl.recrawlInventory(docs)
+      val state = Crawl.recrawlKnown(docs)
+        .select(urlOf(t).as("url"), Crawl.storedLastmod.as("stored_lastmod"))
       val full = inv.join(state, Seq("url"), "full_outer")
         .select(col("url"), col("lastmod"), col("stored_lastmod"),
           (regexp_extract(col("url"), "/p/([0-9]+)$", 1).cast("long")
@@ -423,56 +392,14 @@ object Round15bQueries {
     // per host (lastmod DESC). The between-rounds plan a real
     // incremental crawler executes, every stage a verified part.
     "q267_recrawl_scheduler" -> ((s, dir) => {
-      import graft.graph.WebGraph
-      import org.apache.spark.sql.expressions.Window
-      import s.implicits._
       val docs = Tables(s, dir, "documents").select(col("doc_id"))
       val t = col("doc_id")
-      val j5 = expr("doc_id div 20") % 5
-      val j6 = expr("doc_id div 20") % 6
-      val day0 = (t * 7) % 28 + 1
-      val dayN = day0 + when(t % 3 === 0, 1).otherwise(0)
-      def dstr(d: Column) =
-        concat(lit("2025-01-"), lpad(d.cast("string"), 2, "0"))
-      val host = concat(lit("d"), (t % 20).cast("string"),
-        lit(".example.com"))
-      val entries = docs.filter(j6 =!= 5)
-        .select(host.as("host"),
-          concat(lit("<url><loc>"), urlOf(t), lit("</loc><lastmod>"),
-            dstr(dayN), lit("</lastmod></url>")).as("e"))
-      val maps = entries.groupBy(col("host"))
-        .agg(concat_ws("", collect_list(col("e"))).as("xml"))
-      val inv = WebGraph.parseSitemaps(maps, "host", "xml")
-        .select(col("url"), col("lastmod"))
-      val state = docs.filter(j5 =!= 4)
-        .select(urlOf(t).as("url"), dstr(day0).as("stored_lastmod"))
-      val cand = inv.join(state, Seq("url"), "left")
-        .filter(col("stored_lastmod").isNull ||
-          col("lastmod") > col("stored_lastmod"))
-        .select(col("url"), col("lastmod"),
-          (regexp_extract(col("url"), "/p/([0-9]+)$", 1).cast("long")
-            % 20).as("dom"))
-      val robots = (0 until 20).map { k =>
-        (s"d$k.example.com",
-          s"User-agent: *\nDisallow: /*9$$\nDisallow: /p/2\n" +
-            s"Crawl-delay: ${(k % 4) * 5 + 5}")
-      }.toDF("host", "txt")
-      val rules = WebGraph.parseRobotsFor(robots, "host", "txt",
-        "graftbot")
-      val delays = WebGraph.crawlDelays(robots, "host", "txt",
-        "graftbot")
-      val dec = WebGraph.urlDecisions(cand.select(col("url")), rules)
-      val allowed = cand.join(dec, Seq("url"))
-        .filter(col("action") === "allow")
-        .withColumn("host", concat(lit("d"), col("dom").cast("string"),
-          lit(".example.com")))
-        .join(broadcast(delays), Seq("host"), "left")
-        .withColumn("slots",
-          greatest(lit(1L), expr("60 div coalesce(delay, 60)")))
-      val sched = allowed.withColumn("rk", row_number().over(
-          Window.partitionBy(col("host"))
-            .orderBy(col("lastmod").desc, col("url"))))
-        .filter(col("rk") <= col("slots"))
+      val inv = Crawl.recrawlInventory(docs)
+      val state = Crawl.recrawlKnown(docs)
+        .select(urlOf(t).as("url"), Crawl.storedLastmod.as("stored_lastmod"))
+      val cand = Crawl.recrawlCandidates(inv, state)
+      val allowed = Crawl.recrawlAllowed(s, cand)
+      val sched = Crawl.recrawlScheduled(allowed)
       val candAgg = cand.groupBy(col("dom"))
         .agg(count(lit(1)).as("n_candidates"))
       val allowAgg = allowed.groupBy(col("dom"))
@@ -511,7 +438,7 @@ object Round15bQueries {
         urlOf(col("doc_id")).as("uri"),
         Warc.httpResponseBytes(lit(200), lit("text/html"), cs,
           lit(""), body).as("payload"))
-      val land = Round7bQueries.landThirds(pages, "doc_id", "graft-q268")
+      val land = Streams.landThirds(pages, "doc_id", "graft-q268")
       val cp = Files.createTempDirectory("graft-q268-cp").toString
       val agg = StreamFold[DataFrame](StreamFold.files(s, land), cp) {
         (prev, batch, _) =>
@@ -539,13 +466,13 @@ object Round15bQueries {
               sum(col("nch")).as("sum_chars"))
           StreamFold.addPartials(prev, part, Seq("dom"), Seq("n_records",
             "n_latin1", "n_clean", "sum_hi", "sum_chars"))
-      }.getOrElse(throw Round7bQueries.noBatch("q268_stream_charset_ingest"))
+      }.getOrElse(throw Streams.noBatch("q268_stream_charset_ingest"))
       val out = agg
         .select(col("dom"), col("n_records"), col("n_latin1"),
           col("n_clean"), col("sum_hi"), col("sum_chars"))
         .orderBy(col("dom"))
         .localCheckpoint()
-      Round7bQueries.rmTree(land); Round7bQueries.rmTree(cp)
+      Streams.rmTree(land); Streams.rmTree(cp)
       out
     }),
     // META-charset fallback (the HTML5 prescan): a third of the
@@ -556,7 +483,6 @@ object Round15bQueries {
     // clean match dies. Classes ride div-20 coins; latin-1 halves by
     // doc parity inside the declaring classes.
     "q269_meta_charset" -> ((s, dir) => {
-      import java.nio.file.Files
       import graft.sources.Warc
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"))
@@ -575,9 +501,7 @@ object Round15bQueries {
         Warc.httpResponseBytes(lit(200), lit("text/html"),
           when(j3 === 0, cs).otherwise(lit("")), lit(""), body)
           .as("payload"))
-      val land = Files.createTempDirectory("graft-q269-warc").toString
-      Warc.writeSegmentsBinary(pages.repartition(4, col("doc_id")),
-        "uri", "payload", land, gzip = true)
+      val land = Crawl.landWarc(pages, col("doc_id"), "q269")
       val back = Warc.readRecordsBinary(s, land)
         .select(regexp_extract(col("uri"), "/p/([0-9]+)$", 1)
           .cast("long").as("doc_id"),
@@ -609,7 +533,7 @@ object Round15bQueries {
           sum(col("nch")).as("sum_chars"))
         .orderBy(col("dom"))
         .localCheckpoint()
-      Round7bQueries.rmTree(land)
+      Streams.rmTree(land)
       res
     }),
   )
@@ -742,8 +666,7 @@ object Round15bQueries {
     },
 
     "q265_pipeline_c4" -> {
-      import PipelineQueries.{corpusSql, langCaseSql, langHitColsSql,
-        minhashCtesSql, pairsCteSql, qualityExprSql, shinglesSql}
+      import Corpus.corpusSql
       import graft.text.C4Quality
       s"""WITH RECURSIVE $corpusSql,
          |corpus2 AS (
@@ -760,62 +683,15 @@ object Round15bQueries {
          |    regexp_replace(text, '(\\S+( \\S+){7}) ', '\\1.' || chr(10), 'g') ||
          |    chr(10) || 'the code { block } of it.'
          |  FROM documents WHERE doc_id % 37 = 0),
-         |scored AS (
-         |  SELECT doc_id, text,
-         |  $qualityExprSql AS quality,
-         |$langHitColsSql
-         |  FROM corpus2),
-         |gated AS (
-         |  SELECT doc_id, text, quality,
-         |  $langCaseSql AS lang_pred
-         |  FROM scored),
-         |g2 AS (SELECT doc_id, text, quality, lang_pred FROM gated
-         |       WHERE quality >= 0.7::DOUBLE AND lang_pred = 'en'),
+         |${Corpus.rowGatesSql("corpus2")},
          |${C4Quality.cleanCtes("g2", "doc_id", "text")},
          |g3 AS (SELECT g2.* FROM g2 JOIN c4out USING (doc_id)
          |       WHERE c4_keep),
-         |fp AS (SELECT doc_id, text, quality, lang_pred,
-         |    md5(trim(regexp_replace(regexp_replace(lower(text),
-         |      '[^a-z0-9\\s]', '', 'g'), '\\s+', ' ', 'g'))) AS f
-         |  FROM g3),
-         |keep AS (SELECT min(doc_id) AS doc_id FROM fp GROUP BY f),
-         |ex AS (SELECT fp.* FROM fp WHERE fp.doc_id IN (SELECT doc_id FROM keep)),
-         |${shinglesSql("ex")},
-         |$minhashCtesSql,
-         |${pairsCteSql("0.5")},
-         |edges AS (
-         |  SELECT a AS src, b AS dst FROM pairs
-         |  UNION SELECT b, a FROM pairs),
-         |reach(node, lab) AS (
-         |  SELECT src, src FROM edges
-         |  UNION
-         |  SELECT e2.dst, r.lab FROM reach r JOIN edges e2 ON e2.src = r.node),
-         |losers AS (
-         |  SELECT node AS doc_id FROM reach
-         |  GROUP BY node HAVING node <> min(lab))
-         |SELECT e.doc_id, e.quality, e.lang_pred
-         |FROM ex e
-         |WHERE NOT EXISTS (SELECT 1 FROM losers l WHERE l.doc_id = e.doc_id)
-         |ORDER BY e.doc_id""".stripMargin
+         |${Corpus.cleanSurvivorsSql("g3")}""".stripMargin
     },
 
-    "q266_recrawl_delta" -> {
-      import graft.graph.WebGraph
-      s"""WITH rce AS (SELECT
-         |    'd' || CAST(doc_id % 20 AS VARCHAR) || '.example.com' AS host,
-         |    '<url><loc>' || ${urlSqlOf("doc_id")} || '</loc><lastmod>' ||
-         |    '2025-01-' || lpad(CAST((doc_id * 7) % 28 + 1 +
-         |      (CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END) AS VARCHAR),
-         |      2, '0') ||
-         |    '</lastmod></url>' AS e
-         |  FROM documents WHERE (doc_id // 20) % 6 <> 5),
-         |rcm AS (SELECT host, string_agg(e, '') AS xml
-         |  FROM rce GROUP BY host),
-         |${WebGraph.parseSitemapsCtes("rcm", "host", "xml", "rc")},
-         |rcstate AS (SELECT ${urlSqlOf("doc_id")} AS url,
-         |    '2025-01-' || lpad(CAST((doc_id * 7) % 28 + 1 AS VARCHAR),
-         |      2, '0') AS stored_lastmod
-         |  FROM documents WHERE (doc_id // 20) % 5 <> 4),
+    "q266_recrawl_delta" ->
+      s"""WITH ${Crawl.recrawlInventorySql("rc", "rc")},
          |rcj AS (SELECT coalesce(i.url, s.url) AS url,
          |    i.lastmod, s.stored_lastmod
          |  FROM rcmaps i FULL OUTER JOIN rcstate s ON s.url = i.url)
@@ -829,26 +705,11 @@ object Round15bQueries {
          |  CAST(SUM(CASE WHEN lastmod IS NOT NULL AND stored_lastmod IS NOT NULL
          |    AND lastmod = stored_lastmod THEN 1 ELSE 0 END) AS BIGINT) AS n_unchanged,
          |  CAST(SUM(CASE WHEN lastmod IS NULL AND stored_lastmod IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_gone
-         |FROM rcj GROUP BY 1 ORDER BY dom""".stripMargin
-    },
+         |FROM rcj GROUP BY 1 ORDER BY dom""".stripMargin,
 
     "q267_recrawl_scheduler" -> {
       import graft.graph.WebGraph
-      s"""WITH rse AS (SELECT
-         |    'd' || CAST(doc_id % 20 AS VARCHAR) || '.example.com' AS host,
-         |    '<url><loc>' || ${urlSqlOf("doc_id")} || '</loc><lastmod>' ||
-         |    '2025-01-' || lpad(CAST((doc_id * 7) % 28 + 1 +
-         |      (CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END) AS VARCHAR),
-         |      2, '0') ||
-         |    '</lastmod></url>' AS e
-         |  FROM documents WHERE (doc_id // 20) % 6 <> 5),
-         |rsm AS (SELECT host, string_agg(e, '') AS xml
-         |  FROM rse GROUP BY host),
-         |${WebGraph.parseSitemapsCtes("rsm", "host", "xml", "rs2")},
-         |rsstate AS (SELECT ${urlSqlOf("doc_id")} AS url,
-         |    '2025-01-' || lpad(CAST((doc_id * 7) % 28 + 1 AS VARCHAR),
-         |      2, '0') AS stored_lastmod
-         |  FROM documents WHERE (doc_id // 20) % 5 <> 4),
+      s"""WITH ${Crawl.recrawlInventorySql("rs", "rs2")},
          |rscand AS (SELECT i.url, i.lastmod,
          |    CAST(regexp_extract(i.url, '/p/([0-9]+)$$', 1) AS BIGINT) % 20 AS dom
          |  FROM rs2maps i LEFT JOIN rsstate s ON s.url = i.url

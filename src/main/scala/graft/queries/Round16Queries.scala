@@ -1,5 +1,7 @@
 package graft.queries
 
+import graft.queries.fixtures.Crawl.{urlOf, urlSqlOf}
+import graft.queries.fixtures.{Corpus, Crawl, Media, Streams}
 import graft.sources.Tables
 import graft.streaming.StreamFold
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -13,14 +15,7 @@ import org.apache.spark.sql.functions._
   * /root/reference/SCD_script.txt — these extend the crawl-ingest
   * family the north star adds on top.
   */
-object Round16Queries {
-
-  private def urlOf(t: Column): Column =
-    concat(lit("http://d"), (t % 20).cast("string"),
-      lit(".example.com/p/"), t.cast("string"))
-
-  private def urlSqlOf(t: String): String =
-    s"'http://d' || CAST(($t) % 20 AS VARCHAR) || '.example.com/p/' || CAST($t AS VARCHAR)"
+object Round16Queries extends QueryGroup {
 
   /** Curly-quote/em-dash plant: every 'a' becomes U+2019 (cp1252
     * 0x92) and every 'e' U+2014 (0x97) — both codepoints live in the
@@ -30,46 +25,6 @@ object Round16Queries {
     */
   private def styled(t: Column): Column =
     translate(t, "ae", "’—")
-
-  // ---- color JPEG perceptual dedup (q274) ---------------------------
-  // Per-cell LUMA margins (≥12 between adjacent cells) + a UNIFORM
-  // per-image color cast: the cast shifts every dHash sample by the
-  // same integer ((3l+s)/3 is l plus a constant for every l), so the
-  // hash equals the lossless twin's bit-for-bit, while the chroma
-  // planes are genuinely non-gray — the color path is real, the
-  // oracle replays hashes from the cell formula (the q201 posture).
-
-  private[graft] def colorCell(id0: Long, gx: Int, gy: Int): Int = {
-    val h = graft.functions.TextHash.md5Low60(s"cj:$id0:$gx:$gy")
-    (30 + (h % 5) * 40 + ((gx + gy) % 2) * 12).toInt
-  }
-
-  private val ColorCasts: Array[(Int, Int, Int)] =
-    Array((0, 0, 0), (16, -8, -4), (-16, 8, 4), (12, 4, -16))
-
-  private[graft] def colorPlantImage(id0: Long,
-      altCell: Boolean): graft.multimodal.Bmp.Image = {
-    val w = 64; val h = 64
-    val (dr, dg, db) = ColorCasts(
-      (graft.functions.TextHash.md5Low60(s"cast:$id0") % 4).toInt)
-    val rgb = new Array[Byte](w * h * 3)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val gx = x / 8; val gy = y / 8
-        val idc = if (altCell && gx == 3 && gy == 3) id0 + 999983L else id0
-        val l = colorCell(idc, gx, gy) + ((x + y) % 2) * 2
-        val p = (y * w + x) * 3
-        rgb(p) = (l + dr).toByte
-        rgb(p + 1) = (l + dg).toByte
-        rgb(p + 2) = (l + db).toByte
-        x += 1
-      }
-      y += 1
-    }
-    graft.multimodal.Bmp.Image(w, h, rgb)
-  }
 
   /** rid = doc_id*4 color JPEG 4:4:4; +1 BMP of the SAME pixels (the
     * cross-format exact twin, every doc); +2 the SAME pixels at 4:2:0
@@ -83,7 +38,7 @@ object Round16Queries {
     Tables(s, dir, "documents").select(col("doc_id"))
       .filter(col("doc_id") % 10 === 3).as[Long]
       .flatMap { id =>
-        val base = colorPlantImage(id, altCell = false)
+        val base = Media.colorPlantImage(id, altCell = false)
         val j444 = Jpeg.encodeColor(base, subsample = false)
         val bmp = Bmp.encode(base)
         Seq(Multimodal.BmpMedia(id * 4, j444, j444.length),
@@ -93,7 +48,8 @@ object Round16Queries {
             Seq(Multimodal.BmpMedia(id * 4 + 2, j420, j420.length))
           } else Nil) ++
           (if (id % 5 == 0) {
-            val j = Jpeg.encodeColor(colorPlantImage(id, altCell = true),
+            val j = Jpeg.encodeColor(
+              Media.colorPlantImage(id, altCell = true),
               subsample = true)
             Seq(Multimodal.BmpMedia(id * 4 + 3, j, j.length))
           } else Nil)
@@ -116,7 +72,6 @@ object Round16Queries {
         .orderBy(col("id"))
     }),
 
-
     // WINDOWS-1252 transport: odd ids land as cp1252 BYTES labeled
     // with a rotating WHATWG alias (latin1 / iso-8859-1 / cp1252 /
     // windows-1252 / l1 — every label must normalize or its docs'
@@ -126,7 +81,6 @@ object Round16Queries {
     // matches docs whose text had no 'a'/'e' at all (pure-ASCII after
     // the plant) — the oracle predicts exactly that count.
     "q270_cp1252_ingest" -> ((s, dir) => {
-      import java.nio.file.Files
       import graft.sources.Warc
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"))
@@ -145,9 +99,7 @@ object Round16Queries {
         urlOf(col("doc_id")).as("uri"),
         Warc.httpResponseBytes(lit(200), lit("text/html"), cs,
           lit(""), body).as("payload"))
-      val land = Files.createTempDirectory("graft-q270-warc").toString
-      Warc.writeSegmentsBinary(pages.repartition(4, col("doc_id")),
-        "uri", "payload", land, gzip = true)
+      val land = Crawl.landWarc(pages, col("doc_id"), "q270")
       val back = Warc.readRecordsBinary(s, land)
         .select(regexp_extract(col("uri"), "/p/([0-9]+)$", 1)
           .cast("long").as("doc_id"),
@@ -179,7 +131,7 @@ object Round16Queries {
           sum(col("nch")).as("sum_chars"))
         .orderBy(col("dom"))
         .localCheckpoint()
-      Round7bQueries.rmTree(land)
+      Streams.rmTree(land)
       res
     }),
 
@@ -192,7 +144,6 @@ object Round16Queries {
     // decode; clean match proves byte-exactness through all three
     // layers and real storage.
     "q271_chunked_transport" -> ((s, dir) => {
-      import java.nio.file.Files
       import graft.sources.Warc
       import graft.functions.{Chunked, Gzip}
       val docs = Tables(s, dir, "documents")
@@ -220,9 +171,7 @@ object Round16Queries {
         .otherwise(payload0)
       val pages = docs.select(col("doc_id"),
         urlOf(t).as("uri"), payload.as("payload"))
-      val land = Files.createTempDirectory("graft-q271-warc").toString
-      Warc.writeSegmentsBinary(pages.repartition(4, col("doc_id")),
-        "uri", "payload", land, gzip = true)
+      val land = Crawl.landWarc(pages, col("doc_id"), "q271")
       val back = Warc.readRecordsBinary(s, land)
         .select(regexp_extract(col("uri"), "/p/([0-9]+)$", 1)
           .cast("long").as("doc_id"),
@@ -256,7 +205,7 @@ object Round16Queries {
           sum(col("nch")).as("sum_chars"))
         .orderBy(col("dom"))
         .localCheckpoint()
-      Round7bQueries.rmTree(land)
+      Streams.rmTree(land)
       res
     }),
     // CRAWL-SOURCED robots.txt: the access policy is read FROM the
@@ -349,7 +298,7 @@ object Round16Queries {
           coalesce(col("first_url"), lit("")).as("first_url"))
         .orderBy(col("dom"))
         .localCheckpoint()
-      Round7bQueries.rmTree(land)
+      Streams.rmTree(land)
       res
     }),
 
@@ -414,7 +363,7 @@ object Round16Queries {
             .as("n_clean"))
         .orderBy(col("dom"))
         .localCheckpoint()
-      Round7bQueries.rmTree(land)
+      Streams.rmTree(land)
       res
     }),
     // SCHEDULED CONDITIONAL RECRAWL — the round's crawl pieces
@@ -429,59 +378,16 @@ object Round16Queries {
     // URL.
     "q275_scheduled_fetch" -> ((s, dir) => {
       import java.nio.file.Files
-      import graft.graph.WebGraph
       import graft.sources.Warc
-      import org.apache.spark.sql.expressions.Window
-      import s.implicits._
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val t = col("doc_id")
-      val j5 = expr("doc_id div 20") % 5
-      val j6 = expr("doc_id div 20") % 6
-      val day0 = (t * 7) % 28 + 1
-      val dayN = day0 + when(t % 3 === 0, 1).otherwise(0)
-      def dstr(d: Column) =
-        concat(lit("2025-01-"), lpad(d.cast("string"), 2, "0"))
-      val host = concat(lit("d"), (t % 20).cast("string"),
-        lit(".example.com"))
-      val entries = docs.filter(j6 =!= 5)
-        .select(host.as("host"),
-          concat(lit("<url><loc>"), urlOf(t), lit("</loc><lastmod>"),
-            dstr(dayN), lit("</lastmod></url>")).as("e"))
-      val maps = entries.groupBy(col("host"))
-        .agg(concat_ws("", collect_list(col("e"))).as("xml"))
-      val inv = WebGraph.parseSitemaps(maps, "host", "xml")
-        .select(col("url"), col("lastmod"))
-      val state = docs.filter(j5 =!= 4)
+      val inv = Crawl.recrawlInventory(docs)
+      val state = Crawl.recrawlKnown(docs)
         .select(urlOf(t).as("url"), col("text").as("stored"),
-          dstr(day0).as("stored_lastmod"))
-      val cand = inv.join(state, Seq("url"), "left")
-        .filter(col("stored_lastmod").isNull ||
-          col("lastmod") > col("stored_lastmod"))
-        .select(col("url"), col("lastmod"),
-          (regexp_extract(col("url"), "/p/([0-9]+)$", 1).cast("long")
-            % 20).as("dom"))
-      val robots = (0 until 20).map { k =>
-        (s"d$k.example.com",
-          s"User-agent: *\nDisallow: /*9$$\nDisallow: /p/2\n" +
-            s"Crawl-delay: ${(k % 4) * 5 + 5}")
-      }.toDF("host", "txt")
-      val rules = WebGraph.parseRobotsFor(robots, "host", "txt",
-        "graftbot")
-      val delays = WebGraph.crawlDelays(robots, "host", "txt",
-        "graftbot")
-      val dec = WebGraph.urlDecisions(cand.select(col("url")), rules)
-      val sched = cand.join(dec, Seq("url"))
-        .filter(col("action") === "allow")
-        .withColumn("host", concat(lit("d"), col("dom").cast("string"),
-          lit(".example.com")))
-        .join(broadcast(delays), Seq("host"), "left")
-        .withColumn("slots",
-          greatest(lit(1L), expr("60 div coalesce(delay, 60)")))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("host"))
-            .orderBy(col("lastmod").desc, col("url"))))
-        .filter(col("rk") <= col("slots"))
+          Crawl.storedLastmod.as("stored_lastmod"))
+      val cand = Crawl.recrawlCandidates(inv, state)
+      val sched = Crawl.recrawlScheduled(Crawl.recrawlAllowed(s, cand))
         .select(col("url"))
       // the server: current truth + conditional answers for the
       // scheduled set only (join back to docs by id)
@@ -532,7 +438,7 @@ object Round16Queries {
             .as("n_clean"))
         .orderBy(col("dom"))
         .localCheckpoint()
-      Round7bQueries.rmTree(land)
+      Streams.rmTree(land)
       res
     }),
     // STREAMING conditional-fetch door: q273's 304/200 responses
@@ -558,7 +464,7 @@ object Round16Queries {
         when(is304, Warc.httpResponse(lit(304), lit("text/html"),
           lit(""))).otherwise(Warc.httpResponse(lit(200),
           lit("text/html"), cur)).as("payload"))
-      val land = Round7bQueries.landThirds(pages, "doc_id", "graft-q276")
+      val land = Streams.landThirds(pages, "doc_id", "graft-q276")
       val cp = Files.createTempDirectory("graft-q276-cp").toString
       val agg = StreamFold[DataFrame](StreamFold.files(s, land), cp) {
         (prev, batch, _) =>
@@ -590,13 +496,13 @@ object Round16Queries {
                 .as("n_clean"))
           StreamFold.addPartials(prev, part, Seq("dom"), Seq("n_urls",
             "n_200", "n_304", "bytes_fetched", "bytes_saved", "n_clean"))
-      }.getOrElse(throw Round7bQueries.noBatch("q276_stream_conditional"))
+      }.getOrElse(throw Streams.noBatch("q276_stream_conditional"))
       val out = agg
         .select(col("dom"), col("n_urls"), col("n_200"), col("n_304"),
           col("bytes_fetched"), col("bytes_saved"), col("n_clean"))
         .orderBy(col("dom"))
         .localCheckpoint()
-      Round7bQueries.rmTree(land); Round7bQueries.rmTree(cp)
+      Streams.rmTree(land); Streams.rmTree(cp)
       out
     }),
     // BOM priority (WHATWG encoding sniff, step 1): a byte-order mark
@@ -609,7 +515,6 @@ object Round16Queries {
     // and matches exactly the two classes whose header tells the
     // truth.
     "q277_bom_priority" -> ((s, dir) => {
-      import java.nio.file.Files
       import graft.sources.Warc
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"))
@@ -631,9 +536,7 @@ object Round16Queries {
         urlOf(col("doc_id")).as("uri"),
         Warc.httpResponseBytes(lit(200), lit("text/html"), cs,
           lit(""), body).as("payload"))
-      val land = Files.createTempDirectory("graft-q277-warc").toString
-      Warc.writeSegmentsBinary(pages.repartition(4, col("doc_id")),
-        "uri", "payload", land, gzip = true)
+      val land = Crawl.landWarc(pages, col("doc_id"), "q277")
       val back = Warc.readRecordsBinary(s, land)
         .select(regexp_extract(col("uri"), "/p/([0-9]+)$", 1)
           .cast("long").as("doc_id"),
@@ -670,7 +573,7 @@ object Round16Queries {
           sum(col("nch")).as("sum_chars"))
         .orderBy(col("dom"))
         .localCheckpoint()
-      Round7bQueries.rmTree(land)
+      Streams.rmTree(land)
       res
     }),
     // GZIPPED SITEMAPS through real transport — both live
@@ -682,7 +585,6 @@ object Round16Queries {
     // inflate) → robots Sitemap: directives → nested index expansion
     // → access decisions, one statement.
     "q278_gzip_sitemaps" -> ((s, dir) => {
-      import java.nio.file.Files
       import graft.graph.WebGraph
       import graft.sources.Warc
       import graft.functions.Gzip
@@ -728,9 +630,7 @@ object Round16Queries {
           lit(""),
           when(col("k") % 3 === 0, lit("")).otherwise(lit("gzip")),
           Gzip.deflateCol(encode(col("xml"), "UTF-8"))).as("payload"))
-      val land = Files.createTempDirectory("graft-q278-warc").toString
-      Warc.writeSegmentsBinary(pages.repartition(4, col("uri")),
-        "uri", "payload", land, gzip = true)
+      val land = Crawl.landWarc(pages, col("uri"), "q278")
       val back = Warc.readRecordsBinary(s, land)
         .select(col("uri").as("url"),
           Warc.payloadText(col("body")).as("pt"),
@@ -780,7 +680,7 @@ object Round16Queries {
           coalesce(col("max_lastmod"), lit("")).as("max_lastmod"))
         .orderBy(col("host"))
         .localCheckpoint()
-      Round7bQueries.rmTree(land)
+      Streams.rmTree(land)
       res
     }),
   )
@@ -917,13 +817,7 @@ object Round16Queries {
          |    FROM cqbands x JOIN cqbands y
          |      ON x.band = y.band AND x.v = y.v AND x.rid < y.rid) t
          |  WHERE bit_count(xor(ha, hb)) <= 6),
-         |cqedges AS (SELECT a AS src, b AS dst FROM cqpairs
-         |  UNION SELECT b, a FROM cqpairs),
-         |cqreach(node, lab) AS (
-         |  SELECT src, src FROM cqedges
-         |  UNION
-         |  SELECT e2.dst, r.lab FROM cqreach r JOIN cqedges e2 ON e2.src = r.node),
-         |cqlabels AS (SELECT node, min(lab) AS clus FROM cqreach GROUP BY node)
+         |${Corpus.ccCompactSql("cq")}
          |SELECT d.rid AS id, d.dhash,
          |  COALESCE(l.clus, d.rid) AS cluster,
          |  (COALESCE(l.clus, d.rid) <> d.rid) AS is_dup
@@ -950,21 +844,7 @@ object Round16Queries {
     // sweep — spurious-lastmod rows save exactly their stored bytes
     "q275_scheduled_fetch" -> {
       import graft.graph.WebGraph
-      s"""WITH sfe AS (SELECT
-         |    'd' || CAST(doc_id % 20 AS VARCHAR) || '.example.com' AS host,
-         |    '<url><loc>' || ${urlSqlOf("doc_id")} || '</loc><lastmod>' ||
-         |    '2025-01-' || lpad(CAST((doc_id * 7) % 28 + 1 +
-         |      (CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END) AS VARCHAR),
-         |      2, '0') ||
-         |    '</lastmod></url>' AS e
-         |  FROM documents WHERE (doc_id // 20) % 6 <> 5),
-         |sfm AS (SELECT host, string_agg(e, '') AS xml
-         |  FROM sfe GROUP BY host),
-         |${WebGraph.parseSitemapsCtes("sfm", "host", "xml", "sf2")},
-         |sfstate AS (SELECT ${urlSqlOf("doc_id")} AS url,
-         |    '2025-01-' || lpad(CAST((doc_id * 7) % 28 + 1 AS VARCHAR),
-         |      2, '0') AS stored_lastmod
-         |  FROM documents WHERE (doc_id // 20) % 5 <> 4),
+      s"""WITH ${Crawl.recrawlInventorySql("sf", "sf2")},
          |sfcand AS (SELECT i.url, i.lastmod,
          |    CAST(regexp_extract(i.url, '/p/([0-9]+)$$', 1) AS BIGINT) % 20 AS dom
          |  FROM sf2maps i LEFT JOIN sfstate s ON s.url = i.url

@@ -1,5 +1,7 @@
 package graft.queries
 
+import graft.queries.fixtures.Crawl.{urlOf, urlSqlOf}
+import graft.queries.fixtures.{Corpus, Crawl, Media, Streams, Text}
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -14,25 +16,7 @@ import org.apache.spark.sql.functions._
   * /root/reference/SCD_script.txt — these extend the crawl-ingest and
   * text-quality families the north star adds on top.
   */
-object Round17Queries {
-
-  private def urlOf(t: Column): Column =
-    concat(lit("http://d"), (t % 20).cast("string"),
-      lit(".example.com/p/"), t.cast("string"))
-
-  private def urlSqlOf(t: String): String =
-    s"'http://d' || CAST(($t) % 20 AS VARCHAR) || '.example.com/p/' || CAST($t AS VARCHAR)"
-
-  /** Substitution cipher over the corpus alphabet a–y (reversed):
-    * statistically a different "language" — every character trigram
-    * changes — while length/punctuation stay identical, so the
-    * quality gate keeps it and only a LANGUAGE gate can see it.
-    */
-  private[queries] def cipher(t: Column): Column =
-    translate(t, "abcdefghijklmnopqrstuvwxy", "yxwvutsrqponmlkjihgfedcba")
-
-  private[queries] val CipherSql =
-    "translate(text, 'abcdefghijklmnopqrstuvwxy', 'yxwvutsrqponmlkjihgfedcba')"
+object Round17Queries extends QueryGroup {
 
   /** rid = doc_id*4 color JPEG 4:4:4 with DRI interval 3; +1 the
     * lossless BMP twin; +2 (%3) the SAME pixels at 4:2:0 with DRI 2;
@@ -48,7 +32,7 @@ object Round17Queries {
     Tables(s, dir, "documents").select(col("doc_id"))
       .filter(col("doc_id") % 10 === 6).as[Long]
       .flatMap { id =>
-        val base = Round16Queries.colorPlantImage(id, altCell = false)
+        val base = Media.colorPlantImage(id, altCell = false)
         val j444 = Jpeg.encodeColor(base, subsample = false,
           restartInterval = 3)
         val bmp = Bmp.encode(base)
@@ -80,7 +64,7 @@ object Round17Queries {
     Tables(s, dir, "documents").select(col("doc_id"))
       .filter(col("doc_id") % 10 === 7).as[Long]
       .flatMap { id =>
-        val base = Round16Queries.colorPlantImage(id, altCell = false)
+        val base = Media.colorPlantImage(id, altCell = false)
         val prog = Jpeg.encodeProgressive(base, color = true)
         val bmp = Bmp.encode(base)
         Seq(Multimodal.BmpMedia(id * 4, prog, prog.length),
@@ -112,7 +96,7 @@ object Round17Queries {
       val media = Tables(s, dir, "documents").select(col("doc_id"))
         .filter(col("doc_id") % 10 === 8).as[Long]
         .flatMap { id =>
-          val base = Round16Queries.colorPlantImage(id, altCell = false)
+          val base = Media.colorPlantImage(id, altCell = false)
           val sa = Jpeg.encodeProgressive(base, color = true, sa = true)
           val bmp = Bmp.encode(base)
           Seq(Multimodal.BmpMedia(id * 4, sa, sa.length),
@@ -162,8 +146,7 @@ object Round17Queries {
       import s.implicits._
       val docs = Tables(s, dir, "documents").select(col("doc_id"))
       val t = col("doc_id")
-      val host = concat(lit("d"), (t % 20).cast("string"),
-        lit(".example.com"))
+      val host = Crawl.docHost
       val day = (t * 7) % 28 + 1
       val dstr = concat(lit("2025-01-"), lpad(day.cast("string"), 2, "0"))
       val rows = docs.select(host.as("host"),
@@ -235,17 +218,7 @@ object Round17Queries {
     // covers the composition.
     "q285_langid_pipeline" -> ((s, dir) => {
       import graft.pipeline.CorpusPipeline
-      import graft.text.LangClassifier
-      val base = PipelineQueries.corpus(s, dir)
-      val ciphered = base.select(
-        (col("doc_id") + 5000000L).as("doc_id"),
-        cipher(col("text")).as("text"))
-      val corpus = base.unionByName(ciphered)
-      val seeds = base.filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"), lit("en").as("label"), col("text"))
-        .unionByName(ciphered.filter(col("doc_id") % 10 === 5)
-          .select(col("doc_id"), lit("xx").as("label"), col("text")))
-      val model = LangClassifier.fit(seeds, "doc_id", "label", "text")
+      val (corpus, model) = Text.cipheredCorpus(s, dir)
       CorpusPipeline.clean(corpus, "doc_id", "text",
           CorpusPipeline.Config(langGate =
             Some(CorpusPipeline.LangGate(model, Seq("en")))))
@@ -264,17 +237,7 @@ object Round17Queries {
     "q286_stream_langid" -> ((s, dir) => {
       import java.nio.file.Files
       import graft.pipeline.CorpusPipeline
-      import graft.text.LangClassifier
-      val base = PipelineQueries.corpus(s, dir)
-      val ciphered = base.select(
-        (col("doc_id") + 5000000L).as("doc_id"),
-        cipher(col("text")).as("text"))
-      val corpus = base.unionByName(ciphered)
-      val seeds = base.filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"), lit("en").as("label"), col("text"))
-        .unionByName(ciphered.filter(col("doc_id") % 10 === 5)
-          .select(col("doc_id"), lit("xx").as("label"), col("text")))
-      val model = LangClassifier.fit(seeds, "doc_id", "label", "text")
+      val (corpus, model) = Text.cipheredCorpus(s, dir)
       val cfg = CorpusPipeline.Config(langGate =
         Some(CorpusPipeline.LangGate(model, Seq("en"))))
       val stage = Files.createTempDirectory("graft-q286-landing").toString
@@ -284,7 +247,7 @@ object Round17Queries {
       val stream = graft.streaming.StreamFold.files(s, stage)
       val (_, gated, pairs) = graft.streaming.StreamingCorpus.ingest(
         stream, "doc_id", "text", cp, cfg)
-      Round7bQueries.rmTree(stage); Round7bQueries.rmTree(cp)
+      Streams.rmTree(stage); Streams.rmTree(cp)
       graft.streaming.StreamingCorpus
         .resolveSurvivors(gated, pairs, "doc_id", "text", cfg)
         .select(col("doc_id"), col("quality"), col("lang_pred"))
@@ -305,62 +268,19 @@ object Round17Queries {
     // equals the truth's md5 for every scheduled URL.
     "q279_etag_fetch" -> ((s, dir) => {
       import java.nio.file.Files
-      import graft.graph.WebGraph
       import graft.sources.Warc
-      import org.apache.spark.sql.expressions.Window
-      import s.implicits._
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val t = col("doc_id")
-      val j5 = expr("doc_id div 20") % 5
-      val j6 = expr("doc_id div 20") % 6
-      val day0 = (t * 7) % 28 + 1
-      val dayN = day0 + when(t % 3 === 0, 1).otherwise(0)
-      def dstr(d: Column) =
-        concat(lit("2025-01-"), lpad(d.cast("string"), 2, "0"))
-      val host = concat(lit("d"), (t % 20).cast("string"),
-        lit(".example.com"))
-      val entries = docs.filter(j6 =!= 5)
-        .select(host.as("host"),
-          concat(lit("<url><loc>"), urlOf(t), lit("</loc><lastmod>"),
-            dstr(dayN), lit("</lastmod></url>")).as("e"))
-      val maps = entries.groupBy(col("host"))
-        .agg(concat_ws("", collect_list(col("e"))).as("xml"))
-      val inv = WebGraph.parseSitemaps(maps, "host", "xml")
-        .select(col("url"), col("lastmod"))
+      val inv = Crawl.recrawlInventory(docs)
       // crawl state: stored body + its lastmod + its VALIDATOR (etag)
-      val state = docs.filter(j5 =!= 4)
+      val state = Crawl.recrawlKnown(docs)
         .select(urlOf(t).as("url"), col("text").as("stored"),
-          dstr(day0).as("stored_lastmod"),
+          Crawl.storedLastmod.as("stored_lastmod"),
           md5(col("text")).as("stored_etag"))
-      val cand = inv.join(state.select(col("url"),
-          col("stored_lastmod")), Seq("url"), "left")
-        .filter(col("stored_lastmod").isNull ||
-          col("lastmod") > col("stored_lastmod"))
-        .select(col("url"), col("lastmod"),
-          (regexp_extract(col("url"), "/p/([0-9]+)$", 1).cast("long")
-            % 20).as("dom"))
-      val robots = (0 until 20).map { k =>
-        (s"d$k.example.com",
-          s"User-agent: *\nDisallow: /*9$$\nDisallow: /p/2\n" +
-            s"Crawl-delay: ${(k % 4) * 5 + 5}")
-      }.toDF("host", "txt")
-      val rules = WebGraph.parseRobotsFor(robots, "host", "txt",
-        "graftbot")
-      val delays = WebGraph.crawlDelays(robots, "host", "txt",
-        "graftbot")
-      val dec = WebGraph.urlDecisions(cand.select(col("url")), rules)
-      val sched = cand.join(dec, Seq("url"))
-        .filter(col("action") === "allow")
-        .withColumn("host", concat(lit("d"), col("dom").cast("string"),
-          lit(".example.com")))
-        .join(broadcast(delays), Seq("host"), "left")
-        .withColumn("slots",
-          greatest(lit(1L), expr("60 div coalesce(delay, 60)")))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("host"))
-            .orderBy(col("lastmod").desc, col("url"))))
-        .filter(col("rk") <= col("slots"))
+      val cand = Crawl.recrawlCandidates(inv, state.select(col("url"),
+          col("stored_lastmod")))
+      val sched = Crawl.recrawlScheduled(Crawl.recrawlAllowed(s, cand))
         .select(col("url"))
       val fetchSet = sched
         .select(col("url"), regexp_extract(col("url"), "/p/([0-9]+)$", 1)
@@ -421,7 +341,7 @@ object Round17Queries {
             .as("n_etag_clean"))
         .orderBy(col("dom"))
         .localCheckpoint()
-      Round7bQueries.rmTree(land)
+      Streams.rmTree(land)
       res
     }),
 
@@ -434,7 +354,6 @@ object Round17Queries {
     // decode is real; clean match proves byte-exactness through
     // compress → land → read → inflate → decode for every framing.
     "q280_deflate_bodies" -> ((s, dir) => {
-      import java.nio.file.Files
       import graft.sources.Warc
       import graft.functions.Gzip
       val docs = Tables(s, dir, "documents")
@@ -454,9 +373,7 @@ object Round17Queries {
         urlOf(t).as("uri"),
         Warc.httpResponseBytes(lit(200), lit("text/html"),
           lit("utf-8"), enc, body).as("payload"))
-      val land = Files.createTempDirectory("graft-q280-warc").toString
-      Warc.writeSegmentsBinary(pages.repartition(4, col("doc_id")),
-        "uri", "payload", land, gzip = true)
+      val land = Crawl.landWarc(pages, col("doc_id"), "q280")
       val back = Warc.readRecordsBinary(s, land)
         .select(regexp_extract(col("uri"), "/p/([0-9]+)$", 1)
           .cast("long").as("doc_id"),
@@ -485,7 +402,7 @@ object Round17Queries {
           sum(col("nch")).as("sum_chars"))
         .orderBy(col("dom"))
         .localCheckpoint()
-      Round7bQueries.rmTree(land)
+      Streams.rmTree(land)
       res
     }),
 
@@ -499,34 +416,30 @@ object Round17Queries {
     // still has text_len and tag), so the query only works if every
     // version reads under its own schema.
     "q282_alter_columns" -> ((s, dir) => {
-      import java.nio.file.Files
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"),
           length(col("text")).cast("long").as("text_len"),
           concat(lit("t"), (col("doc_id") % 3).cast("string")).as("tag"))
-      val root = Files.createTempDirectory("graft-q282").toString
-      val cat = new graft.catalog.ParquetCatalog(s, root)
-      cat.create("dd", docs.schema)
-      cat.overwrite("dd", docs)
-      val v0 = cat.currentVersion("dd").get
-      graft.scd.DdlSql.execute(s, cat,
-        "ALTER TABLE dd ADD COLUMNS (score BIGINT DEFAULT 7)")
-      graft.scd.DdlSql.execute(s, cat,
-        "ALTER TABLE dd RENAME COLUMN text_len TO len_chars")
-      graft.scd.DdlSql.execute(s, cat,
-        "ALTER TABLE dd DROP COLUMN tag")
-      graft.scd.DmlSql.execute(s, cat,
-        "UPDATE dd SET score = len_chars * 3 WHERE doc_id % 2 = 1")
-      val old = cat.tableAsOfVersion("dd", v0)
-        .select(col("doc_id"), col("text_len").as("old_len"),
-          col("tag").as("old_tag"))
-      val out = cat.table("dd").join(old, Seq("doc_id"))
-        .select(col("doc_id"), col("len_chars"), col("score"),
-          col("old_len"), col("old_tag"))
-        .orderBy(col("doc_id"))
-        .localCheckpoint()
-      Round7bQueries.rmTree(root)
-      out
+      Streams.withCatalog(s, "q282") { cat =>
+        cat.create("dd", docs.schema)
+        cat.overwrite("dd", docs)
+        val v0 = cat.currentVersion("dd").get
+        graft.scd.DdlSql.execute(s, cat,
+          "ALTER TABLE dd ADD COLUMNS (score BIGINT DEFAULT 7)")
+        graft.scd.DdlSql.execute(s, cat,
+          "ALTER TABLE dd RENAME COLUMN text_len TO len_chars")
+        graft.scd.DdlSql.execute(s, cat,
+          "ALTER TABLE dd DROP COLUMN tag")
+        graft.scd.DmlSql.execute(s, cat,
+          "UPDATE dd SET score = len_chars * 3 WHERE doc_id % 2 = 1")
+        val old = cat.tableAsOfVersion("dd", v0)
+          .select(col("doc_id"), col("text_len").as("old_len"),
+            col("tag").as("old_tag"))
+        cat.table("dd").join(old, Seq("doc_id"))
+          .select(col("doc_id"), col("len_chars"), col("score"),
+            col("old_len"), col("old_tag"))
+          .orderBy(col("doc_id"))
+      }
     }),
 
     // TRAINED language ID (fit/apply char-trigram classifier, exact
@@ -545,7 +458,7 @@ object Round17Queries {
         .select(col("doc_id"), col("text"))
       val fx = docs.select(col("doc_id"),
         when(col("doc_id") % 2 === 0, col("text"))
-          .otherwise(cipher(col("text"))).as("text"),
+          .otherwise(Text.cipher(col("text"))).as("text"),
         when(col("doc_id") % 2 === 0, lit("en")).otherwise(lit("xx"))
           .as("lang_true"))
       val seeds = fx.filter(col("doc_id") % 10 === 0 ||
@@ -611,13 +524,7 @@ object Round17Queries {
          |    FROM sjbands x JOIN sjbands y
          |      ON x.band = y.band AND x.v = y.v AND x.rid < y.rid) t
          |  WHERE bit_count(xor(ha, hb)) <= 6),
-         |sjedges AS (SELECT a AS src, b AS dst FROM sjpairs
-         |  UNION SELECT b, a FROM sjpairs),
-         |sjreach(node, lab) AS (
-         |  SELECT src, src FROM sjedges
-         |  UNION
-         |  SELECT e2.dst, r.lab FROM sjreach r JOIN sjedges e2 ON e2.src = r.node),
-         |sjlabels AS (SELECT node, min(lab) AS clus FROM sjreach GROUP BY node)
+         |${Corpus.ccCompactSql("sj")}
          |SELECT d.rid AS id, d.dhash,
          |  COALESCE(l.clus, d.rid) AS cluster,
          |  (COALESCE(l.clus, d.rid) <> d.rid) AS is_dup
@@ -663,13 +570,7 @@ object Round17Queries {
          |    FROM pjbands x JOIN pjbands y
          |      ON x.band = y.band AND x.v = y.v AND x.rid < y.rid) t
          |  WHERE bit_count(xor(ha, hb)) <= 6),
-         |pjedges AS (SELECT a AS src, b AS dst FROM pjpairs
-         |  UNION SELECT b, a FROM pjpairs),
-         |pjreach(node, lab) AS (
-         |  SELECT src, src FROM pjedges
-         |  UNION
-         |  SELECT e2.dst, r.lab FROM pjreach r JOIN pjedges e2 ON e2.src = r.node),
-         |pjlabels AS (SELECT node, min(lab) AS clus FROM pjreach GROUP BY node)
+         |${Corpus.ccCompactSql("pj")}
          |SELECT d.rid AS id, d.dhash,
          |  COALESCE(l.clus, d.rid) AS cluster,
          |  (COALESCE(l.clus, d.rid) <> d.rid) AS is_dup
@@ -690,7 +591,7 @@ object Round17Queries {
          |    'd' || CAST(k AS VARCHAR) || '.example.com' AS host
          |  FROM (SELECT unnest(generate_series(0, 19)) AS k)),
          |strows AS (SELECT
-         |    'd' || CAST(doc_id % 20 AS VARCHAR) || '.example.com' AS host,
+         |    ${Crawl.docHostSql} AS host,
          |    (doc_id // 20) % 9 AS shard,
          |    '<url><loc>' || ${urlSqlOf("doc_id")} || '</loc><lastmod>' ||
          |    $lm ||
@@ -776,13 +677,7 @@ object Round17Queries {
          |    FROM djbands x JOIN djbands y
          |      ON x.band = y.band AND x.v = y.v AND x.rid < y.rid) t
          |  WHERE bit_count(xor(ha, hb)) <= 6),
-         |djedges AS (SELECT a AS src, b AS dst FROM djpairs
-         |  UNION SELECT b, a FROM djpairs),
-         |djreach(node, lab) AS (
-         |  SELECT src, src FROM djedges
-         |  UNION
-         |  SELECT e2.dst, r.lab FROM djreach r JOIN djedges e2 ON e2.src = r.node),
-         |djlabels AS (SELECT node, min(lab) AS clus FROM djreach GROUP BY node)
+         |${Corpus.ccCompactSql("dj")}
          |SELECT d.rid AS id, d.dhash,
          |  COALESCE(l.clus, d.rid) AS cluster,
          |  (COALESCE(l.clus, d.rid) <> d.rid) AS is_dup
@@ -804,21 +699,7 @@ object Round17Queries {
     // saves; validators are md5s both engines compute
     "q279_etag_fetch" -> {
       import graft.graph.WebGraph
-      s"""WITH efe AS (SELECT
-         |    'd' || CAST(doc_id % 20 AS VARCHAR) || '.example.com' AS host,
-         |    '<url><loc>' || ${urlSqlOf("doc_id")} || '</loc><lastmod>' ||
-         |    '2025-01-' || lpad(CAST((doc_id * 7) % 28 + 1 +
-         |      (CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END) AS VARCHAR),
-         |      2, '0') ||
-         |    '</lastmod></url>' AS e
-         |  FROM documents WHERE (doc_id // 20) % 6 <> 5),
-         |efm AS (SELECT host, string_agg(e, '') AS xml
-         |  FROM efe GROUP BY host),
-         |${WebGraph.parseSitemapsCtes("efm", "host", "xml", "ef2")},
-         |efstate AS (SELECT ${urlSqlOf("doc_id")} AS url,
-         |    '2025-01-' || lpad(CAST((doc_id * 7) % 28 + 1 AS VARCHAR),
-         |      2, '0') AS stored_lastmod
-         |  FROM documents WHERE (doc_id // 20) % 5 <> 4),
+      s"""WITH ${Crawl.recrawlInventorySql("ef", "ef2")},
          |efcand AS (SELECT i.url, i.lastmod,
          |    CAST(regexp_extract(i.url, '/p/([0-9]+)$$', 1) AS BIGINT) % 20 AS dom
          |  FROM ef2maps i LEFT JOIN efstate s ON s.url = i.url
@@ -890,9 +771,9 @@ object Round17Queries {
     // fit + apply replay bit-exactly (integer costs), the regex argmax
     // replays from the marker-hit columns — both sides are exact
     "q284_trained_langid" -> {
-      import PipelineQueries.{langCaseSql, langHitColsSql}
+      import Corpus.{langCaseSql, langHitColsSql}
       s"""WITH lgfx AS (SELECT doc_id,
-         |    CASE WHEN doc_id % 2 = 0 THEN text ELSE $CipherSql END AS text,
+         |    CASE WHEN doc_id % 2 = 0 THEN text ELSE ${Text.CipherSql} END AS text,
          |    CASE WHEN doc_id % 2 = 0 THEN 'en' ELSE 'xx' END AS lang_true
          |  FROM documents),
          |lgseeds AS (SELECT doc_id AS id, lang_true AS label, text
@@ -919,58 +800,7 @@ object Round17Queries {
   /** Shared q285/q286 oracle: the q46 chain with the trained-gate
     * replay in place of the regex language filter.
     */
-  private lazy val LangPipelineSql: String = {
-    import PipelineQueries.{corpusSql, langCaseSql, langHitColsSql,
-      minhashCtesSql, pairsCteSql, qualityExprSql, shinglesSql}
-      s"""WITH RECURSIVE $corpusSql,
-         |corpus2 AS (
-         |  SELECT doc_id, text FROM corpus
-         |  UNION ALL
-         |  SELECT doc_id + 5000000, $CipherSql AS text FROM corpus),
-         |lgseeds AS (
-         |  SELECT doc_id AS id, 'en' AS label, text
-         |  FROM corpus WHERE doc_id % 10 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 5000000 AS id, 'xx' AS label, $CipherSql AS text
-         |  FROM corpus WHERE doc_id % 10 = 5),
-         |scored AS (
-         |  SELECT doc_id, text,
-         |  $qualityExprSql AS quality,
-         |$langHitColsSql
-         |  FROM corpus2),
-         |gated AS (
-         |  SELECT doc_id, text, quality,
-         |  $langCaseSql AS lang_pred
-         |  FROM scored),
-         |g1 AS (SELECT doc_id, text, quality, lang_pred FROM gated
-         |       WHERE quality >= 0.7::DOUBLE),
-         |lgdocs AS (SELECT doc_id AS id, text FROM g1),
-         |${graft.text.LangClassifier.classifyCtes("lgseeds", "lgdocs",
-             "lc")},
-         |g2 AS (SELECT g1.* FROM g1 JOIN lcpred p ON p.id = g1.doc_id
-         |       WHERE p.lang_trained = 'en'),
-         |fp AS (SELECT doc_id, text, quality, lang_pred,
-         |    md5(trim(regexp_replace(regexp_replace(lower(text),
-         |      '[^a-z0-9\\s]', '', 'g'), '\\s+', ' ', 'g'))) AS f
-         |  FROM g2),
-         |keep AS (SELECT min(doc_id) AS doc_id FROM fp GROUP BY f),
-         |ex AS (SELECT fp.* FROM fp WHERE fp.doc_id IN (SELECT doc_id FROM keep)),
-         |${shinglesSql("ex")},
-         |$minhashCtesSql,
-         |${pairsCteSql("0.5")},
-         |edges AS (
-         |  SELECT a AS src, b AS dst FROM pairs
-         |  UNION SELECT b, a FROM pairs),
-         |reach(node, lab) AS (
-         |  SELECT src, src FROM edges
-         |  UNION
-         |  SELECT e2.dst, r.lab FROM reach r JOIN edges e2 ON e2.src = r.node),
-         |losers AS (
-         |  SELECT node AS doc_id FROM reach
-         |  GROUP BY node HAVING node <> min(lab))
-         |SELECT e.doc_id, e.quality, e.lang_pred
-         |FROM ex e
-         |WHERE NOT EXISTS (SELECT 1 FROM losers l WHERE l.doc_id = e.doc_id)
-         |ORDER BY e.doc_id""".stripMargin
-  }
+  private lazy val LangPipelineSql: String =
+    s"""WITH RECURSIVE ${Text.trainedLangGateSql("= 'en'")},
+       |${Corpus.cleanSurvivorsSql("g2")}""".stripMargin
 }

@@ -1,5 +1,7 @@
 package graft.queries
 
+import graft.queries.fixtures.Crawl.urlOf
+import graft.queries.fixtures.{Corpus, Crawl, Media, Streams, Text}
 import graft.sources.Tables
 import graft.streaming.StreamFold
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -14,75 +16,7 @@ import org.apache.spark.sql.functions._
   * /root/reference/SCD_script.txt — these extend the crawl-ingest
   * family the north star adds on top.
   */
-object Round18Queries {
-
-  private def urlOf(t: Column): Column =
-    concat(lit("http://d"), (t % 20).cast("string"),
-      lit(".example.com/p/"), t.cast("string"))
-
-  private def urlSqlOf(t: String): String =
-    s"'http://d' || CAST(($t) % 20 AS VARCHAR) || '.example.com/p/' || CAST($t AS VARCHAR)"
-
-  /** The five CJK transport classes: canonical WHATWG name, the JDK
-    * superset codec [[graft.sources.Warc.decodeBody]] routes it to,
-    * the two-codepoint plant ('a'→first, 'e'→second — both OUTSIDE
-    * ASCII, so a decode through the wrong codec corrupts every one),
-    * and the rotating label aliases (every alias must normalize or its
-    * docs' plants decode as mojibake and the class's clean count
-    * dies).
-    */
-  private[graft] val CjkClasses: Array[(String, String, String, Array[String])] =
-    Array(
-      ("shift_jis", "windows-31j", "日本", // 日本
-        Array("shift_jis", "sjis", "ms_kanji", "windows-31j", "x-sjis")),
-      ("euc-jp", "EUC-JP", "仮名", // 仮名
-        Array("euc-jp", "x-euc-jp", "cseucpkdfmtjapanese")),
-      ("gbk", "GBK", "中文", // 中文
-        Array("gbk", "gb2312", "chinese", "csgb2312", "iso-ir-58")),
-      ("big5", "Big5", "漢字", // 漢字
-        Array("big5", "big5-hkscs", "cn-big5", "csbig5")),
-      ("euc-kr", "x-windows-949", "한글", // 한글
-        Array("euc-kr", "korean", "ks_c_5601-1987", "windows-949")))
-
-  // ---- 4:2:2 JPEG perceptual dedup (q290) ---------------------------
-  // The q274 posture at the third sampling layout: per-cell LUMA
-  // margins + a UNIFORM per-image color cast (constant chroma planes,
-  // so horizontal box-averaging is exact and the reconstruction shift
-  // is uniform per image) — every 4:2:2 stream dHashes identically to
-  // its lossless BMP twin, and the oracle replays hashes from the
-  // cell formula.
-
-  private[graft] def cell422(id0: Long, gx: Int, gy: Int): Int = {
-    val h = graft.functions.TextHash.md5Low60(s"cj422:$id0:$gx:$gy")
-    (30 + (h % 5) * 40 + ((gx + gy) % 2) * 12).toInt
-  }
-
-  private val Casts422: Array[(Int, Int, Int)] =
-    Array((0, 0, 0), (16, -8, -4), (-16, 8, 4), (12, 4, -16))
-
-  private[graft] def plantImage422(id0: Long,
-      altCell: Boolean): graft.multimodal.Bmp.Image = {
-    val w = 64; val h = 64
-    val (dr, dg, db) = Casts422(
-      (graft.functions.TextHash.md5Low60(s"cast422:$id0") % 4).toInt)
-    val rgb = new Array[Byte](w * h * 3)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val gx = x / 8; val gy = y / 8
-        val idc = if (altCell && gx == 3 && gy == 3) id0 + 999983L else id0
-        val l = cell422(idc, gx, gy) + ((x + y) % 2) * 2
-        val p = (y * w + x) * 3
-        rgb(p) = (l + dr).toByte
-        rgb(p + 1) = (l + dg).toByte
-        rgb(p + 2) = (l + db).toByte
-        x += 1
-      }
-      y += 1
-    }
-    graft.multimodal.Bmp.Image(w, h, rgb)
-  }
+object Round18Queries extends QueryGroup {
 
   /** rid = doc_id*4 color JPEG 4:2:2; +1 BMP of the SAME pixels (the
     * cross-format exact twin, every doc); +2 the SAME pixels 4:2:2
@@ -96,7 +30,7 @@ object Round18Queries {
     Tables(s, dir, "documents").select(col("doc_id"))
       .filter(col("doc_id") % 10 === 4).as[Long]
       .flatMap { id =>
-        val base = plantImage422(id, altCell = false)
+        val base = Media.plantImage422(id, altCell = false)
         val j422 = Jpeg.encodeColor422(base)
         val bmp = Bmp.encode(base)
         Seq(Multimodal.BmpMedia(id * 4, j422, j422.length),
@@ -106,7 +40,8 @@ object Round18Queries {
             Seq(Multimodal.BmpMedia(id * 4 + 2, jd, jd.length))
           } else Nil) ++
           (if (id % 5 == 0) {
-            val j = Jpeg.encodeColor422(plantImage422(id, altCell = true))
+            val j = Jpeg.encodeColor422(
+              Media.plantImage422(id, altCell = true))
             Seq(Multimodal.BmpMedia(id * 4 + 3, j, j.length))
           } else Nil)
       }
@@ -123,7 +58,7 @@ object Round18Queries {
       .select(col("doc_id"), col("text"))
       .as[(Long, String)].map { case (id, text) =>
         val cls = ((id / 20) % 5).toInt
-        val (_, jdk, plant, aliases) = CjkClasses(cls)
+        val (_, jdk, plant, aliases) = Text.CjkClasses(cls)
         val alias = aliases(((id / 100) % aliases.length).toInt)
         val planted = text.map(c =>
           if (c == 'a') plant.charAt(0)
@@ -159,10 +94,10 @@ object Round18Queries {
       graft.functions.Gzip.utf8LenientCol(col("bb")).as("u8"))
     val cls = (expr("doc_id div 20") % 5).cast("int")
     def perClass(f: (String, String) => Column): Column =
-      (1 until CjkClasses.length).foldLeft(
-        when(cls === 0, f(CjkClasses(0)._1, CjkClasses(0)._3))) {
+      (1 until Text.CjkClasses.length).foldLeft(
+        when(cls === 0, f(Text.CjkClasses(0)._1, Text.CjkClasses(0)._3))) {
           (acc, i) => acc.when(cls === i,
-            f(CjkClasses(i)._1, CjkClasses(i)._3))
+            f(Text.CjkClasses(i)._1, Text.CjkClasses(i)._3))
         }
     val expected = perClass((_, plant) =>
       translate(col("text"), "ae", plant))
@@ -254,7 +189,7 @@ object Round18Queries {
             col("sum_len"), col("n_exact"))
       }.reduce(_.unionByName(_))
       val res = perVersion.orderBy(col("version")).localCheckpoint()
-      Round7bQueries.rmTree(root)
+      Streams.rmTree(root)
       res
     }),
 
@@ -271,65 +206,22 @@ object Round18Queries {
     // requests, and the ledger prices both sides exactly.
     "q295_fresh_scheduler" -> ((s, dir) => {
       import java.nio.file.Files
-      import graft.graph.WebGraph
       import graft.sources.Warc
-      import org.apache.spark.sql.expressions.Window
-      import s.implicits._
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val t = col("doc_id")
-      val j5 = expr("doc_id div 20") % 5
-      val j6 = expr("doc_id div 20") % 6
-      val day0 = (t * 7) % 28 + 1
-      val dayN = day0 + when(t % 3 === 0, 1).otherwise(0)
-      def dstr(d: Column) =
-        concat(lit("2025-01-"), lpad(d.cast("string"), 2, "0"))
-      val host = concat(lit("d"), (t % 20).cast("string"),
-        lit(".example.com"))
-      val entries = docs.filter(j6 =!= 5)
-        .select(host.as("host"),
-          concat(lit("<url><loc>"), urlOf(t), lit("</loc><lastmod>"),
-            dstr(dayN), lit("</lastmod></url>")).as("e"))
-      val maps = entries.groupBy(col("host"))
-        .agg(concat_ws("", collect_list(col("e"))).as("xml"))
-      val inv = WebGraph.parseSitemaps(maps, "host", "xml")
-        .select(col("url"), col("lastmod"))
+      val inv = Crawl.recrawlInventory(docs)
       // crawl state: the stored copy is a REAL cached payload — etag,
       // Cache-Control, and body all parse back from its headers
-      val state = docs.filter(j5 =!= 4)
-        .select(urlOf(t).as("url"), dstr(day0).as("stored_lastmod"),
+      val state = Crawl.recrawlKnown(docs)
+        .select(urlOf(t).as("url"), Crawl.storedLastmod.as("stored_lastmod"),
           Warc.httpResponseCaching(lit(200), lit("text/html"),
             md5(encode(col("text"), "UTF-8")),
             concat(lit("max-age="), ((t % 9) * 500).cast("string")),
             lit(""), col("text")).as("sp"))
-      val cand = inv.join(state.select(col("url"),
-          col("stored_lastmod")), Seq("url"), "left")
-        .filter(col("stored_lastmod").isNull ||
-          col("lastmod") > col("stored_lastmod"))
-        .select(col("url"), col("lastmod"),
-          (regexp_extract(col("url"), "/p/([0-9]+)$", 1).cast("long")
-            % 20).as("dom"))
-      val robots = (0 until 20).map { k =>
-        (s"d$k.example.com",
-          s"User-agent: *\nDisallow: /*9$$\nDisallow: /p/2\n" +
-            s"Crawl-delay: ${(k % 4) * 5 + 5}")
-      }.toDF("host", "txt")
-      val rules = WebGraph.parseRobotsFor(robots, "host", "txt",
-        "graftbot")
-      val delays = WebGraph.crawlDelays(robots, "host", "txt",
-        "graftbot")
-      val dec = WebGraph.urlDecisions(cand.select(col("url")), rules)
-      val sched = cand.join(dec, Seq("url"))
-        .filter(col("action") === "allow")
-        .withColumn("host", concat(lit("d"), col("dom").cast("string"),
-          lit(".example.com")))
-        .join(broadcast(delays), Seq("host"), "left")
-        .withColumn("slots",
-          greatest(lit(1L), expr("60 div coalesce(delay, 60)")))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("host"))
-            .orderBy(col("lastmod").desc, col("url"))))
-        .filter(col("rk") <= col("slots"))
+      val cand = Crawl.recrawlCandidates(inv, state.select(col("url"),
+          col("stored_lastmod")))
+      val sched = Crawl.recrawlScheduled(Crawl.recrawlAllowed(s, cand))
         .select(col("url"))
       // the freshness tier: parse max-age/etag/body from the stored
       // payload and split the scheduled set BEFORE any request
@@ -393,7 +285,7 @@ object Round18Queries {
             .as("n_clean"))
         .orderBy(col("dom"))
         .localCheckpoint()
-      Round7bQueries.rmTree(land)
+      Streams.rmTree(land)
       res
     }),
 
@@ -473,7 +365,7 @@ object Round18Queries {
             .otherwise(0L)).cast("long").as("bytes_saved"))
         .orderBy(col("dom"))
         .localCheckpoint()
-      Round7bQueries.rmTree(land)
+      Streams.rmTree(land)
       res
     }),
 
@@ -488,17 +380,7 @@ object Round18Queries {
     "q294_multilang_routing" -> ((s, dir) => {
       import java.nio.file.Files
       import graft.pipeline.CorpusPipeline
-      import graft.text.LangClassifier
-      val base = PipelineQueries.corpus(s, dir)
-      val ciphered = base.select(
-        (col("doc_id") + 5000000L).as("doc_id"),
-        Round17Queries.cipher(col("text")).as("text"))
-      val corpus = base.unionByName(ciphered)
-      val seeds = base.filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"), lit("en").as("label"), col("text"))
-        .unionByName(ciphered.filter(col("doc_id") % 10 === 5)
-          .select(col("doc_id"), lit("xx").as("label"), col("text")))
-      val model = LangClassifier.fit(seeds, "doc_id", "label", "text")
+      val (corpus, model) = Text.cipheredCorpus(s, dir)
       val cfg = CorpusPipeline.Config(langGate =
         Some(CorpusPipeline.LangGate(model, Seq("en", "xx"))))
       val routed = CorpusPipeline.routeByLanguage(corpus, "doc_id",
@@ -517,7 +399,7 @@ object Round18Queries {
           col("lang_pred"))
         .orderBy(col("doc_id"))
         .localCheckpoint()
-      Round7bQueries.rmTree(root)
+      Streams.rmTree(root)
       res
     }),
 
@@ -560,7 +442,7 @@ object Round18Queries {
           lit(curType).as("cur_type"))
         .orderBy(col("dom"))
         .localCheckpoint()
-      Round7bQueries.rmTree(root)
+      Streams.rmTree(root)
       res
     }),
 
@@ -647,7 +529,7 @@ object Round18Queries {
             .as("n_clean"))
         .orderBy(col("dom"))
         .localCheckpoint()
-      Round7bQueries.rmTree(land)
+      Streams.rmTree(land)
       res
     }),
 
@@ -663,21 +545,18 @@ object Round18Queries {
     // record: it matches exactly the docs with no 'a'/'e' at all
     // (pure-ASCII after the plant) — mojibake cannot silently pass.
     "q289_cjk_ingest" -> ((s, dir) => {
-      import java.nio.file.Files
       import graft.sources.Warc
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val pages = cjkPages(s, dir)
-      val land = Files.createTempDirectory("graft-q289-warc").toString
-      Warc.writeSegmentsBinary(pages.repartition(4, col("doc_id")),
-        "uri", "payload", land, gzip = true)
+      val land = Crawl.landWarc(pages, col("doc_id"), "q289")
       val back = Warc.readRecordsBinary(s, land)
         .select(regexp_extract(col("uri"), "/p/([0-9]+)$", 1)
           .cast("long").as("doc_id"), col("body").as("payload"))
       val res = cjkPartials(back, docs)
         .orderBy(col("dom"))
         .localCheckpoint()
-      Round7bQueries.rmTree(land)
+      Streams.rmTree(land)
       res
     }),
 
@@ -690,7 +569,6 @@ object Round18Queries {
     // class combinations appear; the clean match proves byte-exact
     // text through every layer and real gzipped-WARC storage.
     "q299_cjk_onion" -> ((s, dir) => {
-      import java.nio.file.Files
       import graft.sources.Warc
       import graft.functions.{Chunked, Gzip}
       val docs = Tables(s, dir, "documents")
@@ -709,9 +587,7 @@ object Round18Queries {
           col("label"), enc, b1))
       val pages = bodies.select(t, urlOf(t).as("uri"),
         payload.as("payload"))
-      val land = Files.createTempDirectory("graft-q299-warc").toString
-      Warc.writeSegmentsBinary(pages.repartition(4, t),
-        "uri", "payload", land, gzip = true)
+      val land = Crawl.landWarc(pages, t, "q299")
       val back = Warc.readRecordsBinary(s, land)
         .select(regexp_extract(col("uri"), "/p/([0-9]+)$", 1)
           .cast("long").as("doc_id"),
@@ -728,10 +604,10 @@ object Round18Queries {
           .as("decoded"))
       val cls = (expr("doc_id div 20") % 5).cast("int")
       def perClass(f: (String, String) => Column): Column =
-        (1 until CjkClasses.length).foldLeft(
-          when(cls === 0, f(CjkClasses(0)._1, CjkClasses(0)._3))) {
+        (1 until Text.CjkClasses.length).foldLeft(
+          when(cls === 0, f(Text.CjkClasses(0)._1, Text.CjkClasses(0)._3))) {
             (acc, i) => acc.when(cls === i,
-              f(CjkClasses(i)._1, CjkClasses(i)._3))
+              f(Text.CjkClasses(i)._1, Text.CjkClasses(i)._3))
           }
       val expected = perClass((_, plant) =>
         translate(col("text"), "ae", plant))
@@ -752,7 +628,7 @@ object Round18Queries {
           sum(col("nch")).as("sum_chars"))
         .orderBy(col("dom"))
         .localCheckpoint()
-      Round7bQueries.rmTree(land)
+      Streams.rmTree(land)
       res
     }),
 
@@ -766,14 +642,13 @@ object Round18Queries {
     // lenient UTF-8) matches exactly the plant-free docs — drop the
     // meta leg and every plant-bearing doc dies.
     "q297_meta_cjk" -> ((s, dir) => {
-      import java.nio.file.Files
       import graft.sources.Warc
       import s.implicits._
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val landed = docs.as[(Long, String)].map { case (id, text) =>
         val cls = ((id / 20) % 5).toInt
-        val (canon, jdk, plant, _) = CjkClasses(cls)
+        val (canon, jdk, plant, _) = Text.CjkClasses(cls)
         val planted = text.map(c =>
           if (c == 'a') plant.charAt(0)
           else if (c == 'e') plant.charAt(1) else c)
@@ -785,9 +660,7 @@ object Round18Queries {
         // charset = '' — the header declares NOTHING
         Warc.httpResponseBytes(lit(200), lit("text/html"), lit(""),
           lit(""), col("body")).as("payload"))
-      val land = Files.createTempDirectory("graft-q297-warc").toString
-      Warc.writeSegmentsBinary(pages.repartition(4, col("doc_id")),
-        "uri", "payload", land, gzip = true)
+      val land = Crawl.landWarc(pages, col("doc_id"), "q297")
       val back = Warc.readRecordsBinary(s, land)
         .select(regexp_extract(col("uri"), "/p/([0-9]+)$", 1)
           .cast("long").as("doc_id"),
@@ -804,10 +677,10 @@ object Round18Queries {
         graft.functions.Gzip.utf8LenientCol(col("bb")).as("u8"))
       val cls = (expr("doc_id div 20") % 5).cast("int")
       def perClass(f: (String, String) => Column): Column =
-        (1 until CjkClasses.length).foldLeft(
-          when(cls === 0, f(CjkClasses(0)._1, CjkClasses(0)._3))) {
+        (1 until Text.CjkClasses.length).foldLeft(
+          when(cls === 0, f(Text.CjkClasses(0)._1, Text.CjkClasses(0)._3))) {
             (acc, i) => acc.when(cls === i,
-              f(CjkClasses(i)._1, CjkClasses(i)._3))
+              f(Text.CjkClasses(i)._1, Text.CjkClasses(i)._3))
           }
       val expected = perClass((canon, plant) => concat(
         lit(s"<meta charset="), lit(canon), lit(">"),
@@ -835,7 +708,7 @@ object Round18Queries {
           sum(col("nch")).as("sum_chars"))
         .orderBy(col("dom"))
         .localCheckpoint()
-      Round7bQueries.rmTree(land)
+      Streams.rmTree(land)
       res
     }),
 
@@ -851,19 +724,19 @@ object Round18Queries {
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val pages = cjkPages(s, dir)
-      val land = Round7bQueries.landThirds(pages, "doc_id", "graft-q296")
+      val land = Streams.landThirds(pages, "doc_id", "graft-q296")
       val cp = Files.createTempDirectory("graft-q296-cp").toString
       val agg = StreamFold[DataFrame](StreamFold.files(s, land), cp) {
         (prev, batch, _) =>
           StreamFold.addPartials(prev, cjkPartials(
               batch.select(col("doc_id"), col("payload")), docs),
             Seq("dom"), CjkCols)
-      }.getOrElse(throw Round7bQueries.noBatch("q296_stream_cjk_ingest"))
+      }.getOrElse(throw Streams.noBatch("q296_stream_cjk_ingest"))
       val out = agg
         .select((col("dom") +: CjkCols.map(col)): _*)
         .orderBy(col("dom"))
         .localCheckpoint()
-      Round7bQueries.rmTree(land); Round7bQueries.rmTree(cp)
+      Streams.rmTree(land); Streams.rmTree(cp)
       out
     }))
 
@@ -906,13 +779,7 @@ object Round18Queries {
          |    FROM jqbands x JOIN jqbands y
          |      ON x.band = y.band AND x.v = y.v AND x.rid < y.rid) t
          |  WHERE bit_count(xor(ha, hb)) <= 6),
-         |jqedges AS (SELECT a AS src, b AS dst FROM jqpairs
-         |  UNION SELECT b, a FROM jqpairs),
-         |jqreach(node, lab) AS (
-         |  SELECT src, src FROM jqedges
-         |  UNION
-         |  SELECT e2.dst, r.lab FROM jqreach r JOIN jqedges e2 ON e2.src = r.node),
-         |jqlabels AS (SELECT node, min(lab) AS clus FROM jqreach GROUP BY node)
+         |${Corpus.ccCompactSql("jq")}
          |SELECT d.rid AS id, d.dhash,
          |  COALESCE(l.clus, d.rid) AS cluster,
          |  (COALESCE(l.clus, d.rid) <> d.rid) AS is_dup
@@ -925,21 +792,7 @@ object Round18Queries {
     // n_stale_served cost of serving a fresh-but-changed copy
     "q295_fresh_scheduler" -> {
       import graft.graph.WebGraph
-      s"""WITH ffe AS (SELECT
-         |    'd' || CAST(doc_id % 20 AS VARCHAR) || '.example.com' AS host,
-         |    '<url><loc>' || ${urlSqlOf("doc_id")} || '</loc><lastmod>' ||
-         |    '2025-01-' || lpad(CAST((doc_id * 7) % 28 + 1 +
-         |      (CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END) AS VARCHAR),
-         |      2, '0') ||
-         |    '</lastmod></url>' AS e
-         |  FROM documents WHERE (doc_id // 20) % 6 <> 5),
-         |ffm AS (SELECT host, string_agg(e, '') AS xml
-         |  FROM ffe GROUP BY host),
-         |${WebGraph.parseSitemapsCtes("ffm", "host", "xml", "ff2")},
-         |ffstate AS (SELECT ${urlSqlOf("doc_id")} AS url,
-         |    '2025-01-' || lpad(CAST((doc_id * 7) % 28 + 1 AS VARCHAR),
-         |      2, '0') AS stored_lastmod
-         |  FROM documents WHERE (doc_id // 20) % 5 <> 4),
+      s"""WITH ${Crawl.recrawlInventorySql("ff", "ff2")},
          |ffcand AS (SELECT i.url, i.lastmod,
          |    CAST(regexp_extract(i.url, '/p/([0-9]+)$$', 1) AS BIGINT) % 20 AS dom
          |  FROM ff2maps i LEFT JOIN ffstate s ON s.url = i.url
@@ -1023,61 +876,15 @@ object Round18Queries {
     // back to the classifier's prediction routes each survivor — the
     // oracle-equality of per-doc (id, lang_routed) rows IS the
     // partition proof (union = survivor set, labels disjoint)
-    "q294_multilang_routing" -> {
-      import PipelineQueries.{corpusSql, langCaseSql, langHitColsSql,
-        minhashCtesSql, pairsCteSql, qualityExprSql, shinglesSql}
-      s"""WITH RECURSIVE $corpusSql,
-         |corpus2 AS (
-         |  SELECT doc_id, text FROM corpus
-         |  UNION ALL
-         |  SELECT doc_id + 5000000, ${Round17Queries.CipherSql} AS text FROM corpus),
-         |lgseeds AS (
-         |  SELECT doc_id AS id, 'en' AS label, text
-         |  FROM corpus WHERE doc_id % 10 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 5000000 AS id, 'xx' AS label, ${Round17Queries.CipherSql} AS text
-         |  FROM corpus WHERE doc_id % 10 = 5),
-         |scored AS (
-         |  SELECT doc_id, text,
-         |  $qualityExprSql AS quality,
-         |$langHitColsSql
-         |  FROM corpus2),
-         |gated AS (
-         |  SELECT doc_id, text, quality,
-         |  $langCaseSql AS lang_pred
-         |  FROM scored),
-         |g1 AS (SELECT doc_id, text, quality, lang_pred FROM gated
-         |       WHERE quality >= 0.7::DOUBLE),
-         |lgdocs AS (SELECT doc_id AS id, text FROM g1),
-         |${graft.text.LangClassifier.classifyCtes("lgseeds", "lgdocs",
-             "lc")},
-         |g2 AS (SELECT g1.* FROM g1 JOIN lcpred p ON p.id = g1.doc_id
-         |       WHERE p.lang_trained IN ('en', 'xx')),
-         |fp AS (SELECT doc_id, text, quality, lang_pred,
-         |    md5(trim(regexp_replace(regexp_replace(lower(text),
-         |      '[^a-z0-9\\s]', '', 'g'), '\\s+', ' ', 'g'))) AS f
-         |  FROM g2),
-         |keep AS (SELECT min(doc_id) AS doc_id FROM fp GROUP BY f),
-         |ex AS (SELECT fp.* FROM fp WHERE fp.doc_id IN (SELECT doc_id FROM keep)),
-         |${shinglesSql("ex")},
-         |$minhashCtesSql,
-         |${pairsCteSql("0.5")},
-         |edges AS (
-         |  SELECT a AS src, b AS dst FROM pairs
-         |  UNION SELECT b, a FROM pairs),
-         |reach(node, lab) AS (
-         |  SELECT src, src FROM edges
-         |  UNION
-         |  SELECT e2.dst, r.lab FROM reach r JOIN edges e2 ON e2.src = r.node),
-         |losers AS (
-         |  SELECT node AS doc_id FROM reach
-         |  GROUP BY node HAVING node <> min(lab))
+    "q294_multilang_routing" ->
+      s"""WITH RECURSIVE ${Text.trainedLangGateSql("IN ('en', 'xx')")},
+         |${Corpus.exactDedupSql("g2")},
+         |${Corpus.nearDupLosersSql("ex")}
          |SELECT e.doc_id, p2.lang_trained AS lang_routed, e.quality,
          |  e.lang_pred
          |FROM ex e JOIN lcpred p2 ON p2.id = e.doc_id
          |WHERE NOT EXISTS (SELECT 1 FROM losers l WHERE l.doc_id = e.doc_id)
-         |ORDER BY e.doc_id""".stripMargin
-    },
+         |ORDER BY e.doc_id""".stripMargin,
 
     // the widened column replays from the update/insert arithmetic;
     // sum_len and n_big prove 64-bit values flowed through the

@@ -1,7 +1,9 @@
 package graft.queries
 
+import graft.queries.fixtures.Crawl.urlOf
+import graft.queries.fixtures.{Corpus, Crawl, Streams}
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Round-19: the `Content-Encoding: br` leg goes live — the from-
@@ -14,11 +16,7 @@ import org.apache.spark.sql.functions._
   * /root/reference/SCD_script.txt — these extend the crawl-ingest
   * family the north star adds on top.
   */
-object Round19Queries {
-
-  private def urlOf(t: Column): Column =
-    concat(lit("http://d"), (t % 20).cast("string"),
-      lit(".example.com/p/"), t.cast("string"))
+object Round19Queries extends QueryGroup {
 
   /** The three charset classes of the br onion — (canonical label
     * ('' = unlabeled, lenient-UTF-8 default), JDK codec for the
@@ -183,7 +181,6 @@ object Round19Queries {
     // their codec; the default-decode CONTROL column counts exactly
     // the plant-free docs.
     "q301_charset_sniff" -> ((s, dir) => {
-      import java.nio.file.Files
       import graft.sources.Warc
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"))
@@ -192,9 +189,7 @@ object Round19Queries {
         urlOf(col("doc_id")).as("uri"),
         Warc.httpResponseBytes(lit(200), lit("text/html"), col("label"),
           lit(""), col("body")).as("payload"))
-      val land = Files.createTempDirectory("graft-q301-warc").toString
-      Warc.writeSegmentsBinary(pages.repartition(4, col("doc_id")),
-        "uri", "payload", land, gzip = true)
+      val land = Crawl.landWarc(pages, col("doc_id"), "q301")
       val back = Warc.readRecordsBinary(s, land)
         .select(regexp_extract(col("uri"), "/p/([0-9]+)$", 1)
           .cast("long").as("doc_id"),
@@ -254,7 +249,7 @@ object Round19Queries {
           sum(col("nch")).as("sum_chars"))
         .orderBy(col("dom"))
         .localCheckpoint()
-      Round7bQueries.rmTree(land)
+      Streams.rmTree(land)
       res
     }),
 
@@ -272,7 +267,6 @@ object Round19Queries {
     // independently observable; the clean sweep proves byte-exact
     // text through every layer and real gzipped-WARC storage.
     "q300_brotli_onion" -> ((s, dir) => {
-      import java.nio.file.Files
       import graft.sources.Warc
       import graft.functions.{BrotliCols, Chunked, Gzip}
       val docs = Tables(s, dir, "documents")
@@ -296,9 +290,7 @@ object Round19Queries {
           col("label"), enc, b1))
       val pages = bodies.select(t, urlOf(t).as("uri"),
         payload.as("payload"))
-      val land = Files.createTempDirectory("graft-q300-warc").toString
-      Warc.writeSegmentsBinary(pages.repartition(4, t),
-        "uri", "payload", land, gzip = true)
+      val land = Crawl.landWarc(pages, t, "q300")
       val back = Warc.readRecordsBinary(s, land)
         .select(regexp_extract(col("uri"), "/p/([0-9]+)$", 1)
           .cast("long").as("doc_id"),
@@ -344,7 +336,7 @@ object Round19Queries {
           sum(col("nch")).as("sum_chars"))
         .orderBy(col("dom"))
         .localCheckpoint()
-      Round7bQueries.rmTree(land)
+      Streams.rmTree(land)
       res
     }))
 
@@ -391,13 +383,7 @@ object Round19Queries {
          |    FROM jvbands x JOIN jvbands y
          |      ON x.band = y.band AND x.v = y.v AND x.rid < y.rid) t
          |  WHERE bit_count(xor(ha, hb)) <= 6),
-         |jvedges AS (SELECT a AS src, b AS dst FROM jvpairs
-         |  UNION SELECT b, a FROM jvpairs),
-         |jvreach(node, lab) AS (
-         |  SELECT src, src FROM jvedges
-         |  UNION
-         |  SELECT e2.dst, r.lab FROM jvreach r JOIN jvedges e2 ON e2.src = r.node),
-         |jvlabels AS (SELECT node, min(lab) AS clus FROM jvreach GROUP BY node)
+         |${Corpus.ccCompactSql("jv")}
          |SELECT d.rid AS id, d.dhash,
          |  COALESCE(l.clus, d.rid) AS cluster,
          |  (COALESCE(l.clus, d.rid) <> d.rid) AS is_dup

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.functions.PortableHash
+import graft.queries.fixtures.Vectors
 import graft.similarity.Similarity
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -15,7 +16,7 @@ import org.apache.spark.sql.types.DecimalType
   * integer scoring -> hash-checkable approximate search), and stratified
   * deterministic sampling (per-stratum rates).
   */
-object Round3Queries {
+object Round3Queries extends QueryGroup {
 
   private def dec2(c: Column): Column = c.cast(DecimalType(18, 2))
   private def dec6(c: Column): Column = c.cast(DecimalType(18, 6))
@@ -220,9 +221,6 @@ object Round3Queries {
       |WHERE l.n_orders > 0
       |ORDER BY c.c_custkey""".stripMargin
 
-  private val dotSql = (a: String, b: String) =>
-    s"list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i]), (x,y) -> x+y)"
-
   val oracleSql: Map[String, String] = Map(
     "q63_grouping_sets" ->
       """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
@@ -262,27 +260,7 @@ object Round3Queries {
         |    AS ff_value
         |FROM grid g LEFT JOIN agg a USING (user_id, hr)
         |ORDER BY user_id, hr""".stripMargin,
-    "q66_quantized_ann" ->
-      s"""WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-         |m AS (SELECT vec_id, e,
-         |  list_max(list_transform(e, x -> abs(x))) AS mab FROM emb),
-         |qz AS (SELECT vec_id,
-         |  list_transform(e, x -> CAST(round((x * 127.0) / mab) AS BIGINT)) AS q
-         |  FROM m WHERE mab > 0),
-         |n AS (SELECT vec_id, q, ${dotSql("q", "q")} AS nrm FROM qz),
-         |qs AS (SELECT vec_id AS q_id, q AS qq, nrm AS nq
-         |  FROM n WHERE vec_id < 50),
-         |cos AS (
-         |  SELECT qs.q_id, c.vec_id AS n_id,
-         |    CAST(${dotSql("qs.qq", "c.q")} AS DOUBLE)
-         |      / sqrt(CAST(qs.nq * c.nrm AS DOUBLE)) AS qcos
-         |  FROM qs, n c WHERE c.vec_id <> qs.q_id)
-         |SELECT q_id, n_id, qcos, rank FROM (
-         |  SELECT q_id, n_id, qcos,
-         |    ROW_NUMBER() OVER (PARTITION BY q_id
-         |      ORDER BY qcos DESC, n_id ASC) AS rank
-         |  FROM cos) t
-         |WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin,
+    "q66_quantized_ann" -> Vectors.quantizedAnnSql,
     "q72_unpivot" ->
       """SELECT measure, COUNT(*) AS n,
         |  CAST(SUM(CAST(val AS DECIMAL(18,6))) AS DOUBLE) AS total

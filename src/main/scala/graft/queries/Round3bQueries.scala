@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.DecimalType
   * sketches merged upward — the pre-aggregated-rollup shape a 100 TB
   * pipeline uses to avoid re-scanning raw data).
   */
-object Round3bQueries {
+object Round3bQueries extends QueryGroup {
 
   private def dec2(c: Column): Column = c.cast(DecimalType(18, 2))
 

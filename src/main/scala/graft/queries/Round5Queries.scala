@@ -1,6 +1,9 @@
 package graft.queries
 
 import graft.functions.PortableHash
+import graft.queries.fixtures.{Corpus, Vectors}
+import graft.queries.fixtures.Corpus.toksExpr
+import graft.queries.fixtures.Vectors._
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,16 +14,11 @@ import org.apache.spark.sql.functions._
   * and IVF-PQ (product-quantization ANN over a compressed index).
   * Every query replays bit-identically in the DuckDB oracle.
   */
-object Round5Queries {
+object Round5Queries extends QueryGroup {
 
   /** q91/q92/q93 parameters shared by engine calls and oracle SQL. */
   private val PackLen = 2048
   private val PackGroups = 8
-  private[queries] val PqC = 16
-  private[queries] val PqM = 8
-  private[queries] val PqSub = 64 / PqM
-  private[queries] val PqProbe = 4
-  private[queries] val PqK = 256
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -97,8 +95,8 @@ object Round5Queries {
           transform(col("embedding"), x => x * lit(2.0f)).as("embedding"))
       graft.similarity.Similarity.semanticDedup(
         emb.unionByName(repA).unionByName(repB), "vec_id", "embedding",
-        threshold = 0.99, c = ExtendedQueries.IvfC,
-        iters = ExtendedQueries.IvfIters)
+        threshold = 0.99, c = Vectors.IvfC,
+        iters = Vectors.IvfIters)
         .orderBy(col("vec_id"))
     }),
 
@@ -133,7 +131,7 @@ object Round5Queries {
     // so the union of per-batch outputs must equal the one-shot run —
     // the oracle is the SAME SQL as q20's whole-corpus replay.
     "q97_incremental_lsh" -> ((s, dir) => {
-      val c = PipelineQueries.corpus(s, dir)
+      val c = Corpus.corpus(s, dir)
       val (idx, p1) = graft.dedup.IncrementalLsh.build(
         c.filter(col("doc_id") % 2 === 0), "doc_id", "text")
       val (_, p2) = graft.dedup.IncrementalLsh.addBatch(idx,
@@ -179,7 +177,7 @@ object Round5Queries {
     // prefix as one long span.
     "q100_dup_spans" -> ((s, dir) => {
       graft.dedup.Dedup.duplicateSpans(
-        PipelineQueries.corpus(s, dir), "doc_id", "text", k = 8,
+        Corpus.corpus(s, dir), "doc_id", "text", k = 8,
         maxDf = 64L)
         .orderBy(col("doc_id"))
     }),
@@ -215,112 +213,6 @@ object Round5Queries {
   )
 
   // ---- oracle SQL ----------------------------------------------------
-
-  private val toksExpr =
-    """list_filter(string_split_regex(text, '\s+'), x -> x <> '')"""
-
-  private[queries] val dotSql = (a: String, b: String) =>
-    s"list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i]), (x,y) -> x+y)"
-
-  /** L2 rank key (|v|² row-constant term dropped) — q42's formulation. */
-  private def distSql(v: String, cent: String): String =
-    s"-2.0 * ${dotSql(v, cent)} + ${dotSql(cent, cent)}"
-
-  private def sliceSql(l: String, j: String): String =
-    s"$l[$j*$PqSub+1 : $j*$PqSub+$PqSub]"
-
-  /** One per-subspace Lloyd round over the whole corpus: assign each
-    * vector's j-th subvector to its nearest `cw{t-1}` codeword, sum the
-    * assigned components, and update each codeword component to the
-    * shifted round-half-up integer mean
-    * `(2*(s + 127n) + n) // (2n) - 127` (all terms nonnegative, so
-    * DuckDB's floor `//` matches the engine's truncating Long division);
-    * empty codes keep their previous codeword. Mirrors
-    * [[graft.similarity.Similarity.IvfPqIndex.buildFromQuantized]].
-    */
-  private def pqTrainSql(t: Int): String = {
-    val prev = s"cw${t - 1}"
-    s"""qa$t AS (SELECT vec_id, j, code FROM (
-       |  SELECT z.vec_id, w.j, w.code,
-       |    ROW_NUMBER() OVER (PARTITION BY z.vec_id, w.j
-       |      ORDER BY ${distSql(sliceSql("z.qd", "w.j"), "w.w")} ASC,
-       |        w.code ASC) AS rn
-       |  FROM qz z CROSS JOIN $prev w) WHERE rn = 1),
-       |qs$t AS (SELECT a.j, a.code, p.pos,
-       |    CAST(SUM(z.qd[a.j*$PqSub + p.pos]) AS BIGINT) AS s,
-       |    CAST(COUNT(*) AS BIGINT) AS n
-       |  FROM qa$t a JOIN qz z USING (vec_id) CROSS JOIN ps p
-       |  GROUP BY a.j, a.code, p.pos),
-       |cw$t AS (SELECT w.j, w.code,
-       |    list(CASE WHEN s.n IS NULL THEN w.w[p.pos]
-       |         ELSE CAST((2*(s.s + 127*s.n) + s.n) // (2*s.n) - 127
-       |              AS DOUBLE) END
-       |         ORDER BY p.pos) AS w
-       |  FROM $prev w CROSS JOIN ps p
-       |  LEFT JOIN qs$t s ON s.j = w.j AND s.code = w.code AND s.pos = p.pos
-       |  GROUP BY w.j, w.code)""".stripMargin
-  }
-
-  /** q92's full IVF-PQ training + ADC-scoring pipeline as a CTE
-    * chain ending at `adc` (q_id, n_id, nq, s, nc) — shared VERBATIM
-    * by q92 (ADC ranking) and q136 (ADC top-R + exact re-rank).
-    */
-  private[queries] def pqAdcCtesSql: String =
-    s"""emb AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-         |qz AS (SELECT vec_id,
-         |    list_transform(e, x -> round(x * 127.0 / mab)) AS qd
-         |  FROM (SELECT vec_id, e,
-         |          list_max(list_transform(e, x -> abs(x))) AS mab FROM emb)
-         |  WHERE mab > 0),
-         |c0 AS (SELECT cluster, cent FROM (
-         |  SELECT qd AS cent,
-         |    ROW_NUMBER() OVER (ORDER BY h, vec_id) - 1 AS cluster
-         |  FROM (SELECT vec_id, qd,
-         |          ${PortableHash.hash60BaseSql("vec_id::VARCHAR")} AS h
-         |        FROM qz))
-         |  WHERE cluster < $PqC),
-         |${ExtendedQueries.ivfStepSql(1)},
-         |${ExtendedQueries.ivfStepSql(2)},
-         |k0 AS (SELECT code, cent FROM (
-         |  SELECT qd AS cent,
-         |    ROW_NUMBER() OVER (ORDER BY h, vec_id) - 1 AS code
-         |  FROM (SELECT vec_id, qd,
-         |          ${PortableHash.hash60BaseSql("vec_id::VARCHAR")} AS h
-         |        FROM qz))
-         |  WHERE code < $PqK),
-         |js AS (SELECT unnest(generate_series(0, ${PqM - 1})) AS j),
-         |ps AS (SELECT unnest(generate_series(1, $PqSub)) AS pos),
-         |cw0 AS (SELECT k.code, js.j,
-         |    ${sliceSql("k.cent", "js.j")} AS w
-         |  FROM k0 k CROSS JOIN js),
-         |${pqTrainSql(1)},
-         |${pqTrainSql(2)},
-         |cb AS (SELECT vec_id, cluster AS bucket FROM (
-         |  SELECT z.vec_id, c.cluster,
-         |    ROW_NUMBER() OVER (PARTITION BY z.vec_id
-         |      ORDER BY ${distSql("z.qd", "c.cent")} ASC, c.cluster ASC) AS rn
-         |  FROM qz z CROSS JOIN c2 c) WHERE rn = 1),
-         |codes AS (SELECT vec_id, j, code FROM (
-         |  SELECT z.vec_id, w.j, w.code,
-         |    ROW_NUMBER() OVER (PARTITION BY z.vec_id, w.j
-         |      ORDER BY ${distSql(sliceSql("z.qd", "w.j"), "w.w")} ASC,
-         |        w.code ASC) AS rn
-         |  FROM qz z CROSS JOIN cw2 w) WHERE rn = 1),
-         |qp AS (SELECT vec_id AS q_id, qd, nq, cluster AS bucket FROM (
-         |  SELECT z.vec_id, z.qd, ${dotSql("z.qd", "z.qd")} AS nq, c.cluster,
-         |    ROW_NUMBER() OVER (PARTITION BY z.vec_id
-         |      ORDER BY ${distSql("z.qd", "c.cent")} ASC, c.cluster ASC) AS rn
-         |  FROM qz z CROSS JOIN c2 c WHERE z.vec_id < 50)
-         |  WHERE rn <= $PqProbe),
-         |cand AS (SELECT q.q_id, q.qd, q.nq, c.vec_id AS n_id
-         |  FROM qp q JOIN cb c ON c.bucket = q.bucket AND c.vec_id <> q.q_id),
-         |adc AS (SELECT cd.q_id, cd.n_id, ANY_VALUE(cd.nq) AS nq,
-         |    SUM(${dotSql(sliceSql("cd.qd", "k.j"), "w.w")}) AS s,
-         |    SUM(${dotSql("w.w", "w.w")}) AS nc
-         |  FROM cand cd
-         |  JOIN codes k ON k.vec_id = cd.n_id
-         |  JOIN cw2 w ON w.j = k.j AND w.code = k.code
-         |  GROUP BY cd.q_id, cd.n_id)""".stripMargin
 
   val oracleSql: Map[String, String] = Map(
     "q90_repetition" ->
@@ -370,9 +262,7 @@ object Round5Queries {
          |      ORDER BY s / sqrt(nq * nc) DESC, n_id ASC) AS rank
          |  FROM adc) t
          |WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin,
-    "q94_pipeline_full" -> {
-      import PipelineQueries.{qualityExprSql, langHitColsSql, langCaseSql,
-        shinglesSql, minhashCtesSql, pairsCteSql}
+    "q94_pipeline_full" ->
       s"""WITH RECURSIVE
          |mix AS (SELECT doc_id, text FROM documents
          |  WHERE ${PortableHash.hash60BaseSql("doc_id::VARCHAR")} % 1000000
@@ -402,41 +292,8 @@ object Round5Queries {
          |    OR CAST(t.n_unique AS DOUBLE) / CAST(t.n_tok AS DOUBLE) < 0.4)),
          |corpus AS (SELECT m.doc_id, m.text FROM mix m
          |  WHERE m.doc_id IN (SELECT doc_id FROM rep)),
-         |scored AS (
-         |  SELECT doc_id, text,
-         |  $qualityExprSql AS quality,
-         |$langHitColsSql
-         |  FROM corpus),
-         |gated AS (
-         |  SELECT doc_id, text, quality,
-         |  $langCaseSql AS lang_pred
-         |  FROM scored),
-         |g2 AS (SELECT doc_id, text, quality, lang_pred FROM gated
-         |       WHERE quality >= 0.7::DOUBLE AND lang_pred = 'en'),
-         |fp AS (SELECT doc_id, text, quality, lang_pred,
-         |    md5(trim(regexp_replace(regexp_replace(lower(text),
-         |      '[^a-z0-9\\s]', '', 'g'), '\\s+', ' ', 'g'))) AS f
-         |  FROM g2),
-         |keep AS (SELECT min(doc_id) AS doc_id FROM fp GROUP BY f),
-         |ex AS (SELECT fp.* FROM fp WHERE fp.doc_id IN (SELECT doc_id FROM keep)),
-         |${shinglesSql("ex")},
-         |$minhashCtesSql,
-         |${pairsCteSql("0.5")},
-         |edges AS (
-         |  SELECT a AS src, b AS dst FROM pairs
-         |  UNION SELECT b, a FROM pairs),
-         |reach(node, lab) AS (
-         |  SELECT src, src FROM edges
-         |  UNION
-         |  SELECT e2.dst, r.lab FROM reach r JOIN edges e2 ON e2.src = r.node),
-         |losers AS (
-         |  SELECT node AS doc_id FROM reach
-         |  GROUP BY node HAVING node <> min(lab))
-         |SELECT e.doc_id, e.quality, e.lang_pred
-         |FROM ex e
-         |WHERE NOT EXISTS (SELECT 1 FROM losers l WHERE l.doc_id = e.doc_id)
-         |ORDER BY e.doc_id""".stripMargin
-    },
+         |${Corpus.rowGatesSql("corpus")},
+         |${Corpus.cleanSurvivorsSql("g2")}""".stripMargin,
     "q95_semantic_dedup" ->
       s"""WITH RECURSIVE
          |base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
@@ -458,27 +315,20 @@ object Round5Queries {
          |  FROM (SELECT vec_id, qd,
          |          ${PortableHash.hash60BaseSql("vec_id::VARCHAR")} AS h
          |        FROM qz))
-         |  WHERE cluster < ${ExtendedQueries.IvfC}),
-         |${(1 to ExtendedQueries.IvfIters)
-             .map(ExtendedQueries.ivfStepSql).mkString(",\n")},
+         |  WHERE cluster < ${Vectors.IvfC}),
+         |${(1 to Vectors.IvfIters)
+             .map(Vectors.ivfStepSql).mkString(",\n")},
          |cb AS (SELECT vec_id, e, cluster AS bucket FROM (
          |  SELECT z.vec_id, z.e, c.cluster,
          |    ROW_NUMBER() OVER (PARTITION BY z.vec_id
          |      ORDER BY ${distSql("z.qd", "c.cent")} ASC, c.cluster ASC) AS rn
-         |  FROM qz z CROSS JOIN c${ExtendedQueries.IvfIters} c) WHERE rn = 1),
+         |  FROM qz z CROSS JOIN c${Vectors.IvfIters} c) WHERE rn = 1),
          |nb AS (SELECT vec_id, e, bucket, ${dotSql("e", "e")} AS nrm FROM cb),
          |pairs AS (SELECT x.vec_id AS a, y.vec_id AS b
          |  FROM nb x JOIN nb y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
          |  WHERE ${dotSql("x.e", "y.e")} / sqrt(x.nrm * y.nrm)
          |    >= 0.99::DOUBLE),
-         |edges AS (
-         |  SELECT a AS src, b AS dst FROM pairs
-         |  UNION SELECT b, a FROM pairs),
-         |reach(node, lab) AS (
-         |  SELECT src, src FROM edges
-         |  UNION
-         |  SELECT e2.dst, r.lab FROM reach r JOIN edges e2 ON e2.src = r.node),
-         |labels AS (SELECT node, min(lab) AS clus FROM reach GROUP BY node)
+         |${Corpus.ccLabelsSql}
          |SELECT cb.vec_id, cb.bucket,
          |  COALESCE(l.clus, cb.vec_id) AS cluster,
          |  (COALESCE(l.clus, cb.vec_id) = cb.vec_id) AS kept
@@ -516,7 +366,7 @@ object Round5Queries {
          |ORDER BY t.srcnum""".stripMargin,
     // identical to q20's replay: batching must not change the answer
     "q97_incremental_lsh" -> {
-      import PipelineQueries.{corpusSql, shinglesSql, minhashCtesSql,
+      import Corpus.{corpusSql, shinglesSql, minhashCtesSql,
         jaccardTailSql}
       s"""WITH $corpusSql,
          |${shinglesSql("corpus")},
@@ -590,7 +440,7 @@ object Round5Queries {
          |  FROM tot) t
          |WHERE rank <= 20 ORDER BY rank""".stripMargin,
     "q100_dup_spans" -> {
-      import PipelineQueries.corpusSql
+      import Corpus.corpusSql
       s"""WITH $corpusSql,
          |rts AS (SELECT doc_id, $toksExpr AS ts FROM corpus),
          |grams AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,

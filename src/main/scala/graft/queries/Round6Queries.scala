@@ -1,6 +1,9 @@
 package graft.queries
 
 import graft.functions.PortableHash
+import graft.queries.fixtures.Corpus.toksExpr
+import graft.queries.fixtures.Vectors.{distSql, dotSql}
+import graft.queries.fixtures.{Corpus, Vectors}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -12,14 +15,7 @@ import org.apache.spark.sql.functions._
   * the two-phase global row-number). Every query replays
   * bit-identically in the DuckDB oracle.
   */
-object Round6Queries {
-
-  private val dotSql = (a: String, b: String) =>
-    s"list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i]), (x,y) -> x+y)"
-
-  /** L2 rank key (|v|² row-constant term dropped) — q42's formulation. */
-  private def distSql(v: String, cent: String): String =
-    s"-2.0 * ${dotSql(v, cent)} + ${dotSql(cent, cent)}"
+object Round6Queries extends QueryGroup {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -59,7 +55,7 @@ object Round6Queries {
     // without spans pass through whitespace-normalized.
     "q107_span_scrub" -> ((s, dir) => {
       graft.dedup.Dedup.scrubDuplicateSpans(
-        PipelineQueries.corpus(s, dir), "doc_id", "text", k = 8,
+        Corpus.corpus(s, dir), "doc_id", "text", k = 8,
         maxDf = 64L)
         .orderBy(col("doc_id"))
     }),
@@ -84,7 +80,7 @@ object Round6Queries {
     // its minimum id — the survivor policy composed into the pipeline.
     "q105_pipeline_best" -> ((s, dir) => {
       graft.pipeline.CorpusPipeline.clean(
-        PipelineQueries.corpus(s, dir), "doc_id", "text",
+        Corpus.corpus(s, dir), "doc_id", "text",
         graft.pipeline.CorpusPipeline.Config(keepBest = true))
         .select(col("doc_id"), col("quality"), col("lang_pred"))
         .orderBy(col("doc_id"))
@@ -97,7 +93,7 @@ object Round6Queries {
     // signatures, banding, verify, CC, quality, survivor window)
     // replays in the oracle.
     "q104_dedup_best" -> ((s, dir) => {
-      val c = PipelineQueries.corpus(s, dir)
+      val c = Corpus.corpus(s, dir)
       val scored = c.select(col("doc_id"),
         graft.text.TextAnalysis.qualityScore(col("text"),
           Seq("the", "a", "of", "and", "is")).as("quality"))
@@ -124,14 +120,11 @@ object Round6Queries {
           transform(col("embedding"), x => x * lit(2.0f)).as("embedding"))
       graft.similarity.Similarity.semanticDedup(
         emb.unionByName(repA).unionByName(repB), "vec_id", "embedding",
-        threshold = 0.99, c = ExtendedQueries.IvfC,
-        iters = ExtendedQueries.IvfIters, nProbe = 2)
+        threshold = 0.99, c = Vectors.IvfC,
+        iters = Vectors.IvfIters, nProbe = 2)
         .orderBy(col("vec_id"))
     })
   )
-
-  private val toksExpr =
-    """list_filter(string_split_regex(text, '\s+'), x -> x <> '')"""
 
   val oracleSql: Map[String, String] = Map(
     "q108_bigram_familiarity" ->
@@ -152,7 +145,7 @@ object Round6Queries {
          |    AS familiarity
          |FROM agg ORDER BY doc_id""".stripMargin,
     "q107_span_scrub" -> {
-      import PipelineQueries.corpusSql
+      import Corpus.corpusSql
       s"""WITH $corpusSql,
          |rts AS (SELECT doc_id, $toksExpr AS ts FROM corpus),
          |grams AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
@@ -184,61 +177,17 @@ object Round6Queries {
          |FROM corpus c LEFT JOIN agg a USING (doc_id)
          |ORDER BY c.doc_id""".stripMargin
     },
-    "q106_seq_manifest" ->
-      s"""WITH t AS (SELECT doc_id, doc_id % 8 AS grp,
-         |    CAST(len($toksExpr) AS BIGINT) AS n_tok
-         |  FROM documents),
-         |p AS (SELECT doc_id, grp, n_tok,
-         |    CAST(SUM(n_tok) OVER (PARTITION BY grp ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-         |  FROM t WHERE n_tok > 0),
-         |pl AS (SELECT doc_id, grp, n_tok, cum - n_tok AS start_tok,
-         |    (cum - n_tok) // 2048 AS seq_first,
-         |    (cum - n_tok) % 2048 AS seq_off,
-         |    (cum - 1) // 2048 - (cum - n_tok) // 2048 + 1 AS n_seqs
-         |  FROM p),
-         |m AS (SELECT grp, s.seq, doc_id,
-         |    CASE WHEN s.seq = seq_first THEN 0
-         |         ELSE s.seq * 2048 - start_tok END AS doc_from,
-         |    LEAST(n_tok, (s.seq + 1) * 2048 - start_tok) AS doc_to,
-         |    CASE WHEN s.seq = seq_first THEN seq_off ELSE 0 END AS seq_from
-         |  FROM pl, UNNEST(generate_series(seq_first,
-         |    seq_first + n_seqs - 1)) AS s(seq))
-         |SELECT grp, seq, doc_id, doc_from, doc_to, seq_from FROM m
-         |ORDER BY grp, seq, seq_from, doc_id""".stripMargin,
+    "q106_seq_manifest" -> Corpus.seqManifestSql,
     "q105_pipeline_best" -> {
-      import PipelineQueries.{corpusSql, langCaseSql, langHitColsSql,
-        minhashCtesSql, pairsCteSql, qualityExprSql, shinglesSql}
+      import Corpus.{corpusSql, minhashCtesSql, pairsCteSql, shinglesSql}
       s"""WITH RECURSIVE
          |$corpusSql,
-         |scored AS (
-         |  SELECT doc_id, text,
-         |  $qualityExprSql AS quality,
-         |$langHitColsSql
-         |  FROM corpus),
-         |gated AS (
-         |  SELECT doc_id, text, quality,
-         |  $langCaseSql AS lang_pred
-         |  FROM scored),
-         |g2 AS (SELECT doc_id, text, quality, lang_pred FROM gated
-         |       WHERE quality >= 0.7::DOUBLE AND lang_pred = 'en'),
-         |fp AS (SELECT doc_id, text, quality, lang_pred,
-         |    md5(trim(regexp_replace(regexp_replace(lower(text),
-         |      '[^a-z0-9\\s]', '', 'g'), '\\s+', ' ', 'g'))) AS f
-         |  FROM g2),
-         |keep AS (SELECT min(doc_id) AS doc_id FROM fp GROUP BY f),
-         |ex AS (SELECT fp.* FROM fp WHERE fp.doc_id IN (SELECT doc_id FROM keep)),
+         |${Corpus.rowGatesSql("corpus")},
+         |${Corpus.exactDedupSql("g2")},
          |${shinglesSql("ex")},
          |$minhashCtesSql,
          |${pairsCteSql("0.5")},
-         |edges AS (
-         |  SELECT a AS src, b AS dst FROM pairs
-         |  UNION SELECT b, a FROM pairs),
-         |reach(node, lab) AS (
-         |  SELECT src, src FROM edges
-         |  UNION
-         |  SELECT e2.dst, r.lab FROM reach r JOIN edges e2 ON e2.src = r.node),
-         |labels AS (SELECT node, min(lab) AS clus FROM reach GROUP BY node),
+         |${Corpus.ccLabelsSql},
          |ranked AS (SELECT e.doc_id,
          |    ROW_NUMBER() OVER (PARTITION BY COALESCE(l.clus, e.doc_id)
          |      ORDER BY e.quality DESC, e.doc_id) AS rk
@@ -250,21 +199,14 @@ object Round6Queries {
          |ORDER BY e.doc_id""".stripMargin
     },
     "q104_dedup_best" -> {
-      import PipelineQueries.{corpusSql, minhashCtesSql, pairsCteSql,
+      import Corpus.{corpusSql, minhashCtesSql, pairsCteSql,
         qualityExprSql, shinglesSql}
       s"""WITH RECURSIVE
          |$corpusSql,
          |${shinglesSql("corpus")},
          |$minhashCtesSql,
          |${pairsCteSql("0.5")},
-         |edges AS (
-         |  SELECT a AS src, b AS dst FROM pairs
-         |  UNION SELECT b, a FROM pairs),
-         |reach(node, lab) AS (
-         |  SELECT src, src FROM edges
-         |  UNION
-         |  SELECT e2.dst, r.lab FROM reach r JOIN edges e2 ON e2.src = r.node),
-         |labels AS (SELECT node, min(lab) AS clus FROM reach GROUP BY node),
+         |${Corpus.ccLabelsSql},
          |scored AS (SELECT doc_id, $qualityExprSql AS quality FROM corpus),
          |lab2 AS (SELECT s.doc_id, s.quality,
          |    COALESCE(l.clus, s.doc_id) AS cluster
@@ -306,14 +248,14 @@ object Round6Queries {
          |  FROM (SELECT vec_id, qd,
          |          ${PortableHash.hash60BaseSql("vec_id::VARCHAR")} AS h
          |        FROM qz))
-         |  WHERE cluster < ${ExtendedQueries.IvfC}),
-         |${(1 to ExtendedQueries.IvfIters)
-             .map(ExtendedQueries.ivfStepSql).mkString(",\n")},
+         |  WHERE cluster < ${Vectors.IvfC}),
+         |${(1 to Vectors.IvfIters)
+             .map(Vectors.ivfStepSql).mkString(",\n")},
          |ranked AS (
          |  SELECT z.vec_id, z.e, c.cluster,
          |    ROW_NUMBER() OVER (PARTITION BY z.vec_id
          |      ORDER BY ${distSql("z.qd", "c.cent")} ASC, c.cluster ASC) AS rn
-         |  FROM qz z CROSS JOIN c${ExtendedQueries.IvfIters} c),
+         |  FROM qz z CROSS JOIN c${Vectors.IvfIters} c),
          |cb AS (SELECT vec_id, e, cluster AS bucket FROM ranked
          |  WHERE rn = 1),
          |pb AS (SELECT vec_id, e, cluster AS bucket FROM ranked
@@ -323,14 +265,7 @@ object Round6Queries {
          |  FROM nb x JOIN nb y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
          |  WHERE ${dotSql("x.e", "y.e")} / sqrt(x.nrm * y.nrm)
          |    >= 0.99::DOUBLE),
-         |edges AS (
-         |  SELECT a AS src, b AS dst FROM pairs
-         |  UNION SELECT b, a FROM pairs),
-         |reach(node, lab) AS (
-         |  SELECT src, src FROM edges
-         |  UNION
-         |  SELECT e2.dst, r.lab FROM reach r JOIN edges e2 ON e2.src = r.node),
-         |labels AS (SELECT node, min(lab) AS clus FROM reach GROUP BY node)
+         |${Corpus.ccLabelsSql}
          |SELECT cb.vec_id, cb.bucket,
          |  COALESCE(l.clus, cb.vec_id) AS cluster,
          |  (COALESCE(l.clus, cb.vec_id) = cb.vec_id) AS kept

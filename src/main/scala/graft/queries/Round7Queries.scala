@@ -1,8 +1,13 @@
 package graft.queries
 
 import graft.functions.PortableHash
+import graft.queries.fixtures.{Corpus, Vectors}
 import graft.sources.Tables
 import graft.text.TextAnalysis
+import graft.queries.fixtures.Corpus.toksExpr
+import graft.queries.fixtures.Media.{bmpMedia, perceptualDedupSql}
+import graft.queries.fixtures.Text.{BpeK, bpeCtes, winnowFpCtes}
+import graft.queries.fixtures.Vectors.incrementalSemanticSql
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,7 +19,7 @@ import org.apache.spark.sql.functions._
   * cluster-keyed train/val/test split (q115). Every query replays
   * bit-identically in the DuckDB oracle.
   */
-object Round7Queries {
+object Round7Queries extends QueryGroup {
 
   // Composed vs decomposed spellings of one prefix, planted onto every
   // document: "Café δοκιμή: " with é=U+00E9, ή=U+03AE (NFC), and
@@ -24,160 +29,11 @@ object Round7Queries {
   private[queries] val PrefixNfc = "Caf\u00e9 \u03b4\u03bf\u03ba\u03b9\u03bc\u03ae: "
   private[queries] val PrefixNfd = "Cafe\u0301 \u03b4\u03bf\u03ba\u03b9\u03bc\u03b7\u0301: "
 
-  private val toksExpr =
-    """list_filter(string_split_regex(text, '\s+'), x -> x <> '')"""
-
-  private val dotSql = (a: String, b: String) =>
-    s"list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i]), (x,y) -> x+y)"
-
-  /** L2 rank key (|v|² row-constant term dropped) — q42's formulation. */
-  private def distSql(v: String, cent: String): String =
-    s"-2.0 * ${dotSql(v, cent)} + ${dotSql(cent, cent)}"
-
-  /** q113/q114 merge-round count, shared by engine calls and oracle. */
-  private[queries] val BpeK = 12
-
-  /** The DuckDB replay of [[graft.text.Bpe.trainMerges]]: w0 = the
-    * unique-word dict with per-char separator-wrapped segmentation;
-    * each round i: pair counts from w(i-1) (correlated UNNEST over
-    * adjacent symbol positions), the argmax row b(i) (count DESC, pair
-    * ASC), and w(i) = literal replace of the wrapped pair — the same
-    * greedy-BPE-as-string-replace semantics as the Spark side.
-    */
-  private[queries] def bpeCtes(k: Int,
-      src: String = "documents"): String = {
-    // MATERIALIZED is load-bearing: w(i) and b(i) are each referenced
-    // twice, so DuckDB's default CTE inlining would expand the chain
-    // to 2^k copies of the documents scan (observed: "Too many open
-    // files" at k=12). Materializing each round keeps it linear.
-    val sep = "chr(31)"
-    val init =
-      s"""w0 AS MATERIALIZED (
-         |  SELECT word, CAST(COUNT(*) AS BIGINT) AS freq,
-         |    list_reduce(list_transform(generate_series(1, length(word)),
-         |      i -> $sep || word[i] || $sep), (a, b) -> a || b) AS seg
-         |  FROM (SELECT unnest($toksExpr) AS word FROM $src)
-         |  GROUP BY word)""".stripMargin
-    val rounds = (1 to k).map { i =>
-      s"""p$i AS (
-         |  SELECT syms[j] AS lhs, syms[j + 1] AS rhs,
-         |    CAST(SUM(freq) AS BIGINT) AS cnt
-         |  FROM (SELECT freq,
-         |      list_filter(string_split(seg, $sep), x -> x <> '') AS syms
-         |    FROM w${i - 1}),
-         |    UNNEST(generate_series(1, len(syms) - 1)) AS u(j)
-         |  GROUP BY 1, 2),
-         |b$i AS MATERIALIZED (SELECT lhs, rhs, cnt FROM p$i
-         |  ORDER BY cnt DESC, lhs ASC, rhs ASC LIMIT 1),
-         |w$i AS MATERIALIZED (SELECT word, freq, replace(seg,
-         |    (SELECT $sep || lhs || $sep || $sep || rhs || $sep FROM b$i),
-         |    (SELECT $sep || lhs || rhs || $sep FROM b$i)) AS seg
-         |  FROM w${i - 1})""".stripMargin
-    }
-    (init +: rounds).mkString(",\n")
-  }
-
-  /** The DuckDB replay of [[graft.text.Winnow.fingerprints]] at
-    * k=3, w=4 over `src`: CTE chain ending in
-    * `fps<sfx>(doc_id, pos, fp)`. Shared by q116/q117 (defaults, one
-    * chain) and q121 (two suffixed chains in one statement).
-    */
-  private[queries] def winnowFpCtes(src: String = "documents",
-      sfx: String = ""): String =
-    s"""t$sfx AS (SELECT doc_id, $toksExpr AS toks FROM $src),
-       |g$sfx AS (SELECT doc_id, u.i - 1 AS pos,
-       |    ${PortableHash.hash60BaseSql(
-             "array_to_string(toks[u.i:u.i+2], ' ')")} % 1099511627776 AS gh
-       |  FROM t$sfx, UNNEST(generate_series(1, len(toks) - 2)) AS u(i)
-       |  WHERE len(toks) >= 3),
-       |keyed$sfx AS (SELECT doc_id, pos,
-       |    gh * 4194304 + (4194303 - pos) AS key,
-       |    COUNT(*) OVER (PARTITION BY doc_id) AS m,
-       |    MIN(gh * 4194304 + (4194303 - pos)) OVER (
-       |      PARTITION BY doc_id ORDER BY pos
-       |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wmin,
-       |    COUNT(*) OVER (
-       |      PARTITION BY doc_id ORDER BY pos
-       |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS nf
-       |  FROM g$sfx),
-       |sel$sfx AS (SELECT DISTINCT doc_id, wmin FROM keyed$sfx
-       |  WHERE nf = 4 OR (m < 4 AND pos = 0)),
-       |fps$sfx AS MATERIALIZED (SELECT doc_id,
-       |  CAST(4194303 - (wmin % 4194304) AS BIGINT) AS pos,
-       |  CAST(wmin // 4194304 AS BIGINT) AS fp
-       |FROM sel$sfx)""".stripMargin
-
   /** The DuckDB replay of [[TextAnalysis.normalizedUnicode]]. */
   private[queries] def normalizedUnicodeSql(c: String): String =
     "trim(regexp_replace(regexp_replace(" +
       s"lower(nfc_normalize($c)), '[^\\p{L}\\p{N}\\s]', '', 'g'), " +
       "'\\s+', ' ', 'g'))"
-
-  /** q110/q137 image corpus: md5-derived dims + a per-document
-    * NONLINEAR pixel formula (distinct phase per doc, so unrelated
-    * documents get genuinely different gradient structure — a linear
-    * ramp would collide most images in dHash space). rid = doc_id*4
-    * (original), +1 re-encoded copy (%3: decode->encode, same pixels),
-    * +2 2x nearest-neighbor upscale (%5), +3 phase-shifted
-    * near-variant (%7: off=8, hamming small but nonzero — exercises
-    * the verify threshold both ways).
-    */
-  private[queries] def bmpMedia(s: SparkSession, dir: String)
-      : org.apache.spark.sql.Dataset[graft.multimodal.Multimodal.BmpMedia] =
-    mediaCorpus(s, dir, graft.multimodal.Bmp.encode _,
-      graft.multimodal.Bmp.decode _)
-
-  /** [[bmpMedia]] parameterized by codec: the SAME planted corpus
-    * (ids, dims, pixel formulas) under any encode/decode pair — q174
-    * passes the PNG codec and reuses q110's oracle VERBATIM, because
-    * the oracle replays decoded pixels and the container format is
-    * exactly what must not matter.
-    */
-  private[queries] def mediaCorpus(s: SparkSession, dir: String,
-      enc: graft.multimodal.Bmp.Image => Array[Byte],
-      dec: Array[Byte] => graft.multimodal.Bmp.Image)
-      : org.apache.spark.sql.Dataset[graft.multimodal.Multimodal.BmpMedia] = {
-    implicit val sp: SparkSession = s
-    import s.implicits._
-    import graft.multimodal.{Bmp, Multimodal}
-    val docs = Tables(s, dir, "documents").filter(col("doc_id") % 10 === 0)
-    val h = md5(col("text"))
-      def byteAt(i: Int) =
-        conv(substring(h, 2 * i + 1, 2), 16, 10).cast("int")
-      def pix(id: Long, i: Int, off: Int): Byte =
-        ((id * 2654435761L + i.toLong * (i + 7) + off) % 256).toByte
-      // dims 8..23: with width >= 8 the 8-wide dHash sample grid hits
-      // 8 DISTINCT columns — widths below the grid would degenerate
-      // entire images to dhash 0 (giant false cliques)
-      val base = docs.select(col("doc_id").cast("long").as("id"),
-          (byteAt(0) % 16 + 8).as("w"), (byteAt(1) % 16 + 8).as("h"))
-        .as[(Long, Int, Int)]
-        .mapPartitions(_.map { case (id, w, hh) =>
-          val rgb = Array.tabulate(w * hh * 3)(i => pix(id, i, 0))
-          val p = enc(Bmp.Image(w, hh, rgb))
-          Multimodal.BmpMedia(id, p, p.length)
-        })
-      val orig = base.mapPartitions(_.map(m => m.copy(doc_id = m.doc_id * 4)))
-      val reenc = base.filter((m: Multimodal.BmpMedia) => m.doc_id % 3 == 0)
-        .mapPartitions(_.map { m =>
-          val p = enc(dec(m.payload))
-          Multimodal.BmpMedia(m.doc_id * 4 + 1, p, p.length)
-        })
-      val resized = base.filter((m: Multimodal.BmpMedia) => m.doc_id % 5 == 0)
-        .mapPartitions(_.map { m =>
-          val img = dec(m.payload)
-          val p = enc(Bmp.resample(img, img.width * 2, img.height * 2))
-          Multimodal.BmpMedia(m.doc_id * 4 + 2, p, p.length)
-        })
-      val shifted = base.filter((m: Multimodal.BmpMedia) => m.doc_id % 7 == 0)
-        .mapPartitions(_.map { m =>
-          val img = dec(m.payload)
-          val rgb = Array.tabulate(img.rgb.length)(i => pix(m.doc_id, i, 8))
-          val p = enc(Bmp.Image(img.width, img.height, rgb))
-          Multimodal.BmpMedia(m.doc_id * 4 + 3, p, p.length)
-        })
-      orig.union(reenc).union(resized).union(shifted)
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -241,8 +97,8 @@ object Round7Queries {
       val full = emb.unionByName(repA).unionByName(repB)
       def batch(b: Int) = full.filter(col("vec_id") % 3 === b)
       val (i0, p0) = IncrementalSemantic.build(batch(0), "vec_id",
-        "embedding", threshold = 0.99, c = ExtendedQueries.IvfC,
-        iters = ExtendedQueries.IvfIters)
+        "embedding", threshold = 0.99, c = Vectors.IvfC,
+        iters = Vectors.IvfIters)
       val (i1, p1) = IncrementalSemantic.addBatch(i0, batch(1), "vec_id",
         "embedding", threshold = 0.99)
       val (i2, p2) = IncrementalSemantic.addBatch(i1, batch(2), "vec_id",
@@ -289,7 +145,7 @@ object Round7Queries {
     // per-document hash split's eval-contamination bug is impossible
     // by construction. Same planted-dup corpus as q52.
     "q115_leakage_safe_split" -> ((s, dir) => {
-      val c = PipelineQueries.corpus(s, dir)
+      val c = Corpus.corpus(s, dir)
       val pairs = graft.dedup.Dedup
         .minhashNearDuplicates(c, "doc_id", "text")
         .select(col("a"), col("b"))
@@ -336,49 +192,6 @@ object Round7Queries {
     })
   )
 
-  /** q110/q137 oracle prefix: the generative image formulas replayed
-    * down to per-image dHash — CTE chain ending at `dh(rid, dhash)`.
-    * rid%4=0 are originals; +1 re-encoded, +2 resized, +3 shifted.
-    */
-  private[queries] def imageDhCtesSql: String = imageDhCtes("")
-
-  /** The same chain with suffixed CTE names (`dh$sfx` etc.) so it can
-    * share a WITH clause with the audio chain, whose `dims` would
-    * otherwise collide (q155).
-    */
-  private[queries] def imageDhCtes(sfx: String): String =
-    s"""dims$sfx AS (
-         |  SELECT doc_id, ('0x'||substr(md5(text),1,2))::INT % 16 + 8 AS w,
-         |         ('0x'||substr(md5(text),3,2))::INT % 16 + 8 AS h
-         |  FROM documents WHERE doc_id % 10 = 0),
-         |imgs$sfx AS (
-         |  SELECT doc_id*4 AS rid, doc_id AS id0, w, h, 0 AS off, 1 AS sc
-         |  FROM dims$sfx
-         |  UNION ALL SELECT doc_id*4+1, doc_id, w, h, 0, 1 FROM dims$sfx
-         |    WHERE doc_id % 3 = 0
-         |  UNION ALL SELECT doc_id*4+2, doc_id, w, h, 0, 2 FROM dims$sfx
-         |    WHERE doc_id % 5 = 0
-         |  UNION ALL SELECT doc_id*4+3, doc_id, w, h, 8, 1 FROM dims$sfx
-         |    WHERE doc_id % 7 = 0),
-         |cells$sfx AS (
-         |  SELECT rid, gy, gx,
-         |    ((id0*2654435761 + b*(b+7) + off) % 256
-         |     + (id0*2654435761 + (b+1)*(b+8) + off) % 256
-         |     + (id0*2654435761 + (b+2)*(b+9) + off) % 256) // 3 AS gray
-         |  FROM (
-         |    SELECT rid, id0, off, gy.g AS gy, gx.g AS gx,
-         |      ((gy.g*(h*sc)//8)//sc*w + (gx.g*(w*sc)//8)//sc)*3 AS b
-         |    FROM imgs$sfx,
-         |      (SELECT unnest(generate_series(0, 7)) AS g) gy,
-         |      (SELECT unnest(generate_series(0, 7)) AS g) gx)),
-         |dh$sfx AS (
-         |  SELECT l.rid, CAST(SUM(CASE WHEN r.gray > l.gray
-         |      THEN 1::BIGINT << (l.gy*7 + l.gx) ELSE 0 END) AS BIGINT)
-         |    AS dhash
-         |  FROM cells$sfx l JOIN cells$sfx r
-         |    ON r.rid = l.rid AND r.gy = l.gy AND r.gx = l.gx + 1
-         |  WHERE l.gx < 7 GROUP BY l.rid)""".stripMargin
-
   val oracleSql: Map[String, String] = Map(
 
     "q109_unicode_dedup" ->
@@ -398,86 +211,14 @@ object Round7Queries {
     // divisions (nonnegative -> floor == trunc both engines), the
     // 56-bit dHash, 4x14-bit band candidates, hamming<=6 verify, and
     // min-label connected components as a recursive CTE.
-    "q110_perceptual_dedup" ->
-      s"""WITH RECURSIVE ${imageDhCtesSql},
-         |bands AS (
-         |  SELECT rid, dhash, bb.band,
-         |    (dhash >> (bb.band * 14)) & 16383 AS v
-         |  FROM dh, (SELECT unnest(generate_series(0, 3)) AS band) bb),
-         |pairs AS (
-         |  SELECT a, b FROM (
-         |    SELECT DISTINCT x.rid AS a, y.rid AS b,
-         |      x.dhash AS ha, y.dhash AS hb
-         |    FROM bands x JOIN bands y
-         |      ON x.band = y.band AND x.v = y.v AND x.rid < y.rid)
-         |  WHERE bit_count(xor(ha, hb)) <= 6),
-         |edges AS (SELECT a AS src, b AS dst FROM pairs
-         |  UNION SELECT b, a FROM pairs),
-         |reach(node, lab) AS (
-         |  SELECT src, src FROM edges
-         |  UNION
-         |  SELECT e2.dst, r.lab FROM reach r JOIN edges e2 ON e2.src = r.node),
-         |labels AS (SELECT node, min(lab) AS clus FROM reach GROUP BY node)
-         |SELECT d.rid AS id, d.dhash,
-         |  COALESCE(l.clus, d.rid) AS cluster,
-         |  (COALESCE(l.clus, d.rid) <> d.rid) AS is_dup
-         |FROM dh d LEFT JOIN labels l ON l.node = d.rid
-         |ORDER BY d.rid""".stripMargin,
+    "q110_perceptual_dedup" -> perceptualDedupSql,
 
     // Replays q111 as a ONE-SHOT pass against batch-0-trained
     // centroids: training CTEs (q42's ivfStepSql) read `qz` = the
     // batch-0 slice of the quantized corpus; assignment, within-bucket
     // exact-cosine pairs, and min-label CC run over the FULL corpus —
     // equal to the batched union because batching is exactly-once.
-    "q111_incremental_semantic" ->
-      s"""WITH RECURSIVE
-         |base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-         |emb2 AS (
-         |  SELECT vec_id, e FROM base
-         |  UNION ALL
-         |  SELECT vec_id + 1000000, e FROM base WHERE vec_id % 7 = 0
-         |  UNION ALL
-         |  SELECT vec_id + 2000000, list_transform(e, x -> x * 2.0)
-         |  FROM base WHERE vec_id % 11 = 0),
-         |qzall AS (SELECT vec_id, e,
-         |    list_transform(e, x -> round(x * 127.0 / mab)) AS qd
-         |  FROM (SELECT vec_id, e,
-         |          list_max(list_transform(e, x -> abs(x))) AS mab FROM emb2)
-         |  WHERE mab > 0),
-         |qz AS (SELECT * FROM qzall WHERE vec_id % 3 = 0),
-         |c0 AS (SELECT cluster, cent FROM (
-         |  SELECT qd AS cent,
-         |    ROW_NUMBER() OVER (ORDER BY h, vec_id) - 1 AS cluster
-         |  FROM (SELECT vec_id, qd,
-         |          ${PortableHash.hash60BaseSql("vec_id::VARCHAR")} AS h
-         |        FROM qz))
-         |  WHERE cluster < ${ExtendedQueries.IvfC}),
-         |${(1 to ExtendedQueries.IvfIters)
-             .map(ExtendedQueries.ivfStepSql).mkString(",\n")},
-         |cb AS (SELECT vec_id, e, cluster AS bucket FROM (
-         |  SELECT z.vec_id, z.e, c.cluster,
-         |    ROW_NUMBER() OVER (PARTITION BY z.vec_id
-         |      ORDER BY ${distSql("z.qd", "c.cent")} ASC, c.cluster ASC) AS rn
-         |  FROM qzall z CROSS JOIN c${ExtendedQueries.IvfIters} c)
-         |  WHERE rn = 1),
-         |nb AS (SELECT vec_id, e, bucket, ${dotSql("e", "e")} AS nrm FROM cb),
-         |pairs AS (SELECT x.vec_id AS a, y.vec_id AS b
-         |  FROM nb x JOIN nb y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
-         |  WHERE ${dotSql("x.e", "y.e")} / sqrt(x.nrm * y.nrm)
-         |    >= 0.99::DOUBLE),
-         |edges AS (
-         |  SELECT a AS src, b AS dst FROM pairs
-         |  UNION SELECT b, a FROM pairs),
-         |reach(node, lab) AS (
-         |  SELECT src, src FROM edges
-         |  UNION
-         |  SELECT e2.dst, r.lab FROM reach r JOIN edges e2 ON e2.src = r.node),
-         |labels AS (SELECT node, min(lab) AS clus FROM reach GROUP BY node)
-         |SELECT cb.vec_id, cb.bucket,
-         |  COALESCE(l.clus, cb.vec_id) AS cluster,
-         |  (COALESCE(l.clus, cb.vec_id) = cb.vec_id) AS kept
-         |FROM cb LEFT JOIN labels l ON l.node = cb.vec_id
-         |ORDER BY cb.vec_id""".stripMargin,
+    "q111_incremental_semantic" -> incrementalSemanticSql,
 
     "q113_bpe_train" -> {
       val merges = (1 to BpeK).map(i =>
@@ -499,8 +240,8 @@ object Round7Queries {
     // q52's CC replay + cluster-keyed hash split over the full corpus
     // (unpaired docs fall back to their own id as cluster).
     "q115_leakage_safe_split" -> {
-      import PipelineQueries.{shinglesSql, minhashCtesSql, pairsCteSql}
-      s"""WITH RECURSIVE ${PipelineQueries.corpusSql},
+      import Corpus.{shinglesSql, minhashCtesSql, pairsCteSql}
+      s"""WITH RECURSIVE ${Corpus.corpusSql},
          |${shinglesSql("corpus")},
          |$minhashCtesSql,
          |${pairsCteSql("0.5")},

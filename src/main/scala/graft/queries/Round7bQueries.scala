@@ -2,6 +2,7 @@ package graft.queries
 
 import java.nio.file.Files
 
+import graft.queries.fixtures.{Corpus, Streams, Text, Vectors}
 import graft.streaming.StreamFold
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -10,41 +11,7 @@ import org.apache.spark.sql.functions._
   * near-dup text index (q118) and the semantic embedding index (q119).
   * Every query replays bit-identically in the DuckDB oracle.
   */
-object Round7bQueries {
-
-  /** Recursive delete of a staging/checkpoint temp directory. */
-  private[graft] def rmTree(dir: String): Unit = {
-    import java.nio.file.{Files => F, Path}
-    import java.util.Comparator
-    val root = Path.of(dir)
-    if (F.exists(root)) {
-      val walk = F.walk(root)
-      try walk.sorted(Comparator.reverseOrder[Path]())
-        .forEach(p => F.deleteIfExists(p))
-      finally walk.close()
-    }
-  }
-
-  /** Land `df` in a fresh `<prefix>-land` temp directory as three
-    * single-file slices, `key % 3` = 0, 1, 2 in that order, each mapped
-    * by `slice(part, k)` first: the file split the inline streaming
-    * doors drain one file per micro-batch.
-    */
-  private[graft] def landThirds(df: DataFrame, key: String, prefix: String,
-      slice: (DataFrame, Int) => DataFrame = (d, _) => d): String = {
-    val land = Files.createTempDirectory(s"$prefix-land").toString
-    (0 to 2).foreach { k =>
-      slice(df.filter(col(key) % 3 === k), k)
-        .coalesce(1).write.mode("append").parquet(land)
-    }
-    land
-  }
-
-  /** The error an inline streaming door raises when its fold saw no
-    * micro-batch, in place of a null accumulator.
-    */
-  private[graft] def noBatch(query: String): IllegalStateException =
-    new IllegalStateException(s"$query: stream delivered no micro-batch")
+object Round7bQueries extends QueryGroup {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -62,7 +29,7 @@ object Round7bQueries {
       // Distributed staging write (no driver collect): 3 hash-split
       // files so the drain runs several real micro-batches. The pair
       // SET is batching-independent either way.
-      PipelineQueries.corpus(s, dir)
+      Corpus.corpus(s, dir)
         .repartition(3, col("doc_id"))
         .write.mode("overwrite").parquet(stage)
       val (_, pairs) = graft.streaming.StreamingLsh.ingest(
@@ -70,7 +37,7 @@ object Round7bQueries {
       // pairs + index relations are localCheckpoint-materialized, so the
       // staging corpus and stream checkpoint are deletable immediately
       // (a bench sweep would otherwise leave ~12 corpus copies in /tmp)
-      rmTree(stage); rmTree(cp)
+      Streams.rmTree(stage); Streams.rmTree(cp)
       pairs.orderBy(col("a"), col("b"))
     }),
 
@@ -99,15 +66,15 @@ object Round7bQueries {
       val full = emb.unionByName(repA).unionByName(repB)
       val (i0, p0) = IncrementalSemantic.build(
         full.filter(col("vec_id") % 3 === 0), "vec_id", "embedding",
-        threshold = 0.99, c = ExtendedQueries.IvfC,
-        iters = ExtendedQueries.IvfIters)
+        threshold = 0.99, c = Vectors.IvfC,
+        iters = Vectors.IvfIters)
       full.filter(col("vec_id") % 3 =!= 0)
         .repartition(2, col("vec_id"))
         .write.mode("overwrite").parquet(stage)
       val stream = StreamFold.files(s, stage)
       val (idx, streamed) = graft.streaming.StreamingSemantic.ingest(
         stream, "vec_id", "embedding", cp, i0, threshold = 0.99)
-      rmTree(stage); rmTree(cp)
+      Streams.rmTree(stage); Streams.rmTree(cp)
       val cc = graft.dedup.Dedup
         .connectedComponents(p0.unionByName(streamed))
         .withColumnRenamed("doc_id", "vec_id")
@@ -203,7 +170,7 @@ object Round7bQueries {
   val oracleSql: Map[String, String] = Map(
     // identical to q20/q97's replay: streaming must not change the answer
     "q118_stream_lsh_ingest" -> {
-      import PipelineQueries.{corpusSql, shinglesSql, minhashCtesSql,
+      import Corpus.{corpusSql, shinglesSql, minhashCtesSql,
         jaccardTailSql}
       s"""WITH $corpusSql,
          |${shinglesSql("corpus")},
@@ -214,12 +181,12 @@ object Round7bQueries {
     // identical to q111's one-shot replay: streamed ingest against the
     // seed-trained centroids must not change the answer
     "q119_stream_semantic_ingest" ->
-      Round7Queries.oracleSql("q111_incremental_semantic"),
+      Vectors.incrementalSemanticSql,
 
     // two suffixed shingle/signature chains (train `t`, eval `e`),
     // cross-only candidate join, exact-Jaccard verification
     "q120_cross_contamination" -> {
-      import PipelineQueries.{shinglesSql, sigBucketsSql}
+      import Corpus.{shinglesSql, sigBucketsSql}
       s"""WITH train AS (SELECT doc_id, text FROM documents),
          |ev AS (
          |  SELECT doc_id + 5000000 AS doc_id, text FROM documents
@@ -259,7 +226,7 @@ object Round7bQueries {
     // two suffixed winnowing chains, combined-df hot-fp cap, cross-only
     // fp join with shared mass + position extents
     "q121_cross_provenance" -> {
-      import Round7Queries.winnowFpCtes
+      import Text.winnowFpCtes
       s"""WITH train AS (SELECT doc_id, text FROM documents),
          |ev AS (
          |  SELECT doc_id + 5000000 AS doc_id, text FROM documents

@@ -11,7 +11,7 @@ import graft.text.{TextAnalysis, TextClassify}
 /** Round-7 continuation (part c): join-free Bloom decontamination.
   * Every query replays bit-identically in the DuckDB oracle.
   */
-object Round7cQueries {
+object Round7cQueries extends QueryGroup {
 
   /** Bloom geometry for q123: 2^16 bits, 4 probes. At the sf0.01 train
     * cardinality (~1.5k distinct fingerprints) the load factor is

@@ -1,15 +1,18 @@
 package graft.queries
 
+import graft.queries.fixtures.Corpus.toksExpr
+import graft.queries.fixtures.{Corpus, Streams}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.queries.fixtures.Media.{audioFpCtesSql, audioMedia}
 import graft.quality.Entropy
 import graft.sources.Tables
 
 /** Round-8 queries. Every query replays bit-identically in the DuckDB
   * oracle.
   */
-object Round8Queries {
+object Round8Queries extends QueryGroup {
 
   /** Deterministic high-entropy "spew" text: 16 concatenated md5 blocks
     * (alternating case — a 22-symbol near-uniform alphabet, 512 chars),
@@ -60,7 +63,7 @@ object Round8Queries {
       import java.nio.file.Files
       val stage = Files.createTempDirectory("graft-q126-landing").toString
       val cp = Files.createTempDirectory("graft-q126-cp").toString
-      PipelineQueries.corpus(s, dir)
+      Corpus.corpus(s, dir)
         .repartition(3, col("doc_id"))
         .write.mode("overwrite").parquet(stage)
       val stream = graft.streaming.StreamFold.files(s, stage)
@@ -68,7 +71,7 @@ object Round8Queries {
         stream, "doc_id", "text", cp)
       // gated/pairs are per-batch localCheckpoint'd — the resolve plan
       // never reads the staging files, so they are deletable now
-      Round7bQueries.rmTree(stage); Round7bQueries.rmTree(cp)
+      Streams.rmTree(stage); Streams.rmTree(cp)
       graft.streaming.StreamingCorpus
         .resolveSurvivors(gated, pairs, "doc_id", "text")
         .select(col("doc_id"), col("quality"), col("lang_pred"))
@@ -166,7 +169,7 @@ object Round8Queries {
         .write.mode("overwrite").parquet(stage)
       val stream = graft.streaming.StreamFold.files(s, stage)
       val (idx, pairs) = graft.streaming.StreamingAudio.ingest(stream, cp)
-      Round7bQueries.rmTree(stage); Round7bQueries.rmTree(cp)
+      Streams.rmTree(stage); Streams.rmTree(cp)
       IncrementalAudio.clusters(idx, pairs).orderBy(col("id"))
     }),
 
@@ -189,7 +192,7 @@ object Round8Queries {
       val spam = d.filter(col("doc_id") % 29 === 0)
         .select((col("doc_id") + 4000000L).as("doc_id"),
           lit("the spam " * 30).as("text"))
-      val corpus = PipelineQueries.corpus(s, dir)
+      val corpus = Corpus.corpus(s, dir)
         .unionByName(spew).unionByName(spam)
       CorpusPipeline.clean(corpus, "doc_id", "text",
           CorpusPipeline.Config(collisionBand = Some((Entropy.SpewNum,
@@ -210,7 +213,7 @@ object Round8Queries {
       import graft.pipeline.CorpusPipeline
       import graft.text.TextClassify
       val w = TextClassify.syntheticWeights(s, ClassifierDim)
-      CorpusPipeline.clean(PipelineQueries.corpus(s, dir), "doc_id", "text",
+      CorpusPipeline.clean(Corpus.corpus(s, dir), "doc_id", "text",
           CorpusPipeline.Config(classifier = Some(
             CorpusPipeline.ClassifierGate(w, ClassifierDim,
               thresholdNum = -300L, thresholdDen = 1L))))
@@ -286,67 +289,10 @@ object Round8Queries {
 
   private val ClassifierDim = 1024
 
-  /** q129/q131's planted clip corpus: per-doc WAV built from
-    * md5(text)-derived polynomial coefficients, plus re-encoded (%3),
-    * 2x-resampled (%5), and gain-doubled (%7) variants.
-    */
-  private[queries] def audioMedia(s: SparkSession, dir: String) = {
-    implicit val sp: SparkSession = s
-    import s.implicits._
-    import graft.multimodal.{AudioFp, Wav}
-    {
-      val docs = Tables(s, dir, "documents").filter(col("doc_id") % 10 === 0)
-      val h = md5(col("text"))
-      // Clip samples are a quadratic-in-i polynomial mod 2^14 whose
-      // THREE coefficients come from the text's md5 — a 2^42 coefficient
-      // space, so clips never alias however many there are (an
-      // id-multiplier formula has only 2^14 slope classes — mod-2^14
-      // reduction aliases them at corpus scale, the audio analogue of
-      // q110's linear-ramp lesson; found when the 64x probe's replicas
-      // collided). Per-doc pseudo-noise, same derivation in the oracle.
-      def hx(from: Int, len: Int) =
-        conv(substring(h, from, len), 16, 10).cast("long")
-      def sample(s1: Long, s2: Long, s3: Long, i: Int): Short =
-        ((((s1 + 1) * (i + 3) + (s2 + 1) * i.toLong * (i + 7) + s3)
-          % 16384L) - 8192L).toShort
-      val base = docs
-        .select(col("doc_id").cast("long").as("id"),
-          (hx(1, 2).cast("int") * 8 + 512).as("n"),
-          (hx(3, 4) % 16384L).as("s1"), (hx(7, 4) % 16384L).as("s2"),
-          (hx(11, 4) % 16384L).as("s3"))
-        .as[(Long, Int, Long, Long, Long)]
-        .mapPartitions(_.map { case (id, n, s1, s2, s3) =>
-          val p = Wav.encode(
-            Wav.Audio(8000, 1, Array.tabulate(n)(i => sample(s1, s2, s3, i))))
-          AudioFp.AudioMedia(id, p, p.length)
-        })
-      val orig = base.mapPartitions(_.map(m => m.copy(doc_id = m.doc_id * 4)))
-      val reenc = base.filter((m: AudioFp.AudioMedia) => m.doc_id % 3 == 0)
-        .mapPartitions(_.map { m =>
-          val p = Wav.encode(Wav.decode(m.payload))
-          AudioFp.AudioMedia(m.doc_id * 4 + 1, p, p.length)
-        })
-      val resamp = base.filter((m: AudioFp.AudioMedia) => m.doc_id % 5 == 0)
-        .mapPartitions(_.map { m =>
-          val a = Wav.decode(m.payload)
-          val p = Wav.encode(Wav.resample(a, a.frames * 2))
-          AudioFp.AudioMedia(m.doc_id * 4 + 2, p, p.length)
-        })
-      val gained = base.filter((m: AudioFp.AudioMedia) => m.doc_id % 7 == 0)
-        .mapPartitions(_.map { m =>
-          val a = Wav.decode(m.payload)
-          val p = Wav.encode(a.copy(
-            samples = a.samples.map(v => (v * 2).toShort)))
-          AudioFp.AudioMedia(m.doc_id * 4 + 3, p, p.length)
-        })
-      orig.union(reenc).union(resamp).union(gained)
-    }
-  }
-
   val oracleSql: Map[String, String] = Map(
 
     // q46's SQL verbatim: streaming the cleaning must not change the answer
-    "q126_stream_corpus_clean" -> PipelineQueries.oracleSql("q46_pipeline"),
+    "q126_stream_corpus_clean" -> Corpus.pipelineSql,
 
     "q127_entropy_gate" -> {
       val n2 = "CAST(n_chars * n_chars AS BIGINT)"
@@ -423,23 +369,10 @@ object Round8Queries {
     // arithmetic over g2) inserted between the heuristic gates and
     // exact dedup
     "q133_pipeline_classified" -> {
-      import PipelineQueries.{corpusSql, langCaseSql, langHitColsSql,
-        minhashCtesSql, pairsCteSql, qualityExprSql, shinglesSql}
+      import Corpus.corpusSql
       import graft.text.TextClassify
-      val toksExpr =
-        """list_filter(string_split_regex(text, '\s+'), x -> x <> '')"""
       s"""WITH RECURSIVE $corpusSql,
-         |scored AS (
-         |  SELECT doc_id, text,
-         |  $qualityExprSql AS quality,
-         |$langHitColsSql
-         |  FROM corpus),
-         |gated AS (
-         |  SELECT doc_id, text, quality,
-         |  $langCaseSql AS lang_pred
-         |  FROM scored),
-         |g2 AS (SELECT doc_id, text, quality, lang_pred FROM gated
-         |       WHERE quality >= 0.7::DOUBLE AND lang_pred = 'en'),
+         |${Corpus.rowGatesSql("corpus")},
          |cweights AS (${TextClassify.syntheticWeightsSql(ClassifierDim)}),
          |ctoks AS (SELECT doc_id, unnest($toksExpr) AS token FROM g2),
          |cbk AS (SELECT doc_id,
@@ -451,37 +384,14 @@ object Round8Queries {
          |  FROM cbk LEFT JOIN cweights w USING (bucket) GROUP BY 1),
          |g3 AS (SELECT g2.* FROM g2 JOIN cscore USING (doc_id)
          |  WHERE score * 1 >= -300 * n_tokens),
-         |fp AS (SELECT doc_id, text, quality, lang_pred,
-         |    md5(trim(regexp_replace(regexp_replace(lower(text),
-         |      '[^a-z0-9\\s]', '', 'g'), '\\s+', ' ', 'g'))) AS f
-         |  FROM g3),
-         |keep AS (SELECT min(doc_id) AS doc_id FROM fp GROUP BY f),
-         |ex AS (SELECT fp.* FROM fp WHERE fp.doc_id IN (SELECT doc_id FROM keep)),
-         |${shinglesSql("ex")},
-         |$minhashCtesSql,
-         |${pairsCteSql("0.5")},
-         |edges AS (
-         |  SELECT a AS src, b AS dst FROM pairs
-         |  UNION SELECT b, a FROM pairs),
-         |reach(node, lab) AS (
-         |  SELECT src, src FROM edges
-         |  UNION
-         |  SELECT e2.dst, r.lab FROM reach r JOIN edges e2 ON e2.src = r.node),
-         |losers AS (
-         |  SELECT node AS doc_id FROM reach
-         |  GROUP BY node HAVING node <> min(lab))
-         |SELECT e.doc_id, e.quality, e.lang_pred
-         |FROM ex e
-         |WHERE NOT EXISTS (SELECT 1 FROM losers l WHERE l.doc_id = e.doc_id)
-         |ORDER BY e.doc_id""".stripMargin
+         |${Corpus.cleanSurvivorsSql("g3")}""".stripMargin
     },
 
     // q46's stage-for-stage replay with the entropy band inserted
     // between the row-local gates and exact dedup, over the q46 corpus
     // + the gate-passing spam/spew plants
     "q130_pipeline_banded" -> {
-      import PipelineQueries.{corpusSql, langCaseSql, langHitColsSql,
-        minhashCtesSql, pairsCteSql, qualityExprSql, shinglesSql}
+      import Corpus.corpusSql
       val spewSql = "'the ' || " + (1 to 16).map { i =>
         val b = s"md5(doc_id::VARCHAR||':p$i')"
         if (i % 2 == 0) s"upper($b)" else b
@@ -495,17 +405,7 @@ object Round8Queries {
          |  UNION ALL
          |  SELECT doc_id + 4000000, repeat('the spam ', 30)
          |  FROM documents WHERE doc_id % 29 = 0),
-         |scored AS (
-         |  SELECT doc_id, text,
-         |  $qualityExprSql AS quality,
-         |$langHitColsSql
-         |  FROM corpus2),
-         |gated AS (
-         |  SELECT doc_id, text, quality,
-         |  $langCaseSql AS lang_pred
-         |  FROM scored),
-         |g2 AS (SELECT doc_id, text, quality, lang_pred FROM gated
-         |       WHERE quality >= 0.7::DOUBLE AND lang_pred = 'en'),
+         |${Corpus.rowGatesSql("corpus2")},
          |${graft.quality.Entropy.signalsSql("g2", "doc_id", "text")},
          |g3 AS (
          |  SELECT g2.* FROM g2 JOIN entsig USING (doc_id)
@@ -513,29 +413,7 @@ object Round8Queries {
          |      > ${Entropy.SpewNum} * CAST(n_chars * n_chars AS BIGINT)
          |    AND coll_num * ${Entropy.SpamDen}
          |      < ${Entropy.SpamNum} * CAST(n_chars * n_chars AS BIGINT)),
-         |fp AS (SELECT doc_id, text, quality, lang_pred,
-         |    md5(trim(regexp_replace(regexp_replace(lower(text),
-         |      '[^a-z0-9\\s]', '', 'g'), '\\s+', ' ', 'g'))) AS f
-         |  FROM g3),
-         |keep AS (SELECT min(doc_id) AS doc_id FROM fp GROUP BY f),
-         |ex AS (SELECT fp.* FROM fp WHERE fp.doc_id IN (SELECT doc_id FROM keep)),
-         |${shinglesSql("ex")},
-         |$minhashCtesSql,
-         |${pairsCteSql("0.5")},
-         |edges AS (
-         |  SELECT a AS src, b AS dst FROM pairs
-         |  UNION SELECT b, a FROM pairs),
-         |reach(node, lab) AS (
-         |  SELECT src, src FROM edges
-         |  UNION
-         |  SELECT e2.dst, r.lab FROM reach r JOIN edges e2 ON e2.src = r.node),
-         |losers AS (
-         |  SELECT node AS doc_id FROM reach
-         |  GROUP BY node HAVING node <> min(lab))
-         |SELECT e.doc_id, e.quality, e.lang_pred
-         |FROM ex e
-         |WHERE NOT EXISTS (SELECT 1 FROM losers l WHERE l.doc_id = e.doc_id)
-         |ORDER BY e.doc_id""".stripMargin
+         |${Corpus.cleanSurvivorsSql("g3")}""".stripMargin
     },
 
     // sqrt-temperature thresholds re-derived relationally: the SAME op
@@ -567,10 +445,8 @@ object Round8Queries {
     // every gate's arithmetic replayed over the same planted corpus,
     // fused into one per-source aggregate
     "q135_corpus_report" -> {
-      import PipelineQueries.{langCaseSql, langHitColsSql, qualityExprSql}
+      import Corpus.{langCaseSql, langHitColsSql, qualityExprSql}
       import graft.text.Pii
-      val toksExpr =
-        """list_filter(string_split_regex(text, '\s+'), x -> x <> '')"""
       val n2 = "CAST(n_chars * n_chars AS BIGINT)"
       s"""WITH base AS (
          |  SELECT doc_id, source, text
@@ -622,66 +498,6 @@ object Round8Queries {
   /** q129's full DuckDB replay — shared verbatim by q131 (incremental
     * ingest must reproduce the one-shot clustering).
     */
-  /** q129/q131/q132/q138 oracle prefix: the generative clip formulas
-    * replayed down to the 52-bit spectral fingerprint — CTE chain
-    * ending at `fp(rid, afp)`. rid%4=0 are originals; +1 re-encoded,
-    * +2 resampled, +3 gain-doubled.
-    */
-  private[queries] def audioFpCtesSql: String =
-    """dims AS (
-         |  SELECT doc_id, ('0x'||substr(md5(text),1,2))::INT * 8 + 512 AS n,
-         |    ('0x'||substr(md5(text),3,4))::BIGINT % 16384 AS s1,
-         |    ('0x'||substr(md5(text),7,4))::BIGINT % 16384 AS s2,
-         |    ('0x'||substr(md5(text),11,4))::BIGINT % 16384 AS s3
-         |  FROM documents WHERE doc_id % 10 = 0),
-         |clips AS (
-         |  SELECT doc_id*4 AS rid, n, s1, s2, s3, 1 AS sc, 1 AS vol
-         |  FROM dims
-         |  UNION ALL SELECT doc_id*4+1, n, s1, s2, s3, 1, 1 FROM dims
-         |    WHERE doc_id % 3 = 0
-         |  UNION ALL SELECT doc_id*4+2, n, s1, s2, s3, 2, 1 FROM dims
-         |    WHERE doc_id % 5 = 0
-         |  UNION ALL SELECT doc_id*4+3, n, s1, s2, s3, 1, 2 FROM dims
-         |    WHERE doc_id % 7 = 0),
-         |probes AS (
-         |  SELECT rid, j, j // 16 AS w,
-         |    vol * ((((s1+1)*(idx+3) + (s2+1)*idx*(idx+7) + s3) % 16384)
-         |      - 8192) AS p
-         |  FROM (
-         |    SELECT c.rid, c.s1, c.s2, c.s3, c.vol, js.j,
-         |      (js.j*(c.n*c.sc)//128)//c.sc AS idx
-         |    FROM clips c,
-         |      (SELECT unnest(generate_series(0, 127)) AS j) js) t),
-         |lagt AS (SELECT unnest([0,1,2,4]) AS lag,
-         |                unnest([0,1,2,3]) AS bi),
-         |en AS (
-         |  SELECT x.rid, x.w, lt.bi,
-         |    CAST(SUM(CASE WHEN lt.lag = 0 THEN x.p*x.p
-         |             ELSE (y.p-x.p)*(y.p-x.p) END) AS BIGINT) AS e
-         |  FROM probes x
-         |  CROSS JOIN lagt lt
-         |  JOIN probes y
-         |    ON y.rid = x.rid AND y.j = x.j + lt.lag AND y.w = x.w
-         |  GROUP BY 1, 2, 3),
-         |fpt AS (
-         |  SELECT l.rid,
-         |    CAST(COALESCE(SUM(CASE WHEN r.e > l.e
-         |      THEN (1::BIGINT << (l.bi*7 + l.w)) END), 0) AS BIGINT) AS ht
-         |  FROM en l JOIN en r
-         |    ON r.rid = l.rid AND r.bi = l.bi AND r.w = l.w + 1
-         |  WHERE l.w < 7
-         |  GROUP BY l.rid),
-         |fpsp AS (
-         |  SELECT l.rid,
-         |    CAST(COALESCE(SUM(CASE WHEN r.e > l.e
-         |      THEN (1::BIGINT << (28 + l.w*3 + l.bi)) END), 0) AS BIGINT)
-         |      AS hs
-         |  FROM en l JOIN en r
-         |    ON r.rid = l.rid AND r.w = l.w AND r.bi = l.bi + 1
-         |  WHERE l.bi < 3
-         |  GROUP BY l.rid),
-         |fp AS (SELECT t.rid, t.ht | s2.hs AS afp
-         |  FROM fpt t JOIN fpsp s2 USING (rid))""".stripMargin
 
   private lazy val oracleSql129: String =
     s"""WITH RECURSIVE ${audioFpCtesSql},
@@ -695,13 +511,7 @@ object Round8Queries {
          |    FROM bands x JOIN bands y
          |      ON x.band = y.band AND x.v = y.v AND x.rid < y.rid)
          |  WHERE bit_count(xor(ha, hb)) <= 3),
-         |edges AS (SELECT a AS src, b AS dst FROM pairs
-         |  UNION SELECT b, a FROM pairs),
-         |reach(node, lab) AS (
-         |  SELECT src, src FROM edges
-         |  UNION
-         |  SELECT e2.dst, r.lab FROM reach r JOIN edges e2 ON e2.src = r.node),
-         |labels AS (SELECT node, min(lab) AS clus FROM reach GROUP BY node)
+         |${Corpus.ccCompactSql("")}
          |SELECT f.rid AS id, f.afp,
          |  COALESCE(l.clus, f.rid) AS cluster,
          |  (COALESCE(l.clus, f.rid) <> f.rid) AS is_dup

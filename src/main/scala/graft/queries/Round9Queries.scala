@@ -1,5 +1,7 @@
 package graft.queries
 
+import graft.queries.fixtures.Vectors.{distSql, dotSql}
+import graft.queries.fixtures.{Corpus, Media, Scd, Streams, Text, Vectors}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -7,7 +9,7 @@ import org.apache.spark.sql.functions._
 /** Round-9 queries. Every query replays bit-identically in the DuckDB
   * oracle.
   */
-object Round9Queries {
+object Round9Queries extends QueryGroup {
 
   /** ADC-candidate count for q136's exact re-rank tail. */
   private val PqR = 100
@@ -26,8 +28,8 @@ object Round9Queries {
       val emb = Tables(s, dir, "embeddings")
       graft.similarity.Similarity.ivfPqTopKRefined(
         emb.filter(col("vec_id") < 50), emb, "vec_id", "embedding",
-        k = 10, c = Round5Queries.PqC, m = Round5Queries.PqM,
-        nProbe = Round5Queries.PqProbe, kCodes = Round5Queries.PqK,
+        k = 10, c = Vectors.PqC, m = Vectors.PqM,
+        nProbe = Vectors.PqProbe, kCodes = Vectors.PqK,
         refineR = PqR)
         .orderBy(col("q_id"), col("rank"))
     }),
@@ -42,7 +44,7 @@ object Round9Queries {
     "q137_perceptual_cross" -> ((s, dir) => {
       implicit val sp: SparkSession = s
       import graft.multimodal.Perceptual
-      val hashes = Perceptual.dHashes(Round7Queries.bmpMedia(s, dir))
+      val hashes = Perceptual.dHashes(Media.bmpMedia(s, dir))
         .localCheckpoint()
       Perceptual.crossMatches(hashes.filter(col("id") % 4 === 0),
           hashes.filter(col("id") % 4 =!= 0), "id", "dhash",
@@ -57,7 +59,7 @@ object Round9Queries {
     "q138_audio_cross" -> ((s, dir) => {
       implicit val sp: SparkSession = s
       import graft.multimodal.AudioFp
-      val fps = AudioFp.fingerprints(Round8Queries.audioMedia(s, dir))
+      val fps = AudioFp.fingerprints(Media.audioMedia(s, dir))
         .localCheckpoint()
       AudioFp.crossMatches(fps.filter(col("id") % 4 === 0),
           fps.filter(col("id") % 4 =!= 0), "id", "afp")
@@ -78,7 +80,7 @@ object Round9Queries {
       import graft.catalog.ParquetCatalog
       import graft.dedup.IncrementalLsh
       import graft.pipeline.Purge
-      val c = PipelineQueries.corpus(s, dir)
+      val c = Corpus.corpus(s, dir)
       val initial = c.filter(col("doc_id") % 4 =!= 1)
       val batch = c.filter(col("doc_id") % 4 === 1)
       val (idx, _) = IncrementalLsh.build(initial, "doc_id", "text")
@@ -91,7 +93,7 @@ object Round9Queries {
         IncrementalLsh.load(cat, "lsh"), batch, "doc_id", "text")
       // materialize before deleting the temp catalog the plan reads
       val out = pairs.orderBy(col("a"), col("b")).localCheckpoint()
-      Round7bQueries.rmTree(root)
+      Streams.rmTree(root)
       out
     }),
 
@@ -116,14 +118,14 @@ object Round9Queries {
       val full = emb.unionByName(repA).unionByName(repB)
       def batch(b: Int) = full.filter(col("vec_id") % 3 === b)
       val (i0, _) = IncrementalSemantic.build(batch(0), "vec_id",
-        "embedding", threshold = 0.99, c = ExtendedQueries.IvfC,
-        iters = ExtendedQueries.IvfIters)
+        "embedding", threshold = 0.99, c = Vectors.IvfC,
+        iters = Vectors.IvfIters)
       val (i1, _) = IncrementalSemantic.addBatch(i0, batch(1), "vec_id",
         "embedding", threshold = 0.99)
       val (i2, _) = IncrementalSemantic.addBatch(i1, batch(2), "vec_id",
         "embedding", threshold = 0.99)
       val r = IncrementalSemantic.retrain(i2, c = RetrainC,
-        iters = ExtendedQueries.IvfIters)
+        iters = Vectors.IvfIters)
       r.members.select(col("id").as("vec_id"), col("bucket"))
         .orderBy(col("vec_id"))
     }),
@@ -140,7 +142,7 @@ object Round9Queries {
     // chained 6-branch SQL (mergeStepCtes) — streamed sequential
     // merging == the one-shot two-step replay, hash-checked.
     "q141_stream_scd" -> ((s, dir) => {
-      import java.nio.file.{Files, Path}
+      import java.nio.file.Files
       import java.nio.file.attribute.FileTime
       import java.sql.Timestamp
       import graft.scd.MergeOptions
@@ -149,7 +151,7 @@ object Round9Queries {
       val cp = Files.createTempDirectory("graft-q141-cp").toString
       val root = Files.createTempDirectory("graft-q141-cat").toString
       val cat = new graft.catalog.ParquetCatalog(s, root)
-      val prod0 = ScdQueries.production(s, dir)
+      val prod0 = Scd.production(s, dir)
       cat.create("dim", prod0.schema)
       cat.overwrite("dim", prod0)
       def land(df: DataFrame, name: String, mtimeMs: Long): Unit = {
@@ -160,9 +162,9 @@ object Round9Queries {
         val dst = stage.resolve(name)
         Files.move(part.toPath, dst)
         Files.setLastModifiedTime(dst, FileTime.fromMillis(mtimeMs))
-        Round7bQueries.rmTree(tmp)
+        Streams.rmTree(tmp)
       }
-      land(ScdQueries.staging(s, dir).withColumn("seq", lit(1L)),
+      land(Scd.staging(s, dir).withColumn("seq", lit(1L)),
         "snap0.parquet", 1700000000000L)
       land(secondSnapshot(s, dir).withColumn("seq", lit(2L)),
         "snap1.parquet", 1700000100000L)
@@ -171,20 +173,20 @@ object Round9Queries {
         0L -> Timestamp.valueOf("2024-07-01 00:00:00"),
         1L -> Timestamp.valueOf("2024-08-01 00:00:00"))
       val query = graft.streaming.StreamingScd.writer(
-          stream, ScdQueries.schema,
+          stream, Scd.schema,
           load = _ => cat.table("dim"),
           save = df => cat.overwrite("dim", df),
           eventTimeCol = "seq",
           asOfForBatch = asOfs(_),
-          mergeOpts = ts => MergeOptions(ts, highDate = ScdQueries.highTs))
+          mergeOpts = ts => MergeOptions(ts, highDate = Scd.highTs))
         .option("checkpointLocation", cp)
         .trigger(Trigger.AvailableNow())
         .start()
       query.awaitTermination()
       val out = cat.table("dim")
         .orderBy(col("c_custkey"), col("scd_version")).localCheckpoint()
-      Round7bQueries.rmTree(stage.toString); Round7bQueries.rmTree(cp)
-      Round7bQueries.rmTree(root)
+      Streams.rmTree(stage.toString); Streams.rmTree(cp)
+      Streams.rmTree(root)
       out
     }),
 
@@ -242,7 +244,7 @@ object Round9Queries {
             concat(lit("fresh eval doc "), col("doc_id").cast("string"),
               lit(" with wholly unique content")).as("text")))
       graft.pipeline.CorpusPipeline.release(
-          PipelineQueries.corpus(s, dir), ev, "doc_id", "text")
+          Corpus.corpus(s, dir), ev, "doc_id", "text")
         .orderBy(col("doc_id"))
     }),
 
@@ -287,13 +289,13 @@ object Round9Queries {
       val cp = Files.createTempDirectory("graft-q147-cp").toString
       val cfg = graft.pipeline.CorpusPipeline.Config(
         jaccardThreshold = 0.3)
-      PipelineQueries.corpus(s, dir)
+      Corpus.corpus(s, dir)
         .repartition(3, col("doc_id"))
         .write.mode("overwrite").parquet(stage)
       val stream = graft.streaming.StreamFold.files(s, stage)
       val (idx, gated, pairs) = graft.streaming.StreamingCorpus.ingest(
         stream, "doc_id", "text", cp, cfg)
-      Round7bQueries.rmTree(stage); Round7bQueries.rmTree(cp)
+      Streams.rmTree(stage); Streams.rmTree(cp)
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val ev = docs.filter(col("doc_id") % 13 === 0)
@@ -363,7 +365,7 @@ object Round9Queries {
       val (_, matches) = graft.streaming.StreamingWinnow.ingest(
         stream, "doc_id", "text", cp)
       val out = matches.orderBy(col("a"), col("b")).localCheckpoint()
-      Round7bQueries.rmTree(stage); Round7bQueries.rmTree(cp)
+      Streams.rmTree(stage); Streams.rmTree(cp)
       out
     })
   )
@@ -416,15 +418,13 @@ object Round9Queries {
 
   // ---- oracle SQL ----------------------------------------------------
 
-  private val dotSql = Round5Queries.dotSql
-
   val oracleSql: Map[String, String] = Map(
 
     // q92's CTE chain verbatim (training + ADC scoring), then: ADC
     // top-R per query, exact double-cosine re-score of those pairs
     // from the original embeddings, final rank over the exact score.
     "q136_ann_ivfpq_refined" ->
-      s"""WITH ${Round5Queries.pqAdcCtesSql},
+      s"""WITH ${Vectors.pqAdcCtesSql},
          |cand_r AS (SELECT q_id, n_id FROM (
          |  SELECT q_id, n_id,
          |    ROW_NUMBER() OVER (PARTITION BY q_id
@@ -448,7 +448,7 @@ object Round9Queries {
     // join: train side rid%4=0, eval side rid%4<>0 (disjoint by
     // construction), exact hamming verify at the same threshold.
     "q137_perceptual_cross" ->
-      s"""WITH ${Round7Queries.imageDhCtesSql},
+      s"""WITH ${Media.imageDhCtesSql},
          |bands AS (
          |  SELECT rid, dhash, bb.band,
          |    (dhash >> (bb.band * 14)) & 16383 AS v
@@ -464,7 +464,7 @@ object Round9Queries {
     // q129's generative fingerprint CTEs verbatim, then the cross-only
     // band join at 52 bits / 4x13-bit bands / hamming<=3.
     "q138_audio_cross" ->
-      s"""WITH ${Round8Queries.audioFpCtesSql},
+      s"""WITH ${Media.audioFpCtesSql},
          |bands AS (
          |  SELECT rid, afp, bb.band, (afp >> (bb.band * 13)) & 8191 AS v
          |  FROM fp, (SELECT unnest(generate_series(0, 3)) AS band) bb)
@@ -482,11 +482,11 @@ object Round9Queries {
     // reloaded-then-grown index must emit if and only if the purge
     // removed the docs from storage.
     "q139_purge_forget" ->
-      s"""WITH ${PipelineQueries.corpusSql},
+      s"""WITH ${Corpus.corpusSql},
          |allowed AS (SELECT doc_id, text FROM corpus
          |  WHERE doc_id % 4 = 1 OR doc_id % 3 <> 0),
-         |${PipelineQueries.shinglesSql("allowed")},
-         |${PipelineQueries.minhashCtesSql},
+         |${Corpus.shinglesSql("allowed")},
+         |${Corpus.minhashCtesSql},
          |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
          |common AS (
          |  SELECT c.a, c.b, count(*) AS n_common
@@ -535,13 +535,13 @@ object Round9Queries {
                       .hash60BaseSql("vec_id::VARCHAR")} AS h
          |        FROM qz))
          |  WHERE cluster < $RetrainC),
-         |${(1 to ExtendedQueries.IvfIters)
-             .map(ExtendedQueries.ivfStepSql).mkString(",\n")},
+         |${(1 to Vectors.IvfIters)
+             .map(Vectors.ivfStepSql).mkString(",\n")},
          |cb AS (SELECT vec_id, cluster AS bucket FROM (
          |  SELECT z.vec_id, c.cluster,
          |    ROW_NUMBER() OVER (PARTITION BY z.vec_id
          |      ORDER BY ${distSql("z.qd", "c.cent")} ASC, c.cluster ASC) AS rn
-         |  FROM qzall z CROSS JOIN c${ExtendedQueries.IvfIters} c)
+         |  FROM qzall z CROSS JOIN c${Vectors.IvfIters} c)
          |  WHERE rn = 1)
          |SELECT vec_id, bucket FROM cb ORDER BY vec_id""".stripMargin,
 
@@ -551,10 +551,10 @@ object Round9Queries {
     // dimension must equal the sequential batch replay exactly.
     "q141_stream_scd" ->
       s"""WITH prod AS (
-         |  ${ScdQueries.prodSql}
+         |  ${Scd.prodSql}
          |), stag AS (
-         |  ${ScdQueries.stagSql}
-         |), ${ScdQueries.mergeStepCtes("m1", "prod", "stag",
+         |  ${Scd.stagSql}
+         |), ${Scd.mergeStepCtes("m1", "prod", "stag",
              "TIMESTAMP '2024-07-01 00:00:00'")},
          |stag2 AS (
          |  SELECT c_custkey,
@@ -565,7 +565,7 @@ object Round9Queries {
          |  UNION ALL
          |  SELECT c_custkey + 1000000, c_name, c_acctbal, c_mktsegment
          |  FROM customer WHERE c_custkey % 12 = 0
-         |), ${ScdQueries.mergeStepCtes("m2", "m1out", "stag2",
+         |), ${Scd.mergeStepCtes("m2", "m1out", "stag2",
              "TIMESTAMP '2024-08-01 00:00:00'")}
          |SELECT dim_id, c_custkey, c_name, c_acctbal, c_mktsegment,
          |  scd_version, scd_start_date, scd_end_date, scd_active
@@ -665,7 +665,7 @@ object Round9Queries {
   /** q149's one-shot uncapped matches replay — shared verbatim by
     * q150 (streamed provenance must equal the batched ingest). */
   private lazy val oracleSqlQ149: String =
-    s"""WITH ${Round7Queries.winnowFpCtes()}
+    s"""WITH ${Text.winnowFpCtes()}
          |SELECT l.doc_id AS a, r.doc_id AS b,
          |  CAST(COUNT(*) AS BIGINT) AS n_shared,
          |  MIN(l.pos) AS a_from, MAX(l.pos) AS a_to,
@@ -677,7 +677,7 @@ object Round9Queries {
   /** q144's full release replay — shared verbatim by q147 (streamed
     * release must equal the one-shot). */
   private lazy val oracleSqlQ144: String = {
-      import PipelineQueries.{corpusSql, gateExactCtesSql, shinglesSql,
+      import Corpus.{corpusSql, gateExactCtesSql, shinglesSql,
         sigBucketsSql, minhashCtesSql}
       val nTokSql =
         """CAST(len(list_filter(string_split_regex(r.text, '\s+'),
@@ -812,7 +812,4 @@ object Round9Queries {
     s"$base,\n$steps"
   }
 
-  /** L2 rank key (|v|² row-constant term dropped) — q42's formulation. */
-  private def distSql(v: String, cent: String): String =
-    s"-2.0 * ${dotSql(v, cent)} + ${dotSql(cent, cent)}"
 }

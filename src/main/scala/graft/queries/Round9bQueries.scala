@@ -1,5 +1,7 @@
 package graft.queries
 
+import graft.queries.fixtures.Corpus.toksExpr
+import graft.queries.fixtures.{Corpus, Media, Streams, Text, Vectors}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,18 +13,7 @@ import org.apache.spark.sql.functions._
   * mixture toolbox (q154). Every query replays bit-identically in the
   * DuckDB oracle.
   */
-object Round9bQueries {
-
-  /** q155's semantic-modality oracle helpers (q158's formulation). */
-  private val semDot = Round5Queries.dotSql
-  private def semDist(v: String, cent: String): String =
-    s"-2.0 * ${semDot(v, cent)} + ${semDot(cent, cent)}"
-
-  /** q154 feature-space size (hashed unigram+bigram buckets). */
-  private[queries] val DsirDim = 256
-
-  /** q154 target keep rate, parts per million. */
-  private[queries] val DsirKeepPpm = 500000L
+object Round9bQueries extends QueryGroup {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -38,7 +29,7 @@ object Round9bQueries {
     "q151_incremental_image" -> ((s, dir) => {
       implicit val sp: SparkSession = s
       import graft.multimodal.{IncrementalPerceptual, Perceptual}
-      val fps = Perceptual.dHashes(Round7Queries.bmpMedia(s, dir))
+      val fps = Perceptual.dHashes(Media.bmpMedia(s, dir))
         .localCheckpoint()
       val (i0, p0) = IncrementalPerceptual.build(
         fps.filter(col("id") % 3 === 0))
@@ -63,12 +54,12 @@ object Round9bQueries {
       import graft.multimodal.IncrementalPerceptual
       val stage = Files.createTempDirectory("graft-q152-landing").toString
       val cp = Files.createTempDirectory("graft-q152-cp").toString
-      Round7Queries.bmpMedia(s, dir).toDF()
+      Media.bmpMedia(s, dir).toDF()
         .repartition(3, col("doc_id"))
         .write.mode("overwrite").parquet(stage)
       val stream = graft.streaming.StreamFold.files(s, stage)
       val (idx, pairs) = graft.streaming.StreamingImage.ingest(stream, cp)
-      Round7bQueries.rmTree(stage); Round7bQueries.rmTree(cp)
+      Streams.rmTree(stage); Streams.rmTree(cp)
       IncrementalPerceptual.clusters(idx, pairs).orderBy(col("id"))
     }),
 
@@ -90,7 +81,7 @@ object Round9bQueries {
       import graft.text.IncrementalWinnow
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"))
-      val hashes = Perceptual.dHashes(Round7Queries.bmpMedia(s, dir))
+      val hashes = Perceptual.dHashes(Media.bmpMedia(s, dir))
         .localCheckpoint()
       val (wIdx, _) = IncrementalWinnow.build(
         docs.filter(col("doc_id") % 4 =!= 1), "doc_id", "text")
@@ -115,7 +106,7 @@ object Round9bQueries {
         .unionByName(ip.select(lit("image").as("family"), col("a"),
           col("b")))
         .orderBy(col("family"), col("a"), col("b")).localCheckpoint()
-      Round7bQueries.rmTree(root)
+      Streams.rmTree(root)
       out
     }),
 
@@ -166,12 +157,12 @@ object Round9bQueries {
           Winnow.fingerprints(evSpan, "doc_id", "text", k = 3, w = 4),
           "doc_id", minShared = 2, maxDf = 16)
         .groupBy(col("b")).agg(count(lit(1)).as("n_matches"))
-      val dhs = Perceptual.dHashes(Round7Queries.bmpMedia(s, dir))
+      val dhs = Perceptual.dHashes(Media.bmpMedia(s, dir))
         .localCheckpoint()
       val img = Perceptual.crossMatches(dhs.filter(col("id") % 4 === 0),
           dhs.filter(col("id") % 4 =!= 0), "id", "dhash", maxHamming = 6)
         .groupBy(col("b")).agg(count(lit(1)).as("n_matches"))
-      val afps = AudioFp.fingerprints(Round8Queries.audioMedia(s, dir))
+      val afps = AudioFp.fingerprints(Media.audioMedia(s, dir))
         .localCheckpoint()
       val aud = AudioFp.crossMatches(afps.filter(col("id") % 4 === 0),
           afps.filter(col("id") % 4 =!= 0), "id", "afp")
@@ -189,8 +180,8 @@ object Round9bQueries {
             col("embedding")))
       val sem = graft.similarity.Similarity.crossCorpusSemanticMatches(
           trainE, "vec_id", evalE, "vec_id", "embedding",
-          threshold = 0.99, c = ExtendedQueries.IvfC,
-          iters = ExtendedQueries.IvfIters, nProbe = 2)
+          threshold = 0.99, c = Vectors.IvfC,
+          iters = Vectors.IvfIters, nProbe = 2)
         .groupBy(col("eval_id")).agg(count(lit(1)).as("n_matches"))
       def tag(df: DataFrame, m: String) =
         df.select(lit(m).as("modality"), col("b").as("eval_id"),
@@ -215,7 +206,7 @@ object Round9bQueries {
       graft.pipeline.Dsir.resample(
           docs.select(col("doc_id"), col("text")),
           docs.filter(srcnum % 4 === 1).select(col("doc_id"), col("text")),
-          "doc_id", "text", dim = DsirDim, keepPpm = DsirKeepPpm)
+          "doc_id", "text", dim = Corpus.DsirDim, keepPpm = Corpus.DsirKeepPpm)
         .orderBy(col("doc_id"))
     }),
 
@@ -235,7 +226,7 @@ object Round9bQueries {
       val model = graft.pipeline.Dsir.fit(
         raw.filter(col("doc_id") % 3 === 0),
         docs.filter(srcnum % 4 === 1).select(col("doc_id"), col("text")),
-        "doc_id", "text", dim = DsirDim, keepPpm = DsirKeepPpm)
+        "doc_id", "text", dim = Corpus.DsirDim, keepPpm = Corpus.DsirKeepPpm)
       graft.pipeline.Dsir.applyModel(model, raw, "doc_id", "text")
         .orderBy(col("doc_id"))
     }),
@@ -249,8 +240,8 @@ object Round9bQueries {
     "q157_diversity_sample" -> ((s, dir) => {
       graft.similarity.Similarity.diversitySample(
           Tables(s, dir, "embeddings"), "vec_id", "embedding",
-          perCluster = DivPer, c = ExtendedQueries.IvfC,
-          iters = ExtendedQueries.IvfIters)
+          perCluster = DivPer, c = Vectors.IvfC,
+          iters = Vectors.IvfIters)
         .orderBy(col("vec_id"))
     })
   )
@@ -265,11 +256,11 @@ object Round9bQueries {
     // q110's SQL verbatim — batched ingest must reproduce the
     // one-shot perceptual clustering
     "q151_incremental_image" ->
-      Round7Queries.oracleSql("q110_perceptual_dedup"),
+      Media.perceptualDedupSql,
 
     // the same replay under per-file batching — streamed == batched
     "q152_stream_image_ingest" ->
-      Round7Queries.oracleSql("q110_perceptual_dedup"),
+      Media.perceptualDedupSql,
 
     // One-shot replays of both post-purge states: winnow matches
     // (q149's arithmetic) and image pairs (q110's) over
@@ -277,14 +268,14 @@ object Round9bQueries {
     // pairs — exactly what the reloaded-then-grown indexes must emit
     // iff the purge removed the rows from storage.
     "q153_purge_media" ->
-      s"""WITH ${Round7Queries.winnowFpCtes()},
+      s"""WITH ${Text.winnowFpCtes()},
          |wallow AS (SELECT * FROM fps
          |  WHERE doc_id % 4 = 1 OR doc_id % 3 <> 0),
          |wm AS (SELECT l.doc_id AS a, r.doc_id AS b
          |  FROM wallow l JOIN wallow r
          |    ON l.fp = r.fp AND l.doc_id < r.doc_id
          |  GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-         |${Round7Queries.imageDhCtesSql},
+         |${Media.imageDhCtesSql},
          |iallow AS (SELECT rid, dhash FROM dh
          |  WHERE rid % 4 = 1 OR rid % 3 <> 0),
          |ib AS (SELECT rid, dhash, bb.band,
@@ -309,8 +300,8 @@ object Round9bQueries {
     // (suffixed i), q138's audio chain — in one WITH, each aggregated
     // per eval item and union-tagged by modality
     "q155_contamination_report" -> {
-      import PipelineQueries.{shinglesSql, sigBucketsSql}
-      import Round7Queries.winnowFpCtes
+      import Corpus.{shinglesSql, sigBucketsSql}
+      import Text.winnowFpCtes
       s"""WITH train AS (SELECT doc_id, text FROM documents),
          |ev AS (
          |  SELECT doc_id + 5000000 AS doc_id, text FROM documents
@@ -372,7 +363,7 @@ object Round9bQueries {
          |spanm AS (SELECT b AS eval_id,
          |    CAST(COUNT(*) AS BIGINT) AS n_matches
          |  FROM spanp GROUP BY 1),
-         |${Round7Queries.imageDhCtes("i")},
+         |${Media.imageDhCtes("i")},
          |bandsi AS (
          |  SELECT rid, dhash, bb.band,
          |    (dhash >> (bb.band * 14)) & 16383 AS v
@@ -386,7 +377,7 @@ object Round9bQueries {
          |imgm AS (SELECT b AS eval_id,
          |    CAST(COUNT(*) AS BIGINT) AS n_matches
          |  FROM imgp WHERE bit_count(xor(ha, hb)) <= 6 GROUP BY 1),
-         |${Round8Queries.audioFpCtesSql},
+         |${Media.audioFpCtesSql},
          |bandsa AS (
          |  SELECT rid, afp, bb.band, (afp >> (bb.band * 13)) & 8191 AS v
          |  FROM fp, (SELECT unnest(generate_series(0, 3)) AS band) bb),
@@ -426,28 +417,28 @@ object Round9bQueries {
          |          ${graft.functions.PortableHash
                       .hash60BaseSql("vec_id::VARCHAR")} AS h
          |        FROM qz))
-         |  WHERE cluster < ${ExtendedQueries.IvfC}),
-         |${(1 to ExtendedQueries.IvfIters)
-             .map(ExtendedQueries.ivfStepSql).mkString(",\n")},
+         |  WHERE cluster < ${Vectors.IvfC}),
+         |${(1 to Vectors.IvfIters)
+             .map(Vectors.ivfStepSql).mkString(",\n")},
          |semtb AS (SELECT vec_id, e, cluster AS bucket,
-         |    ${semDot("e", "e")} AS nrm FROM (
+         |    ${Vectors.dotSql("e", "e")} AS nrm FROM (
          |  SELECT z.vec_id, z.e, c.cluster,
          |    ROW_NUMBER() OVER (PARTITION BY z.vec_id
-         |      ORDER BY ${semDist("z.qd", "c.cent")} ASC, c.cluster ASC)
+         |      ORDER BY ${Vectors.distSql("z.qd", "c.cent")} ASC, c.cluster ASC)
          |      AS rn
-         |  FROM qz z CROSS JOIN c${ExtendedQueries.IvfIters} c)
+         |  FROM qz z CROSS JOIN c${Vectors.IvfIters} c)
          |  WHERE rn = 1),
          |semeb AS (SELECT vec_id, e, cluster AS bucket,
-         |    ${semDot("e", "e")} AS nrm FROM (
+         |    ${Vectors.dotSql("e", "e")} AS nrm FROM (
          |  SELECT z.vec_id, z.e, c.cluster,
          |    ROW_NUMBER() OVER (PARTITION BY z.vec_id
-         |      ORDER BY ${semDist("z.qd", "c.cent")} ASC, c.cluster ASC)
+         |      ORDER BY ${Vectors.distSql("z.qd", "c.cent")} ASC, c.cluster ASC)
          |      AS rn
-         |  FROM qze z CROSS JOIN c${ExtendedQueries.IvfIters} c)
+         |  FROM qze z CROSS JOIN c${Vectors.IvfIters} c)
          |  WHERE rn <= 2),
          |semm AS (SELECT eval_id, CAST(COUNT(*) AS BIGINT) AS n_matches
          |  FROM (SELECT t.vec_id AS train_id, v.vec_id AS eval_id,
-         |      ${semDot("t.e", "v.e")} / sqrt(t.nrm * v.nrm) AS cosine
+         |      ${Vectors.dotSql("t.e", "v.e")} / sqrt(t.nrm * v.nrm) AS cosine
          |    FROM semtb t JOIN semeb v ON t.bucket = v.bucket)
          |  WHERE cosine >= 0.99::DOUBLE GROUP BY 1)
          |SELECT modality, eval_id, n_matches FROM (
@@ -465,8 +456,6 @@ object Round9bQueries {
     // threshold + md5 hash gate — every division a nonnegative
     // integer floor (`//` == Spark `div`)
     "q154_dsir_resample" -> {
-      val toksExpr =
-        """list_filter(string_split_regex(text, '\s+'), x -> x <> '')"""
       val gateSql = graft.functions.PortableHash
         .hash60BaseSql("'dsir:' || sc.doc_id::VARCHAR")
       s"""WITH ts AS (SELECT doc_id, source, $toksExpr AS t FROM documents),
@@ -476,7 +465,7 @@ object Round9bQueries {
          |  SELECT doc_id, source, t[i] || ' ' || t[i+1] AS feat
          |  FROM ts, UNNEST(generate_series(1, len(t) - 1)) AS u(i)),
          |feats AS (SELECT doc_id, source,
-         |    ${graft.text.TextClassify.bucketSql("feat", DsirDim)} AS bucket
+         |    ${graft.text.TextClassify.bucketSql("feat", Corpus.DsirDim)} AS bucket
          |  FROM occ),
          |rn AS (SELECT bucket, CAST(COUNT(*) AS BIGINT) AS c
          |  FROM feats GROUP BY bucket),
@@ -487,7 +476,7 @@ object Round9bQueries {
          |    LEAST(${graft.pipeline.Dsir.RatioCap},
          |      ((COALESCE(t.c, 0) + 1) * ${graft.pipeline.Dsir.Scale})
          |        // (COALESCE(r.c, 0) + 1)) AS ratio
-         |  FROM range($DsirDim) g
+         |  FROM range(${Corpus.DsirDim}) g
          |  LEFT JOIN rn r ON r.bucket = g.range
          |  LEFT JOIN tn t ON t.bucket = g.range),
          |sc AS (SELECT f.doc_id,
@@ -500,10 +489,10 @@ object Round9bQueries {
          |    CAST(SUM(imp) AS BIGINT) // CAST(COUNT(*) AS BIGINT))
          |  AS mean_imp FROM sc)
          |SELECT sc.doc_id, sc.n_feats, sc.imp,
-         |  CAST(LEAST(1000000, ($DsirKeepPpm * sc.imp) // m.mean_imp)
+         |  CAST(LEAST(1000000, (${Corpus.DsirKeepPpm} * sc.imp) // m.mean_imp)
          |    AS BIGINT) AS threshold,
          |  (($gateSql % 1000000)
-         |    < LEAST(1000000, ($DsirKeepPpm * sc.imp) // m.mean_imp))
+         |    < LEAST(1000000, (${Corpus.DsirKeepPpm} * sc.imp) // m.mean_imp))
          |    AS keep
          |FROM sc, m
          |ORDER BY sc.doc_id""".stripMargin
@@ -514,8 +503,6 @@ object Round9bQueries {
     // target slice, the mean normalizer from the seed's own importance
     // rows, thresholds applied to every document
     "q156_dsir_fit_apply" -> {
-      val toksExpr =
-        """list_filter(string_split_regex(text, '\s+'), x -> x <> '')"""
       val gateSql = graft.functions.PortableHash
         .hash60BaseSql("'dsir:' || sc.doc_id::VARCHAR")
       s"""WITH ts AS (SELECT doc_id, source, $toksExpr AS t FROM documents),
@@ -525,7 +512,7 @@ object Round9bQueries {
          |  SELECT doc_id, source, t[i] || ' ' || t[i+1] AS feat
          |  FROM ts, UNNEST(generate_series(1, len(t) - 1)) AS u(i)),
          |feats AS (SELECT doc_id, source,
-         |    ${graft.text.TextClassify.bucketSql("feat", DsirDim)} AS bucket
+         |    ${graft.text.TextClassify.bucketSql("feat", Corpus.DsirDim)} AS bucket
          |  FROM occ),
          |rn AS (SELECT bucket, CAST(COUNT(*) AS BIGINT) AS c
          |  FROM feats WHERE doc_id % 3 = 0 GROUP BY bucket),
@@ -536,7 +523,7 @@ object Round9bQueries {
          |    LEAST(${graft.pipeline.Dsir.RatioCap},
          |      ((COALESCE(t.c, 0) + 1) * ${graft.pipeline.Dsir.Scale})
          |        // (COALESCE(r.c, 0) + 1)) AS ratio
-         |  FROM range($DsirDim) g
+         |  FROM range(${Corpus.DsirDim}) g
          |  LEFT JOIN rn r ON r.bucket = g.range
          |  LEFT JOIN tn t ON t.bucket = g.range),
          |sc AS (SELECT f.doc_id,
@@ -549,10 +536,10 @@ object Round9bQueries {
          |    CAST(SUM(imp) AS BIGINT) // CAST(COUNT(*) AS BIGINT))
          |  AS mean_imp FROM sc WHERE doc_id % 3 = 0)
          |SELECT sc.doc_id, sc.n_feats, sc.imp,
-         |  CAST(LEAST(1000000, ($DsirKeepPpm * sc.imp) // m.mean_imp)
+         |  CAST(LEAST(1000000, (${Corpus.DsirKeepPpm} * sc.imp) // m.mean_imp)
          |    AS BIGINT) AS threshold,
          |  (($gateSql % 1000000)
-         |    < LEAST(1000000, ($DsirKeepPpm * sc.imp) // m.mean_imp))
+         |    < LEAST(1000000, (${Corpus.DsirKeepPpm} * sc.imp) // m.mean_imp))
          |    AS keep
          |FROM sc, m
          |ORDER BY sc.doc_id""".stripMargin
@@ -562,10 +549,7 @@ object Round9bQueries {
     // centrality cosine against each member's own centroid and the
     // per-cluster ROW_NUMBER cut
     "q157_diversity_sample" -> {
-      val dotSql = Round5Queries.dotSql
-      def dist(v: String, cent: String) =
-        s"-2.0 * ${dotSql(v, cent)} + ${dotSql(cent, cent)}"
-      val iters = ExtendedQueries.IvfIters
+      val iters = Vectors.IvfIters
       s"""WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS e
          |  FROM embeddings),
          |qz AS (SELECT vec_id, e,
@@ -580,16 +564,16 @@ object Round9bQueries {
          |          ${graft.functions.PortableHash
                       .hash60BaseSql("vec_id::VARCHAR")} AS h
          |        FROM qz))
-         |  WHERE cluster < ${ExtendedQueries.IvfC}),
-         |${(1 to iters).map(ExtendedQueries.ivfStepSql).mkString(",\n")},
+         |  WHERE cluster < ${Vectors.IvfC}),
+         |${(1 to iters).map(Vectors.ivfStepSql).mkString(",\n")},
          |cb AS (SELECT vec_id, e, cluster AS bucket FROM (
          |  SELECT z.vec_id, z.e, c.cluster,
          |    ROW_NUMBER() OVER (PARTITION BY z.vec_id
-         |      ORDER BY ${dist("z.qd", "c.cent")} ASC, c.cluster ASC) AS rn
+         |      ORDER BY ${Vectors.distSql("z.qd", "c.cent")} ASC, c.cluster ASC) AS rn
          |  FROM qz z CROSS JOIN c$iters c) WHERE rn = 1),
          |sc AS (SELECT b.vec_id, b.bucket,
-         |    ${dotSql("b.e", "c.cent")}
-         |      / sqrt(${dotSql("b.e", "b.e")} * ${dotSql("c.cent", "c.cent")})
+         |    ${Vectors.dotSql("b.e", "c.cent")}
+         |      / sqrt(${Vectors.dotSql("b.e", "b.e")} * ${Vectors.dotSql("c.cent", "c.cent")})
          |      AS centrality
          |  FROM cb b JOIN c$iters c ON c.cluster = b.bucket)
          |SELECT vec_id, bucket, centrality, rank FROM (

@@ -1,6 +1,9 @@
 package graft.queries
 
 import graft.functions.PortableHash
+import graft.queries.fixtures.Corpus.toksExpr
+import graft.queries.fixtures.Vectors.{distSql, dotSql}
+import graft.queries.fixtures.{Corpus, Streams, Text, Vectors}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,17 +14,7 @@ import org.apache.spark.sql.functions._
   * matchers (q137/q138) cannot see. Every query replays bit-identically
   * in the DuckDB oracle.
   */
-object Round9cQueries {
-
-  private val toksExpr =
-    """list_filter(string_split_regex(text, '\s+'), x -> x <> '')"""
-
-  private val dotSql = (a: String, b: String) =>
-    s"list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i]), (x,y) -> x+y)"
-
-  /** L2 rank key (|v|² row-constant term dropped) — q42's formulation. */
-  private def distSql(v: String, cent: String): String =
-    s"-2.0 * ${dotSql(v, cent)} + ${dotSql(cent, cent)}"
+object Round9cQueries extends QueryGroup {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -47,8 +40,8 @@ object Round9cQueries {
             col("embedding")))
       graft.similarity.Similarity.crossCorpusSemanticMatches(
         train, "vec_id", evalDf, "vec_id", "embedding",
-        threshold = 0.99, c = ExtendedQueries.IvfC,
-        iters = ExtendedQueries.IvfIters, nProbe = 2)
+        threshold = 0.99, c = Vectors.IvfC,
+        iters = Vectors.IvfIters, nProbe = 2)
         .orderBy(col("train_id"), col("eval_id"))
     }),
 
@@ -70,17 +63,17 @@ object Round9cQueries {
         docs.filter(col("doc_id") % 3 === 0)
           .select(col("doc_id"), col("text")),
         docs.filter(srcnum % 4 === 1).select(col("doc_id"), col("text")),
-        "doc_id", "text", dim = Round9bQueries.DsirDim,
-        keepPpm = Round9bQueries.DsirKeepPpm)
+        "doc_id", "text", dim = Corpus.DsirDim,
+        keepPpm = Corpus.DsirKeepPpm)
       val cfg = graft.pipeline.CorpusPipeline.Config(dsir = Some(model))
       val stage = Files.createTempDirectory("graft-q159-landing").toString
       val cp = Files.createTempDirectory("graft-q159-cp").toString
-      PipelineQueries.corpus(s, dir).repartition(3, col("doc_id"))
+      Corpus.corpus(s, dir).repartition(3, col("doc_id"))
         .write.mode("overwrite").parquet(stage)
       val stream = graft.streaming.StreamFold.files(s, stage)
       val (_, gated, pairs) = graft.streaming.StreamingCorpus.ingest(
         stream, "doc_id", "text", cp, cfg)
-      Round7bQueries.rmTree(stage); Round7bQueries.rmTree(cp)
+      Streams.rmTree(stage); Streams.rmTree(cp)
       graft.streaming.StreamingCorpus
         .resolveSurvivors(gated, pairs, "doc_id", "text", cfg)
         .select(col("doc_id"), col("quality"), col("lang_pred"))
@@ -149,7 +142,7 @@ object Round9cQueries {
           docs.filter(srcnum % 2 === 1).select(col("doc_id"), col("text")),
           "doc_id", "text")
         .orderBy(col("doc_id")).localCheckpoint()
-      Round7bQueries.rmTree(stage); Round7bQueries.rmTree(cp)
+      Streams.rmTree(stage); Streams.rmTree(cp)
       out
     }),
 
@@ -165,7 +158,7 @@ object Round9cQueries {
     "q161_tokenizer_fertility" -> ((s, dir) => {
       val docs = Tables(s, dir, "documents")
       val merges = graft.text.Bpe.trainMerges(docs, "text",
-        Round7Queries.BpeK)
+        Text.BpeK)
       graft.text.Bpe.fertilityReport(
           docs.select(col("source"), col("text")), "source", "text",
           merges)
@@ -194,7 +187,7 @@ object Round9cQueries {
       graft.quality.Drift.sourceDrift(
           planted.filter(expr("(doc_id div 20) % 2") === 0),
           planted.filter(expr("(doc_id div 20) % 2") === 1),
-          "doc_id", "source", "text", dim = Round9bQueries.DsirDim)
+          "doc_id", "source", "text", dim = Corpus.DsirDim)
         .orderBy(col("source"))
     }),
 
@@ -216,7 +209,7 @@ object Round9cQueries {
               .otherwise(lit(""))).as("text"))
       val base = graft.quality.Drift.bucketCounts(
         planted.filter(expr("(doc_id div 20) % 2") === 0),
-        "doc_id", "source", "text", Round9bQueries.DsirDim)
+        "doc_id", "source", "text", Corpus.DsirDim)
         .localCheckpoint()
       val stage = Files.createTempDirectory("graft-q164-landing").toString
       val cp = Files.createTempDirectory("graft-q164-cp").toString
@@ -225,10 +218,10 @@ object Round9cQueries {
         .write.mode("overwrite").parquet(stage)
       val stream = graft.streaming.StreamFold.files(s, stage)
       val cur = graft.streaming.StreamingDrift.ingest(stream, "doc_id",
-        "source", "text", cp, Round9bQueries.DsirDim)
+        "source", "text", cp, Corpus.DsirDim)
       val out = graft.quality.Drift.fromCounts(base, cur, "source")
         .orderBy(col("source")).localCheckpoint()
-      Round7bQueries.rmTree(stage); Round7bQueries.rmTree(cp)
+      Streams.rmTree(stage); Streams.rmTree(cp)
       out
     }),
 
@@ -297,49 +290,6 @@ object Round9cQueries {
     })
   )
 
-  /** q160's full replay — also q166/q167's oracle VERBATIM (the
-    * merged count store over any batching must reproduce every
-    * score).
-    */
-  private[queries] val backoff160Sql: String =
-    s"""WITH d AS (SELECT doc_id,
-         |    CAST(substr(source, 4) AS INT) AS srcnum,
-         |    $toksExpr AS t
-         |  FROM documents),
-         |trp AS (SELECT doc_id, t FROM d WHERE srcnum % 2 = 0),
-         |scp AS (SELECT doc_id, t FROM d WHERE srcnum % 2 = 1),
-         |c3 AS (SELECT t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS g3,
-         |    CAST(COUNT(*) AS BIGINT) AS ct
-         |  FROM trp, UNNEST(generate_series(1, len(t) - 2)) AS u(i)
-         |  GROUP BY g3),
-         |c2 AS (SELECT t[i] || ' ' || t[i+1] AS g2,
-         |    CAST(COUNT(*) AS BIGINT) AS c2
-         |  FROM trp, UNNEST(generate_series(1, len(t) - 1)) AS u(i)
-         |  GROUP BY g2),
-         |c1 AS (SELECT t[i] AS g1, CAST(COUNT(*) AS BIGINT) AS c1
-         |  FROM trp, UNNEST(generate_series(1, len(t))) AS u(i)
-         |  GROUP BY g1),
-         |n AS (SELECT CAST(SUM(len(t)) AS BIGINT) AS n_total FROM trp),
-         |pos AS (SELECT doc_id, t[i] AS p2, t[i+1] AS p1, t[i+2] AS w
-         |  FROM scp, UNNEST(generate_series(1, len(t) - 2)) AS u(i)),
-         |sc AS (SELECT p.doc_id,
-         |    CASE WHEN t3.ct IS NOT NULL THEN t3.ct * 1000000 // cbp.c2
-         |      WHEN bb.c2 IS NOT NULL THEN bb.c2 * 400000 // up.c1
-         |      WHEN uw.c1 IS NOT NULL THEN uw.c1 * 160000 // n.n_total
-         |      ELSE CAST(0 AS BIGINT) END AS score
-         |  FROM pos p
-         |  LEFT JOIN c3 t3 ON t3.g3 = p.p2 || ' ' || p.p1 || ' ' || p.w
-         |  LEFT JOIN c2 cbp ON cbp.g2 = p.p2 || ' ' || p.p1
-         |  LEFT JOIN c2 bb ON bb.g2 = p.p1 || ' ' || p.w
-         |  LEFT JOIN c1 up ON up.g1 = p.p1
-         |  LEFT JOIN c1 uw ON uw.g1 = p.w
-         |  CROSS JOIN n)
-         |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_ctx,
-         |  CAST(SUM(score) AS BIGINT) AS score_sum,
-         |  CAST(CAST(SUM(score) AS BIGINT) AS DOUBLE)
-         |    / CAST(CAST(COUNT(*) AS BIGINT) AS DOUBLE) AS score_mean
-         |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin
-
   /** q163's full replay — also q164's oracle VERBATIM (streamed
     * partial-histogram folding must reproduce the one-shot report).
     */
@@ -359,7 +309,7 @@ object Round9cQueries {
        |  FROM ts, UNNEST(generate_series(1, len(t) - 1)) AS u(i)),
        |feats AS (SELECT doc_id, source,
        |    ${graft.text.TextClassify.bucketSql("feat",
-              Round9bQueries.DsirDim)} AS bucket
+              Corpus.DsirDim)} AS bucket
        |  FROM occ),
        |ha AS (SELECT source, bucket, CAST(COUNT(*) AS BIGINT) AS ca
        |  FROM feats WHERE (doc_id // 20) % 2 = 0 GROUP BY 1, 2),
@@ -415,21 +365,21 @@ object Round9cQueries {
          |  FROM (SELECT vec_id, qd,
          |          ${PortableHash.hash60BaseSql("vec_id::VARCHAR")} AS h
          |        FROM qz))
-         |  WHERE cluster < ${ExtendedQueries.IvfC}),
-         |${(1 to ExtendedQueries.IvfIters)
-             .map(ExtendedQueries.ivfStepSql).mkString(",\n")},
+         |  WHERE cluster < ${Vectors.IvfC}),
+         |${(1 to Vectors.IvfIters)
+             .map(Vectors.ivfStepSql).mkString(",\n")},
          |tb AS (SELECT vec_id, e, cluster AS bucket,
          |    ${dotSql("e", "e")} AS nrm FROM (
          |  SELECT z.vec_id, z.e, c.cluster,
          |    ROW_NUMBER() OVER (PARTITION BY z.vec_id
          |      ORDER BY ${distSql("z.qd", "c.cent")} ASC, c.cluster ASC) AS rn
-         |  FROM qz z CROSS JOIN c${ExtendedQueries.IvfIters} c) WHERE rn = 1),
+         |  FROM qz z CROSS JOIN c${Vectors.IvfIters} c) WHERE rn = 1),
          |eb AS (SELECT vec_id, e, cluster AS bucket,
          |    ${dotSql("e", "e")} AS nrm FROM (
          |  SELECT z.vec_id, z.e, c.cluster,
          |    ROW_NUMBER() OVER (PARTITION BY z.vec_id
          |      ORDER BY ${distSql("z.qd", "c.cent")} ASC, c.cluster ASC) AS rn
-         |  FROM qze z CROSS JOIN c${ExtendedQueries.IvfIters} c) WHERE rn <= 2)
+         |  FROM qze z CROSS JOIN c${Vectors.IvfIters} c) WHERE rn <= 2)
          |SELECT train_id, eval_id, cosine FROM (
          |  SELECT t.vec_id AS train_id, v.vec_id AS eval_id,
          |    ${dotSql("t.e", "v.e")} / sqrt(t.nrm * v.nrm) AS cosine
@@ -444,12 +394,11 @@ object Round9cQueries {
     // score the PLANTED corpus's gate survivors against the frozen
     // model.
     "q159_stream_dsir_clean" -> {
-      import PipelineQueries.{corpusSql, langCaseSql, langHitColsSql,
-        minhashCtesSql, pairsCteSql, qualityExprSql, shinglesSql}
+      import Corpus.corpusSql
       val gateSql = PortableHash
         .hash60BaseSql("'dsir:' || g2.doc_id::VARCHAR")
-      val dim = Round9bQueries.DsirDim
-      val keepPpm = Round9bQueries.DsirKeepPpm
+      val dim = Corpus.DsirDim
+      val keepPpm = Corpus.DsirKeepPpm
       s"""WITH RECURSIVE $corpusSql,
          |ts AS (SELECT doc_id, source, $toksExpr AS t FROM documents),
          |occ AS (
@@ -480,17 +429,7 @@ object Round9cQueries {
          |m AS (SELECT GREATEST(1,
          |    CAST(SUM(imp) AS BIGINT) // CAST(COUNT(*) AS BIGINT))
          |  AS mean_imp FROM scseed),
-         |scored AS (
-         |  SELECT doc_id, text,
-         |  $qualityExprSql AS quality,
-         |$langHitColsSql
-         |  FROM corpus),
-         |gated AS (
-         |  SELECT doc_id, text, quality,
-         |  $langCaseSql AS lang_pred
-         |  FROM scored),
-         |g2 AS (SELECT doc_id, text, quality, lang_pred FROM gated
-         |       WHERE quality >= 0.7::DOUBLE AND lang_pred = 'en'),
+         |${Corpus.rowGatesSql("corpus")},
          |ts2 AS (SELECT doc_id, $toksExpr AS t FROM g2),
          |occ2 AS (
          |  SELECT doc_id, unnest(t) AS feat FROM ts2
@@ -509,49 +448,27 @@ object Round9cQueries {
          |  JOIN sc2 ON sc2.doc_id = g2.doc_id CROSS JOIN m
          |  WHERE ($gateSql % 1000000)
          |    < LEAST(1000000, ($keepPpm * sc2.imp) // m.mean_imp)),
-         |fp AS (SELECT doc_id, text, quality, lang_pred,
-         |    md5(trim(regexp_replace(regexp_replace(lower(text),
-         |      '[^a-z0-9\\s]', '', 'g'), '\\s+', ' ', 'g'))) AS f
-         |  FROM g3),
-         |keep AS (SELECT min(doc_id) AS doc_id FROM fp GROUP BY f),
-         |ex AS (SELECT fp.* FROM fp WHERE fp.doc_id IN (SELECT doc_id FROM keep)),
-         |${shinglesSql("ex")},
-         |$minhashCtesSql,
-         |${pairsCteSql("0.5")},
-         |edges AS (
-         |  SELECT a AS src, b AS dst FROM pairs
-         |  UNION SELECT b, a FROM pairs),
-         |reach(node, lab) AS (
-         |  SELECT src, src FROM edges
-         |  UNION
-         |  SELECT e2.dst, r.lab FROM reach r JOIN edges e2 ON e2.src = r.node),
-         |losers AS (
-         |  SELECT node AS doc_id FROM reach
-         |  GROUP BY node HAVING node <> min(lab))
-         |SELECT e.doc_id, e.quality, e.lang_pred
-         |FROM ex e
-         |WHERE NOT EXISTS (SELECT 1 FROM losers l WHERE l.doc_id = e.doc_id)
-         |ORDER BY e.doc_id""".stripMargin
+         |${Corpus.cleanSurvivorsSql("g3")}""".stripMargin
     },
 
     // The same joins, counts, and backoff CASE as the engine; integer
     // sums BIGINT-cast (DuckDB SUM(int) -> HUGEINT), final mean = one
     // double division.
-    "q160_backoff_familiarity" -> backoff160Sql,
+    "q160_backoff_familiarity" -> Text.backoff160Sql,
 
     // q160's replay VERBATIM: batched count fitting must not change
     // a single score
-    "q166_incremental_backoff" -> backoff160Sql,
+    "q166_incremental_backoff" -> Text.backoff160Sql,
 
     // q160's replay VERBATIM again, under per-file batching
-    "q167_stream_backoff" -> backoff160Sql,
+    "q167_stream_backoff" -> Text.backoff160Sql,
 
     "q161_tokenizer_fertility" ->
-      s"""WITH ${Round7Queries.bpeCtes(Round7Queries.BpeK)},
+      s"""WITH ${Text.bpeCtes(Text.BpeK)},
          |ws AS (SELECT word,
          |    CAST(len(list_filter(string_split(seg, chr(31)),
          |      x -> x <> '')) AS BIGINT) AS n_sym
-         |  FROM w${Round7Queries.BpeK}),
+         |  FROM w${Text.BpeK}),
          |occ AS (SELECT source, unnest($toksExpr) AS word
          |  FROM documents),
          |per AS (SELECT occ.source,
@@ -576,74 +493,12 @@ object Round9cQueries {
     // reproduce the one-shot drift report
     "q164_stream_drift" -> drift163Sql,
 
-
-    "q169_funnel_report" -> {
-      import PipelineQueries.{langCaseSql, langHitColsSql,
-        minhashCtesSql, pairsCteSql, qualityExprSql, shinglesSql}
-      s"""WITH RECURSIVE corpus AS (
-         |  SELECT doc_id, source, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 1000000, source, text FROM documents
-         |  WHERE doc_id % 7 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 2000000, source, text || ' zz tail marker'
-         |  FROM documents WHERE doc_id % 11 = 0),
-         |scored AS (
-         |  SELECT doc_id, source, text,
-         |  $qualityExprSql AS quality,
-         |$langHitColsSql
-         |  FROM corpus),
-         |gated AS (
-         |  SELECT doc_id, source, text, quality,
-         |  $langCaseSql AS lang_pred
-         |  FROM scored),
-         |g2 AS (SELECT doc_id, source, text, quality, lang_pred
-         |  FROM gated
-         |  WHERE quality >= 0.7::DOUBLE AND lang_pred = 'en'),
-         |fp AS (SELECT doc_id, source, text,
-         |    md5(trim(regexp_replace(regexp_replace(lower(text),
-         |      '[^a-z0-9\\s]', '', 'g'), '\\s+', ' ', 'g'))) AS f
-         |  FROM g2),
-         |keep AS (SELECT min(doc_id) AS doc_id FROM fp GROUP BY f),
-         |ex AS (SELECT fp.* FROM fp
-         |  WHERE fp.doc_id IN (SELECT doc_id FROM keep)),
-         |${shinglesSql("ex")},
-         |$minhashCtesSql,
-         |${pairsCteSql("0.5")},
-         |edges AS (
-         |  SELECT a AS src, b AS dst FROM pairs
-         |  UNION SELECT b, a FROM pairs),
-         |reach(node, lab) AS (
-         |  SELECT src, src FROM edges
-         |  UNION
-         |  SELECT e2.dst, r.lab FROM reach r JOIN edges e2 ON e2.src = r.node),
-         |losers AS (
-         |  SELECT node AS doc_id FROM reach
-         |  GROUP BY node HAVING node <> min(lab)),
-         |fin AS (SELECT e.doc_id, e.source FROM ex e
-         |  WHERE NOT EXISTS (SELECT 1 FROM losers l
-         |                    WHERE l.doc_id = e.doc_id)),
-         |n0 AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_in
-         |  FROM corpus GROUP BY 1),
-         |n1 AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_gated
-         |  FROM g2 GROUP BY 1),
-         |n2 AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_exact
-         |  FROM ex GROUP BY 1),
-         |n3 AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_final
-         |  FROM fin GROUP BY 1)
-         |SELECT n0.source, n0.n_in,
-         |  COALESCE(n1.n_gated, 0) AS n_gated,
-         |  COALESCE(n2.n_exact, 0) AS n_exact,
-         |  COALESCE(n3.n_final, 0) AS n_final
-         |FROM n0
-         |LEFT JOIN n1 ON n1.source = n0.source
-         |LEFT JOIN n2 ON n2.source = n0.source
-         |LEFT JOIN n3 ON n3.source = n0.source
-         |ORDER BY n0.source""".stripMargin
-    },
+    "q169_funnel_report" ->
+      s"""WITH RECURSIVE ${Corpus.sourceCorpusSql},
+         |${Corpus.funnelReportSql("corpus")}""".stripMargin,
 
     "q168_curriculum" -> {
-      import PipelineQueries.qualityExprSql
+      import Corpus.qualityExprSql
       s"""WITH scored AS (SELECT doc_id, $qualityExprSql AS quality
          |  FROM documents),
          |b AS (SELECT doc_id,

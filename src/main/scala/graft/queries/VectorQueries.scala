@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.multimodal.Multimodal
+import graft.queries.fixtures.Vectors.dotSql
 import graft.similarity.Similarity
 import graft.sources.Tables
 import graft.streaming.Sessionize
@@ -13,7 +14,7 @@ import org.apache.spark.sql.types.DecimalType
   * DuckDB because both sides compute strict left folds over the same
   * doubles (see [[graft.similarity.Similarity]]).
   */
-object VectorQueries {
+object VectorQueries extends QueryGroup {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Brute-force cosine top-10 for 5 query vectors — the ANN baseline.
@@ -148,9 +149,6 @@ object VectorQueries {
         .orderBy(col("window_start"), col("event_type"))
     })
   )
-
-  private val dotSql = (a: String, b: String) =>
-    s"list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i]), (x,y) -> x+y)"
 
   /** q27's dense hyperplanes as the md5-derived INTEGERS k = h % 1e6;
     * both engines then compute component = k/2e6 - 0.25 with the same

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.SparkEntry
+import graft.queries.fixtures.{Crawl, Media, Scd, Streams, Text}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -166,7 +167,7 @@ object ScaleProbe {
       val stag = c.select(col("c_custkey"), col("c_name"),
         when(col("c_custkey") % 3 === 0, col("c_acctbal") + 50)
           .otherwise(col("c_acctbal")).as("c_acctbal"), col("c_mktsegment"))
-      graft.scd.ScdMerge.merge(prod, stag, graft.queries.ScdQueries.schema,
+      graft.scd.ScdMerge.merge(prod, stag, Scd.schema,
         graft.scd.MergeOptions(
           java.sql.Timestamp.valueOf("2024-07-01 00:00:00"))).count()
     }
@@ -590,7 +591,7 @@ object ScaleProbe {
         "shards", seqLen = 2048, numGroups = 8)
       val (bin, _) = graft.pipeline.Packing.readShards(cat, "shards")
       val n = bin.filter(col("n_tok") > 0).count()
-      graft.queries.Round7bQueries.rmTree(root)
+      Streams.rmTree(root)
       n
     }
 
@@ -650,7 +651,7 @@ object ScaleProbe {
       val n = graft.similarity.VectorStore.servedTopK(dec,
           dec.filter(col("vec_id") < 16), "vec_id", "qvec", k = 10)
         .filter(col("qcos") >= -2.0).count()
-      graft.queries.Round7bQueries.rmTree(root)
+      Streams.rmTree(root)
       n
     }
 
@@ -706,8 +707,8 @@ object ScaleProbe {
       val stream = graft.streaming.StreamFold.files(spark, stage)
       val (_, gated, pairs) = graft.streaming.StreamingCorpus.ingest(
         stream, "doc_id", "text", cp, cfg)
-      graft.queries.Round7bQueries.rmTree(stage)
-      graft.queries.Round7bQueries.rmTree(cp)
+      Streams.rmTree(stage)
+      Streams.rmTree(cp)
       graft.streaming.StreamingCorpus
         .resolveSurvivors(gated, pairs, "doc_id", "text", cfg)
         .filter(length(col("text")) >= 0 && col("quality") >= -1.0)
@@ -718,8 +719,8 @@ object ScaleProbe {
     // the per-doc reassembly aggregation; cost must track pages.
     def htmlEx(d: DataFrame): Long =
       graft.text.Html.extract(
-          d.select(col("doc_id"), graft.queries.Round11Queries
-            .wrapCol(col("doc_id"), col("text")).as("html")),
+          d.select(col("doc_id"),
+            Crawl.wrapCol(col("doc_id"), col("text")).as("html")),
           "doc_id", "html")
         .filter(col("n_kept") >= 0 && length(col("text")) >= 0)
         .count()
@@ -739,8 +740,7 @@ object ScaleProbe {
       implicit val sp: SparkSession = spark
       val media = d.select(col("doc_id")).as[Long].mapPartitions(_.map {
         id =>
-          val img = graft.queries.Round11Queries
-            .jpegPlantImage(id, altCell = false)
+          val img = Media.jpegPlantImage(id, altCell = false)
           val p = graft.multimodal.Jpeg.encode(img)
           graft.multimodal.Multimodal.BmpMedia(id, p, p.length)
       })
@@ -1001,8 +1001,7 @@ object ScaleProbe {
       implicit val sp: SparkSession = spark
       val media = d.select(col("doc_id")).as[Long].mapPartitions(_.map {
         id =>
-          val img = graft.queries.Round16Queries
-            .colorPlantImage(id, altCell = false)
+          val img = Media.colorPlantImage(id, altCell = false)
           val p = graft.multimodal.Jpeg.encodeColor(img,
             subsample = id % 2 == 0)
           graft.multimodal.Multimodal.BmpMedia(id, p, p.length)
@@ -1114,8 +1113,7 @@ object ScaleProbe {
       implicit val sp: SparkSession = spark
       val media = d.select(col("doc_id")).as[Long].mapPartitions(_.map {
         id =>
-          val img = graft.queries.Round16Queries
-            .colorPlantImage(id, altCell = false)
+          val img = Media.colorPlantImage(id, altCell = false)
           val p = graft.multimodal.Jpeg.encodeColor(img,
             subsample = id % 2 == 0, restartInterval = 3)
           graft.multimodal.Multimodal.BmpMedia(id, p, p.length)
@@ -1133,8 +1131,7 @@ object ScaleProbe {
       implicit val sp: SparkSession = spark
       val media = d.select(col("doc_id")).as[Long].mapPartitions(_.map {
         id =>
-          val img = graft.queries.Round16Queries
-            .colorPlantImage(id, altCell = false)
+          val img = Media.colorPlantImage(id, altCell = false)
           val p = graft.multimodal.Jpeg.encodeProgressive(img,
             color = true, sa = id % 2 == 0)
           graft.multimodal.Multimodal.BmpMedia(id, p, p.length)
@@ -1177,7 +1174,7 @@ object ScaleProbe {
         .as[(Long, String)].mapPartitions(_.map { case (id, text) =>
           val cls = ((id / 20) % 5).toInt
           val (_, jdk, plant, aliases) =
-            graft.queries.Round18Queries.CjkClasses(cls)
+            Text.CjkClasses(cls)
           val alias = aliases(((id / 100) % aliases.length).toInt)
           val planted = text.map(c => if (c == 'a') plant.charAt(0)
             else if (c == 'e') plant.charAt(1) else c)
@@ -1200,8 +1197,7 @@ object ScaleProbe {
       implicit val sp: SparkSession = spark
       val media = d.select(col("doc_id")).as[Long].mapPartitions(_.map {
         id =>
-          val img = graft.queries.Round18Queries
-            .plantImage422(id, altCell = false)
+          val img = Media.plantImage422(id, altCell = false)
           val p = graft.multimodal.Jpeg.encodeColor422(img,
             restartInterval = if (id % 2 == 0) 3 else 0)
           graft.multimodal.Multimodal.BmpMedia(id, p, p.length)

@@ -82,7 +82,10 @@ class CatalogSpec extends SparkSpec {
     val threads = (1 to 4).map { i =>
       new Thread(() => (1 to 3).foreach { j =>
         try cat.overwrite("t", Seq((i * 10L + j, "x")).toDF("id", "v"))
-        catch { case _: IllegalStateException => () }
+        catch {
+          case e: IllegalStateException
+              if e.getMessage.contains("lost the version race") => ()
+        }
       })
     }
     threads.foreach(_.start())
@@ -95,6 +98,22 @@ class CatalogSpec extends SparkSpec {
       .filter(_.startsWith("v_")).map(_.stripPrefix("v_").toLong).max
     assert(cat.currentVersion("t") === Some(maxClaimed))
     assert(cat.table("t").count() === 1)
+  }
+
+  test("threads of one JVM queue for the pointer lock instead of throwing") {
+    val cat = freshCatalog()
+    cat.create("t", Seq((1L, "a")).toDF("id", "v").schema)
+    val failures = new java.util.concurrent.atomic.AtomicInteger
+    val threads = (0 until 4).map { i =>
+      new Thread(() => (1 to 200).foreach { j =>
+        try cat.swapPointerMonotonic("t", 4L * j + i, s"t$i-$j")
+        catch { case _: Throwable => failures.incrementAndGet() }
+      })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    assert(failures.get == 0)
+    assert(cat.currentVersion("t") === Some(4L * 200 + 3))
   }
 
   test("SCD merge reads its own table and publishes back (self-overwrite)") {

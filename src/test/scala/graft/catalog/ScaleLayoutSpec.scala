@@ -101,7 +101,7 @@ class ScaleLayoutSpec extends SparkSpec {
       // neither side broadcasts)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      val merged = graft.queries.ScdQueries.queries("q89_scd_bucketed")(
+      val merged = graft.SparkEntry.queries("q89_scd_bucketed")(
         spark, "/root/testdata/sf0.001")
       merged.collect() // AQE finalizes on the SAME Dataset
       val plan = merged.queryExecution.executedPlan.toString

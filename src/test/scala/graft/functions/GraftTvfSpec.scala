@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
+import graft.queries.fixtures.Crawl
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -395,7 +396,7 @@ class GraftTvfSpec extends SparkSpec {
 
   test("graft_html_extract TVF == Html.extract") {
     val pages = docs.select($"doc_id",
-      graft.queries.Round11Queries.wrapCol($"doc_id", $"text").as("html"))
+      Crawl.wrapCol($"doc_id", $"text").as("html"))
     pages.createOrReplaceTempView("tvf_pages")
     val sql = spark.sql(
       "SELECT * FROM graft_html_extract('tvf_pages', 'doc_id', 'html') " +
@@ -407,7 +408,7 @@ class GraftTvfSpec extends SparkSpec {
   }
 
   test("graft_links / graft_pagerank / graft_paragraph_scrub TVFs == API") {
-    val pages = graft.queries.Round11bQueries
+    val pages = Crawl
       .linkedPages(spark, "/root/testdata/sf0.001")
     pages.createOrReplaceTempView("tvf_lpages")
     val sqlLinks = spark.sql(
@@ -436,7 +437,7 @@ class GraftTvfSpec extends SparkSpec {
   }
 
   test("graft_resolved_links / graft_pagerank_converged TVFs == API") {
-    val pages = graft.queries.Round13Queries
+    val pages = Crawl
       .realisticPages(spark, "/root/testdata/sf0.001")
     pages.createOrReplaceTempView("tvf_rpages")
     val sqlRl = spark.sql(
@@ -446,7 +447,7 @@ class GraftTvfSpec extends SparkSpec {
         "url", "html").orderBy(col("src"), col("url"))
     assert(rows(sqlRl).nonEmpty && rows(sqlRl) == rows(apiRl))
 
-    val lpages = graft.queries.Round11bQueries
+    val lpages = Crawl
       .linkedPages(spark, "/root/testdata/sf0.001")
     lpages.createOrReplaceTempView("tvf_cpages")
     val sqlPc = spark.sql(
@@ -461,7 +462,7 @@ class GraftTvfSpec extends SparkSpec {
   }
 
   test("graft_trustrank / graft_url_decisions TVFs == API") {
-    val pages = graft.queries.Round11bQueries
+    val pages = Crawl
       .linkedPages(spark, "/root/testdata/sf0.001")
     pages.createOrReplaceTempView("tvf_tpages")
     pages.filter(col("doc_id") % 20 < 5)

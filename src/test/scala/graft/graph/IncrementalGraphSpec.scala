@@ -1,6 +1,7 @@
 package graft.graph
 
 import graft.SparkSpec
+import graft.queries.fixtures.Streams
 import org.apache.spark.sql.functions._
 
 class IncrementalGraphSpec extends SparkSpec {
@@ -48,7 +49,7 @@ class IncrementalGraphSpec extends SparkSpec {
     val loaded = IncrementalGraph.load(cat, "g")
     assert(loaded.edges.as[(Long, Long)].collect().toSet ==
       idx.edges.as[(Long, Long)].collect().toSet)
-    graft.queries.Round7bQueries.rmTree(root)
+    Streams.rmTree(root)
   }
 
   test("rank over accumulated graph equals one-shot pageRank") {

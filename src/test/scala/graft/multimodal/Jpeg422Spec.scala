@@ -1,7 +1,7 @@
 package graft.multimodal
 
 import graft.SparkSpec
-import graft.queries.Round18Queries
+import graft.queries.fixtures.Media
 
 /** 4:2:2 chroma subsampling (luma 2×1): decode parity with 4:4:4 on
   * uniform-chroma images, dHash identity with the lossless BMP twin,
@@ -12,7 +12,7 @@ class Jpeg422Spec extends SparkSpec {
   test("uniform-chroma image decodes IDENTICALLY via 4:2:2 and 4:4:4 " +
       "(constant chroma planes box-average exactly)") {
     Seq(4L, 14L, 24L).foreach { id =>
-      val img = Round18Queries.plantImage422(id, altCell = false)
+      val img = Media.plantImage422(id, altCell = false)
       val via444 = Jpeg.decode(Jpeg.encodeColor(img, subsample = false))
       val via422 = Jpeg.decode(Jpeg.encodeColor422(img))
       assert(java.util.Arrays.equals(via422.rgb, via444.rgb), s"id $id")
@@ -22,7 +22,7 @@ class Jpeg422Spec extends SparkSpec {
   test("4:2:2 dHash equals the lossless BMP twin's; DRI stream " +
       "decodes byte-identical to the DRI-free 4:2:2 stream") {
     Seq(4L, 34L, 54L).foreach { id =>
-      val img = Round18Queries.plantImage422(id, altCell = false)
+      val img = Media.plantImage422(id, altCell = false)
       val viaBmp = Perceptual.dHash(Bmp.decode(Bmp.encode(img)))
       val via422 = Perceptual.dHash(Jpeg.decode(Jpeg.encodeColor422(img)))
       assert(via422 == viaBmp, s"id $id dHash diverged")
@@ -53,7 +53,7 @@ class Jpeg422Spec extends SparkSpec {
   test("4:1:1 and vertical-only 1x2 (4:4:0) are live: dHash equals " +
       "the lossless BMP twin's") {
     Seq(4L, 34L).foreach { id =>
-      val img = Round18Queries.plantImage422(id, altCell = false)
+      val img = Media.plantImage422(id, altCell = false)
       val viaBmp = Perceptual.dHash(Bmp.decode(Bmp.encode(img)))
       val via411 = Perceptual.dHash(Jpeg.decode(Jpeg.encodeColor411(img)))
       assert(via411 == viaBmp, s"id $id 4:1:1 dHash diverged")
@@ -63,7 +63,7 @@ class Jpeg422Spec extends SparkSpec {
   }
 
   test("luma sampling layouts outside codec scope (3x1, 2x4) stay loud") {
-    val img = Round18Queries.plantImage422(4L, altCell = false)
+    val img = Media.plantImage422(4L, altCell = false)
     val bytes = Jpeg.encodeColor422(img)
     // patch the SOF0 luma sampling byte (component 1's H<<4|V)
     val sof = (0 until bytes.length - 1).find(i =>

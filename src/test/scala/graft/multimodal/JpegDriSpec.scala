@@ -1,7 +1,7 @@
 package graft.multimodal
 
 import graft.SparkSpec
-import graft.queries.Round16Queries
+import graft.queries.fixtures.Media
 
 /** JPEG restart markers (DRI/RSTn): interval framing, predictor
   * resets, the RST modulo wrap, and loudness when framing breaks.
@@ -46,7 +46,7 @@ class JpegDriSpec extends SparkSpec {
   test("color 4:4:4 and 4:2:0 with DRI are pixel-identical to " +
       "without") {
     Seq(6L, 36L).foreach { id =>
-      val img = Round16Queries.colorPlantImage(id, altCell = false)
+      val img = Media.colorPlantImage(id, altCell = false)
       for (sub <- Seq(false, true)) {
         val plain = Jpeg.decode(Jpeg.encodeColor(img, sub))
         val dri = Jpeg.decode(Jpeg.encodeColor(img, sub,
@@ -70,7 +70,7 @@ class JpegDriSpec extends SparkSpec {
 
   test("dHash of a DRI color JPEG equals its lossless BMP twin") {
     Seq(6L, 16L, 26L).foreach { id =>
-      val img = Round16Queries.colorPlantImage(id, altCell = false)
+      val img = Media.colorPlantImage(id, altCell = false)
       val viaBmp = Perceptual.dHash(Bmp.decode(Bmp.encode(img)))
       val viaDri = Perceptual.dHash(
         Jpeg.decode(Jpeg.encodeColor(img, subsample = true,

@@ -1,7 +1,7 @@
 package graft.multimodal
 
 import graft.SparkSpec
-import graft.queries.Round16Queries
+import graft.queries.fixtures.Media
 
 /** Progressive JPEG (SOF2, spectral selection): multi-scan decode ==
   * the baseline stream's pixels exactly, EOBRUN paths, and loud scope
@@ -45,7 +45,7 @@ class JpegProgressiveSpec extends SparkSpec {
   test("color 4:4:4 progressive decodes pixel-identical to baseline " +
       "4:4:4") {
     Seq(7L, 17L).foreach { id =>
-      val img = Round16Queries.colorPlantImage(id, altCell = false)
+      val img = Media.colorPlantImage(id, altCell = false)
       val base = Jpeg.decode(Jpeg.encodeColor(img, subsample = false))
       val prog = Jpeg.decode(Jpeg.encodeProgressive(img, color = true))
       assert(java.util.Arrays.equals(prog.rgb, base.rgb), s"id $id")
@@ -78,7 +78,7 @@ class JpegProgressiveSpec extends SparkSpec {
   test("SUCCESSIVE APPROXIMATION: color 4:4:4 pixel-identical to " +
       "baseline 4:4:4") {
     Seq(7L, 17L, 37L).foreach { id =>
-      val img = Round16Queries.colorPlantImage(id, altCell = false)
+      val img = Media.colorPlantImage(id, altCell = false)
       val base = Jpeg.decode(Jpeg.encodeColor(img, subsample = false))
       val sa = Jpeg.decode(
         Jpeg.encodeProgressive(img, color = true, sa = true))
@@ -145,7 +145,7 @@ class JpegProgressiveSpec extends SparkSpec {
 
   test("dHash of a progressive color JPEG equals its lossless BMP twin") {
     Seq(7L, 27L, 47L).foreach { id =>
-      val img = Round16Queries.colorPlantImage(id, altCell = false)
+      val img = Media.colorPlantImage(id, altCell = false)
       val viaBmp = Perceptual.dHash(Bmp.decode(Bmp.encode(img)))
       val viaProg = Perceptual.dHash(
         Jpeg.decode(Jpeg.encodeProgressive(img, color = true)))

@@ -1,7 +1,7 @@
 package graft.multimodal
 
 import graft.SparkSpec
-import graft.queries.Round11Queries
+import graft.queries.fixtures.Media
 
 /** Baseline-grayscale JPEG codec: marker structure, huffman round
   * trips, the DCT error bound that the q201 margin argument rests on,
@@ -40,7 +40,7 @@ class JpegSpec extends SparkSpec {
 
   test("md5-planted q201 images roundtrip within 3 and keep gray") {
     Seq(0L, 10L, 30L, 50L).foreach { id =>
-      val img = Round11Queries.jpegPlantImage(id, altCell = false)
+      val img = Media.jpegPlantImage(id, altCell = false)
       val back = Jpeg.decode(Jpeg.encode(img))
       assert(maxErr(img, back) <= 3, s"id $id error too large")
       back.rgb.grouped(3).foreach(t => assert(t(0) == t(1) && t(1) == t(2)))
@@ -56,7 +56,7 @@ class JpegSpec extends SparkSpec {
 
   test("dHash of JPEG-decoded plant equals its lossless BMP twin") {
     Seq(0L, 30L, 60L, 90L).foreach { id =>
-      val img = Round11Queries.jpegPlantImage(id, altCell = false)
+      val img = Media.jpegPlantImage(id, altCell = false)
       val viaJpeg = Perceptual.dHash(Jpeg.decode(Jpeg.encode(img)))
       val viaBmp = Perceptual.dHash(Bmp.decode(Bmp.encode(img)))
       assert(viaJpeg == viaBmp, s"dHash drifted under JPEG for id $id")
@@ -64,7 +64,7 @@ class JpegSpec extends SparkSpec {
   }
 
   test("magic sniffing routes JPEG through the shared image door") {
-    val img = Round11Queries.jpegPlantImage(20L, altCell = false)
+    val img = Media.jpegPlantImage(20L, altCell = false)
     val payload = Jpeg.encode(img)
     val dec = Multimodal.decodeImage(payload)
     assert(dec.width == 64 && dec.height == 64)

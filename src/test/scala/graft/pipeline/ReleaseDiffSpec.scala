@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import graft.queries.fixtures.Streams
 import org.apache.spark.sql.functions._
 
 /** Release-over-release diff: op classification on synthetic manifests,
@@ -45,6 +46,6 @@ class ReleaseDiffSpec extends SparkSpec {
     // s0: doc 1 removed (-10 tok), doc 2 split moved (0 tok delta)
     // s1: doc 3 added (+7 tok)
     assert(sum == Map("s0" -> (0L, 1L, 1L, -10L), "s1" -> (1L, 0L, 0L, 7L)))
-    graft.queries.Round7bQueries.rmTree(root)
+    Streams.rmTree(root)
   }
 }

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import graft.SparkSpec
 import graft.catalog.ParquetCatalog
 import graft.functions.TokenBinary
+import graft.queries.fixtures.Streams
 import graft.sources.Tables
 import graft.text.TextAnalysis
 import org.apache.spark.sql.Row
@@ -98,7 +99,7 @@ class ShardExportSpec extends SparkSpec {
         g -> rs.sortBy(_._2).flatMap(_._3).toSeq
       }
     assert(tapes == expected)
-    graft.queries.Round7bQueries.rmTree(root)
+    Streams.rmTree(root)
   }
 
   test("appendShards: batched ingest == one-shot export over the union") {
@@ -134,8 +135,8 @@ class ShardExportSpec extends SparkSpec {
     Packing.appendShards("doc_id", stream(b1), catInc, "fresh",
       seqLen = SeqLen, numGroups = Groups)
     assert(catInc.exists("fresh_bin") && catInc.exists("fresh_idx"))
-    graft.queries.Round7bQueries.rmTree(rootInc)
-    graft.queries.Round7bQueries.rmTree(rootOne)
+    Streams.rmTree(rootInc)
+    Streams.rmTree(rootOne)
   }
 
   test("reserveUnk + unkId: OOV encodes as the reserved id, never -1; " +
@@ -174,7 +175,7 @@ class ShardExportSpec extends SparkSpec {
         seqLen = SeqLen, numGroups = 1,
         vocabIds = Some(reserved), unkId = Some(-1))
     }
-    graft.queries.Round7bQueries.rmTree(root)
+    Streams.rmTree(root)
   }
 
   test("export republish is atomic: a second export advances the version") {
@@ -195,6 +196,6 @@ class ShardExportSpec extends SparkSpec {
     assert(cat.tableAsOfVersion("t_idx",
         cat.currentVersion("t_idx").get - 1)
       .select(col("doc_id")).distinct().count() < nDocs)
-    graft.queries.Round7bQueries.rmTree(root)
+    Streams.rmTree(root)
   }
 }

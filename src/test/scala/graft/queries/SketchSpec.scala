@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
 class SketchSpec extends SparkSpec {
 
   test("q29 KMV cardinality within 20% of exact; median inside range") {
-    val rows = CoreQueries.queries("q29_sketches")(
+    val rows = graft.SparkEntry.queries("q29_sketches")(
       spark, "/root/testdata/sf0.01").collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -50,9 +50,9 @@ class SketchSpec extends SparkSpec {
   }
 
   test("sketches are deterministic run-to-run") {
-    val a = CoreQueries.queries("q29_sketches")(
+    val a = graft.SparkEntry.queries("q29_sketches")(
       spark, "/root/testdata/sf0.001").collect().map(_.toSeq).toSet
-    val b = CoreQueries.queries("q29_sketches")(
+    val b = graft.SparkEntry.queries("q29_sketches")(
       spark, "/root/testdata/sf0.001").collect().map(_.toSeq).toSet
     assert(a === b)
   }

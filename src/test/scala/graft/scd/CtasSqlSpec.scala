@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import graft.SparkSpec
 import graft.catalog.ParquetCatalog
+import graft.queries.fixtures.Streams
 import org.apache.spark.sql.functions._
 
 /** CTAS + INSERT INTO/OVERWRITE … SELECT through the catalog version
@@ -39,7 +40,7 @@ class CtasSqlSpec extends SparkSpec {
       Set((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")))
     assert(cat.tableAsOfVersion("t", 0).count() == 2)
     assert(cat.tableAsOfVersion("t", 1).count() == 3)
-    graft.queries.Round7bQueries.rmTree(root)
+    Streams.rmTree(root)
   }
 
   test("catalog-first resolution: the SELECT reads a CATALOG table; " +
@@ -56,7 +57,7 @@ class CtasSqlSpec extends SparkSpec {
       "INSERT OVERWRITE t2 SELECT id + 1, v FROM stage")
     assert(rows(cat, "t2") == Set((11L, "x"), (12L, "y")))
     assert(cat.tableAsOfVersion("t2", 0).count() == 2) // snapshot kept
-    graft.queries.Round7bQueries.rmTree(root)
+    Streams.rmTree(root)
   }
 
   test("named column list fills unnamed target columns with NULL; " +
@@ -77,7 +78,7 @@ class CtasSqlSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](CtasSql.execute(spark,
       cat, "INSERT INTO t3 BY NAME SELECT 4 AS id, 'd' AS v"))
     assert(e.getMessage.contains("exact column set"))
-    graft.queries.Round7bQueries.rmTree(root)
+    Streams.rmTree(root)
   }
 
   test("loud misuse: CTAS on an existing table (IF NOT EXISTS is a " +
@@ -98,6 +99,6 @@ class CtasSqlSpec extends SparkSpec {
       "INSERT INTO t4 (id, nope) SELECT id, v FROM ctas_src4"))
     intercept[IllegalArgumentException](CtasSql.execute(spark, cat,
       "INSERT INTO missing SELECT * FROM ctas_src4"))
-    graft.queries.Round7bQueries.rmTree(root)
+    Streams.rmTree(root)
   }
 }

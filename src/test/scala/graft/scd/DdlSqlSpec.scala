@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import graft.SparkSpec
 import graft.catalog.ParquetCatalog
+import graft.queries.fixtures.Streams
 import org.apache.spark.sql.functions._
 
 /** ALTER TABLE ADD COLUMN through the catalog version chain: widened
@@ -39,7 +40,7 @@ class DdlSqlSpec extends SparkSpec {
       col("score").isNull).count() == 3)
     // the pre-alter version still reads under its ORIGINAL schema
     assert(cat.tableAsOfVersion("t", v0).columns.toSeq == Seq("id", "v"))
-    graft.queries.Round7bQueries.rmTree(root)
+    Streams.rmTree(root)
   }
 
   test("DEFAULT literal fills existing rows; UPDATE can then reassign") {
@@ -54,7 +55,7 @@ class DdlSqlSpec extends SparkSpec {
     assert(cat.table("t").orderBy(col("id"))
       .select(col("score")).as[Long].collect().toSeq ==
       Seq(7L, 20L, 30L))
-    graft.queries.Round7bQueries.rmTree(root)
+    Streams.rmTree(root)
   }
 
   test("RENAME COLUMN: values and position stable, next version, " +
@@ -76,7 +77,7 @@ class DdlSqlSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       DdlSql.execute(spark, cat, "ALTER TABLE t RENAME COLUMN nope TO x")
     }
-    graft.queries.Round7bQueries.rmTree(root)
+    Streams.rmTree(root)
   }
 
   test("DROP COLUMN: projects away as the next version; IF EXISTS " +
@@ -99,7 +100,7 @@ class DdlSqlSpec extends SparkSpec {
     intercept[IllegalArgumentException] { // last column must survive
       DdlSql.execute(spark, cat, "ALTER TABLE t DROP COLUMN id")
     }
-    graft.queries.Round7bQueries.rmTree(root)
+    Streams.rmTree(root)
   }
 
   test("ALTER COLUMN TYPE widens INT->BIGINT as the next version; " +
@@ -135,7 +136,7 @@ class DdlSqlSpec extends SparkSpec {
     intercept[IllegalArgumentException] { // missing column
       DdlSql.execute(spark, cat, "ALTER TABLE w ALTER COLUMN z TYPE BIGINT")
     }
-    graft.queries.Round7bQueries.rmTree(root)
+    Streams.rmTree(root)
   }
 
   test("duplicate, nested, positioned, and non-ALTER statements are " +
@@ -158,6 +159,6 @@ class DdlSqlSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       DdlSql.execute(spark, cat, "ALTER TABLE missing ADD COLUMN x INT")
     }
-    graft.queries.Round7bQueries.rmTree(root)
+    Streams.rmTree(root)
   }
 }

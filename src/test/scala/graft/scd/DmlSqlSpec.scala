@@ -2,6 +2,7 @@ package graft.scd
 
 import graft.SparkSpec
 import graft.catalog.ParquetCatalog
+import graft.queries.fixtures.Streams
 import org.apache.spark.sql.functions._
 
 /** DELETE FROM / UPDATE front door: ANSI predicate semantics (NULL
@@ -58,7 +59,7 @@ class DmlSqlSpec extends SparkSpec {
     assert(fin == Seq((1L, "A"), (3L, "C")))
     // pre-statement snapshot intact
     assert(cat.tableAsOfVersion("t", v0).count() == 4)
-    graft.queries.Round7bQueries.rmTree(root)
+    Streams.rmTree(root)
   }
 
   test("non-DML statements and unknown columns are rejected") {
@@ -87,6 +88,6 @@ class DmlSqlSpec extends SparkSpec {
       "DELETE FROM t WHERE id = 1", "id")
     assert(got.orderBy($"id").collect().map(_.getLong(0)).toSeq ==
       Seq(2L, 3L))
-    graft.queries.Round7bQueries.rmTree(root)
+    Streams.rmTree(root)
   }
 }

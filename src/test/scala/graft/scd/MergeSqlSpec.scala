@@ -2,7 +2,7 @@ package graft.scd
 
 import graft.SparkSpec
 import graft.catalog.ParquetCatalog
-import graft.queries.ScdQueries
+import graft.queries.fixtures.Scd
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -188,12 +188,12 @@ class MergeSqlSpec extends SparkSpec {
   test("SCD-2 recipe through the MERGE door equals ScdMerge on the q13 feed") {
     val dir = "/root/testdata/sf0.001"
     val viaMerge = MergeIntoScd(spark,
-      ScdQueries.production(spark, dir), ScdQueries.staging(spark, dir),
-      ScdQueries.schema, "2024-07-01 00:00:00", "2200-01-01 00:00:00")
+      Scd.production(spark, dir), Scd.staging(spark, dir),
+      Scd.schema, "2024-07-01 00:00:00", "2200-01-01 00:00:00")
     val viaEngine = ScdMerge.merge(
-      ScdQueries.production(spark, dir), ScdQueries.staging(spark, dir),
-      ScdQueries.schema,
-      MergeOptions(ScdQueries.asOf,
+      Scd.production(spark, dir), Scd.staging(spark, dir),
+      Scd.schema,
+      MergeOptions(Scd.asOf,
         highDate = java.sql.Timestamp.valueOf("2200-01-01 00:00:00")))
     assert(viaMerge.schema.map(f => (f.name, f.dataType)) ==
       viaEngine.schema.map(f => (f.name, f.dataType)))

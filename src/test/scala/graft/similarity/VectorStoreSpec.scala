@@ -2,6 +2,7 @@ package graft.similarity
 
 import graft.SparkSpec
 import graft.functions.VectorBinary
+import graft.queries.fixtures.Streams
 import org.apache.spark.sql.functions._
 
 /** Quantized-vector artifact: int8 codec round trip, loud rejection of
@@ -57,7 +58,7 @@ class VectorStoreSpec extends SparkSpec {
     assert(VectorStore.readVectors(cat, "vecs").count() == 1L)
     val v0 = cat.currentVersion("vecs").get
     assert(cat.tableAsOfVersion("vecs", v0 - 1).count() == 2L)
-    graft.queries.Round7bQueries.rmTree(root)
+    Streams.rmTree(root)
   }
 
   test("appendVectors: appended == one-shot under any batching; " +
@@ -84,8 +85,8 @@ class VectorStoreSpec extends SparkSpec {
     assert(collectArt(catA).nonEmpty)
     assert(collectArt(catA) == collectArt(catB),
       "appended artifact must be bit-equal to the one-shot export")
-    graft.queries.Round7bQueries.rmTree(rootA)
-    graft.queries.Round7bQueries.rmTree(rootB)
+    Streams.rmTree(rootA)
+    Streams.rmTree(rootB)
   }
 
   test("servedTopK from the artifact == quantizedTopK from the floats") {
@@ -105,6 +106,6 @@ class VectorStoreSpec extends SparkSpec {
         emb.filter(col("vec_id") < 10), emb, "vec_id", "embedding", k = 5)
       .orderBy(col("q_id"), col("rank")).collect().toSeq
     assert(served.nonEmpty && served == direct)
-    graft.queries.Round7bQueries.rmTree(root)
+    Streams.rmTree(root)
   }
 }

@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.functions.Gzip
+import graft.queries.fixtures.Streams
 import org.apache.spark.sql.functions._
 
 /** The binary HTTP transport layer: charset-parameterized bodies,
@@ -198,6 +199,6 @@ class HttpTransportSpec extends SparkSpec {
     assert(back.length == 1)
     assert(back(0).getString(0) == "http://a/1")
     assert(back(0).getAs[Array[Byte]](1).toSeq == payload.toSeq)
-    graft.queries.Round7bQueries.rmTree(dir)
+    Streams.rmTree(dir)
   }
 }

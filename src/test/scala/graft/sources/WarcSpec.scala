@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.SparkSpec
 import java.nio.charset.StandardCharsets.UTF_8
+import graft.queries.fixtures.Streams
 
 class WarcSpec extends SparkSpec {
   import spark.implicits._
@@ -48,7 +49,7 @@ class WarcSpec extends SparkSpec {
     assert(back == (1L to 37L)
       .map(i => (s"http://d${i % 3}.example.com/p/$i", s"body $i <p>x</p>"))
       .toSet)
-    graft.queries.Round7bQueries.rmTree(dir)
+    Streams.rmTree(dir)
   }
 
   test("segment names are deterministic; re-landing never duplicates") {
@@ -68,7 +69,7 @@ class WarcSpec extends SparkSpec {
     assert(names.forall(_.matches("segment-\\d{5}\\.warc")))
     assert(names.size <= 3) // one per non-empty partition, no UUID dups
     assert(Warc.readRecords(spark, dir).count() == 20L)
-    graft.queries.Round7bQueries.rmTree(dir)
+    Streams.rmTree(dir)
   }
 
   test("gzip segments roundtrip: per-record members, magic-byte " +
@@ -109,7 +110,7 @@ class WarcSpec extends SparkSpec {
     assert(back == (1L to 37L)
       .map(i => (s"http://d${i % 3}.example.com/p/$i", s"body $i <p>x</p>"))
       .toSet)
-    graft.queries.Round7bQueries.rmTree(dir)
+    Streams.rmTree(dir)
   }
 
   test("httpContentType strips parameters; httpLocation reads the " +

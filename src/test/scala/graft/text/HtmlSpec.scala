@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import graft.SparkSpec
 import graft.pipeline.CorpusPipeline
+import graft.queries.fixtures.Crawl
 import graft.sources.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -110,7 +111,7 @@ class HtmlSpec extends SparkSpec {
 
   private def wrapped: DataFrame =
     corpus.select(col("doc_id"),
-      graft.queries.Round11Queries.wrapCol(col("doc_id"), col("text"))
+      Crawl.wrapCol(col("doc_id"), col("text"))
         .as("text"))
 
   private def outSet(df: DataFrame): Set[(Long, Double, String)] =

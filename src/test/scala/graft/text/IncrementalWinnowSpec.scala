@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import graft.SparkSpec
 import graft.catalog.ParquetCatalog
+import graft.queries.fixtures.Streams
 import graft.sources.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -85,6 +86,6 @@ class IncrementalWinnowSpec extends SparkSpec {
     val (_, pLoaded) = IncrementalWinnow.addBatch(loaded,
       corpus.filter(col("doc_id") % 2 =!= 0), "doc_id", "text")
     assert(rows(pLoaded) == rows(pLive))
-    graft.queries.Round7bQueries.rmTree(root)
+    Streams.rmTree(root)
   }
 }
