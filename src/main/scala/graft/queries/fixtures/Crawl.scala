@@ -76,7 +76,7 @@ object Crawl {
     "'d' || CAST(doc_id % 20 AS VARCHAR) || '.example.com'"
 
   /** [[docHostSql]] as a Column. */
-  private[queries] def docHost: Column =
+  private[graft] def docHost: Column =
     concat(lit("d"), (col("doc_id") % 20).cast("string"),
       lit(".example.com"))
 
@@ -91,7 +91,7 @@ object Crawl {
 
   private val refSeeds = Seq(71, 72, 73)
 
-  private[queries] def urlOf(t: Column): Column =
+  private[graft] def urlOf(t: Column): Column =
     concat(lit("http://d"), (t % 20).cast("string"),
       lit(".example.com/p/"), t.cast("string"))
 
@@ -386,7 +386,7 @@ object Crawl {
   private def recrawlDay0: Column = (col("doc_id") * 7) % 28 + 1
 
   /** `(url, lastmod)`: the parsed sitemap inventory over `docs`. */
-  private[queries] def recrawlInventory(docs: DataFrame): DataFrame = {
+  private[graft] def recrawlInventory(docs: DataFrame): DataFrame = {
     val t = col("doc_id")
     val dayN = recrawlDay0 + when(t % 3 === 0, 1).otherwise(0)
     val entries = docs.filter(expr("doc_id div 20") % 6 =!= 5)
@@ -400,16 +400,16 @@ object Crawl {
   }
 
   /** The `docs` rows the crawl state holds. */
-  private[queries] def recrawlKnown(docs: DataFrame): DataFrame =
+  private[graft] def recrawlKnown(docs: DataFrame): DataFrame =
     docs.filter(expr("doc_id div 20") % 5 =!= 4)
 
   /** A known doc's stored lastmod. */
-  private[queries] def storedLastmod: Column = recrawlDate(recrawlDay0)
+  private[graft] def storedLastmod: Column = recrawlDate(recrawlDay0)
 
   /** `(url, lastmod, dom)`: inventory urls that are new or fresher than
     * `state(url, stored_lastmod, ...)`.
     */
-  private[queries] def recrawlCandidates(inv: DataFrame,
+  private[graft] def recrawlCandidates(inv: DataFrame,
       state: DataFrame): DataFrame =
     inv.join(state, Seq("url"), "left")
       .filter(col("stored_lastmod").isNull ||
@@ -422,7 +422,7 @@ object Crawl {
     * denied), each with its host and politeness `slots` = 60 div
     * Crawl-delay.
     */
-  private[queries] def recrawlAllowed(s: SparkSession,
+  private[graft] def recrawlAllowed(s: SparkSession,
       cand: DataFrame): DataFrame = {
     import s.implicits._
     val robots = (0 until 20).map { k =>
@@ -445,7 +445,7 @@ object Crawl {
   }
 
   /** The freshest `slots` allowed urls per host, ranked `rk`. */
-  private[queries] def recrawlScheduled(allowed: DataFrame): DataFrame =
+  private[graft] def recrawlScheduled(allowed: DataFrame): DataFrame =
     allowed.withColumn("rk", row_number().over(
         Window.partitionBy(col("host"))
           .orderBy(col("lastmod").desc, col("url"))))

@@ -1,7 +1,8 @@
 package graft.queries.fixtures
 
+import graft.multimodal.{AudioFp, Wav}
 import graft.sources.Tables
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Media fixtures: planted image and audio corpora under every codec,
@@ -140,60 +141,67 @@ object Media {
        |FROM dh d LEFT JOIN labels l ON l.node = d.rid
        |ORDER BY d.rid""".stripMargin
 
-  /** q129/q131's planted clip corpus: per-doc WAV built from
-    * md5(text)-derived polynomial coefficients, plus re-encoded (%3),
-    * 2x-resampled (%5), and gain-doubled (%7) variants.
+  /** One WAV clip per `docs(doc_id, text)` row, keyed by its doc_id:
+    * 8 kHz mono, 512 + 8·(first md5 byte) samples. ScaleProbe's audio
+    * rows and [[audioMedia]] plant the same clips.
+    */
+  private[graft] def wavClips(s: SparkSession, docs: DataFrame)
+      : Dataset[AudioFp.AudioMedia] = {
+    import s.implicits._
+    val h = md5(col("text"))
+    // Clip samples are a quadratic-in-i polynomial mod 2^14 whose
+    // THREE coefficients come from the text's md5 — a 2^42 coefficient
+    // space, so clips never alias however many there are (an
+    // id-multiplier formula has only 2^14 slope classes — mod-2^14
+    // reduction aliases them at corpus scale, the audio analogue of
+    // q110's linear-ramp lesson; found when the 64x probe's replicas
+    // collided). Per-doc pseudo-noise, same derivation in the oracle.
+    def hx(from: Int, len: Int) =
+      conv(substring(h, from, len), 16, 10).cast("long")
+    def sample(s1: Long, s2: Long, s3: Long, i: Int): Short =
+      ((((s1 + 1) * (i + 3) + (s2 + 1) * i.toLong * (i + 7) + s3)
+        % 16384L) - 8192L).toShort
+    docs
+      .select(col("doc_id").cast("long").as("id"),
+        (hx(1, 2).cast("int") * 8 + 512).as("n"),
+        (hx(3, 4) % 16384L).as("s1"), (hx(7, 4) % 16384L).as("s2"),
+        (hx(11, 4) % 16384L).as("s3"))
+      .as[(Long, Int, Long, Long, Long)]
+      .mapPartitions(_.map { case (id, n, s1, s2, s3) =>
+        val p = Wav.encode(
+          Wav.Audio(8000, 1, Array.tabulate(n)(i => sample(s1, s2, s3, i))))
+        AudioFp.AudioMedia(id, p, p.length)
+      })
+  }
+
+  /** q129/q131's planted clip corpus: [[wavClips]] of every tenth doc,
+    * plus re-encoded (%3), 2x-resampled (%5), and gain-doubled (%7)
+    * variants.
     */
   private[queries] def audioMedia(s: SparkSession, dir: String) = {
     import s.implicits._
-    import graft.multimodal.{AudioFp, Wav}
-    {
-      val docs = Tables(s, dir, "documents").filter(col("doc_id") % 10 === 0)
-      val h = md5(col("text"))
-      // Clip samples are a quadratic-in-i polynomial mod 2^14 whose
-      // THREE coefficients come from the text's md5 — a 2^42 coefficient
-      // space, so clips never alias however many there are (an
-      // id-multiplier formula has only 2^14 slope classes — mod-2^14
-      // reduction aliases them at corpus scale, the audio analogue of
-      // q110's linear-ramp lesson; found when the 64x probe's replicas
-      // collided). Per-doc pseudo-noise, same derivation in the oracle.
-      def hx(from: Int, len: Int) =
-        conv(substring(h, from, len), 16, 10).cast("long")
-      def sample(s1: Long, s2: Long, s3: Long, i: Int): Short =
-        ((((s1 + 1) * (i + 3) + (s2 + 1) * i.toLong * (i + 7) + s3)
-          % 16384L) - 8192L).toShort
-      val base = docs
-        .select(col("doc_id").cast("long").as("id"),
-          (hx(1, 2).cast("int") * 8 + 512).as("n"),
-          (hx(3, 4) % 16384L).as("s1"), (hx(7, 4) % 16384L).as("s2"),
-          (hx(11, 4) % 16384L).as("s3"))
-        .as[(Long, Int, Long, Long, Long)]
-        .mapPartitions(_.map { case (id, n, s1, s2, s3) =>
-          val p = Wav.encode(
-            Wav.Audio(8000, 1, Array.tabulate(n)(i => sample(s1, s2, s3, i))))
-          AudioFp.AudioMedia(id, p, p.length)
-        })
-      val orig = base.mapPartitions(_.map(m => m.copy(doc_id = m.doc_id * 4)))
-      val reenc = base.filter((m: AudioFp.AudioMedia) => m.doc_id % 3 == 0)
-        .mapPartitions(_.map { m =>
-          val p = Wav.encode(Wav.decode(m.payload))
-          AudioFp.AudioMedia(m.doc_id * 4 + 1, p, p.length)
-        })
-      val resamp = base.filter((m: AudioFp.AudioMedia) => m.doc_id % 5 == 0)
-        .mapPartitions(_.map { m =>
-          val a = Wav.decode(m.payload)
-          val p = Wav.encode(Wav.resample(a, a.frames * 2))
-          AudioFp.AudioMedia(m.doc_id * 4 + 2, p, p.length)
-        })
-      val gained = base.filter((m: AudioFp.AudioMedia) => m.doc_id % 7 == 0)
-        .mapPartitions(_.map { m =>
-          val a = Wav.decode(m.payload)
-          val p = Wav.encode(a.copy(
-            samples = a.samples.map(v => (v * 2).toShort)))
-          AudioFp.AudioMedia(m.doc_id * 4 + 3, p, p.length)
-        })
-      orig.union(reenc).union(resamp).union(gained)
-    }
+    val base = wavClips(s,
+      Tables(s, dir, "documents").filter(col("doc_id") % 10 === 0))
+    val orig = base.mapPartitions(_.map(m => m.copy(doc_id = m.doc_id * 4)))
+    val reenc = base.filter((m: AudioFp.AudioMedia) => m.doc_id % 3 == 0)
+      .mapPartitions(_.map { m =>
+        val p = Wav.encode(Wav.decode(m.payload))
+        AudioFp.AudioMedia(m.doc_id * 4 + 1, p, p.length)
+      })
+    val resamp = base.filter((m: AudioFp.AudioMedia) => m.doc_id % 5 == 0)
+      .mapPartitions(_.map { m =>
+        val a = Wav.decode(m.payload)
+        val p = Wav.encode(Wav.resample(a, a.frames * 2))
+        AudioFp.AudioMedia(m.doc_id * 4 + 2, p, p.length)
+      })
+    val gained = base.filter((m: AudioFp.AudioMedia) => m.doc_id % 7 == 0)
+      .mapPartitions(_.map { m =>
+        val a = Wav.decode(m.payload)
+        val p = Wav.encode(a.copy(
+          samples = a.samples.map(v => (v * 2).toShort)))
+        AudioFp.AudioMedia(m.doc_id * 4 + 3, p, p.length)
+      })
+    orig.union(reenc).union(resamp).union(gained)
   }
 
   /** q129/q131/q132/q138 oracle prefix: the generative clip formulas

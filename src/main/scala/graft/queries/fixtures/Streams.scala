@@ -6,7 +6,7 @@ import graft.catalog.ParquetCatalog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-/** Streaming and staging fixtures: temp-directory removal, the
+/** Streaming and staging fixtures: temp directories, the
   * three-slice landing the inline doors drain and their no-batch error,
   * and the throwaway catalog the export queries publish through.
   */
@@ -46,17 +46,23 @@ object Streams {
   private[graft] def noBatch(query: String): IllegalStateException =
     new IllegalStateException(s"$query: stream delivered no micro-batch")
 
+  /** Runs `body` on a fresh `<prefix>…` temp directory and removes the
+    * directory afterwards, also when `body` throws.
+    */
+  private[graft] def withTempDir[A](prefix: String)(body: String => A): A = {
+    val dir = Files.createTempDirectory(prefix).toString
+    try body(dir) finally rmTree(dir)
+  }
+
   /** Runs `body` against a fresh ParquetCatalog in a `graft-<query>`
-    * temp directory, materializes its result and removes the directory.
+    * temp directory, materializes its result and removes the directory
+    * (also when `body` throws).
     */
   private[queries] def withCatalog(s: SparkSession, query: String)(
-      body: ParquetCatalog => DataFrame): DataFrame = {
-    val root = Files.createTempDirectory(s"graft-$query").toString
-    val cat = new ParquetCatalog(s, root)
-    val out = body(cat).localCheckpoint()
-    rmTree(root)
-    out
-  }
+      body: ParquetCatalog => DataFrame): DataFrame =
+    withTempDir(s"graft-$query") { root =>
+      body(new ParquetCatalog(s, root)).localCheckpoint()
+    }
 
   /** The checksum view of the `shards` token tape in `cat`: per
     * sequence its token count and position-weighted token sum.
