@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.catalog.{IndexStore, ParquetCatalog}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -81,40 +82,28 @@ object IncrementalLsh {
     (LshIndex(allBuckets, allSh), pairs)
   }
 
-  /** Remove documents from the index: one anti-join per stored
-    * relation, keyed on the doc id (shuffle carries only the delete
-    * set against each relation's key partitioning — at scale the
-    * delete side broadcasts). Deleting ids that were never indexed is
-    * a no-op; pairs already emitted for the deleted docs are history
-    * (an index removal does not retract past outputs, same as every
-    * LSM-style index).
+  /** Remove documents from the index: one keyed anti-join per stored
+    * relation ([[graft.catalog.IndexStore.delete]]). Deleting ids that
+    * were never indexed is a no-op; pairs already emitted for the
+    * deleted docs are history.
     */
-  def deleteDocs(idx: LshIndex, ids: DataFrame, idCol: String): LshIndex = {
-    val d = ids.select(col(idCol).as("doc")).distinct().localCheckpoint()
-    LshIndex(
-      idx.buckets.join(d, Seq("doc"), "left_anti").localCheckpoint(),
-      idx.shingles.join(d, Seq("doc"), "left_anti").localCheckpoint())
-  }
+  def delete(idx: LshIndex, ids: DataFrame, idCol: String): LshIndex =
+    LshIndex(IndexStore.delete(idx.buckets, "doc", ids, idCol),
+      IndexStore.delete(idx.shingles, "doc", ids, idCol))
 
   /** Publish the index as catalog tables `<name>_buckets` /
-    * `<name>_shingles` (atomic versioned overwrite per relation), then
-    * COMPACT the history: older versions are vacuumed so repeated
-    * saves keep exactly one on-disk version per relation — the ingest
-    * loop can checkpoint after every batch without version directories
-    * growing with batch count.
+    * `<name>_shingles` through [[graft.catalog.IndexStore.publish]]:
+    * with `vacuumHistory`, repeated saves keep exactly one on-disk
+    * version per relation, so the ingest loop can publish after every
+    * batch.
     */
-  def save(idx: LshIndex, catalog: graft.catalog.ParquetCatalog,
-      name: String, vacuumHistory: Boolean = true): Unit = {
-    Seq(s"${name}_buckets" -> idx.buckets,
-        s"${name}_shingles" -> idx.shingles).foreach { case (t, df) =>
-      if (!catalog.exists(t)) catalog.create(t, df.schema)
-      catalog.overwrite(t, df)
-      if (vacuumHistory) catalog.vacuum(t)
-    }
-  }
+  def save(idx: LshIndex, catalog: ParquetCatalog, name: String,
+      vacuumHistory: Boolean = true): Unit =
+    IndexStore.publish(catalog, vacuumHistory,
+      s"${name}_buckets" -> idx.buckets, s"${name}_shingles" -> idx.shingles)
 
   /** Rehydrate a [[save]]d index. */
-  def load(catalog: graft.catalog.ParquetCatalog, name: String): LshIndex =
+  def load(catalog: ParquetCatalog, name: String): LshIndex =
     LshIndex(catalog.table(s"${name}_buckets"),
       catalog.table(s"${name}_shingles"))
 

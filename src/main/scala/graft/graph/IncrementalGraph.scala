@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.catalog.{IndexStore, ParquetCatalog}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -43,23 +44,16 @@ object IncrementalGraph {
     * pointing AT them stay (other pages still link there — dangling
     * targets are normal in a crawl).
     */
-  def delete(idx: GraphIndex, ids: DataFrame, idCol: String): GraphIndex = {
-    val d = ids.select(col(idCol).as("src")).distinct().localCheckpoint()
-    GraphIndex(idx.edges.join(d, Seq("src"), "left_anti")
-      .localCheckpoint())
-  }
+  def delete(idx: GraphIndex, ids: DataFrame, idCol: String): GraphIndex =
+    GraphIndex(IndexStore.delete(idx.edges, "src", ids, idCol))
 
-  /** Publish the edge relation (atomic versioned overwrite). */
-  def save(idx: GraphIndex, catalog: graft.catalog.ParquetCatalog,
-      name: String, vacuumHistory: Boolean = true): Unit = {
-    val t = s"${name}_edges"
-    if (!catalog.exists(t)) catalog.create(t, idx.edges.schema)
-    catalog.overwrite(t, idx.edges)
-    if (vacuumHistory) catalog.vacuum(t)
-  }
+  /** Publish the edge relation as `<name>_edges`. */
+  def save(idx: GraphIndex, catalog: ParquetCatalog, name: String,
+      vacuumHistory: Boolean = true): Unit =
+    IndexStore.publish(catalog, vacuumHistory, s"${name}_edges" -> idx.edges)
 
   /** Rehydrate a [[save]]d graph. */
-  def load(catalog: graft.catalog.ParquetCatalog, name: String)
+  def load(catalog: ParquetCatalog, name: String)
       : GraphIndex =
     GraphIndex(catalog.table(s"${name}_edges"))
 

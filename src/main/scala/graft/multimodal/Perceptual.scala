@@ -85,6 +85,24 @@ object Perceptual {
       .toDF("id", "dhash")
   }
 
+  /** Explode `(idCol, hashCol)` rows into their disjoint band keys
+    * `bk = (band, v)`; the one band-key code of the one-shot operators
+    * here and of [[HammingIndex]].
+    */
+  private[multimodal] def bandKeys(hashes: DataFrame, idCol: String,
+      hashCol: String, bands: Int, hashBits: Int): DataFrame = {
+    require(bands > 0 && hashBits % bands == 0,
+      s"bands must divide $hashBits")
+    val bandBits = hashBits / bands
+    val keys = (0 until bands).map { bnd =>
+      struct(lit(bnd).as("band"),
+        shiftright(col(hashCol), bnd * bandBits)
+          .bitwiseAND(lit((1L << bandBits) - 1)).as("v"))
+    }
+    hashes.select(col(idCol), col(hashCol),
+      explode(array(keys: _*)).as("bk"))
+  }
+
   /** Banded candidate generation + exact hamming verify. Output:
     * (a, b) with a < b, distinct. Never all-pairs: candidates only
     * join within equal band values.
@@ -97,24 +115,10 @@ object Perceptual {
     * so candidate generation stays far below all-pairs. Same dial as
     * shuffle partitions: size to the corpus.
     */
-  private def bandKeyed(hashes: DataFrame, idCol: String, hashCol: String,
-      bands: Int, hashBits: Int): DataFrame = {
-    require(bands > 0 && hashBits % bands == 0,
-      s"bands must divide $hashBits")
-    val bandBits = hashBits / bands
-    val bandKeys = (0 until bands).map { bnd =>
-      struct(lit(bnd).as("band"),
-        shiftright(col(hashCol), bnd * bandBits)
-          .bitwiseAND(lit((1L << bandBits) - 1)).as("v"))
-    }
-    hashes.select(col(idCol), col(hashCol),
-      explode(array(bandKeys: _*)).as("bk"))
-  }
-
   def hammingPairs(hashes: DataFrame, idCol: String, hashCol: String,
       maxHamming: Int, bands: Int = 4,
       hashBits: Int = HashBits): DataFrame = {
-    val keyed = bandKeyed(hashes, idCol, hashCol, bands, hashBits)
+    val keyed = bandKeys(hashes, idCol, hashCol, bands, hashBits)
     val l = keyed.select(col(idCol).as("a"), col(hashCol).as("ha"),
       col("bk").as("kl"))
     val r = keyed.select(col(idCol).as("b"), col(hashCol).as("hb"),
@@ -136,9 +140,9 @@ object Perceptual {
   def crossMatches(train: DataFrame, eval: DataFrame, idCol: String,
       hashCol: String, maxHamming: Int, bands: Int = 4,
       hashBits: Int = HashBits): DataFrame = {
-    val l = bandKeyed(train, idCol, hashCol, bands, hashBits)
+    val l = bandKeys(train, idCol, hashCol, bands, hashBits)
       .select(col(idCol).as("a"), col(hashCol).as("ha"), col("bk").as("kl"))
-    val r = bandKeyed(eval, idCol, hashCol, bands, hashBits)
+    val r = bandKeys(eval, idCol, hashCol, bands, hashBits)
       .select(col(idCol).as("b"), col(hashCol).as("hb"), col("bk").as("kr"))
     l.join(r, col("kl") === col("kr"))
       .select(col("a"), col("b"), col("ha"), col("hb")).distinct()
@@ -154,9 +158,15 @@ object Perceptual {
     */
   def clusters(hashes: DataFrame, idCol: String, hashCol: String,
       maxHamming: Int, bands: Int = 4,
-      hashBits: Int = HashBits): DataFrame = {
-    val pairs = hammingPairs(hashes, idCol, hashCol, maxHamming, bands,
-      hashBits)
+      hashBits: Int = HashBits): DataFrame =
+    labelled(hashes, idCol, hashCol,
+      hammingPairs(hashes, idCol, hashCol, maxHamming, bands, hashBits))
+
+  /** [[clusters]]' labelling of `hashes` over given near-pairs; shared
+    * with [[HammingIndex]], which labels accumulated pairs.
+    */
+  private[multimodal] def labelled(hashes: DataFrame, idCol: String,
+      hashCol: String, pairs: DataFrame): DataFrame = {
     val labels = Dedup.connectedComponents(pairs)
       .select(col("doc_id").as("__cc_node"), col("cluster").as("__cc_lab"))
     hashes.join(labels, hashes(idCol) === col("__cc_node"), "left")

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.catalog.ParquetCatalog
 import graft.dedup.IncrementalLsh
-import graft.multimodal.{IncrementalAudio, IncrementalPerceptual}
+import graft.multimodal.HammingIndex
 import graft.similarity.IncrementalSemantic
 import graft.text.IncrementalWinnow
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -16,6 +16,10 @@ import org.apache.spark.sql.functions._
   * sweep no current or historical table version retains any purged
   * payload (the per-family `delete`s alone leave the old versions on
   * disk, which is exactly what a takedown must not do).
+  *
+  * The five families run through one loop over the shared keyed
+  * delete and publish ([[graft.catalog.IndexStore]]); the id set is
+  * materialized once for all of them.
   *
   * Contract per family (proved by PurgeSpec): post-purge ingest equals
   * rebuilding the index from scratch without the purged documents —
@@ -48,42 +52,41 @@ object Purge {
       image: Seq[String] = Nil): Report = {
     implicit val s: SparkSession = ids.sparkSession
     val d = ids.select(col(idCol)).distinct().localCheckpoint()
-    def nIds(df: DataFrame, key: String): Long =
-      df.select(col(key)).distinct().count()
-    var (nL, nS, nA, nW, nI) = (0L, 0L, 0L, 0L, 0L)
+    // one stored index of a family, by name: its ids before and after
+    // the delete, and the purged index's republish
+    type Sweep = String => (DataFrame, DataFrame, () => Unit)
+    def family[I](load: String => I)(delete: I => I, ids: I => DataFrame,
+        save: (I, String) => Unit): Sweep = { name =>
+      val idx = load(name)
+      val next = delete(idx)
+      (ids(idx), ids(next), () => save(next, name))
+    }
+    def media(m: HammingIndex.Medium): Sweep =
+      family(m.load(catalog, _))(m.delete(_, d, idCol),
+        _.hashes.select("id"), m.save(_, catalog, _))
+    val families: Seq[(Seq[String], Sweep)] = Seq(
+      lsh -> family(IncrementalLsh.load(catalog, _))(
+        IncrementalLsh.delete(_, d, idCol), _.shingles.select("doc"),
+        IncrementalLsh.save(_, catalog, _)),
+      semantic -> family(IncrementalSemantic.load(catalog, _))(
+        IncrementalSemantic.delete(_, d, idCol), _.members.select("id"),
+        IncrementalSemantic.save(_, catalog, _)),
+      audio -> media(HammingIndex.Audio),
+      winnow -> family(IncrementalWinnow.load(catalog, _))(
+        IncrementalWinnow.delete(_, d, idCol), _.fps.select("id"),
+        IncrementalWinnow.save(_, catalog, _)),
+      image -> media(HammingIndex.Image))
     // counts run BEFORE each save: the loaded relations read the
     // pre-purge version (still on disk at that point) and the purged
     // relations are localCheckpoint'd, so the save + vacuum that
     // follows invalidates neither
-    lsh.foreach { name =>
-      val idx = IncrementalLsh.load(catalog, name)
-      val next = IncrementalLsh.deleteDocs(idx, d, idCol)
-      nL += nIds(idx.shingles, "doc") - nIds(next.shingles, "doc")
-      IncrementalLsh.save(next, catalog, name)
-    }
-    semantic.foreach { name =>
-      val idx = IncrementalSemantic.load(catalog, name)
-      val next = IncrementalSemantic.delete(idx, d, idCol)
-      nS += nIds(idx.members, "id") - nIds(next.members, "id")
-      IncrementalSemantic.save(next, catalog, name)
-    }
-    audio.foreach { name =>
-      val idx = IncrementalAudio.load(catalog, name)
-      val next = IncrementalAudio.delete(idx, d, idCol)
-      nA += nIds(idx.hashes, "id") - nIds(next.hashes, "id")
-      IncrementalAudio.save(next, catalog, name)
-    }
-    winnow.foreach { name =>
-      val idx = IncrementalWinnow.load(catalog, name)
-      val next = IncrementalWinnow.delete(idx, d, idCol)
-      nW += nIds(idx.fps, "id") - nIds(next.fps, "id")
-      IncrementalWinnow.save(next, catalog, name)
-    }
-    image.foreach { name =>
-      val idx = IncrementalPerceptual.load(catalog, name)
-      val next = IncrementalPerceptual.delete(idx, d, idCol)
-      nI += nIds(idx.hashes, "id") - nIds(next.hashes, "id")
-      IncrementalPerceptual.save(next, catalog, name)
+    val Seq(nL, nS, nA, nW, nI) = families.map { case (names, sweep) =>
+      names.map { name =>
+        val (before, after, save) = sweep(name)
+        val removed = before.distinct().count() - after.distinct().count()
+        save()
+        removed
+      }.sum
     }
     Report(nL, nS, nA, nW, nI)
   }

@@ -133,20 +133,19 @@ object Round8Queries extends QueryGroup {
 
     // Incremental ingest for the audio index: q129's clip corpus
     // arrives in 3 batches (rid % 3), each folding into
-    // IncrementalAudio — only the batch is banded, candidates from
+    // HammingIndex.Audio — only the batch is banded, candidates from
     // new-vs-stored collisions, pairs exactly-once. The oracle is
     // q129's one-shot SQL VERBATIM: batched ingest must not change the
     // clustering.
     "q131_incremental_audio" -> ((s, dir) => {
       implicit val sp: SparkSession = s
-      import graft.multimodal.{AudioFp, IncrementalAudio}
+      import graft.multimodal.AudioFp
+      import graft.multimodal.HammingIndex.Audio
       val fps = AudioFp.fingerprints(audioMedia(s, dir)).localCheckpoint()
-      val (i0, p0) = IncrementalAudio.build(fps.filter(col("id") % 3 === 0))
-      val (i1, p1) = IncrementalAudio.addBatch(i0,
-        fps.filter(col("id") % 3 === 1))
-      val (i2, p2) = IncrementalAudio.addBatch(i1,
-        fps.filter(col("id") % 3 === 2))
-      IncrementalAudio.clusters(i2, p0.unionByName(p1).unionByName(p2))
+      val (i0, p0) = Audio.build(fps.filter(col("id") % 3 === 0))
+      val (i1, p1) = Audio.addBatch(i0, fps.filter(col("id") % 3 === 1))
+      val (i2, p2) = Audio.addBatch(i1, fps.filter(col("id") % 3 === 2))
+      Audio.clusters(i2, p0.unionByName(p1).unionByName(p2))
         .orderBy(col("id"))
     }),
 
@@ -154,23 +153,24 @@ object Round8Queries extends QueryGroup {
     // the ingest trilogy (q118 text, q119 embeddings): q129's WAV
     // payloads land as a 3-file staging directory, a file-source
     // stream drains it one file per micro-batch, each batch is decoded
-    // + fingerprinted once and folded into IncrementalAudio. Oracle =
+    // + fingerprinted once and folded into HammingIndex.Audio. Oracle =
     // q129's one-shot SQL VERBATIM while the stream's file batching
     // differs from q131's %3 batching — batching-independence is
     // hash-checked for real.
     "q132_stream_audio_ingest" -> ((s, dir) => {
       import java.nio.file.Files
       implicit val sp: SparkSession = s
-      import graft.multimodal.IncrementalAudio
+      import graft.multimodal.HammingIndex.Audio
       val stage = Files.createTempDirectory("graft-q132-landing").toString
       val cp = Files.createTempDirectory("graft-q132-cp").toString
       audioMedia(s, dir).toDF()
         .repartition(3, col("doc_id"))
         .write.mode("overwrite").parquet(stage)
       val stream = graft.streaming.StreamFold.files(s, stage)
-      val (idx, pairs) = graft.streaming.StreamingAudio.ingest(stream, cp)
+      val (idx, pairs) = graft.streaming.StreamingMedia.ingest(Audio)(stream,
+        cp)
       Streams.rmTree(stage); Streams.rmTree(cp)
-      IncrementalAudio.clusters(idx, pairs).orderBy(col("id"))
+      Audio.clusters(idx, pairs).orderBy(col("id"))
     }),
 
     // The corpus pipeline WITH the entropy band wired in (q46 = band

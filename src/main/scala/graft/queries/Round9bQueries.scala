@@ -28,39 +28,37 @@ object Round9bQueries extends QueryGroup {
     // (maxHamming 6 > the pigeonhole bound 3).
     "q151_incremental_image" -> ((s, dir) => {
       implicit val sp: SparkSession = s
-      import graft.multimodal.{IncrementalPerceptual, Perceptual}
+      import graft.multimodal.HammingIndex.Image
+      import graft.multimodal.Perceptual
       val fps = Perceptual.dHashes(Media.bmpMedia(s, dir))
         .localCheckpoint()
-      val (i0, p0) = IncrementalPerceptual.build(
-        fps.filter(col("id") % 3 === 0))
-      val (i1, p1) = IncrementalPerceptual.addBatch(i0,
-        fps.filter(col("id") % 3 === 1))
-      val (i2, p2) = IncrementalPerceptual.addBatch(i1,
-        fps.filter(col("id") % 3 === 2))
-      IncrementalPerceptual.clusters(i2,
-          p0.unionByName(p1).unionByName(p2))
+      val (i0, p0) = Image.build(fps.filter(col("id") % 3 === 0))
+      val (i1, p1) = Image.addBatch(i0, fps.filter(col("id") % 3 === 1))
+      val (i2, p2) = Image.addBatch(i1, fps.filter(col("id") % 3 === 2))
+      Image.clusters(i2, p0.unionByName(p1).unionByName(p2))
         .orderBy(col("id"))
     }),
 
     // ...and its STREAMING door (the fifth: text q118, embeddings
     // q119, audio q132, spans q150, images q152): BMP payloads land
     // as a 3-file staging directory, each micro-batch is decoded +
-    // dHashed once and folds into IncrementalPerceptual. Oracle =
+    // dHashed once and folds into HammingIndex.Image. Oracle =
     // q110's SQL VERBATIM while the stream's file batching differs
     // from q151's %3 — batching-independence hash-checked.
     "q152_stream_image_ingest" -> ((s, dir) => {
       import java.nio.file.Files
       implicit val sp: SparkSession = s
-      import graft.multimodal.IncrementalPerceptual
+      import graft.multimodal.HammingIndex.Image
       val stage = Files.createTempDirectory("graft-q152-landing").toString
       val cp = Files.createTempDirectory("graft-q152-cp").toString
       Media.bmpMedia(s, dir).toDF()
         .repartition(3, col("doc_id"))
         .write.mode("overwrite").parquet(stage)
       val stream = graft.streaming.StreamFold.files(s, stage)
-      val (idx, pairs) = graft.streaming.StreamingImage.ingest(stream, cp)
+      val (idx, pairs) = graft.streaming.StreamingMedia.ingest(Image)(stream,
+        cp)
       Streams.rmTree(stage); Streams.rmTree(cp)
-      IncrementalPerceptual.clusters(idx, pairs).orderBy(col("id"))
+      Image.clusters(idx, pairs).orderBy(col("id"))
     }),
 
     // The unified purge sweep over the two index families q139 didn't
@@ -77,7 +75,8 @@ object Round9bQueries extends QueryGroup {
     "q153_purge_media" -> ((s, dir) => {
       import java.nio.file.Files
       implicit val sp: SparkSession = s
-      import graft.multimodal.{IncrementalPerceptual, Perceptual}
+      import graft.multimodal.HammingIndex.Image
+      import graft.multimodal.Perceptual
       import graft.text.IncrementalWinnow
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"))
@@ -85,12 +84,11 @@ object Round9bQueries extends QueryGroup {
         .localCheckpoint()
       val (wIdx, _) = IncrementalWinnow.build(
         docs.filter(col("doc_id") % 4 =!= 1), "doc_id", "text")
-      val (iIdx, _) = IncrementalPerceptual.build(
-        hashes.filter(col("id") % 4 =!= 1))
+      val (iIdx, _) = Image.build(hashes.filter(col("id") % 4 =!= 1))
       val root = Files.createTempDirectory("graft-q153").toString
       val cat = new graft.catalog.ParquetCatalog(s, root)
       IncrementalWinnow.save(wIdx, cat, "w", vacuumHistory = false)
-      IncrementalPerceptual.save(iIdx, cat, "img", vacuumHistory = false)
+      Image.save(iIdx, cat, "img", vacuumHistory = false)
       val purgeIds = docs.select(col("doc_id").as("pid"))
         .unionByName(hashes.select(col("id").as("pid")))
         .filter(col("pid") % 3 === 0)
@@ -99,8 +97,7 @@ object Round9bQueries extends QueryGroup {
       val (_, wp) = IncrementalWinnow.addBatch(
         IncrementalWinnow.load(cat, "w"),
         docs.filter(col("doc_id") % 4 === 1), "doc_id", "text")
-      val (_, ip) = IncrementalPerceptual.addBatch(
-        IncrementalPerceptual.load(cat, "img"),
+      val (_, ip) = Image.addBatch(Image.load(cat, "img"),
         hashes.filter(col("id") % 4 === 1))
       val out = wp.select(lit("winnow").as("family"), col("a"), col("b"))
         .unionByName(ip.select(lit("image").as("family"), col("a"),

@@ -1,6 +1,6 @@
 package graft.similarity
 
-import graft.catalog.ParquetCatalog
+import graft.catalog.{IndexStore, ParquetCatalog}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -76,16 +76,15 @@ object IncrementalSemantic {
     (SemanticIndex(idx.centroids, all), pairs(nm, all, threshold))
   }
 
-  /** Remove embeddings from the index (one keyed anti-join; the delete
-    * set broadcasts at scale). Removals do not retract past outputs —
-    * the LSM contract, same as [[graft.dedup.IncrementalLsh.deleteDocs]].
+  /** Remove embeddings from the index (one keyed anti-join,
+    * [[graft.catalog.IndexStore.delete]]). Removals do not retract past
+    * outputs — the LSM contract, same as
+    * [[graft.dedup.IncrementalLsh.delete]].
     */
   def delete(idx: SemanticIndex, ids: DataFrame, idCol: String)
-      : SemanticIndex = {
-    val d = ids.select(col(idCol).as("id")).distinct().localCheckpoint()
+      : SemanticIndex =
     SemanticIndex(idx.centroids,
-      idx.members.join(d, Seq("id"), "left_anti").localCheckpoint())
-  }
+      IndexStore.delete(idx.members, "id", ids, idCol))
 
   /** Re-train the centroids from the CURRENT member set (growing `c`
     * with the corpus — c ∝ N is the design's scale path) and re-bucket
@@ -137,12 +136,8 @@ object IncrementalSemantic {
     }
     val centDf = s.createDataFrame(
       s.sparkContext.parallelize(centRows.toSeq, 1), centSchema)
-    Seq(s"${name}_centroids" -> centDf, s"${name}_members" -> idx.members)
-      .foreach { case (t, df) =>
-        if (!catalog.exists(t)) catalog.create(t, df.schema)
-        catalog.overwrite(t, df)
-        if (vacuumHistory) catalog.vacuum(t)
-      }
+    IndexStore.publish(catalog, vacuumHistory,
+      s"${name}_centroids" -> centDf, s"${name}_members" -> idx.members)
   }
 
   /** Rehydrate a [[save]]d index (centroid matrix re-collected in

@@ -52,6 +52,37 @@ object StreamFold {
     acc
   }
 
+  /** The one index door: drain `stream` into an incremental index with
+    * `build` on the first micro-batch and `addBatch` after, and return
+    * the final index with the union of every batch's new pairs. Each
+    * batch's new pairs are materialized inside the batch (the frame is
+    * only valid there; the index relations are materialized by the
+    * index itself), then `onBatch` runs with the grown index, e.g. to
+    * publish it. Per-batch pair outputs are exactly-once in every index
+    * family, so the union equals the one-shot run under any batching.
+    *
+    * When no micro-batch arrives, the pairs are an empty relation of
+    * `pairsSchema` and the index is `build` over an empty relation of
+    * the stream's own schema, so it accepts a later batch.
+    */
+  def index[I](stream: DataFrame, checkpointDir: String, trigger: Trigger,
+      pairsSchema: StructType, onBatch: I => Unit)(
+      build: DataFrame => (I, DataFrame),
+      addBatch: (I, DataFrame) => (I, DataFrame)): (I, DataFrame) = {
+    val spark = stream.sparkSession
+    val folded = StreamFold[(I, Vector[DataFrame])](stream, checkpointDir,
+        trigger) { (prev, batch, _) =>
+      val (next, newPairs) =
+        prev.fold(build(batch)) { case (i, _) => addBatch(i, batch) }
+      val pairBatches = prev.fold(Vector.empty[DataFrame])(_._2) :+
+        newPairs.localCheckpoint()
+      onBatch(next)
+      (next, pairBatches)
+    }
+    (folded.fold(build(unionOr(spark, Nil, stream.schema))._1)(_._1),
+      unionOr(spark, folded.toSeq.flatMap(_._2), pairsSchema))
+  }
+
   /** A file-source stream over the parquet files in `dir`, one file per
     * micro-batch, with the schema read from the files already there.
     */

@@ -5,7 +5,6 @@ import graft.pipeline.CorpusPipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types._
 
 /** Streaming front door for END-TO-END corpus cleaning: documents land
   * as files, each micro-batch is GATED (quality + language + optional
@@ -48,36 +47,27 @@ object StreamingCorpus {
       checkpointDir: String, cfg: CorpusPipeline.Config = CorpusPipeline.Config(),
       trigger: Trigger = Trigger.AvailableNow(),
       onBatch: LshIndex => Unit = _ => ()): (LshIndex, DataFrame, DataFrame) = {
-    val spark = stream.sparkSession
-    val folded = StreamFold[(LshIndex, Vector[DataFrame], Vector[DataFrame])](
-        stream, checkpointDir, trigger) { (prev, batch, _) =>
-      val gated = CorpusPipeline.bandStages(
-        CorpusPipeline.rowGates(batch, idCol, textCol, cfg),
-        idCol, textCol, cfg).localCheckpoint()
-      val (next, newPairs) = prev match {
-        case None => IncrementalLsh.build(gated, idCol, textCol,
+    // the index state carries each batch's gate survivors, materialized
+    // in the batch, next to the LSH index they fold into
+    val gate = (batch: DataFrame) => CorpusPipeline.bandStages(
+      CorpusPipeline.rowGates(batch, idCol, textCol, cfg),
+      idCol, textCol, cfg).localCheckpoint()
+    val ((idx, gated), pairs) = StreamFold.index[(LshIndex, Vector[DataFrame])](
+        stream, checkpointDir, trigger, StreamingLsh.PairsSchema,
+        s => onBatch(s._1))(
+      { batch =>
+        val g = gate(batch)
+        val (i, p) = IncrementalLsh.build(g, idCol, textCol,
           cfg.jaccardThreshold)
-        case Some((i, _, _)) => IncrementalLsh.addBatch(i, gated, idCol,
-          textCol, cfg.jaccardThreshold)
-      }
-      val gatedBatches = prev.toVector.flatMap(_._2) :+ gated
-      val pairBatches = prev.toVector.flatMap(_._3) :+
-        newPairs.localCheckpoint()
-      onBatch(next)
-      (next, gatedBatches, pairBatches)
-    }
-    val gatedSchema = StructType(Seq(
-      stream.schema(idCol), stream.schema(textCol),
-      StructField("quality", DoubleType), StructField("lang_pred", StringType)))
-    val gated = StreamFold.unionOr(spark, folded.toSeq.flatMap(_._2),
-      gatedSchema)
-    val pairs = StreamFold.unionOr(spark, folded.toSeq.flatMap(_._3),
-      StreamingLsh.PairsSchema)
-    lazy val emptyIdx = IncrementalLsh.build(
-      StreamFold.unionOr(spark, Nil,
-        StructType(Seq(stream.schema(idCol), stream.schema(textCol)))),
-      idCol, textCol, cfg.jaccardThreshold)._1
-    (folded.fold(emptyIdx)(_._1), gated, pairs)
+        ((i, Vector(g)), p)
+      },
+      { case ((i, gs), batch) =>
+        val g = gate(batch)
+        val (next, p) = IncrementalLsh.addBatch(i, g, idCol, textCol,
+          cfg.jaccardThreshold)
+        ((next, gs :+ g), p)
+      })
+    (idx, gated.reduce(_ unionByName _), pairs)
   }
 
   /** Resolve the final survivors from accumulated gate survivors and

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 /** [[StreamingLsh]]'s continuous-ingest shape applied to the EMBEDDING
-  * index: a stream of (id, vector) rows drains through `foreachBatch`,
-  * each micro-batch folding into [[IncrementalSemantic]] — only the
+  * index: a stream of (id, vector) rows drains through
+  * [[StreamFold.index]], each micro-batch folding into [[IncrementalSemantic]] — only the
   * batch is assigned to the stored centroids, candidates come from
   * new-vs-(stored+new) bucket collisions, and per-batch pair outputs
   * are exactly-once, so the accumulated pair set equals a one-shot run
@@ -31,24 +31,18 @@ object StreamingSemantic {
     * the stream terminates — the default `AvailableNow` trigger
     * processes everything currently available, then stops. `onBatch`
     * runs after each fold with the grown index (e.g. to
-    * [[IncrementalSemantic.save]] it to a catalog).
+    * [[IncrementalSemantic.save]] it to a catalog). Every batch, the
+    * first included, folds into the index through `addBatch`, so an
+    * empty stream returns `init`'s members re-materialized.
     */
   def ingest(stream: DataFrame, idCol: String, vecCol: String,
       checkpointDir: String, init: SemanticIndex, threshold: Double,
       trigger: Trigger = Trigger.AvailableNow(),
       onBatch: SemanticIndex => Unit = _ => ()): (SemanticIndex, DataFrame) = {
-    val folded = StreamFold[(SemanticIndex, Vector[DataFrame])](stream,
-        checkpointDir, trigger) { (prev, batch, _) =>
-      val (next, newPairs) = IncrementalSemantic.addBatch(
-        prev.fold(init)(_._1), batch.select(col(idCol), col(vecCol)),
-        idCol, vecCol, threshold)
-      // the index relations are already materialized by addBatch
-      val pairBatches = prev.toVector.flatMap(_._2) :+
-        newPairs.localCheckpoint()
-      onBatch(next)
-      (next, pairBatches)
-    }
-    (folded.fold(init)(_._1), StreamFold.unionOr(stream.sparkSession,
-      folded.toSeq.flatMap(_._2), StreamFold.PairsSchema))
+    val fold = (i: SemanticIndex, d: DataFrame) => IncrementalSemantic
+      .addBatch(i, d.select(col(idCol), col(vecCol)), idCol, vecCol,
+        threshold)
+    StreamFold.index(stream, checkpointDir, trigger, StreamFold.PairsSchema,
+      onBatch)(fold(init, _), fold)
   }
 }

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.catalog.{IndexStore, ParquetCatalog}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -86,25 +87,18 @@ object IncrementalWinnow {
     * index).
     */
   def delete(idx: WinnowIndex, ids: DataFrame, idCol: String)
-      : WinnowIndex = {
-    val d = ids.select(col(idCol).as("id")).distinct().localCheckpoint()
-    idx.copy(fps =
-      idx.fps.join(d, Seq("id"), "left_anti").localCheckpoint())
-  }
+      : WinnowIndex =
+    idx.copy(fps = IndexStore.delete(idx.fps, "id", ids, idCol))
 
-  /** Publish the fingerprint relation through the catalog (atomic
-    * versioned overwrite; (k, w) geometry is caller configuration).
+  /** Publish the fingerprint relation as `<name>_fps`; (k, w) geometry
+    * is caller configuration.
     */
-  def save(idx: WinnowIndex, catalog: graft.catalog.ParquetCatalog,
-      name: String, vacuumHistory: Boolean = true): Unit = {
-    val t = s"${name}_fps"
-    if (!catalog.exists(t)) catalog.create(t, idx.fps.schema)
-    catalog.overwrite(t, idx.fps)
-    if (vacuumHistory) catalog.vacuum(t)
-  }
+  def save(idx: WinnowIndex, catalog: ParquetCatalog, name: String,
+      vacuumHistory: Boolean = true): Unit =
+    IndexStore.publish(catalog, vacuumHistory, s"${name}_fps" -> idx.fps)
 
   /** Rehydrate a [[save]]d index. */
-  def load(catalog: graft.catalog.ParquetCatalog, name: String,
+  def load(catalog: ParquetCatalog, name: String,
       k: Int = 3, w: Int = 4): WinnowIndex =
     WinnowIndex(catalog.table(s"${name}_fps"), k, w)
 }

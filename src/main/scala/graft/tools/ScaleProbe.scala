@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   * on stderr and exits 2 before the session starts.
   *
   * The probe is one table, [[probes]]: a row's untimed set-up forces
-  * only that row's inputs, and its run is timed on the 1x and the Nx
-  * input.
+  * only that row's inputs, its run goes once untimed on the 1x input,
+  * and is then timed on the 1x and the Nx input.
   */
 object ScaleProbe {
 
@@ -53,7 +53,7 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     lazy val spark = SparkEntry.session(SparkEntry.cpus)
-    val (factor, table, selected) = parse(args, spark) match {
+    val (factor, _, selected) = parse(args, spark) match {
       case Right(parsed) => parsed
       case Left(err) =>
         System.err.println(err)
@@ -86,10 +86,11 @@ object ScaleProbe {
       (dt, n, spillBytes.get() - s0)
     }
 
-    // warmup: the first row's (agg) 1x run, untimed
-    table.head.setup()._1()
     val parts = selected.map { p =>
       val (one, many) = p.setup()
+      // warm-up: the row's 1x run once, untimed, so t1 and tN both meet
+      // a JVM that has already compiled this row's code paths
+      one()
       val Seq((t1, n1, s1), (tN, nN, sN)) = Seq(one, many).map(r => time(r()))
       f"""\"${p.name}\":{\"t1\":$t1%.2f,\"rows1\":$n1,\"tN\":$tN%.2f,\"rowsN\":$nN,\"ratio\":${tN / t1}%.2f,\"spill1MB\":${s1 / 1e6}%.1f,\"spillNMB\":${sN / 1e6}%.1f}"""
     }
@@ -450,11 +451,11 @@ object ScaleProbe {
     // so the honest cost left is the batch decode+fingerprint plus the
     // banded join against the index (2x26 bands keep random collisions
     // negligible at probe sizes).
-    indexRow("incremental_audio")(d => graft.multimodal.IncrementalAudio
-      .build(audioFps(d), maxHamming = 1, bands = 2)._1) {
+    import graft.multimodal.HammingIndex.{Audio, Image}
+    indexRow("incremental_audio")(d =>
+      Audio.build(audioFps(d), maxHamming = 1, bands = 2)._1) {
       val audioBatch = audioFps(batch0).localCheckpoint()
-      idx => graft.multimodal.IncrementalAudio.addBatch(idx, audioBatch,
-        maxHamming = 1)._2.count()
+      idx => Audio.addBatch(idx, audioBatch, maxHamming = 1)._2.count()
     }
 
     // Incremental image: a FIXED batch (replica 0's dHashes, ids
@@ -464,11 +465,10 @@ object ScaleProbe {
     // ~ n^2/2^28 negligible at probe sizes). The index side is a
     // 16-byte-per-image hash relation; honest cost = the batch
     // decode+dHash plus the banded join against the index.
-    indexRow("incremental_image")(d => graft.multimodal.IncrementalPerceptual
-      .build(imageDhs(d), maxHamming = 1, bands = 2)._1) {
+    indexRow("incremental_image")(d =>
+      Image.build(imageDhs(d), maxHamming = 1, bands = 2)._1) {
       val imageBatch = imageDhs(batch0).localCheckpoint()
-      idx => graft.multimodal.IncrementalPerceptual.addBatch(idx,
-        imageBatch, maxHamming = 1)._2.count()
+      idx => Image.addBatch(idx, imageBatch, maxHamming = 1)._2.count()
     }
 
     // DSIR importance resampling: the raw corpus grows Nx while the

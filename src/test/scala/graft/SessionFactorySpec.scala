@@ -6,8 +6,9 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-/** Keeps [[SparkEntry.session]] the only place a session is built, and
-  * [[graft.streaming.StreamFold]] the only streaming fold.
+/** Keeps [[SparkEntry.session]] the only place a session is built,
+  * [[graft.streaming.StreamFold]] the only streaming fold, and
+  * [[graft.catalog.IndexStore.publish]] the only index publish.
   */
 class SessionFactorySpec extends AnyFunSuite {
 
@@ -33,5 +34,11 @@ class SessionFactorySpec extends AnyFunSuite {
     val call = "." + "foreachBatch" // split: this file is scanned too
     assert(sourcesWith(call, "src/main/scala").sorted ==
       Seq("StreamFold.scala", "StreamingScd.scala"))
+  }
+
+  test("outside the catalog, IndexStore is the only source that vacuums") {
+    val call = "." + "vacuum(" // split: this file is scanned too
+    assert(sourcesWith(call, "src/main/scala")
+      .filterNot(_ == "ParquetCatalog.scala") == Seq("IndexStore.scala"))
   }
 }

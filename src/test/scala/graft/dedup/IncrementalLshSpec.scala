@@ -84,7 +84,7 @@ class IncrementalLshSpec extends SparkSpec {
     val odds = corpus.filter(col("doc_id") % 2 =!= 0)
     val (idx0, _) = IncrementalLsh.build(evens, "doc_id", "text")
     val (idx1, _) = IncrementalLsh.addBatch(idx0, odds, "doc_id", "text")
-    val idx2 = IncrementalLsh.deleteDocs(idx1, odds.select("doc_id"), "doc_id")
+    val idx2 = IncrementalLsh.delete(idx1, odds.select("doc_id"), "doc_id")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSet
     assert(rows(idx2.buckets) == rows(idx0.buckets))
     assert(rows(idx2.shingles) == rows(idx0.shingles))
@@ -99,7 +99,7 @@ class IncrementalLshSpec extends SparkSpec {
     import spark.implicits._
     val (idx, _) = IncrementalLsh.build(corpus, "doc_id", "text")
     val ghost = Seq(999999998L, 999999999L).toDF("doc_id")
-    val idx2 = IncrementalLsh.deleteDocs(idx, ghost, "doc_id")
+    val idx2 = IncrementalLsh.delete(idx, ghost, "doc_id")
     assert(idx2.buckets.count() == idx.buckets.count() &&
       idx2.shingles.count() == idx.shingles.count())
   }
@@ -114,7 +114,7 @@ class IncrementalLshSpec extends SparkSpec {
     IncrementalLsh.save(idx, cat, "lshsv")
     val (idx1, _) = IncrementalLsh.addBatch(idx, odds, "doc_id", "text")
     IncrementalLsh.save(idx1, cat, "lshsv")
-    val idx2 = IncrementalLsh.deleteDocs(idx1, odds.select("doc_id"), "doc_id")
+    val idx2 = IncrementalLsh.delete(idx1, odds.select("doc_id"), "doc_id")
     IncrementalLsh.save(idx2, cat, "lshsv")
     // exactly one on-disk version per relation after 3 saves
     for (t <- Seq("lshsv_buckets", "lshsv_shingles")) {

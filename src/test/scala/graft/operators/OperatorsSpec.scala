@@ -12,19 +12,6 @@ import org.apache.spark.sql.functions._
 class OperatorsSpec extends SparkSpec {
   import spark.implicits._
 
-  test("salted join equals the plain join on skewed data") {
-    // one hot key (90% of rows) + a long tail
-    val big = (1 to 5000).map { i =>
-      (if (i % 10 != 0) 1L else (i % 97).toLong, s"payload$i")
-    }.toDF("k", "v")
-    val small = (0L to 96L).map(k => (k, s"dim$k")).toDF("k", "d")
-    val plain = big.join(small, Seq("k")).collect().map(_.toSeq).toSet
-    val salted = SkewJoin.salted(big, small, Seq("k"), saltBuckets = 8)
-      .select("k", "v", "d").collect().map(_.toSeq).toSet
-    assert(salted === plain)
-    assert(salted.nonEmpty)
-  }
-
   test("ScdTable: init, apply, active, asOf, asOfJoin lifecycle") {
     import ScdMergeSpec._
     val cat = new ParquetCatalog(spark,

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path}
 import graft.SparkSpec
 import graft.catalog.ParquetCatalog
 import graft.dedup.IncrementalLsh
-import graft.multimodal.{IncrementalAudio, IncrementalPerceptual}
+import graft.multimodal.HammingIndex.{Audio, Image}
 import graft.similarity.IncrementalSemantic
 import graft.text.IncrementalWinnow
 import org.apache.spark.sql.DataFrame
@@ -77,15 +77,15 @@ class PurgeSpec extends SparkSpec {
       "embedding", threshold = 0.99, c = 4)
     IncrementalSemantic.save(semIdx, cat, "s", vacuumHistory = false)
     IncrementalSemantic.save(semIdx, cat, "s", vacuumHistory = false)
-    val (audIdx, _) = IncrementalAudio.build(afps(ids))
-    IncrementalAudio.save(audIdx, cat, "a", vacuumHistory = false)
-    IncrementalAudio.save(audIdx, cat, "a", vacuumHistory = false)
+    val (audIdx, _) = Audio.build(afps(ids))
+    Audio.save(audIdx, cat, "a", vacuumHistory = false)
+    Audio.save(audIdx, cat, "a", vacuumHistory = false)
     val (winIdx, _) = IncrementalWinnow.build(docs(ids), "doc_id", "text")
     IncrementalWinnow.save(winIdx, cat, "w", vacuumHistory = false)
     IncrementalWinnow.save(winIdx, cat, "w", vacuumHistory = false)
-    val (imgIdx, _) = IncrementalPerceptual.build(dhashes(ids))
-    IncrementalPerceptual.save(imgIdx, cat, "i", vacuumHistory = false)
-    IncrementalPerceptual.save(imgIdx, cat, "i", vacuumHistory = false)
+    val (imgIdx, _) = Image.build(dhashes(ids))
+    Image.save(imgIdx, cat, "i", vacuumHistory = false)
+    Image.save(imgIdx, cat, "i", vacuumHistory = false)
 
     val purged = Seq(3L, 7L, 107L, 999L) // 999 never indexed: no-op
     val report = Purge.forget(cat, purged.toDF("doc_id"), "doc_id",
@@ -145,13 +145,13 @@ class PurgeSpec extends SparkSpec {
     assert(pairsOf(sp) == pairsOf(sAll))
 
     // audio
-    val (a0, _) = IncrementalAudio.build(afps(initIds))
-    IncrementalAudio.save(a0, cat, "a")
+    val (a0, _) = Audio.build(afps(initIds))
+    Audio.save(a0, cat, "a")
     Purge.forget(cat, purged.toDF("doc_id"), "doc_id", audio = Seq("a"))
-    val (_, ap) = IncrementalAudio.addBatch(IncrementalAudio.load(cat, "a"),
+    val (_, ap) = Audio.addBatch(Audio.load(cat, "a"),
       afps(batchIds))
-    val (a1, _) = IncrementalAudio.build(afps(keptIds))
-    val (_, aAll) = IncrementalAudio.addBatch(a1, afps(batchIds))
+    val (a1, _) = Audio.build(afps(keptIds))
+    val (_, aAll) = Audio.addBatch(a1, afps(batchIds))
     assert(pairsOf(ap) == pairsOf(aAll))
 
     // winnow (matches carry shared-mass/extent columns; the (a, b)
@@ -166,13 +166,13 @@ class PurgeSpec extends SparkSpec {
     assert(pairsOf(wp) == batchTouching(pairsOf(wAll)))
 
     // image
-    val (i0, _) = IncrementalPerceptual.build(dhashes(initIds))
-    IncrementalPerceptual.save(i0, cat, "i")
+    val (i0, _) = Image.build(dhashes(initIds))
+    Image.save(i0, cat, "i")
     Purge.forget(cat, purged.toDF("doc_id"), "doc_id", image = Seq("i"))
-    val (_, ipp) = IncrementalPerceptual.addBatch(
-      IncrementalPerceptual.load(cat, "i"), dhashes(batchIds))
-    val (i1, _) = IncrementalPerceptual.build(dhashes(keptIds))
-    val (_, iAll) = IncrementalPerceptual.addBatch(i1, dhashes(batchIds))
+    val (_, ipp) = Image.addBatch(
+      Image.load(cat, "i"), dhashes(batchIds))
+    val (i1, _) = Image.build(dhashes(keptIds))
+    val (_, iAll) = Image.addBatch(i1, dhashes(batchIds))
     assert(pairsOf(ipp) == pairsOf(iAll))
   }
 }
