@@ -392,13 +392,16 @@ final class ParquetCatalog(spark: SparkSession, root: String) {
     overwrite(name, sized, meta = currentMeta(name))
   }
 
-  /** Drop all versions the current one does not resolve through —
-    * a delta chain keeps its base versions alive (deleting a base
-    * would corrupt the live merge-on-read view, not just history).
+  /** Drop the versions below the current one that it does not resolve
+    * through — a delta chain keeps its base versions alive (deleting a
+    * base would corrupt the live merge-on-read view, not just history).
+    * Versions above the current one are kept: a concurrent writer may
+    * have claimed one and not yet swapped the pointer to it.
     */
   def vacuum(name: String): Unit = {
-    var v = currentVersion(name)
+    val cur = currentVersion(name)
       .getOrElse(throw new IllegalArgumentException(s"no table $name"))
+    var v = cur
     var keep = Set(v)
     var base = deltaBase(name, v)
     while (base.isDefined) {
@@ -407,8 +410,10 @@ final class ParquetCatalog(spark: SparkSession, root: String) {
     val listing = Files.list(tableDir(name))
     try listing.forEach { p =>
       val n = p.getFileName.toString
-      if (n.startsWith("v_") && !keep.contains(n.stripPrefix("v_").toLong))
-        deleteRecursively(p)
+      if (n.startsWith("v_")) {
+        val pv = n.stripPrefix("v_").toLong
+        if (pv < cur && !keep.contains(pv)) deleteRecursively(p)
+      }
     } finally listing.close()
   }
 

@@ -125,9 +125,10 @@ object Dedup {
   }
 
   /** Exact-Jaccard verification of candidate pairs against a hashed-
-    * shingle relation — the shared tail of [[minhashNearDuplicates]]
-    * and [[IncrementalLsh]]: candidates join their members' shingles,
-    * common-shingle counts become Jaccard, below-threshold pairs drop.
+    * shingle relation — the tail of [[minhashNearDuplicates]]:
+    * candidates join their members' shingles, common-shingle counts
+    * become Jaccard, below-threshold pairs drop. [[IncrementalLsh]]
+    * computes the same double row-locally from shingle arrays.
     */
   private[dedup] def verifiedPairs(cand: DataFrame, sh: DataFrame,
       threshold: Double): DataFrame = {

@@ -1,32 +1,52 @@
 package graft.dedup
 
 import graft.catalog.{IndexStore, ParquetCatalog}
+import graft.functions.{PortableHash, TextHash}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.internal.SQLConf
 
-/** A materialized MinHash-LSH near-duplicate index: `buckets` holds one
-  * (doc, band, bucket) row per band per document, `shingles` the hashed
-  * shingle set each Jaccard verification reads. Both are plain
-  * DataFrames — persist them as catalog tables to keep the index across
-  * sessions (they round-trip losslessly: longs and md5 strings only).
+/** A materialized MinHash-LSH near-duplicate index, one row per
+  * document per relation kind: `buckets` holds one (doc, band, bucket)
+  * row per band per document, `sets` one (doc, shs) row per document
+  * whose `shs` is its distinct hashed-shingle array (documents with no
+  * shingle are not indexed). Both are plain DataFrames — persist them
+  * as catalog tables to keep the index across sessions (they
+  * round-trip losslessly: longs, long arrays and md5 strings only).
   */
-final case class LshIndex(buckets: DataFrame, shingles: DataFrame)
+final case class LshIndex(buckets: DataFrame, sets: DataFrame) {
+
+  /** The `(doc, sh)` row view of [[sets]] — [[Dedup.hashedShingles]]'
+    * shape, for consumers that join on single shingles.
+    */
+  def shingles: DataFrame = sets.select(col("doc"), explode(col("shs")).as("sh"))
+}
 
 /** Incrementally maintained near-duplicate detection — the ingest path
   * for a GROWING corpus. [[Dedup.minhashNearDuplicates]] answers "which
   * pairs in this corpus are near-dups" in one pass; here the corpus
   * arrives in batches and each batch must be checked against everything
-  * already indexed WITHOUT re-hashing the existing documents:
+  * already indexed WITHOUT re-hashing the existing documents. Every
+  * per-batch step is row-local or a probe FROM the batch-sized side, so
+  * a batch runs a fixed number of Spark jobs and the stored relations
+  * are only ever scanned, never shuffled:
   *
-  *   - per batch, only the new documents are shingled, signed, and
-  *     banded (cost ∝ batch size);
-  *   - candidates come from the new buckets joined against the stored
-  *     plus new buckets — new×new and new×old collisions, never
-  *     old×old (those were emitted by earlier batches);
-  *   - verification reads stored shingles for exactly the collision
-  *     partners (one keyed join against the shingle relation; storing
-  *     it bucketed on the doc id makes that join shuffle-free on the
-  *     index side, the q89 layout story).
+  *   - only the new documents are shingled (one array row per doc),
+  *     signed (`array_min` per hash function over the row's array — no
+  *     group-by) and banded;
+  *   - candidates come from the new buckets probing the stored plus new
+  *     buckets — new×new and new×old collisions, never old×old (those
+  *     were emitted by earlier batches);
+  *   - verification fetches both members' shingle arrays by probing the
+  *     stored sets with the candidate pairs, and Jaccard is row-local
+  *     (`array_intersect` sizes) — the same double as
+  *     [[Dedup.verifiedPairs]]' counts, with no explode or pair group-by.
+  *
+  * A batch-side relation is broadcast only when its materialized size
+  * fits the session's `autoBroadcastJoinThreshold`; a batch too large
+  * for that falls back to a shuffle join rather than risk an OOM.
   *
   * Batching is exhaustive AND exactly-once: every pair of the full
   * corpus has a unique emitting batch (the later member's), so the
@@ -39,19 +59,15 @@ final case class LshIndex(buckets: DataFrame, shingles: DataFrame)
   */
 object IncrementalLsh {
 
-  /** Index an initial corpus; returns the index and the near-dup pairs
-    * within it (a < b, exact Jaccard >= threshold).
+  /** Index an initial corpus: [[addBatch]] onto an empty index. Returns
+    * the index and the near-dup pairs within it (a < b, exact Jaccard
+    * >= threshold).
     */
   def build(docs: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.5, bands: Int = 6, rowsPerBand: Int = 2,
-      n: Int = 3): (LshIndex, DataFrame) = {
-    val sh = Dedup.hashedShingles(docs, idCol, textCol, n).localCheckpoint()
-    val buckets = Dedup.bucketsFrom(
-      Dedup.signaturesFrom(sh, bands * rowsPerBand), bands, rowsPerBand)
-      .localCheckpoint()
-    (LshIndex(buckets, sh),
-      Dedup.verifiedPairs(candidates(buckets, buckets), sh, threshold))
-  }
+      n: Int = 3): (LshIndex, DataFrame) =
+    addBatch(empty(docs, idCol), docs, idCol, textCol, threshold, bands,
+      rowsPerBand, n)
 
   /** Fold one batch into the index; returns the grown index and the
     * NEW pairs — those with at least one member in the batch. Pairs
@@ -60,26 +76,29 @@ object IncrementalLsh {
   def addBatch(idx: LshIndex, docs: DataFrame, idCol: String,
       textCol: String, threshold: Double = 0.5, bands: Int = 6,
       rowsPerBand: Int = 2, n: Int = 3): (LshIndex, DataFrame) = {
-    val newSh = Dedup.hashedShingles(docs, idCol, textCol, n)
-      .localCheckpoint()
-    val newBuckets = Dedup.bucketsFrom(
-      Dedup.signaturesFrom(newSh, bands * rowsPerBand), bands, rowsPerBand)
+    val newSets = docs.select(col(idCol).as("doc"),
+        TextHash.shingleHash60(col(textCol), n).as("shs"))
+      .filter(size(col("shs")) > 0).localCheckpoint()
+    val sig = newSets.select(col("doc") +: (0 until bands * rowsPerBand)
+      .map(i => array_min(transform(col("shs"), x =>
+        PortableHash.minhash(x % PortableHash.MinhashPrime, i))).as(s"mh_$i")): _*)
+    val newBuckets = Dedup.bucketsFrom(sig, bands, rowsPerBand)
       .localCheckpoint()
     val allBuckets = idx.buckets.unionByName(newBuckets)
-    val allSh = idx.shingles.unionByName(newSh)
-    // checkpointed: feeds the member semi-join (twice) and the verify —
-    // the bucket join must not re-run per consumer
+    val allSets = idx.sets.unionByName(newSets)
+    // cand and withA are checkpointed so their materialized sizes can
+    // pick the verify joins (see buildSide)
     val cand = candidates(newBuckets, allBuckets).localCheckpoint()
-    // Verification touches only collision partners: restrict the stored
-    // shingle relation to candidate members before the Jaccard joins so
-    // the per-batch SHUFFLE carries members' shingles, not the whole
-    // index (the index is still scanned once — the semi join's probe).
-    // Sizes are per-doc, so the restriction cannot change any Jaccard.
-    val members = cand.select(col("a").as("doc"))
-      .unionByName(cand.select(col("b").as("doc"))).distinct()
-    val shNeeded = allSh.join(members, Seq("doc"), "left_semi")
-    val pairs = Dedup.verifiedPairs(cand, shNeeded, threshold)
-    (LshIndex(allBuckets, allSh), pairs)
+    val withA = allSets.select(col("doc").as("a"), col("shs").as("sa"))
+      .join(buildSide(cand), Seq("a")).localCheckpoint()
+    val common = size(array_intersect(col("sa"), col("sb"))).cast("long")
+    val pairs = allSets.select(col("doc").as("b"), col("shs").as("sb"))
+      .join(buildSide(withA), Seq("b"))
+      .select(col("a"), col("b"),
+        (common.cast("double") / (size(col("sa")).cast("long") +
+          size(col("sb")).cast("long") - common)).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+    (LshIndex(allBuckets, allSets), pairs)
   }
 
   /** Remove documents from the index: one keyed anti-join per stored
@@ -89,23 +108,29 @@ object IncrementalLsh {
     */
   def delete(idx: LshIndex, ids: DataFrame, idCol: String): LshIndex =
     LshIndex(IndexStore.delete(idx.buckets, "doc", ids, idCol),
-      IndexStore.delete(idx.shingles, "doc", ids, idCol))
+      IndexStore.delete(idx.sets, "doc", ids, idCol))
 
   /** Publish the index as catalog tables `<name>_buckets` /
-    * `<name>_shingles` through [[graft.catalog.IndexStore.publish]]:
-    * with `vacuumHistory`, repeated saves keep exactly one on-disk
-    * version per relation, so the ingest loop can publish after every
-    * batch.
+    * `<name>_sets` through [[graft.catalog.IndexStore.publish]]: with
+    * `vacuumHistory`, repeated saves keep exactly one on-disk version
+    * per relation, so the ingest loop can publish after every batch.
     */
   def save(idx: LshIndex, catalog: ParquetCatalog, name: String,
       vacuumHistory: Boolean = true): Unit =
     IndexStore.publish(catalog, vacuumHistory,
-      s"${name}_buckets" -> idx.buckets, s"${name}_shingles" -> idx.shingles)
+      s"${name}_buckets" -> idx.buckets, s"${name}_sets" -> idx.sets)
 
   /** Rehydrate a [[save]]d index. */
   def load(catalog: ParquetCatalog, name: String): LshIndex =
     LshIndex(catalog.table(s"${name}_buckets"),
-      catalog.table(s"${name}_shingles"))
+      catalog.table(s"${name}_sets"))
+
+  /** An index with no documents, keyed by `docs`' id type. */
+  private def empty(docs: DataFrame, idCol: String): LshIndex = {
+    val none = docs.select(col(idCol).as("doc")).limit(0)
+    LshIndex(none.select(col("doc"), lit(0).as("band"), lit("").as("bucket")),
+      none.select(col("doc"), typedLit(Array.empty[Long]).as("shs")))
+  }
 
   /** Band-bucket collisions of `probe` against `all`, normalized to
     * (a < b) and deduped across bands. Probe×probe pairs surface from
@@ -113,11 +138,28 @@ object IncrementalLsh {
     * cases to a single row.
     */
   private def candidates(probe: DataFrame, all: DataFrame): DataFrame =
-    probe.select(col("doc").as("x"), col("band"), col("bucket"))
-      .join(all.select(col("doc").as("y"), col("band"), col("bucket")),
-        Seq("band", "bucket"))
+    all.select(col("doc").as("y"), col("band"), col("bucket"))
+      .join(buildSide(probe.select(col("doc").as("x"), col("band"),
+        col("bucket"))), Seq("band", "bucket"))
       .filter(col("x") =!= col("y"))
       .select(least(col("x"), col("y")).as("a"),
         greatest(col("x"), col("y")).as("b"))
       .distinct()
+
+  /** `side` with a broadcast hint when the localCheckpoint'd relation
+    * it reads holds at most `autoBroadcastJoinThreshold` bytes, so the
+    * stored relation on the other side of the join is scanned, not
+    * shuffled. A larger (or unmeasurable) side gets no hint: the join
+    * then shuffles instead of broadcasting a huge batch.
+    */
+  private def buildSide(side: DataFrame): DataFrame = {
+    val limit = SQLConf.get.autoBroadcastJoinThreshold
+    val ckpt = ColumnBridge.logicalPlan(side).collectLeaves() match {
+      case Seq(r: LogicalRDD) => Some(r.rdd.id)
+      case _ => None
+    }
+    val bytes = ckpt.flatMap(id => side.sparkSession.sparkContext
+      .getRDDStorageInfo.find(_.id == id)).map(i => i.memSize + i.diskSize)
+    if (bytes.exists(_ <= limit)) broadcast(side) else side
+  }
 }

@@ -33,8 +33,11 @@ import org.apache.spark.sql.streaming.Trigger
   *
   * At 100 TB this is the continuous-ingest shape of the cleaning
   * pipeline: per-batch cost tracks the batch (gates are scans; the
-  * fold shingles only the batch), the index grows monotonically, and
-  * the resolve is one hash-agg + one CC over materialized relations.
+  * fold shingles only the batch and probes the stored index from the
+  * batch side — [[IncrementalLsh]] keeps one shingle-set row per doc,
+  * so no stored relation is shuffled and a batch runs a fixed number
+  * of Spark jobs), the index grows monotonically, and the resolve is
+  * one hash-agg + one CC over materialized relations.
   */
 object StreamingCorpus {
 
@@ -121,8 +124,8 @@ object StreamingCorpus {
     *
     * @param trainShingles optional per-doc hashed-shingle relation
     *   covering AT LEAST the gate survivors — the ingest INDEX already
-    *   accumulated exactly this (`idx.shingles`, checkpointed per
-    *   batch), so the caller passes it and decontamination reuses it
+    *   accumulated exactly this (`idx.shingles`, the row view of the
+    *   per-batch checkpointed `idx.sets`), so the caller passes it and decontamination reuses it
     *   via a semi-join restriction instead of re-shingling the
     *   released corpus (shingling is per-doc, so the restriction
     *   equals shingling the survivors directly — the q172/q173

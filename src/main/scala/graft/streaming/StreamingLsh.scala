@@ -18,8 +18,9 @@ import org.apache.spark.sql.types._
   *
   * `foreachBatch` is the right sink shape here (not a stateful
   * operator): the index is a pair of grown-per-batch RELATIONS
-  * (buckets + shingles), not per-key state — `flatMapGroupsWithState`
-  * would force the whole index through one key's state store.
+  * (band buckets + one shingle-set row per doc), not per-key state —
+  * `flatMapGroupsWithState` would force the whole index through one
+  * key's state store.
   *
   * At scale this is the continuous-ingest shape: a file-source stream
   * over a landing directory (`maxFilesPerTrigger` bounds batch size),

@@ -72,6 +72,26 @@ class CatalogSpec extends SparkSpec {
     assert(cat.table("t").as[(Long, String)].collect().toSet === Set((2L, "b")))
   }
 
+  test("vacuum keeps a version claimed above the pointer until it swaps") {
+    val cat = freshCatalog()
+    cat.create("t", Seq((1L, "a")).toDF("id", "v").schema) // v0
+    cat.overwrite("t", Seq((1L, "a")).toDF("id", "v")) // v1
+    val root = cat.table("t").inputFiles.head
+      .replaceAll("file:", "").replaceAll("/v_[0-9]+/.*", "")
+    // a writer has claimed v2 (its directory is in place) but has not
+    // swapped the pointer yet when another writer's vacuum runs
+    Seq((2L, "b")).toDF("id", "v").write
+      .parquet(Paths.get(root, "v_000002").toString)
+    cat.vacuum("t")
+    assert(cat.table("t").as[(Long, String)].collect().toSet === Set((1L, "a")))
+    cat.swapPointerMonotonic("t", 2L, "late")
+    assert(cat.currentVersion("t") === Some(2L))
+    assert(cat.table("t").as[(Long, String)].collect().toSet === Set((2L, "b")))
+    // the claimed version is current now, so the next vacuum drops v0/v1
+    cat.vacuum("t")
+    assert(!Files.exists(Paths.get(root, "v_000001")))
+  }
+
   test("concurrent overwrites leave the pointer at the max claimed version") {
     val cat = freshCatalog()
     val df = Seq((1L, "a")).toDF("id", "v")

@@ -70,9 +70,9 @@ class IncrementalLshSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("graft-lsh").toString)
     cat.create("lsh_buckets", idx.buckets.schema)
     cat.overwrite("lsh_buckets", idx.buckets)
-    cat.create("lsh_shingles", idx.shingles.schema)
-    cat.overwrite("lsh_shingles", idx.shingles)
-    val loaded = LshIndex(cat.table("lsh_buckets"), cat.table("lsh_shingles"))
+    cat.create("lsh_sets", idx.sets.schema)
+    cat.overwrite("lsh_sets", idx.sets)
+    val loaded = LshIndex(cat.table("lsh_buckets"), cat.table("lsh_sets"))
     val batch2 = corpus.filter(col("doc_id") % 2 =!= 0)
     val (_, fresh) = IncrementalLsh.addBatch(idx, batch2, "doc_id", "text")
     val (_, persisted) = IncrementalLsh.addBatch(loaded, batch2, "doc_id", "text")
@@ -117,7 +117,7 @@ class IncrementalLshSpec extends SparkSpec {
     val idx2 = IncrementalLsh.delete(idx1, odds.select("doc_id"), "doc_id")
     IncrementalLsh.save(idx2, cat, "lshsv")
     // exactly one on-disk version per relation after 3 saves
-    for (t <- Seq("lshsv_buckets", "lshsv_shingles")) {
+    for (t <- Seq("lshsv_buckets", "lshsv_sets")) {
       val dirs = java.nio.file.Files.list(root.resolve(t)).toArray
         .map(_.toString).filter(_.contains("/v_"))
       assert(dirs.length == 1, s"$t versions: ${dirs.mkString(",")}")
@@ -126,5 +126,60 @@ class IncrementalLshSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSet
     assert(rows(loaded.buckets) == rows(idx2.buckets))
     assert(rows(loaded.shingles) == rows(idx2.shingles))
+  }
+
+  /** `corpus` split into `k` batches by a seeded hash of the id. */
+  private def batches(k: Int, seed: Long): Seq[DataFrame] = {
+    val b = pmod(xxhash64(col("doc_id"), lit(seed)), lit(k.toLong))
+    (0 until k).map(i => corpus.filter(b === i))
+  }
+
+  test("any batching's pair union == one-shot pairs, jaccard bit-exact") {
+    def triples(df: DataFrame) = df.select("a", "b", "jaccard").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val oneShot = triples(Dedup.minhashNearDuplicates(
+      corpus, "doc_id", "text", persistShingles = false))
+    assert(oneShot.nonEmpty)
+    for ((k, seed) <- Seq(2 -> 11L, 3 -> 12L, 6 -> 13L)) {
+      val parts = batches(k, seed)
+      val (idx0, p0) = IncrementalLsh.build(parts.head, "doc_id", "text")
+      val ps = parts.tail.scanLeft((idx0, p0)) { case ((i, _), d) =>
+        IncrementalLsh.addBatch(i, d, "doc_id", "text")
+      }.map(_._2)
+      val all = ps.map(triples)
+      assert(all.reduce(_ ++ _) == oneShot, s"$k-way batching")
+      assert(all.map(_.size).sum == oneShot.size, s"$k-way: not exactly once")
+    }
+  }
+
+  test("every addBatch starts the same number of Spark jobs") {
+    import org.apache.spark.graft.ListenerBridge
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    // jobs one fold starts: the eager index checkpoints plus the new
+    // pairs materialized the way StreamFold.index does
+    def jobsOf(body: => DataFrame): Int = {
+      assert(ListenerBridge.tryDrain(sc))
+      jobs.set(0)
+      body.localCheckpoint()
+      assert(ListenerBridge.tryDrain(sc))
+      jobs.get
+    }
+    val parts = batches(6, 21L)
+    var (idx, _) = IncrementalLsh.build(parts.head, "doc_id", "text")
+    sc.addSparkListener(listener)
+    val perBatch = try parts.tail.map { d =>
+      jobsOf {
+        val (next, p) = IncrementalLsh.addBatch(idx, d, "doc_id", "text")
+        idx = next
+        p
+      }
+    } finally sc.removeSparkListener(listener)
+    assert(perBatch(1) == perBatch(4), s"jobs per addBatch: $perBatch")
   }
 }

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path}
 import graft.SparkSpec
 import graft.catalog.ParquetCatalog
 import graft.dedup.IncrementalLsh
+import graft.graph.IncrementalGraph
 import graft.multimodal.HammingIndex.{Audio, Image}
 import graft.similarity.IncrementalSemantic
 import graft.text.IncrementalWinnow
@@ -174,5 +175,39 @@ class PurgeSpec extends SparkSpec {
     val (i1, _) = Image.build(dhashes(keptIds))
     val (_, iAll) = Image.addBatch(i1, dhashes(batchIds))
     assert(pairsOf(ipp) == pairsOf(iAll))
+  }
+
+  test("forget removes a page's out-edges from every stored version of " +
+      "a link-graph index") {
+    val root = Files.createTempDirectory("graft-purge-graph")
+    val cat = new ParquetCatalog(spark, root.toString)
+    def page(id: Long, targets: Long*): (Long, String) =
+      (id, targets.map(t => s"""<a href="http://d$t.example.com/p/$t">r</a>""")
+        .mkString("<html><body>", " ", "</body></html>"))
+    val pages = Seq(page(1L, 2L, 3L), page(2L, 3L), page(3L, 1L, 2L),
+      page(4L, 3L), page(5L)).toDF("doc_id", "html")
+    val idx = IncrementalGraph.build(pages, "doc_id", "html")
+    // two publishes, so a historical version exists before the purge
+    IncrementalGraph.save(idx, cat, "g", vacuumHistory = false)
+    IncrementalGraph.save(idx, cat, "g", vacuumHistory = false)
+    // page 5 has no out-edges and 999 was never crawled: neither counts
+    val report = Purge.forget(cat, Seq(3L, 5L, 999L).toDF("doc_id"),
+      "doc_id", graph = Seq("g"))
+    assert(report == Purge.Report(0L, 0L, 0L, 0L, 0L, graphRemoved = 1L))
+    val versions = {
+      val ls = Files.list(root.resolve("g_edges"))
+      try { import scala.jdk.CollectionConverters._
+        ls.iterator().asScala.map(_.toString).filter(_.contains("/v_")).toList }
+      finally ls.close()
+    }
+    assert(versions.nonEmpty)
+    for (v <- versions) {
+      val edges = spark.read.parquet(v).as[(Long, Long)].collect().toSet
+      assert(!edges.exists(_._1 == 3L), s"$v keeps page 3's out-edges")
+      // in-links to the purged page stay as dangling targets
+      assert(Set((1L, 3L), (2L, 3L), (4L, 3L)).subsetOf(edges), v)
+    }
+    assert(IncrementalGraph.load(cat, "g").edges.as[(Long, Long)]
+      .collect().toSet == Set((1L, 2L), (1L, 3L), (2L, 3L), (4L, 3L)))
   }
 }
