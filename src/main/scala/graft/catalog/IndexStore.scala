@@ -1,13 +1,17 @@
 package graft.catalog
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.internal.SQLConf
 
-/** The persistence edge every incremental index shares (text LSH,
-  * semantic, winnowing, audio, image and link graph): one publish of
-  * the index's relations through the catalog and one keyed id-delete.
-  * An index object names its tables and its id key; the mechanics live
-  * here once.
+/** The edges every incremental index shares (text LSH, semantic,
+  * winnowing, audio, image and link graph): one publish of the index's
+  * relations through the catalog, one materialized load, one keyed
+  * id-delete, and the one broadcast guard a per-batch probe of a stored
+  * relation goes through. An index object names its tables and its id
+  * key; the mechanics live here once.
   */
 object IndexStore {
 
@@ -24,6 +28,13 @@ object IndexStore {
       if (vacuumHistory) catalog.vacuum(t)
     }
 
+  /** A published relation read back as index state, materialized: a
+    * slice-union index keeps its loaded base for life, and the next
+    * vacuumed publish deletes the files a lazy base would still read.
+    */
+  def load(catalog: ParquetCatalog, table: String): DataFrame =
+    catalog.table(table).localCheckpoint()
+
   /** `rel` without the rows whose `key` is one of `ids`' `idCol` values:
     * one keyed anti-join (the delete set broadcasts at scale),
     * materialized because an index is state. Ids never indexed are
@@ -35,4 +46,23 @@ object IndexStore {
       idCol: String): DataFrame =
     rel.join(ids.select(col(idCol).as(key)), Seq(key), "left_anti")
       .localCheckpoint()
+
+  /** `side` with a broadcast hint when the localCheckpoint'd relation
+    * it reads holds at most `autoBroadcastJoinThreshold` bytes, so the
+    * stored relation on the other side of the join is scanned, not
+    * shuffled. A checkpointed relation has no size statistics, so the
+    * measure is its block-manager bytes. A larger (or unmeasurable)
+    * side gets no hint: the join then shuffles instead of broadcasting
+    * a huge batch.
+    */
+  private[graft] def buildSide(side: DataFrame): DataFrame = {
+    val limit = SQLConf.get.autoBroadcastJoinThreshold
+    val ckpt = ColumnBridge.logicalPlan(side).collectLeaves() match {
+      case Seq(r: LogicalRDD) => Some(r.rdd.id)
+      case _ => None
+    }
+    val bytes = ckpt.flatMap(id => side.sparkSession.sparkContext
+      .getRDDStorageInfo.find(_.id == id)).map(i => i.memSize + i.diskSize)
+    if (bytes.exists(_ <= limit)) broadcast(side) else side
+  }
 }

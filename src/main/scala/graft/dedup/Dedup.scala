@@ -16,10 +16,13 @@ import org.apache.spark.sql.functions._
   *  - n-gram Jaccard: the exact set-similarity join (inverted-index
   *    shingle join). Correct but O(pairs-sharing-a-shingle); at scale use
   *    it only to VERIFY candidates produced by MinHash-LSH.
-  *  - MinHash-LSH: signatures via k independent portable hashes, banded
-  *    into buckets; only same-bucket pairs are candidates. This is the
-  *    100 TB path: cost is linear in corpus + candidate pairs, and every
-  *    stage is a plain groupBy/join that AQE can skew-split.
+  *  - MinHash-LSH: one `(doc, shs)` shingle-set row per document,
+  *    row-local signatures via k affine portable hashes banded into
+  *    buckets, only same-bucket pairs as candidates, and a row-local
+  *    exact-Jaccard verify. This is the 100 TB path: cost is linear in
+  *    corpus + candidate pairs, and every stage is a row-local pass or
+  *    a plain join that AQE can skew-split. The one implementation:
+  *    [[IncrementalLsh]] calls the same functions per batch.
   *  - SimHash: 16-bit fingerprints from token-hash bit votes; hamming
   *    buckets give near-dup candidates for short text.
   */
@@ -74,36 +77,40 @@ object Dedup {
     * (doc-local dedup == `SELECT DISTINCT doc_id, shingle` since the doc id
     * is part of the key), so the explode emits 8-byte longs and the
     * distinct shuffle of the composed formulation disappears entirely.
-    * The string shingle never exists as a row.
+    * The string shingle never exists as a row. The exploded `(doc, sh)`
+    * shape is for exact-gram joins ([[jaccardPairs]], q84); MinHash-LSH
+    * reads the unexploded [[shingleSets]].
     */
   def hashedShingles(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3): DataFrame =
     docs.select(col(idCol).as("doc"),
       explode(graft.functions.TextHash.shingleHash60(col(textCol), n)).as("sh"))
 
-  /** MinHash signatures in WIDE form: one row per doc, `numHashes`
-    * min-agg columns `mh_0..mh_{k-1}`. The k hash functions are affine
-    * maps of the single base hash (PortableHash.minhash) — k hashes for
-    * one md5 — and the wide agg avoids exploding rows k-fold: one
-    * map-side-combinable shuffle keyed on the doc id.
+  /** Per-document shingle SETS — the one shingle relation of the
+    * MinHash-LSH path: one `(doc, shs)` row per document with at least
+    * one shingle, `shs` its distinct 60-bit shingle hashes
+    * ([[hashedShingles]] before the explode). Signatures and Jaccard are
+    * row-local over `shs`, so nothing downstream groups by document.
     */
-  def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
-      numHashes: Int, n: Int = 3): DataFrame =
-    signaturesFrom(hashedShingles(docs, idCol, textCol, n), numHashes)
+  def shingleSets(docs: DataFrame, idCol: String, textCol: String,
+      n: Int = 3): DataFrame =
+    docs.select(col(idCol).as("doc"),
+        graft.functions.TextHash.shingleHash60(col(textCol), n).as("shs"))
+      .filter(size(col("shs")) > 0)
 
-  private[dedup] def signaturesFrom(sh: DataFrame, numHashes: Int): DataFrame = {
-    val h31 = col("sh") % PortableHash.MinhashPrime
-    val aggs = (0 until numHashes).map(i =>
-      min(PortableHash.minhash(h31, i)).as(s"mh_$i"))
-    sh.groupBy(col("doc")).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** LSH band buckets of a wide signature relation: one (doc, band,
+  /** LSH band buckets of a shingle-set relation: one (doc, band,
     * bucket) row per band, the bucket an md5 of the band's signature
-    * slice. The INDEX relation [[IncrementalLsh]] stores.
+    * slice. The `bands * rowsPerBand` MinHash values are row-local:
+    * hash i is `array_min` over the row's shingles of the i-th affine
+    * map of the single base hash (PortableHash.minhash) — k hashes for
+    * one md5, and no group-by. The INDEX relation [[IncrementalLsh]]
+    * stores.
     */
-  private[dedup] def bucketsFrom(sig: DataFrame, bands: Int,
+  private[dedup] def buckets(sets: DataFrame, bands: Int,
       rowsPerBand: Int): DataFrame = {
+    val sig = sets.select(col("doc") +: (0 until bands * rowsPerBand)
+      .map(i => array_min(transform(col("shs"), x =>
+        PortableHash.minhash(x % PortableHash.MinhashPrime, i))).as(s"mh_$i")): _*)
     val bandStructs = (0 until bands).map { b =>
       val bandCols = (0 until rowsPerBand)
         .map(r => col(s"mh_${b * rowsPerBand + r}"))
@@ -115,141 +122,148 @@ object Dedup {
         col("bb.bucket").as("bucket"))
   }
 
-  private def candidatesFrom(sig: DataFrame, bands: Int,
-      rowsPerBand: Int): DataFrame = {
-    val buckets = bucketsFrom(sig, bands, rowsPerBand)
-    val l = buckets.select(col("doc").as("a"), col("band"), col("bucket"))
-    val r = buckets.select(col("doc").as("b"), col("band"), col("bucket"))
-    l.join(r, Seq("band", "bucket")).filter(col("a") < col("b"))
-      .select(col("a"), col("b")).distinct()
+  /** Candidate pairs touching `probe`: its `(doc, keys…)` band-key
+    * collisions with itself, kept as `x < y`, and with `stored`'s,
+    * normalized to (a < b) and deduped across bands; pairs within
+    * `stored` never form. The one-shot path passes no stored rows
+    * (`probe.limit(0)`: the optimizer drops the empty union branch);
+    * [[IncrementalLsh]] and [[graft.multimodal.HammingIndex]] pass
+    * their stored band keys.
+    */
+  private[graft] def selfCandidates(probe: DataFrame, stored: DataFrame,
+      keys: Seq[String] = Seq("band", "bucket")): DataFrame = {
+    def side(df: DataFrame, id: String) =
+      df.select(col("doc").as(id) +: keys.map(col): _*)
+    side(stored, "y").withColumn("old", lit(true))
+      .unionByName(side(probe, "y").withColumn("old", lit(false)))
+      .join(side(probe, "x"), keys)
+      .filter(col("x") < col("y") || (col("old") && col("x") =!= col("y")))
+      .select(least(col("x"), col("y")).as("a"),
+        greatest(col("x"), col("y")).as("b"))
+      .distinct()
   }
 
-  /** Exact-Jaccard verification of candidate pairs against a hashed-
-    * shingle relation — the tail of [[minhashNearDuplicates]]:
-    * candidates join their members' shingles, common-shingle counts
-    * become Jaccard, below-threshold pairs drop. [[IncrementalLsh]]
-    * computes the same double row-locally from shingle arrays.
+  /** Candidate pairs ACROSS two corpora: (a from `bktA`, b from `bktB`)
+    * per shared band bucket, deduped across bands — never a-vs-a or
+    * b-vs-b and no id ordering, so the two id spaces may overlap.
     */
-  private[dedup] def verifiedPairs(cand: DataFrame, sh: DataFrame,
+  private def crossCandidates(bktA: DataFrame, bktB: DataFrame): DataFrame =
+    bktA.select(col("doc").as("a"), col("band"), col("bucket"))
+      .join(bktB.select(col("doc").as("b"), col("band"), col("bucket")),
+        Seq("band", "bucket"))
+      .select(col("a"), col("b")).distinct()
+
+  /** `pairs` with member `side`'s (`"a"` or `"b"`) shingle array
+    * attached as `s<side>`: one keyed join of the sets against the pair
+    * ids.
+    */
+  private[dedup] def withSet(pairs: DataFrame, sets: DataFrame,
+      side: String): DataFrame =
+    sets.select(col("doc").as(side), col("shs").as(s"s$side"))
+      .join(pairs, Seq(side))
+
+  /** Exact-Jaccard verification of pairs carrying both members' sets
+    * (`sa`, `sb`): row-local `array_intersect` sizes — the common
+    * count over the size of the union, as a double — and pairs below
+    * `threshold` drop. Output `(a, b, jaccard)`.
+    */
+  private[dedup] def verified(pairs: DataFrame,
       threshold: Double): DataFrame = {
-    val sizes = sh.groupBy(col("doc")).agg(count(lit(1)).as("n_sh"))
-    val withA = cand.join(sh.withColumnRenamed("doc", "a"), Seq("a"))
-    val common = withA
-      .join(sh.select(col("doc").as("b"), col("sh")), Seq("b", "sh"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_common"))
-    common
-      .join(sizes.withColumnRenamed("doc", "a").withColumnRenamed("n_sh", "na"), "a")
-      .join(sizes.withColumnRenamed("doc", "b").withColumnRenamed("n_sh", "nb"), "b")
-      .withColumn("jaccard",
-        col("n_common").cast("double") /
-          (col("na") + col("nb") - col("n_common")))
+    val common = size(array_intersect(col("sa"), col("sb"))).cast("long")
+    pairs
+      .select(col("a"), col("b"),
+        (common.cast("double") / (size(col("sa")).cast("long") +
+          size(col("sb")).cast("long") - common)).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-      .select(col("a"), col("b"), col("jaccard"))
   }
 
   /** Candidate near-dup pairs via LSH banding of MinHash signatures:
     * docs agreeing on ALL rows of any band land in one bucket.
     */
   def minhashCandidates(docs: DataFrame, idCol: String, textCol: String,
-      bands: Int = 6, rowsPerBand: Int = 2, n: Int = 3): DataFrame =
-    candidatesFrom(minhashSignatures(docs, idCol, textCol,
-      bands * rowsPerBand, n), bands, rowsPerBand)
+      bands: Int = 6, rowsPerBand: Int = 2, n: Int = 3): DataFrame = {
+    val bkt = buckets(shingleSets(docs, idCol, textCol, n), bands,
+      rowsPerBand)
+    selfCandidates(bkt, bkt.limit(0))
+  }
 
   /** MinHash-LSH near-duplicate detection: LSH candidates, then exact
     * Jaccard verification on the candidate pairs only. The end-to-end
     * scale path: no all-pairs stage anywhere.
     *
-    * @param persistShingles cache the hashed-shingle relation (it feeds
-    *   4 subtrees). The cache is NOT unpersisted — the returned DataFrame
-    *   is lazy and needs it on every evaluation — so long-lived sessions
-    *   calling this repeatedly should pass false (recompute) or manage
-    *   eviction; Spark's LRU reclaims it under memory pressure.
+    * The shingle-set relation feeds the signature and both verify
+    * subtrees, so it is persisted (MEMORY_AND_DISK, lazily — building
+    * the frame starts no job). The cache is NOT unpersisted: the
+    * returned DataFrame is lazy and needs it on every evaluation, so a
+    * long-lived session calling this repeatedly should use
+    * [[minhashNearDuplicatesFrom]] and own the persistence; Spark's LRU
+    * reclaims it under memory pressure.
     */
   def minhashNearDuplicates(docs: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.5, bands: Int = 6, rowsPerBand: Int = 2,
-      n: Int = 3, persistShingles: Boolean = true): DataFrame = {
-    val sh0 = hashedShingles(docs, idCol, textCol, n)
-    val sh = if (persistShingles)
-      sh0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else sh0
-    minhashNearDuplicatesFrom(sh, threshold, bands, rowsPerBand)
-  }
+      n: Int = 3): DataFrame =
+    minhashNearDuplicatesFrom(shingleSets(docs, idCol, textCol, n)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+      threshold, bands, rowsPerBand)
 
-  /** [[minhashNearDuplicates]] over a PRECOMPUTED hashed-shingle
-    * relation (`(doc, sh)` — [[hashedShingles]]' shape): the factored
-    * entry for callers that already hold the shingles. The pipeline's
-    * stage chain computes the corpus shingles ONCE and feeds them to
-    * near-dup detection AND eval-decontamination — re-shingling the
-    * corpus per consumer was the round-18 release-diff bench tail.
-    * The caller owns persistence of `sh` (it feeds both the signature
-    * aggregation and the Jaccard-verify subtrees).
+  /** [[minhashNearDuplicates]] over a PRECOMPUTED shingle-set relation
+    * (`(doc, shs)` — [[shingleSets]]' shape): the factored entry for
+    * callers that already hold the sets. The pipeline's stage chain
+    * computes the corpus sets ONCE and feeds them to near-dup detection
+    * AND eval-decontamination — re-shingling the corpus per consumer
+    * was the round-18 release-diff bench tail. The caller owns
+    * persistence of `sets` (it feeds the signature and both verify
+    * subtrees).
     */
-  def minhashNearDuplicatesFrom(sh: DataFrame, threshold: Double = 0.5,
-      bands: Int = 6, rowsPerBand: Int = 2): DataFrame =
-    verifiedPairs(candidatesFrom(signaturesFrom(sh, bands * rowsPerBand),
-      bands, rowsPerBand), sh, threshold)
+  def minhashNearDuplicatesFrom(sets: DataFrame, threshold: Double = 0.5,
+      bands: Int = 6, rowsPerBand: Int = 2): DataFrame = {
+    val bkt = buckets(sets, bands, rowsPerBand)
+    verified(withSet(withSet(selfCandidates(bkt, bkt.limit(0)), sets, "a"),
+      sets, "b"), threshold)
+  }
 
   /** CROSS-corpus near-dup matching — the train-vs-eval contamination
     * check at LSH scale: one (a = `a`-corpus id, b = `b`-corpus id,
     * jaccard) row per near-dup pair ACROSS the two corpora. Same
-    * machinery as [[minhashNearDuplicates]] (shingle → sign → band →
-    * bucket join → exact-Jaccard verify on candidates only), but the
-    * bucket join pairs `a`'s buckets against `b`'s — never a-vs-a or
-    * b-vs-b, no id-ordering filter, so the two id spaces may overlap
+    * machinery as [[minhashNearDuplicates]] (shingle sets → sign →
+    * band → bucket join → exact-Jaccard verify on candidates only), but
+    * the bucket join pairs `a`'s buckets against `b`'s — never a-vs-a
+    * or b-vs-b, no id-ordering filter, so the two id spaces may overlap
     * freely. [[TextAnalysis.decontaminate]] is the EXACT n-gram-overlap
     * form of this check; this catches near-duplicate contamination
     * (light paraphrase, appended boilerplate) that exact-gram overlap
     * scores dilute.
     *
     * At 100 TB: cost is linear in both corpora plus cross collisions;
-    * the eval side is typically tiny — its shingle and bucket relations
+    * the eval side is typically tiny — its set and bucket relations
     * broadcast, so the train corpus is never shuffled by the candidate
-    * stage at all. Both shingle relations are cached (each feeds the
-    * signature and the verify subtrees) with the same lifecycle caveat
-    * as [[minhashNearDuplicates]]: the returned frame is lazy, so the
-    * cache is left for Spark's LRU / the caller to manage.
+    * stage at all. Both set relations are persisted with the same
+    * lifecycle caveat as [[minhashNearDuplicates]].
     */
   def crossCorpusMatches(a: DataFrame, aId: String, aText: String,
       b: DataFrame, bId: String, bText: String, threshold: Double = 0.5,
       bands: Int = 6, rowsPerBand: Int = 2, n: Int = 3): DataFrame =
     crossCorpusMatchesFrom(
-      hashedShingles(a, aId, aText, n)
+      shingleSets(a, aId, aText, n)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      hashedShingles(b, bId, bText, n)
+      shingleSets(b, bId, bText, n)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
       threshold, bands, rowsPerBand)
 
-  /** [[crossCorpusMatches]] over two PRECOMPUTED hashed-shingle
-    * relations — the factored entry mirroring
-    * [[minhashNearDuplicatesFrom]]: [[graft.pipeline.CorpusPipeline]]'s
-    * release path reuses its stage-chain corpus shingles for the train
-    * side and lets a caller diffing MULTIPLE releases against one eval
-    * set materialize the eval side once. Persistence is the caller's.
+  /** [[crossCorpusMatches]] over two PRECOMPUTED shingle-set relations
+    * (`(doc, shs)` — [[shingleSets]]' shape), the factored entry
+    * mirroring [[minhashNearDuplicatesFrom]]:
+    * [[graft.pipeline.CorpusPipeline]]'s release path reuses its
+    * stage-chain corpus sets for the train side and lets a caller
+    * diffing MULTIPLE releases against one eval set materialize the
+    * eval side once. Persistence is the caller's.
     */
-  def crossCorpusMatchesFrom(shA: DataFrame, shB: DataFrame,
+  def crossCorpusMatchesFrom(setsA: DataFrame, setsB: DataFrame,
       threshold: Double = 0.5, bands: Int = 6,
       rowsPerBand: Int = 2): DataFrame = {
-    val k = bands * rowsPerBand
-    val bktA = bucketsFrom(signaturesFrom(shA, k), bands, rowsPerBand)
-    val bktB = bucketsFrom(signaturesFrom(shB, k), bands, rowsPerBand)
-    val cand = bktA.select(col("doc").as("a"), col("band"), col("bucket"))
-      .join(bktB.select(col("doc").as("b"), col("band"), col("bucket")),
-        Seq("band", "bucket"))
-      .select(col("a"), col("b")).distinct()
-    val sizesA = shA.groupBy(col("doc")).agg(count(lit(1)).as("na"))
-    val sizesB = shB.groupBy(col("doc")).agg(count(lit(1)).as("nb"))
-    val common = cand
-      .join(shA.select(col("doc").as("a"), col("sh")), Seq("a"))
-      .join(shB.select(col("doc").as("b"), col("sh")), Seq("b", "sh"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_common"))
-    common
-      .join(sizesA.withColumnRenamed("doc", "a"), "a")
-      .join(sizesB.withColumnRenamed("doc", "b"), "b")
-      .withColumn("jaccard",
-        col("n_common").cast("double") /
-          (col("na") + col("nb") - col("n_common")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("a"), col("b"), col("jaccard"))
+    val cand = crossCandidates(buckets(setsA, bands, rowsPerBand),
+      buckets(setsB, bands, rowsPerBand))
+    verified(withSet(withSet(cand, setsA, "a"), setsB, "b"), threshold)
   }
 
   /** Remove from `train` every document with a near-dup match in

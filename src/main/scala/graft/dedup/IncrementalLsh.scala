@@ -1,12 +1,9 @@
 package graft.dedup
 
 import graft.catalog.{IndexStore, ParquetCatalog}
-import graft.functions.{PortableHash, TextHash}
+import graft.catalog.IndexStore.buildSide
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.internal.SQLConf
 
 /** A materialized MinHash-LSH near-duplicate index, one row per
   * document per relation kind: `buckets` holds one (doc, band, bucket)
@@ -16,37 +13,31 @@ import org.apache.spark.sql.internal.SQLConf
   * as catalog tables to keep the index across sessions (they
   * round-trip losslessly: longs, long arrays and md5 strings only).
   */
-final case class LshIndex(buckets: DataFrame, sets: DataFrame) {
-
-  /** The `(doc, sh)` row view of [[sets]] — [[Dedup.hashedShingles]]'
-    * shape, for consumers that join on single shingles.
-    */
-  def shingles: DataFrame = sets.select(col("doc"), explode(col("shs")).as("sh"))
-}
+final case class LshIndex(buckets: DataFrame, sets: DataFrame)
 
 /** Incrementally maintained near-duplicate detection — the ingest path
   * for a GROWING corpus. [[Dedup.minhashNearDuplicates]] answers "which
   * pairs in this corpus are near-dups" in one pass; here the corpus
   * arrives in batches and each batch must be checked against everything
-  * already indexed WITHOUT re-hashing the existing documents. Every
-  * per-batch step is row-local or a probe FROM the batch-sized side, so
-  * a batch runs a fixed number of Spark jobs and the stored relations
-  * are only ever scanned, never shuffled:
+  * already indexed WITHOUT re-hashing the existing documents. The
+  * MinHash-LSH steps are [[Dedup]]'s own (shingle sets, row-local
+  * signatures and bands, the self-candidate join, the row-local
+  * Jaccard verify); this object adds only the per-batch checkpoints
+  * and the broadcast guards that keep every step a probe FROM the
+  * batch-sized side, so a batch runs a fixed number of Spark jobs and
+  * the stored relations are only ever scanned, never shuffled:
   *
-  *   - only the new documents are shingled (one array row per doc),
-  *     signed (`array_min` per hash function over the row's array — no
-  *     group-by) and banded;
+  *   - only the new documents are shingled, signed and banded;
   *   - candidates come from the new buckets probing the stored plus new
   *     buckets — new×new and new×old collisions, never old×old (those
   *     were emitted by earlier batches);
   *   - verification fetches both members' shingle arrays by probing the
-  *     stored sets with the candidate pairs, and Jaccard is row-local
-  *     (`array_intersect` sizes) — the same double as
-  *     [[Dedup.verifiedPairs]]' counts, with no explode or pair group-by.
+  *     stored sets with the candidate pairs.
   *
   * A batch-side relation is broadcast only when its materialized size
-  * fits the session's `autoBroadcastJoinThreshold`; a batch too large
-  * for that falls back to a shuffle join rather than risk an OOM.
+  * fits the session's `autoBroadcastJoinThreshold`
+  * ([[graft.catalog.IndexStore.buildSide]]); a batch too large for that
+  * falls back to a shuffle join rather than risk an OOM.
   *
   * Batching is exhaustive AND exactly-once: every pair of the full
   * corpus has a unique emitting batch (the later member's), so the
@@ -76,28 +67,20 @@ object IncrementalLsh {
   def addBatch(idx: LshIndex, docs: DataFrame, idCol: String,
       textCol: String, threshold: Double = 0.5, bands: Int = 6,
       rowsPerBand: Int = 2, n: Int = 3): (LshIndex, DataFrame) = {
-    val newSets = docs.select(col(idCol).as("doc"),
-        TextHash.shingleHash60(col(textCol), n).as("shs"))
-      .filter(size(col("shs")) > 0).localCheckpoint()
-    val sig = newSets.select(col("doc") +: (0 until bands * rowsPerBand)
-      .map(i => array_min(transform(col("shs"), x =>
-        PortableHash.minhash(x % PortableHash.MinhashPrime, i))).as(s"mh_$i")): _*)
-    val newBuckets = Dedup.bucketsFrom(sig, bands, rowsPerBand)
+    val newSets = Dedup.shingleSets(docs, idCol, textCol, n)
+      .localCheckpoint()
+    val newBuckets = Dedup.buckets(newSets, bands, rowsPerBand)
       .localCheckpoint()
     val allBuckets = idx.buckets.unionByName(newBuckets)
     val allSets = idx.sets.unionByName(newSets)
     // cand and withA are checkpointed so their materialized sizes can
-    // pick the verify joins (see buildSide)
-    val cand = candidates(newBuckets, allBuckets).localCheckpoint()
-    val withA = allSets.select(col("doc").as("a"), col("shs").as("sa"))
-      .join(buildSide(cand), Seq("a")).localCheckpoint()
-    val common = size(array_intersect(col("sa"), col("sb"))).cast("long")
-    val pairs = allSets.select(col("doc").as("b"), col("shs").as("sb"))
-      .join(buildSide(withA), Seq("b"))
-      .select(col("a"), col("b"),
-        (common.cast("double") / (size(col("sa")).cast("long") +
-          size(col("sb")).cast("long") - common)).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    // pick the verify joins (see IndexStore.buildSide)
+    val cand = Dedup.selfCandidates(buildSide(newBuckets), idx.buckets)
+      .localCheckpoint()
+    val withA = Dedup.withSet(buildSide(cand), allSets, "a")
+      .localCheckpoint()
+    val pairs = Dedup.verified(Dedup.withSet(buildSide(withA), allSets,
+      "b"), threshold)
     (LshIndex(allBuckets, allSets), pairs)
   }
 
@@ -120,46 +103,15 @@ object IncrementalLsh {
     IndexStore.publish(catalog, vacuumHistory,
       s"${name}_buckets" -> idx.buckets, s"${name}_sets" -> idx.sets)
 
-  /** Rehydrate a [[save]]d index. */
+  /** Rehydrate a [[save]]d index through [[IndexStore.load]]. */
   def load(catalog: ParquetCatalog, name: String): LshIndex =
-    LshIndex(catalog.table(s"${name}_buckets"),
-      catalog.table(s"${name}_sets"))
+    LshIndex(IndexStore.load(catalog, s"${name}_buckets"),
+      IndexStore.load(catalog, s"${name}_sets"))
 
   /** An index with no documents, keyed by `docs`' id type. */
   private def empty(docs: DataFrame, idCol: String): LshIndex = {
     val none = docs.select(col(idCol).as("doc")).limit(0)
     LshIndex(none.select(col("doc"), lit(0).as("band"), lit("").as("bucket")),
       none.select(col("doc"), typedLit(Array.empty[Long]).as("shs")))
-  }
-
-  /** Band-bucket collisions of `probe` against `all`, normalized to
-    * (a < b) and deduped across bands. Probe×probe pairs surface from
-    * both orientations, probe×rest from one; `distinct` collapses both
-    * cases to a single row.
-    */
-  private def candidates(probe: DataFrame, all: DataFrame): DataFrame =
-    all.select(col("doc").as("y"), col("band"), col("bucket"))
-      .join(buildSide(probe.select(col("doc").as("x"), col("band"),
-        col("bucket"))), Seq("band", "bucket"))
-      .filter(col("x") =!= col("y"))
-      .select(least(col("x"), col("y")).as("a"),
-        greatest(col("x"), col("y")).as("b"))
-      .distinct()
-
-  /** `side` with a broadcast hint when the localCheckpoint'd relation
-    * it reads holds at most `autoBroadcastJoinThreshold` bytes, so the
-    * stored relation on the other side of the join is scanned, not
-    * shuffled. A larger (or unmeasurable) side gets no hint: the join
-    * then shuffles instead of broadcasting a huge batch.
-    */
-  private def buildSide(side: DataFrame): DataFrame = {
-    val limit = SQLConf.get.autoBroadcastJoinThreshold
-    val ckpt = ColumnBridge.logicalPlan(side).collectLeaves() match {
-      case Seq(r: LogicalRDD) => Some(r.rdd.id)
-      case _ => None
-    }
-    val bytes = ckpt.flatMap(id => side.sparkSession.sparkContext
-      .getRDDStorageInfo.find(_.id == id)).map(i => i.memSize + i.diskSize)
-    if (bytes.exists(_ <= limit)) broadcast(side) else side
   }
 }

@@ -1,6 +1,8 @@
 package graft.multimodal
 
 import graft.catalog.{IndexStore, ParquetCatalog}
+import graft.catalog.IndexStore.buildSide
+import graft.dedup.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,10 +27,11 @@ final case class HammingIndex(hashes: DataFrame, bands: Int)
   * guarantee. That equivalence is the q131/q151 oracle (q129's/q110's
   * SQL verbatim) and the HammingIndexSpec contract.
   *
-  * Index state is localCheckpoint-materialized per fold (an index is
-  * state, not a plan). At 100 TB of media the index is millions of rows
-  * where the corpus is petabytes of payload: the decode+hash scan
-  * happens once per item at ingest, never again.
+  * Index state is the union of per-batch localCheckpoint slices (an
+  * index is state, not a plan), probed only from the batch side. At
+  * 100 TB of media the index is millions of rows where the corpus is
+  * petabytes of payload: the decode+hash scan happens once per item at
+  * ingest, never again.
   */
 object HammingIndex {
 
@@ -47,25 +50,36 @@ object HammingIndex {
     def hashes(media: DataFrame): DataFrame =
       hashOf(media.select(col("doc_id"), col("payload"), col("n_bytes")))
 
-    /** Index an initial batch of hashes; returns the index and the
-      * near-pairs within it.
+    /** Index an initial batch of hashes: [[addBatch]] onto an empty
+      * index. Returns the index and the near-pairs within it.
       */
     def build(hashes: DataFrame, maxHamming: Int = this.maxHamming,
-        bands: Int = 4): (HammingIndex, DataFrame) = {
-      val h = hashes.select(col("id"), col(hashCol)).localCheckpoint()
-      (HammingIndex(h, bands),
-        verified(candidates(h, h, bands), h, maxHamming))
-    }
+        bands: Int = 4): (HammingIndex, DataFrame) =
+      addBatch(HammingIndex(hashes.select(col("id"), col(hashCol)).limit(0),
+        bands), hashes, maxHamming)
 
     /** Fold one batch in; returns the grown index and the NEW pairs
-      * (those with at least one member in the batch).
+      * (those with at least one member in the batch). The stored hash
+      * relation is the union of the per-batch checkpointed slices, only
+      * ever the streamed side of a join whose build side is the batch's
+      * band keys ([[IndexStore.buildSide]]), so it is scanned, never
+      * shuffled or re-checkpointed: new band keys against themselves and
+      * the stored ones give the candidates (stored-vs-stored pairs never
+      * form). A band key carries its whole `(id, hash)` member, so each
+      * candidate is verified where it forms ([[Perceptual.hammingPairs]]'
+      * shape) and no candidate is materialized or fetched again.
       */
     def addBatch(idx: HammingIndex, hashes: DataFrame,
         maxHamming: Int = this.maxHamming): (HammingIndex, DataFrame) = {
+      def keys(h: DataFrame) =
+        Perceptual.bandKeys(h, "id", hashCol, idx.bands, hashBits)
+          .select(struct(col("id"), col(hashCol).as("h")).as("doc"), col("bk"))
       val newH = hashes.select(col("id"), col(hashCol)).localCheckpoint()
-      val all = idx.hashes.unionByName(newH).localCheckpoint()
-      (idx.copy(hashes = all),
-        verified(candidates(newH, all, idx.bands), all, maxHamming))
+      val pairs = Dedup.selfCandidates(buildSide(keys(newH).localCheckpoint()),
+          keys(idx.hashes), Seq("bk"))
+        .filter(bit_count(col("a.h").bitwiseXOR(col("b.h"))) <= maxHamming)
+        .select(col("a.id").as("a"), col("b.id").as("b"))
+      (idx.copy(hashes = idx.hashes.unionByName(newH)), pairs)
     }
 
     /** Remove items by id (takedowns); already-emitted pairs are the
@@ -83,45 +97,16 @@ object HammingIndex {
       IndexStore.publish(catalog, vacuumHistory,
         s"${name}_$hashCol" -> idx.hashes)
 
-    /** Rehydrate a [[save]]d index. */
+    /** Rehydrate a [[save]]d index through [[IndexStore.load]]. */
     def load(catalog: ParquetCatalog, name: String, bands: Int = 4)
         : HammingIndex =
-      HammingIndex(catalog.table(s"${name}_$hashCol"), bands)
+      HammingIndex(IndexStore.load(catalog, s"${name}_$hashCol"), bands)
 
     /** Cluster labels over accumulated pairs — [[Perceptual.clusters]]'
       * output shape from incremental state.
       */
     def clusters(idx: HammingIndex, pairs: DataFrame): DataFrame =
       Perceptual.labelled(idx.hashes, "id", hashCol, pairs)
-
-    /** Candidate ids (a < b, distinct) with at least one member in
-      * `newH`: new bands join ALL bands — stored-vs-stored pairs are
-      * never regenerated.
-      */
-    private def candidates(newH: DataFrame, allH: DataFrame,
-        bands: Int): DataFrame = {
-      def keys(h: DataFrame, id: String, key: String) =
-        Perceptual.bandKeys(h, "id", hashCol, bands, hashBits)
-          .select(col("id").as(id), col("bk").as(key))
-      keys(newH, "na", "kl").join(keys(allH, "nb", "kr"),
-          col("kl") === col("kr") && col("na") =!= col("nb"))
-        .select(least(col("na"), col("nb")).as("a"),
-          greatest(col("na"), col("nb")).as("b"))
-        .distinct()
-    }
-
-    /** Exact hamming verify of a candidate relation against the hash
-      * store.
-      */
-    private def verified(cand: DataFrame, allH: DataFrame,
-        maxHamming: Int): DataFrame =
-      cand
-        .join(allH.select(col("id").as("a"), col(hashCol).as("ha")),
-          Seq("a"))
-        .join(allH.select(col("id").as("b"), col(hashCol).as("hb")),
-          Seq("b"))
-        .filter(bit_count(col("ha").bitwiseXOR(col("hb"))) <= maxHamming)
-        .select(col("a"), col("b"))
   }
 
   /** Audio clips: 52-bit spectral fingerprints, hamming <= 3. */

@@ -266,7 +266,8 @@ object CorpusPipeline {
     * addition had to be wired in three places; never again).
     * `gated`/`exact` are persisted and `pairs` is localCheckpoint-
     * materialized — caller-managed eviction, same contract as
-    * minhashNearDuplicates.
+    * minhashNearDuplicates. `shingles` is the exact-dedup survivors'
+    * shingle-set relation `(doc, shs)` ([[Dedup.shingleSets]]' shape).
     */
   case class Stages(gated: DataFrame, banded: DataFrame,
       exact: DataFrame, shingles: DataFrame, pairs: DataFrame,
@@ -300,11 +301,11 @@ object CorpusPipeline {
     *   caller running several chains over slices of one corpus (e.g.
     *   the q172/q173 double-release replay) computes the gate scan
     *   ONCE over the superset and passes each chain its filtered view.
-    * @param preShingles optional per-doc hashed-shingle relation
-    *   `(doc, sh)` covering AT LEAST this chain's exact-dedup
-    *   survivors (shingling is per-doc, so the semi-join restriction
-    *   to the survivors equals `hashedShingles(exact)` exactly) —
-    *   same sharing rationale, caller-persisted.
+    * @param preShingles optional shingle-set relation `(doc, shs)`
+    *   ([[Dedup.shingleSets]]' shape) covering AT LEAST this chain's
+    *   exact-dedup survivors (shingling is per-doc, so the semi-join
+    *   restriction to the survivors equals `shingleSets(exact)`
+    *   exactly) — same sharing rationale, caller-persisted.
     */
   def stages(docs: DataFrame, idCol: String, textCol: String,
       cfg: Config = Config(),
@@ -319,7 +320,8 @@ object CorpusPipeline {
       .select(col("keep_id").as(idCol))
     val exact = banded.join(keep, Seq(idCol), "left_semi")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the corpus shingles are computed ONCE here and exposed on Stages:
+    // the corpus shingle sets are computed ONCE here and exposed on
+    // Stages:
     // near-dup pairing consumes them below, and [[release]]'s
     // decontamination reuses them for the train side (re-shingling the
     // released corpus per consumer doubled the release chain's scan
@@ -332,7 +334,7 @@ object CorpusPipeline {
     // (round-19 ADVICE)
     val sh = preShingles.map(_.join(exact.select(id.as("doc")),
         Seq("doc"), "left_semi"))
-      .getOrElse(Dedup.hashedShingles(exact, idCol, textCol)
+      .getOrElse(Dedup.shingleSets(exact, idCol, textCol)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val pairsAll = Dedup.minhashNearDuplicatesFrom(sh,
         threshold = pairThreshold.getOrElse(cfg.jaccardThreshold))
@@ -445,6 +447,12 @@ object CorpusPipeline {
     * localCheckpoint-materialized once for its three consumers (dedup
     * subset, CC loop, split restriction). Persisted gate/exact caches
     * follow [[clean]]'s caller-managed-eviction contract.
+    *
+    * @param evalShingles optional shingle-set relation `(doc, shs)` of
+    *   `evalDocs` ([[Dedup.shingleSets]] at `n = 3`), caller-persisted;
+    *   derived and persisted here when absent.
+    * @param preGated see [[stages]]
+    * @param preShingles see [[stages]]: a `(doc, shs)` relation
     */
   def release(docs: DataFrame, evalDocs: DataFrame, idCol: String,
       textCol: String, cfg: Config = Config(),
@@ -458,9 +466,9 @@ object CorpusPipeline {
     val id = col(idCol)
     val st = stages(docs, idCol, textCol, cfg, Some(splitThreshold),
       preGated, preShingles)
-    // decontamination REUSES the stage chain's corpus shingles (the
+    // decontamination REUSES the stage chain's corpus shingle sets (the
     // survivor restriction is a semi join — shingling is per-doc, so
-    // the restricted relation equals hashedShingles(survivors)); the
+    // the restricted relation equals shingleSets(survivors)); the
     // eval side may arrive precomputed (`evalShingles` — a caller
     // diffing several releases against ONE eval set materializes it
     // once; see q172/q173) or is derived here.
@@ -468,7 +476,7 @@ object CorpusPipeline {
     val shTrain = st.shingles.join(
       surv.select(id.as("doc")), Seq("doc"), "left_semi")
     val shEval = evalShingles.getOrElse(
-      Dedup.hashedShingles(evalDocs, idCol, textCol)
+      Dedup.shingleSets(evalDocs, idCol, textCol)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val hit = Dedup.crossCorpusMatchesFrom(shTrain, shEval,
         cfg.jaccardThreshold)

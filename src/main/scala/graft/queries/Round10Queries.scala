@@ -57,12 +57,12 @@ object Round10Queries extends QueryGroup {
     // gate view, and each chain semi-joins the shared shingle relation
     // down to its own exact-dedup survivors (identical to shingling
     // its own survivors directly).
-    val evSh = graft.dedup.Dedup.hashedShingles(ev, "doc_id", "text")
+    val evSh = graft.dedup.Dedup.shingleSets(ev, "doc_id", "text")
       .localCheckpoint()
     val gatedB = graft.pipeline.CorpusPipeline.rowGates(corpus,
         "doc_id", "text", graft.pipeline.CorpusPipeline.Config())
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val shAll = graft.dedup.Dedup.hashedShingles(gatedB, "doc_id", "text")
+    val shAll = graft.dedup.Dedup.shingleSets(gatedB, "doc_id", "text")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val relA = graft.pipeline.CorpusPipeline.release(
       corpus.filter(col("doc_id") % 23 =!= 5), ev, "doc_id", "text",

@@ -308,10 +308,10 @@ object Round9Queries extends QueryGroup {
             concat(lit("fresh eval doc "), col("doc_id").cast("string"),
               lit(" with wholly unique content")).as("text")))
       // decontamination reuses the ingest index's accumulated shingle
-      // relation instead of re-shingling the released corpus
+      // sets instead of re-shingling the released corpus
       graft.streaming.StreamingCorpus.resolveRelease(
           gated, pairs, ev, "doc_id", "text",
-          trainShingles = Some(idx.shingles))
+          trainShingles = Some(idx.sets))
         .orderBy(col("doc_id"))
     }),
 

@@ -88,8 +88,8 @@ object Corpus {
        |  ${PortableHash.hash60BaseSql("shingle")} AS shh FROM grams$sfx)""".stripMargin
 
   /** MinHash signature + LSH bucket CTEs over `sh<sfx>`, ending in
-    * `buckets<sfx>(doc_id, band, bucket)` (mirrors
-    * Dedup.minhashSignatures + bucketsFrom: 12 affine hashes, 6 bands x 2).
+    * `buckets<sfx>(doc_id, band, bucket)` (mirrors Dedup.buckets' row-
+    * local signatures and bands: 12 affine hashes, 6 bands x 2).
     */
   private[queries] def sigBucketsSql(sfx: String = ""): String =
     s"""mh$sfx AS (

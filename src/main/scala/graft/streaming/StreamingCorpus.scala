@@ -122,16 +122,17 @@ object StreamingCorpus {
     * exact-dedup survivors recovers exactly the one-shot pair set —
     * q147's oracle is q144's SQL verbatim under a different batching.
     *
-    * @param trainShingles optional per-doc hashed-shingle relation
-    *   covering AT LEAST the gate survivors — the ingest INDEX already
-    *   accumulated exactly this (`idx.shingles`, the row view of the
-    *   per-batch checkpointed `idx.sets`), so the caller passes it and decontamination reuses it
-    *   via a semi-join restriction instead of re-shingling the
+    * @param trainShingles optional shingle-set relation `(doc, shs)`
+    *   ([[Dedup.shingleSets]]' shape) covering AT LEAST the gate
+    *   survivors — the ingest INDEX already accumulated exactly this
+    *   (`idx.sets`, per-batch checkpointed), so the caller passes it
+    *   and decontamination reuses it via a semi-join restriction
+    *   instead of re-shingling the
     *   released corpus (shingling is per-doc, so the restriction
     *   equals shingling the survivors directly — the q172/q173
     *   shared-chain argument applied to the streaming door). It must
     *   be shingled at `n = 3`: the eval side is shingled at
-    *   [[Dedup.hashedShingles]]' default `n = 3`, which is also the `n`
+    *   [[Dedup.shingleSets]]' default `n = 3`, which is also the `n`
     *   [[ingest]] always builds its index with. A relation shingled at
     *   any other `n` would give an asymmetric Jaccard.
     */
@@ -159,7 +160,7 @@ object StreamingCorpus {
       case Some(sh) =>
         val shTrain = sh.join(survivors.select(id.as("doc")),
           Seq("doc"), "left_semi")
-        val shEval = Dedup.hashedShingles(evalDocs, idCol, textCol)
+        val shEval = Dedup.shingleSets(evalDocs, idCol, textCol)
           .localCheckpoint()
         val hit = Dedup.crossCorpusMatchesFrom(shTrain, shEval,
             dedupThreshold)

@@ -172,8 +172,8 @@ object ScaleProbe {
       .agg(sum(col("l_quantity").cast("decimal(18,2)")), count(lit(1)))
       .count())
 
-    def nearDups(d: DataFrame) = graft.dedup.Dedup.minhashNearDuplicates(d,
-      "doc_id", "text", persistShingles = false)
+    def nearDups(d: DataFrame) = graft.dedup.Dedup.minhashNearDuplicatesFrom(
+      graft.dedup.Dedup.shingleSets(d, "doc_id", "text"))
     docRow("minhash_lsh")(nearDups(_).count())
 
     // end-to-end near-dup clustering: LSH pairs -> iterative connected
@@ -960,6 +960,20 @@ object ScaleProbe {
         .filter(col("n_sent") >= 0 && col("n_lines_kept") >= 0)
         .count())
 
+    // the transport rows' tail: `raw(headers, body bytes)` undoes the
+    // content coding, then the charset decode; counts the decoded rows.
+    // The count is an aggregate over the decoded column, not a filter:
+    // Catalyst pushes a Filter below the projections with every alias
+    // inlined at each reference, so the payload and the replicated text
+    // were rebuilt inside every `when` branch of the filter condition,
+    // past what whole-stage codegen compiles.
+    def decodedCount(p: DataFrame)(raw: (Column, Column) => Column): Long = {
+      val pt = Warc.payloadText(col("payload"))
+      p.select(Warc.decodeBody(raw(pt, Warc.bodyBytes(col("payload"))),
+          Warc.httpCharset(pt)).as("dec"))
+        .agg(count_if(length(col("dec")) >= 0)).head().getLong(0)
+    }
+
     // Charset transport: encode → binary payload → header parse →
     // per-charset decode, all in-plan (the q260 column path without
     // the storage round-trip — per-row codegen string/byte work).
@@ -972,11 +986,7 @@ object ScaleProbe {
         Warc.httpResponseBytes(lit(200), lit("text/html"),
           when(latin, lit("iso-8859-1")).otherwise(lit("utf-8")),
           lit(""), body).as("payload"))
-      p.select(col("doc_id"),
-          Warc.decodeBody(Warc.bodyBytes(col("payload")),
-            Warc.httpCharset(Warc.payloadText(col("payload"))))
-            .as("dec"))
-        .filter(length(col("dec")) >= 0).count()
+      decodedCount(p)((_, bb) => bb)
     }
 
     // Mime sniff over q264's planted containers (in-plan; the gzip
@@ -1020,15 +1030,6 @@ object ScaleProbe {
         .select(coalesce(col("canonical"), col("url")).as("ckey"))
         .groupBy(col("ckey")).agg(count(lit(1)).as("sz"))
         .filter(col("sz") >= 1).count()
-    }
-
-    // the transport rows' tail: `raw(headers, body bytes)` undoes the
-    // content coding, then the charset decode; counts the decoded rows
-    def decodedCount(p: DataFrame)(raw: (Column, Column) => Column): Long = {
-      val pt = Warc.payloadText(col("payload"))
-      p.select(Warc.decodeBody(raw(pt, Warc.bodyBytes(col("payload"))),
-          Warc.httpCharset(pt)).as("dec"))
-        .filter(length(col("dec")) >= 0).count()
     }
 
     // Full transport onion per row (q271): chunk-frame + gzip +

@@ -5,24 +5,30 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
 /** Keeps [[SparkEntry.session]] the only place a session is built,
-  * [[graft.streaming.StreamFold]] the only streaming fold, and
-  * [[graft.catalog.IndexStore.publish]] the only index publish.
+  * [[graft.streaming.StreamFold]] the only streaming fold,
+  * [[graft.catalog.IndexStore.publish]] the only index publish, and
+  * [[graft.dedup.Dedup]] the only MinHash-LSH implementation.
   */
 class SessionFactorySpec extends AnyFunSuite {
 
-  /** Names of the `.scala` files under `roots` that contain `token`. */
-  private def sourcesWith(token: String, roots: String*): Seq[String] = {
+  /** Names of the `.scala` files under `roots` that match `re`. */
+  private def sourcesMatching(re: Regex, roots: String*): Seq[String] = {
     val dirs = roots.map(new File(_))
     dirs.foreach(r => assert(r.isDirectory, s"$r not found"))
     dirs.flatMap { r =>
       Files.walk(r.toPath).iterator().asScala
         .filter(_.toString.endsWith(".scala"))
-        .filter(p => Files.readString(p).contains(token))
+        .filter(p => re.findFirstIn(Files.readString(p)).isDefined)
         .map(_.getFileName.toString)
     }
   }
+
+  /** Names of the `.scala` files under `roots` that contain `token`. */
+  private def sourcesWith(token: String, roots: String*): Seq[String] =
+    sourcesMatching(Regex.quote(token).r, roots: _*)
 
   test("SparkEntry.scala is the only source that builds a session") {
     val builder = "SparkSession" + ".builder" // split: this file is scanned too
@@ -40,5 +46,12 @@ class SessionFactorySpec extends AnyFunSuite {
     val call = "." + "vacuum(" // split: this file is scanned too
     assert(sourcesWith(call, "src/main/scala")
       .filterNot(_ == "ParquetCatalog.scala") == Seq("IndexStore.scala"))
+  }
+
+  test("Dedup.scala holds the only MinHash signature and Jaccard verify") {
+    assert(sourcesWith("array_intersect(", "src/main/scala") ==
+      Seq("Dedup.scala"))
+    val signature = "(?s)transform\\([^;]{0,160}?PortableHash\\.minhash\\(".r
+    assert(sourcesMatching(signature, "src/main/scala") == Seq("Dedup.scala"))
   }
 }

@@ -124,4 +124,34 @@ class DedupSpec extends SparkSpec {
     // singleton survives trivially
     assert(out(6L) == ((6L, true)))
   }
+
+  test("building the one-shot near-dup entries starts no Spark job") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.graft.ListenerBridge
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val ev = docs.filter($"doc_id" % 4 === 0)
+      .select(($"doc_id" + 1000L).as("doc_id"), $"text")
+    docs.createOrReplaceTempView("lazy_docs")
+    graft.functions.GraftExtensions.register(spark)
+    assert(ListenerBridge.tryDrain(sc))
+    val jobs = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      Dedup.minhashNearDuplicates(docs, "doc_id", "text")
+      Dedup.minhashCandidates(docs, "doc_id", "text")
+      Dedup.crossCorpusMatches(docs, "doc_id", "text", ev, "doc_id", "text")
+      Dedup.decontaminateNearDup(docs, "doc_id", "text", ev, "doc_id",
+        "text")
+      // the TVF inlines the analyzed plan: analysis must stay lazy too
+      spark.sql("SELECT * FROM graft_near_duplicates('lazy_docs', " +
+        "'doc_id', 'text', 0.5)").queryExecution.analyzed
+      assert(ListenerBridge.tryDrain(sc))
+      assert(jobs.get == 0)
+    } finally sc.removeSparkListener(l)
+  }
 }

@@ -23,8 +23,8 @@ class IncrementalLshSpec extends SparkSpec {
     df.select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("two-batch ingestion == one-shot batch run, exactly once") {
-    val oneShot = Dedup.minhashNearDuplicates(
-      corpus, "doc_id", "text", persistShingles = false)
+    val oneShot = Dedup.minhashNearDuplicatesFrom(
+      Dedup.shingleSets(corpus, "doc_id", "text"))
     val (idx, p1) = IncrementalLsh.build(
       corpus.filter(col("doc_id") % 2 === 0), "doc_id", "text")
     val (_, p2) = IncrementalLsh.addBatch(idx,
@@ -53,8 +53,8 @@ class IncrementalLshSpec extends SparkSpec {
   }
 
   test("three-batch ingestion matches too (batch boundaries arbitrary)") {
-    val oneShot = Dedup.minhashNearDuplicates(
-      corpus, "doc_id", "text", persistShingles = false)
+    val oneShot = Dedup.minhashNearDuplicatesFrom(
+      Dedup.shingleSets(corpus, "doc_id", "text"))
     val parts = (0 to 2).map(i => corpus.filter(col("doc_id") % 3 === i))
     val (idx0, p0) = IncrementalLsh.build(parts(0), "doc_id", "text")
     val (idx1, p1) = IncrementalLsh.addBatch(idx0, parts(1), "doc_id", "text")
@@ -87,7 +87,7 @@ class IncrementalLshSpec extends SparkSpec {
     val idx2 = IncrementalLsh.delete(idx1, odds.select("doc_id"), "doc_id")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSet
     assert(rows(idx2.buckets) == rows(idx0.buckets))
-    assert(rows(idx2.shingles) == rows(idx0.shingles))
+    assert(rows(idx2.sets) == rows(idx0.sets))
     // and the shrunk index behaves like the pre-add one: re-adding the
     // deleted batch re-emits the same new pairs
     val (_, fresh0) = IncrementalLsh.addBatch(idx0, odds, "doc_id", "text")
@@ -101,7 +101,7 @@ class IncrementalLshSpec extends SparkSpec {
     val ghost = Seq(999999998L, 999999999L).toDF("doc_id")
     val idx2 = IncrementalLsh.delete(idx, ghost, "doc_id")
     assert(idx2.buckets.count() == idx.buckets.count() &&
-      idx2.shingles.count() == idx.shingles.count())
+      idx2.sets.count() == idx.sets.count())
   }
 
   test("save/load round-trips and repeated saves keep version count bounded") {
@@ -125,7 +125,27 @@ class IncrementalLshSpec extends SparkSpec {
     val loaded = IncrementalLsh.load(cat, "lshsv")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSet
     assert(rows(loaded.buckets) == rows(idx2.buckets))
-    assert(rows(loaded.shingles) == rows(idx2.shingles))
+    assert(rows(loaded.sets) == rows(idx2.sets))
+  }
+
+  test("load, addBatch, save, addBatch: the vacuumed version is not read") {
+    val cat = new graft.catalog.ParquetCatalog(spark,
+      java.nio.file.Files.createTempDirectory("graft-lshvac").toString)
+    def triples(df: DataFrame) = df.select("a", "b", "jaccard").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val oneShot = triples(Dedup.minhashNearDuplicatesFrom(
+      Dedup.shingleSets(corpus, "doc_id", "text")))
+    val Seq(b0, b1, b2) = batches(3, 14L)
+    val (idx0, p0) = IncrementalLsh.build(b0, "doc_id", "text")
+    IncrementalLsh.save(idx0, cat, "lshvac")
+    val (idx1, p1) = IncrementalLsh.addBatch(
+      IncrementalLsh.load(cat, "lshvac"), b1, "doc_id", "text")
+    val got = triples(p0) ++ triples(p1)
+    // writes v_2 and vacuums v_1, the version load read
+    IncrementalLsh.save(idx1, cat, "lshvac")
+    val (idx2, p2) = IncrementalLsh.addBatch(idx1, b2, "doc_id", "text")
+    assert(got ++ triples(p2) == oneShot)
+    assert(idx2.sets.count() == corpus.count())
   }
 
   /** `corpus` split into `k` batches by a seeded hash of the id. */
@@ -137,8 +157,8 @@ class IncrementalLshSpec extends SparkSpec {
   test("any batching's pair union == one-shot pairs, jaccard bit-exact") {
     def triples(df: DataFrame) = df.select("a", "b", "jaccard").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val oneShot = triples(Dedup.minhashNearDuplicates(
-      corpus, "doc_id", "text", persistShingles = false))
+    val oneShot = triples(Dedup.minhashNearDuplicatesFrom(
+      Dedup.shingleSets(corpus, "doc_id", "text")))
     assert(oneShot.nonEmpty)
     for ((k, seed) <- Seq(2 -> 11L, 3 -> 12L, 6 -> 13L)) {
       val parts = batches(k, seed)

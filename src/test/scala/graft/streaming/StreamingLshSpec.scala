@@ -31,8 +31,8 @@ class StreamingLshSpec extends SparkSpec {
   }
 
   private def oneShotPairs(corpus: DataFrame): Set[(Long, Long)] =
-    Dedup.minhashNearDuplicates(corpus, "doc_id", "text",
-        persistShingles = false)
+    Dedup.minhashNearDuplicatesFrom(
+        Dedup.shingleSets(corpus, "doc_id", "text"))
       .select("a", "b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
