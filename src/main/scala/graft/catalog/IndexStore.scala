@@ -48,14 +48,17 @@ object IndexStore {
       .localCheckpoint()
 
   /** `side` with a broadcast hint when the localCheckpoint'd relation
-    * it reads holds at most `autoBroadcastJoinThreshold` bytes, so the
-    * stored relation on the other side of the join is scanned, not
-    * shuffled. A checkpointed relation has no size statistics, so the
-    * measure is its block-manager bytes. A larger (or unmeasurable)
-    * side gets no hint: the join then shuffles instead of broadcasting
-    * a huge batch.
+    * it reads, times `fanOut`, holds at most `autoBroadcastJoinThreshold`
+    * bytes, so the stored relation on the other side of the join is
+    * scanned, not shuffled. A checkpointed relation has no size
+    * statistics, so the measure is its block-manager bytes; `fanOut`
+    * is how many copies of a checkpointed row `side` emits (an explode
+    * of one row into `bands` keys that each carry the row). A larger
+    * (or unmeasurable) side gets no hint: the join then shuffles
+    * instead of broadcasting a huge batch.
     */
-  private[graft] def buildSide(side: DataFrame): DataFrame = {
+  private[graft] def buildSide(side: DataFrame, fanOut: Int = 1)
+      : DataFrame = {
     val limit = SQLConf.get.autoBroadcastJoinThreshold
     val ckpt = ColumnBridge.logicalPlan(side).collectLeaves() match {
       case Seq(r: LogicalRDD) => Some(r.rdd.id)
@@ -63,6 +66,6 @@ object IndexStore {
     }
     val bytes = ckpt.flatMap(id => side.sparkSession.sparkContext
       .getRDDStorageInfo.find(_.id == id)).map(i => i.memSize + i.diskSize)
-    if (bytes.exists(_ <= limit)) broadcast(side) else side
+    if (bytes.exists(_ * fanOut <= limit)) broadcast(side) else side
   }
 }

@@ -1,6 +1,5 @@
 package graft.dedup
 
-import graft.functions.PortableHash
 import graft.text.TextAnalysis
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -17,10 +16,10 @@ import org.apache.spark.sql.functions._
   *    shingle join). Correct but O(pairs-sharing-a-shingle); at scale use
   *    it only to VERIFY candidates produced by MinHash-LSH.
   *  - MinHash-LSH: one `(doc, shs)` shingle-set row per document,
-  *    row-local signatures via k affine portable hashes banded into
-  *    buckets, only same-bucket pairs as candidates, and a row-local
-  *    exact-Jaccard verify. This is the 100 TB path: cost is linear in
-  *    corpus + candidate pairs, and every stage is a row-local pass or
+  *    row-local band keys from k affine portable hashes (the native
+  *    `lsh_bands` kernel), only same-bucket pairs as candidates, and a
+  *    row-local exact-Jaccard verify. This is the 100 TB path: cost is
+  *    linear in corpus + candidate pairs, and every stage is a row-local pass or
   *    a plain join that AQE can skew-split. The one implementation:
   *    [[IncrementalLsh]] calls the same functions per batch.
   *  - SimHash: 16-bit fingerprints from token-hash bit votes; hamming
@@ -91,36 +90,45 @@ object Dedup {
     * one shingle, `shs` its distinct 60-bit shingle hashes
     * ([[hashedShingles]] before the explode). Signatures and Jaccard are
     * row-local over `shs`, so nothing downstream groups by document.
+    *
+    * A document has a shingle exactly when it has at least `n` tokens,
+    * so the filter reads the token count before the projection: a
+    * `size(shs) > 0` filter is pushed below the projection with
+    * `shingle_hash60` inlined, hashing every document twice.
     */
   def shingleSets(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3): DataFrame =
-    docs.select(col(idCol).as("doc"),
+    docs.filter(TextAnalysis.tokenCount(col(textCol)) >= n)
+      .select(col(idCol).as("doc"),
         graft.functions.TextHash.shingleHash60(col(textCol), n).as("shs"))
-      .filter(size(col("shs")) > 0)
 
-  /** LSH band buckets of a shingle-set relation: one (doc, band,
-    * bucket) row per band, the bucket an md5 of the band's signature
-    * slice. The `bands * rowsPerBand` MinHash values are row-local:
-    * hash i is `array_min` over the row's shingles of the i-th affine
-    * map of the single base hash (PortableHash.minhash) — k hashes for
-    * one md5, and no group-by. The INDEX relation [[IncrementalLsh]]
-    * stores.
+  /** A shingle-set relation with its LSH band keys: `(doc, shs, bands)`,
+    * `bands` one `(band, bucket)` struct per band — the bucket an md5 of
+    * the band's slice of the `bands * rowsPerBand` row-local MinHash
+    * values ([[graft.functions.TextHash.lshBands]], one native loop per
+    * row, no group-by). [[IncrementalLsh]] stores exactly these rows.
     */
-  private[dedup] def buckets(sets: DataFrame, bands: Int,
-      rowsPerBand: Int): DataFrame = {
-    val sig = sets.select(col("doc") +: (0 until bands * rowsPerBand)
-      .map(i => array_min(transform(col("shs"), x =>
-        PortableHash.minhash(x % PortableHash.MinhashPrime, i))).as(s"mh_$i")): _*)
-    val bandStructs = (0 until bands).map { b =>
-      val bandCols = (0 until rowsPerBand)
-        .map(r => col(s"mh_${b * rowsPerBand + r}"))
-      struct(lit(b).as("band"), md5(concat_ws(",", bandCols: _*)).as("bucket"))
-    }
-    sig
-      .select(col("doc"), explode(array(bandStructs: _*)).as("bb"))
+  private[dedup] def banded(sets: DataFrame, bands: Int,
+      rowsPerBand: Int): DataFrame =
+    sets.select(col("doc"), col("shs"), graft.functions.TextHash
+      .lshBands(col("shs"), bands, rowsPerBand).as("bands"))
+
+  /** One `(doc, band, bucket)` row per band key of a [[banded]]
+    * relation, exploded row-locally; `doc` is `member` — the id, or a
+    * struct carrying the whole member so a candidate can be verified
+    * where it forms.
+    */
+  private[dedup] def bandKeys(rows: DataFrame, member: Column): DataFrame =
+    rows.select(member.as("doc"), explode(col("bands")).as("bb"))
       .select(col("doc"), col("bb.band").as("band"),
         col("bb.bucket").as("bucket"))
-  }
+
+  /** LSH band buckets of a shingle-set relation: one (doc, band,
+    * bucket) row per band ([[banded]], then [[bandKeys]] on the id).
+    */
+  private def buckets(sets: DataFrame, bands: Int,
+      rowsPerBand: Int): DataFrame =
+    bandKeys(banded(sets, bands, rowsPerBand), col("doc"))
 
   /** Candidate pairs touching `probe`: its `(doc, keys…)` band-key
     * collisions with itself, kept as `x < y`, and with `stored`'s,
@@ -128,7 +136,8 @@ object Dedup {
     * `stored` never form. The one-shot path passes no stored rows
     * (`probe.limit(0)`: the optimizer drops the empty union branch);
     * [[IncrementalLsh]] and [[graft.multimodal.HammingIndex]] pass
-    * their stored band keys.
+    * their stored band keys, each `doc` a struct carrying the whole
+    * member, so `a` and `b` come out as members to verify in place.
     */
   private[graft] def selfCandidates(probe: DataFrame, stored: DataFrame,
       keys: Seq[String] = Seq("band", "bucket")): DataFrame = {
@@ -214,6 +223,13 @@ object Dedup {
     * was the round-18 release-diff bench tail. The caller owns
     * persistence of `sets` (it feeds the signature and both verify
     * subtrees).
+    *
+    * Candidates carry ids only and fetch their members' sets with two
+    * keyed joins ([[withSet]]). [[IncrementalLsh]] instead carries each
+    * set inside its band keys and verifies in the band join; that pays
+    * off there because the stored side is scanned, not shuffled. Here
+    * both sides of the self-join shuffle at scale, and band keys
+    * carrying sets would multiply the shuffle bytes by `bands`.
     */
   def minhashNearDuplicatesFrom(sets: DataFrame, threshold: Double = 0.5,
       bands: Int = 6, rowsPerBand: Int = 2): DataFrame = {

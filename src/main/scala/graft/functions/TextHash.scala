@@ -3,13 +3,14 @@ package graft.functions
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
+import org.apache.commons.codec.binary.Hex
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Row-local text hashing for the dedup operators, as native codegen
@@ -33,6 +34,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - [[SimHash16]]: the complete 16-bit SimHash fingerprint per document —
   *    what was explode(tokens) x explode(16 bits) + two shuffled
   *    aggregations becomes a shuffle-free scan.
+  *  - [[LshBands]]: a shingle-hash set's MinHash-LSH band keys — all
+  *    `bands * rowsPerBand` minima and the md5 band buckets in one loop,
+  *    where the composed form ran one interpreted `array_min(transform)`
+  *    lambda per minimum.
   *
   * Bit-compatibility contract (pinned by the DuckDB oracle, q19-q21):
   * tokenization matches `filter(split(text,'\s+'), _ <> '')` (Java regex
@@ -134,6 +139,72 @@ object TextHash {
     }
     fp
   }
+
+  /** MinHash-LSH band keys of one shingle-hash set: for each band b a
+    * `(band, bucket)` struct, `bucket` the lowercase-hex md5 of the
+    * band's minima `m(b*rowsPerBand) … m(b*rowsPerBand + rowsPerBand-1)`
+    * joined by ",", where minimum i is the smallest
+    * [[PortableHash.minhash]] member i over the set's non-null hashes,
+    * each first reduced mod [[PortableHash.MinhashPrime]]. Bit-identical
+    * to `md5(concat_ws(",", array_min(transform(shs, x ->
+    * minhash(x % prime, i)))…))`: Java `%` is Spark's remainder, the
+    * affine step stays below 2^62, a long prints as `Long.toString`,
+    * and an empty set's null minima leave `concat_ws` an empty string.
+    * `a`/`b` are the family's [[affineFamily]], built once per
+    * expression, not per row.
+    */
+  def lshBands(shs: ArrayData, bands: Int, rowsPerBand: Int,
+      a: Array[Long], b: Array[Long]): ArrayData = {
+    val k = bands * rowsPerBand
+    val p = PortableHash.MinhashPrime
+    val mins = Array.fill(k)(Long.MaxValue)
+    var any = false
+    var j = 0
+    while (j < shs.numElements()) {
+      if (!shs.isNullAt(j)) {
+        any = true
+        val h31 = shs.getLong(j) % p
+        var i = 0
+        while (i < k) {
+          val v = (a(i) * h31 + b(i)) % p
+          if (v < mins(i)) mins(i) = v
+          i += 1
+        }
+      }
+      j += 1
+    }
+    val md = digests.get()
+    val sb = new java.lang.StringBuilder
+    val out = new Array[Any](bands)
+    var band = 0
+    while (band < bands) {
+      sb.setLength(0)
+      var r = 0
+      while (any && r < rowsPerBand) {
+        if (r > 0) sb.append(',')
+        sb.append(mins(band * rowsPerBand + r))
+        r += 1
+      }
+      // Spark's md5: DigestUtils.md5Hex, i.e. this lowercase hex
+      val hex = Hex.encodeHexString(
+        md.digest(sb.toString.getBytes(StandardCharsets.UTF_8)))
+      out(band) = new GenericInternalRow(
+        Array[Any](band, UTF8String.fromString(hex)))
+      band += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** The first `k` [[PortableHash.affineParams]] as `(a, b)` arrays. */
+  def affineFamily(k: Int): (Array[Long], Array[Long]) =
+    (0 until k).map(PortableHash.affineParams).toArray.unzip
+
+  /** Column API: `array<struct<band int, bucket string>>`, one
+    * [[lshBands]] key per band of an `array<bigint>` shingle set.
+    */
+  def lshBands(shs: Column, bands: Int, rowsPerBand: Int): Column =
+    ColumnBridge.column(LshBands(ColumnBridge.expression(shs), bands,
+      rowsPerBand))
 
   /** md5-low-60 of a Scala string — for deriving deterministic constants
     * (e.g. LSH hyperplane components) at PLAN time with the same hash
@@ -255,6 +326,43 @@ case class ShingleHash60(child: Expression, n: Int) extends UnaryExpression {
       c => s"graft.functions.TextHash.shingleHashes($c, $n)")
 
   override protected def withNewChildInternal(newChild: Expression): ShingleHash60 =
+    copy(child = newChild)
+}
+
+/** See [[TextHash.lshBands]]. */
+case class LshBands(child: Expression, bands: Int, rowsPerBand: Int)
+    extends UnaryExpression {
+
+  require(bands >= 1 && rowsPerBand >= 1, "at least one band of one row")
+
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("band", IntegerType, nullable = false),
+    StructField("bucket", StringType, nullable = false))), containsNull = false)
+  override def prettyName: String = "lsh_bands"
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName needs an array<bigint> column, got ${t.sql}")
+  }
+
+  @transient private lazy val family =
+    TextHash.affineFamily(bands * rowsPerBand)
+
+  /** [[TextHash.lshBands]] of one row with this expression's family.
+    * (Called from generated code — keep the signature Java-friendly.)
+    */
+  def keys(shs: ArrayData): ArrayData =
+    TextHash.lshBands(shs, bands, rowsPerBand, family._1, family._2)
+
+  override def nullSafeEval(shs: Any): Any = keys(shs.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("lshBands", this)
+    defineCodeGen(ctx, ev, c => s"$self.keys($c)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): LshBands =
     copy(child = newChild)
 }
 

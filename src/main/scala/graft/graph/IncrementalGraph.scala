@@ -52,10 +52,9 @@ object IncrementalGraph {
       vacuumHistory: Boolean = true): Unit =
     IndexStore.publish(catalog, vacuumHistory, s"${name}_edges" -> idx.edges)
 
-  /** Rehydrate a [[save]]d graph. */
-  def load(catalog: ParquetCatalog, name: String)
-      : GraphIndex =
-    GraphIndex(catalog.table(s"${name}_edges"))
+  /** Rehydrate a [[save]]d graph through [[IndexStore.load]]. */
+  def load(catalog: ParquetCatalog, name: String): GraphIndex =
+    GraphIndex(IndexStore.load(catalog, s"${name}_edges"))
 
   /** PageRank over the accumulated graph. */
   def rank(idx: GraphIndex, nodes: DataFrame, rounds: Int): DataFrame =

@@ -34,9 +34,10 @@ import org.apache.spark.sql.streaming.Trigger
   * At 100 TB this is the continuous-ingest shape of the cleaning
   * pipeline: per-batch cost tracks the batch (gates are scans; the
   * fold shingles only the batch and probes the stored index from the
-  * batch side — [[IncrementalLsh]] keeps one shingle-set row per doc,
-  * so no stored relation is shuffled and a batch runs a fixed number
-  * of Spark jobs), the index grows monotonically, and the resolve is
+  * batch side — [[IncrementalLsh]] keeps one `(doc, shs, bands)` row
+  * per doc and verifies candidates inside the band join, so no stored
+  * relation is shuffled and a batch runs a fixed number of Spark
+  * jobs), the index grows monotonically, and the resolve is
   * one hash-agg + one CC over materialized relations.
   */
 object StreamingCorpus {
@@ -125,7 +126,8 @@ object StreamingCorpus {
     * @param trainShingles optional shingle-set relation `(doc, shs)`
     *   ([[Dedup.shingleSets]]' shape) covering AT LEAST the gate
     *   survivors — the ingest INDEX already accumulated exactly this
-    *   (`idx.sets`, per-batch checkpointed), so the caller passes it
+    *   (`idx.sets`, a `(doc, shs)` projection of the index's per-batch
+    *   checkpointed `(doc, shs, bands)` rows), so the caller passes it
     *   and decontamination reuses it via a semi-join restriction
     *   instead of re-shingling the
     *   released corpus (shingling is per-doc, so the restriction

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 /** Structured Streaming front door for the incremental near-duplicate
   * index: a stream of documents drains through [[StreamFold.index]],
   * each micro-batch folding into [[IncrementalLsh]] — only the batch is
-  * shingled/signed/banded, candidates come from new-vs-(stored+new)
+  * shingled and banded, candidates come from new-vs-(stored+new)
   * bucket collisions, and the per-batch pair outputs are exactly-once
   * (the later member's batch emits a pair), so the union over any
   * micro-batch partitioning equals the one-shot batch run. That
@@ -17,8 +17,8 @@ import org.apache.spark.sql.types._
   * q20/q97) and the StreamingLshSpec contract.
   *
   * `foreachBatch` is the right sink shape here (not a stateful
-  * operator): the index is a pair of grown-per-batch RELATIONS
-  * (band buckets + one shingle-set row per doc), not per-key state —
+  * operator): the index is a grown-per-batch RELATION (one shingle
+  * set plus its band keys per doc), not per-key state —
   * `flatMapGroupsWithState` would force the whole index through one
   * key's state store.
   *

@@ -154,4 +154,27 @@ class DedupSpec extends SparkSpec {
       assert(jobs.get == 0)
     } finally sc.removeSparkListener(l)
   }
+
+  test("q20 hashes each document's shingles once") {
+    import graft.functions.ShingleHash60
+    val q20 = graft.SparkEntry.queries("q20_minhash_lsh")(spark,
+      "/root/testdata/sf0.001")
+    val plan = q20.queryExecution.executedPlan
+    assert(graft.PlanProbe.oncePerScan(Seq(plan)) {
+      case _: ShingleHash60 => }, plan.toString)
+  }
+
+  test("shingleSets keeps exactly the documents with at least n tokens") {
+    val short = Seq(1L -> "", 2L -> "a  b", 3L -> " a\tb c ", 4L -> "a b c d",
+      5L -> "x x x", 6L -> "\u00a0 b c").toDF("doc_id", "text")
+    for (n <- 2 to 4) {
+      val got = Dedup.shingleSets(short, "doc_id", "text", n)
+        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).size).toMap
+      val want = short.select($"doc_id",
+          size(graft.functions.TextHash.shingleHash60($"text", n)))
+        .collect().map(r => r.getLong(0) -> r.getInt(1))
+        .filter(_._2 > 0).toMap
+      assert(got == want, s"n = $n")
+    }
+  }
 }

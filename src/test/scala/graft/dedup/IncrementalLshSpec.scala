@@ -68,11 +68,9 @@ class IncrementalLshSpec extends SparkSpec {
       corpus.filter(col("doc_id") % 2 === 0), "doc_id", "text")
     val cat = new ParquetCatalog(spark,
       java.nio.file.Files.createTempDirectory("graft-lsh").toString)
-    cat.create("lsh_buckets", idx.buckets.schema)
-    cat.overwrite("lsh_buckets", idx.buckets)
-    cat.create("lsh_sets", idx.sets.schema)
-    cat.overwrite("lsh_sets", idx.sets)
-    val loaded = LshIndex(cat.table("lsh_buckets"), cat.table("lsh_sets"))
+    cat.create("lsh_rows", idx.rows.schema)
+    cat.overwrite("lsh_rows", idx.rows)
+    val loaded = LshIndex(cat.table("lsh_rows"))
     val batch2 = corpus.filter(col("doc_id") % 2 =!= 0)
     val (_, fresh) = IncrementalLsh.addBatch(idx, batch2, "doc_id", "text")
     val (_, persisted) = IncrementalLsh.addBatch(loaded, batch2, "doc_id", "text")
@@ -86,8 +84,7 @@ class IncrementalLshSpec extends SparkSpec {
     val (idx1, _) = IncrementalLsh.addBatch(idx0, odds, "doc_id", "text")
     val idx2 = IncrementalLsh.delete(idx1, odds.select("doc_id"), "doc_id")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSet
-    assert(rows(idx2.buckets) == rows(idx0.buckets))
-    assert(rows(idx2.sets) == rows(idx0.sets))
+    assert(rows(idx2.rows) == rows(idx0.rows))
     // and the shrunk index behaves like the pre-add one: re-adding the
     // deleted batch re-emits the same new pairs
     val (_, fresh0) = IncrementalLsh.addBatch(idx0, odds, "doc_id", "text")
@@ -100,8 +97,7 @@ class IncrementalLshSpec extends SparkSpec {
     val (idx, _) = IncrementalLsh.build(corpus, "doc_id", "text")
     val ghost = Seq(999999998L, 999999999L).toDF("doc_id")
     val idx2 = IncrementalLsh.delete(idx, ghost, "doc_id")
-    assert(idx2.buckets.count() == idx.buckets.count() &&
-      idx2.sets.count() == idx.sets.count())
+    assert(idx2.rows.count() == idx.rows.count())
   }
 
   test("save/load round-trips and repeated saves keep version count bounded") {
@@ -116,16 +112,17 @@ class IncrementalLshSpec extends SparkSpec {
     IncrementalLsh.save(idx1, cat, "lshsv")
     val idx2 = IncrementalLsh.delete(idx1, odds.select("doc_id"), "doc_id")
     IncrementalLsh.save(idx2, cat, "lshsv")
-    // exactly one on-disk version per relation after 3 saves
-    for (t <- Seq("lshsv_buckets", "lshsv_sets")) {
-      val dirs = java.nio.file.Files.list(root.resolve(t)).toArray
-        .map(_.toString).filter(_.contains("/v_"))
-      assert(dirs.length == 1, s"$t versions: ${dirs.mkString(",")}")
-    }
+    // one table, exactly one on-disk version after 3 saves
+    assert(java.nio.file.Files.list(root).toArray
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(java.nio.file.Files.isDirectory(_))
+      .map(_.getFileName.toString).toSeq == Seq("lshsv_rows"))
+    val dirs = java.nio.file.Files.list(root.resolve("lshsv_rows")).toArray
+      .map(_.toString).filter(_.contains("/v_"))
+    assert(dirs.length == 1, s"versions: ${dirs.mkString(",")}")
     val loaded = IncrementalLsh.load(cat, "lshsv")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSet
-    assert(rows(loaded.buckets) == rows(idx2.buckets))
-    assert(rows(loaded.sets) == rows(idx2.sets))
+    assert(rows(loaded.rows) == rows(idx2.rows))
   }
 
   test("load, addBatch, save, addBatch: the vacuumed version is not read") {
@@ -160,15 +157,25 @@ class IncrementalLshSpec extends SparkSpec {
     val oneShot = triples(Dedup.minhashNearDuplicatesFrom(
       Dedup.shingleSets(corpus, "doc_id", "text")))
     assert(oneShot.nonEmpty)
-    for ((k, seed) <- Seq(2 -> 11L, 3 -> 12L, 6 -> 13L)) {
-      val parts = batches(k, seed)
+    // even hash splits, and uneven ones cut at random points of a
+    // seeded id hash, one of them with an empty batch
+    val uneven = Seq(5L, 6L).map { seed =>
+      val rnd = new scala.util.Random(seed)
+      val cuts = 0 +: Seq.fill(2 + rnd.nextInt(4))(rnd.nextInt(1000)).sorted :+ 1000
+      val h = pmod(xxhash64(col("doc_id"), lit(seed)), lit(1000L))
+      val cs = if (seed == 5L) cuts.updated(2, cuts(1)) else cuts
+      s"cuts $cs" -> cs.sliding(2).map { case Seq(lo, hi) =>
+        corpus.filter(h >= lo && h < hi) }.toSeq
+    }
+    for ((name, parts) <- Seq(2 -> 11L, 3 -> 12L, 6 -> 13L).map {
+        case (k, seed) => s"$k-way" -> batches(k, seed) } ++ uneven) {
       val (idx0, p0) = IncrementalLsh.build(parts.head, "doc_id", "text")
       val ps = parts.tail.scanLeft((idx0, p0)) { case ((i, _), d) =>
         IncrementalLsh.addBatch(i, d, "doc_id", "text")
       }.map(_._2)
       val all = ps.map(triples)
-      assert(all.reduce(_ ++ _) == oneShot, s"$k-way batching")
-      assert(all.map(_.size).sum == oneShot.size, s"$k-way: not exactly once")
+      assert(all.reduce(_ ++ _) == oneShot, s"$name batching")
+      assert(all.map(_.size).sum == oneShot.size, s"$name: not exactly once")
     }
   }
 
@@ -200,6 +207,65 @@ class IncrementalLshSpec extends SparkSpec {
         p
       }
     } finally sc.removeSparkListener(listener)
-    assert(perBatch(1) == perBatch(4), s"jobs per addBatch: $perBatch")
+    // the new rows' checkpoint, then the pairs' band-key broadcast and
+    // the candidates' distinct
+    assert(perBatch.distinct.size == 1 && perBatch.head <= 4,
+      s"jobs per addBatch: $perBatch")
+  }
+
+  test("an addBatch probes the stored rows from the batch side, hashing once") {
+    import graft.PlanProbe
+    import graft.functions.{LshBands, ShingleHash60}
+    val parts = batches(6, 31L)
+    val (idx0, _) = IncrementalLsh.build(parts.head, "doc_id", "text")
+    val idx = parts.tail.init.foldLeft(idx0) { (i, d) =>
+      IncrementalLsh.addBatch(i, d, "doc_id", "text")._1
+    }
+    val plans = PlanProbe.actionPlans(spark) {
+      IncrementalLsh.addBatch(idx, parts.last, "doc_id", "text")._2
+        .localCheckpoint()
+    }
+    val stored = PlanProbe.rddIds(idx.rows)
+    assert(stored.size == 5, s"slices: $stored")
+    val (scans, bad) = PlanProbe.storedProbes(plans, stored)
+    assert(scans == stored.size && bad.isEmpty, bad.mkString("\n"))
+    // only the batch is shingled and banded, each once per document
+    assert(PlanProbe.oncePerScan(plans) { case _: ShingleHash60 => })
+    assert(PlanProbe.oncePerScan(plans) { case _: LshBands => })
+  }
+
+  test("band keys outgrowing the broadcast limit shuffle instead, with the same pairs") {
+    import graft.PlanProbe
+    import graft.catalog.IndexStore
+    def withThreshold[T](bytes: Long)(body: => T): T = {
+      val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold")
+      val prev = keys.map(k => spark.conf.getOption(k))
+      keys.foreach(spark.conf.set(_, bytes.toString))
+      try body finally keys.zip(prev).foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    def triples(df: DataFrame) = df.select("a", "b", "jaccard").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val Seq(b0, b1) = batches(2, 41L)
+    // a batch's rows fit the limit once but not once per band
+    val rows = Dedup.banded(Dedup.shingleSets(b1, "doc_id", "text"), 6, 2)
+      .localCheckpoint()
+    val info = spark.sparkContext.getRDDStorageInfo
+      .find(i => PlanProbe.rddIds(rows)(i.id)).get
+    withThreshold(2 * (info.memSize + info.diskSize)) {
+      assert(IndexStore.buildSide(rows) ne rows)
+      assert(IndexStore.buildSide(rows, 6) eq rows)
+    }
+    val oneShot = triples(Dedup.minhashNearDuplicatesFrom(
+      Dedup.shingleSets(corpus, "doc_id", "text")))
+    val got = withThreshold(-1) {
+      val (idx, p0) = IncrementalLsh.build(b0, "doc_id", "text")
+      triples(p0) ++ triples(IncrementalLsh.addBatch(idx, b1, "doc_id",
+        "text")._2)
+    }
+    assert(got == oneShot)
   }
 }

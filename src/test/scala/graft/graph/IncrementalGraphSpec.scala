@@ -125,4 +125,23 @@ class IncrementalGraphSpec extends SparkSpec {
     }
     assert(folded(2) == folded(3))
   }
+
+  test("load, save, rank: the vacuumed version is not read") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-igraph-vac").toString
+    val cat = new graft.catalog.ParquetCatalog(spark, root)
+    val nodes = (1L to 5L).toDF("node")
+    IncrementalGraph.save(
+      IncrementalGraph.build(pages, "doc_id", "html"), cat, "g")
+    val loaded = IncrementalGraph.load(cat, "g")
+    // writes v_2 and vacuums v_1, the version load read
+    IncrementalGraph.save(loaded, cat, "g")
+    val inc = IncrementalGraph.rank(loaded, nodes, 3)
+      .orderBy("node").as[(Long, Long)].collect().toSeq
+    val one = WebGraph.pageRank(nodes,
+        WebGraph.docEdges(WebGraph.links(pages, "doc_id", "html")), 3)
+      .orderBy("node").as[(Long, Long)].collect().toSeq
+    assert(inc == one)
+    Streams.rmTree(root)
+  }
 }

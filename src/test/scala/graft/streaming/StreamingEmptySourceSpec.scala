@@ -93,7 +93,7 @@ class StreamingEmptySourceSpec extends SparkSpec {
     "StreamingLsh" -> (docs.schema, { (stream, cp) =>
       val (idx, pairs) = StreamingLsh.ingest(stream, "doc_id", "text", cp)
       assert(pairs.schema == StreamingLsh.PairsSchema)
-      assert(pairs.isEmpty && idx.buckets.isEmpty)
+      assert(pairs.isEmpty && idx.rows.isEmpty)
       Some(IncrementalLsh.addBatch(idx, docs, "doc_id", "text")._2.count())
     }),
     "StreamingSemantic" -> (vecs.schema, { (stream, cp) =>
