@@ -138,14 +138,18 @@ object Dedup {
     * [[IncrementalLsh]] and [[graft.multimodal.HammingIndex]] pass
     * their stored band keys, each `doc` a struct carrying the whole
     * member, so `a` and `b` come out as members to verify in place.
+    * `hint` wraps the join's probe side only (their
+    * [[graft.catalog.IndexStore.buildSide]] broadcast guard): the
+    * probe's copy inside the union is on no join, where a hint is noise.
     */
   private[graft] def selfCandidates(probe: DataFrame, stored: DataFrame,
-      keys: Seq[String] = Seq("band", "bucket")): DataFrame = {
+      keys: Seq[String] = Seq("band", "bucket"),
+      hint: DataFrame => DataFrame = identity): DataFrame = {
     def side(df: DataFrame, id: String) =
       df.select(col("doc").as(id) +: keys.map(col): _*)
     side(stored, "y").withColumn("old", lit(true))
       .unionByName(side(probe, "y").withColumn("old", lit(false)))
-      .join(side(probe, "x"), keys)
+      .join(hint(side(probe, "x")), keys)
       .filter(col("x") < col("y") || (col("old") && col("x") =!= col("y")))
       .select(least(col("x"), col("y")).as("a"),
         greatest(col("x"), col("y")).as("b"))

@@ -80,7 +80,8 @@ object IncrementalLsh {
     val newRows = rowsOf(docs, idCol, textCol, bands, rowsPerBand, n)
       .localCheckpoint()
     val pairs = Dedup.verified(
-      Dedup.selfCandidates(buildSide(keys(newRows), bands), keys(idx.rows))
+      Dedup.selfCandidates(keys(newRows), keys(idx.rows),
+          hint = buildSide(_, bands))
         .select(col("a.doc").as("a"), col("b.doc").as("b"),
           col("a.shs").as("sa"), col("b.shs").as("sb")),
       threshold)

@@ -75,8 +75,8 @@ object HammingIndex {
         Perceptual.bandKeys(h, "id", hashCol, idx.bands, hashBits)
           .select(struct(col("id"), col(hashCol).as("h")).as("doc"), col("bk"))
       val newH = hashes.select(col("id"), col(hashCol)).localCheckpoint()
-      val pairs = Dedup.selfCandidates(buildSide(keys(newH).localCheckpoint()),
-          keys(idx.hashes), Seq("bk"))
+      val pairs = Dedup.selfCandidates(keys(newH).localCheckpoint(),
+          keys(idx.hashes), Seq("bk"), buildSide(_))
         .filter(bit_count(col("a.h").bitwiseXOR(col("b.h"))) <= maxHamming)
         .select(col("a.id").as("a"), col("b.id").as("b"))
       (idx.copy(hashes = idx.hashes.unionByName(newH)), pairs)

@@ -125,7 +125,7 @@ object Round10Queries extends QueryGroup {
     }),
 
     // SQL DELETE/UPDATE front door: Spark parses both natively but
-    // executes neither outside DSv2 — DmlSql compiles the parsed
+    // executes neither outside DSv2 — CatalogSql compiles the parsed
     // plans onto the catalog's copy-on-write publish (DELETE = one
     // filter with ANSI NULL-keeps semantics; UPDATE = one projection
     // with per-column when/otherwise), completing the DML triad with
@@ -137,9 +137,9 @@ object Round10Queries extends QueryGroup {
           .select(col("doc_id"), col("text"), col("source"))
         cat.create("docs_t", docs.schema)
         cat.overwrite("docs_t", docs)
-        graft.scd.DmlSql.execute(s, cat,
+        graft.scd.CatalogSql.execute(s, cat,
           "DELETE FROM docs_t WHERE doc_id % 5 = 3")
-        graft.scd.DmlSql.execute(s, cat,
+        graft.scd.CatalogSql.execute(s, cat,
           "UPDATE docs_t SET text = concat(text, ' [redacted]') " +
             "WHERE source = 'src5'")
         cat.table("docs_t").orderBy(col("doc_id"))

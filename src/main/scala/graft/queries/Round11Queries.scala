@@ -97,9 +97,9 @@ object Round11Queries extends QueryGroup {
           .select(col("doc_id"), col("text"), col("source"))
         cat.create("docs_t", docs.schema)
         cat.overwrite("docs_t", docs)
-        graft.scd.DmlSql.executeMor(s, cat,
+        graft.scd.CatalogSql.executeMor(s, cat,
           "DELETE FROM docs_t WHERE doc_id % 5 = 3", "doc_id")
-        graft.scd.DmlSql.executeMor(s, cat,
+        graft.scd.CatalogSql.executeMor(s, cat,
           "UPDATE docs_t SET text = concat(text, ' [redacted]') " +
             "WHERE source = 'src5'", "doc_id")
         require(cat.deltaChainLength("docs_t") == 2,

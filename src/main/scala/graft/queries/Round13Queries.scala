@@ -162,9 +162,9 @@ object Round13Queries extends QueryGroup {
         cat.create("dd", docs.schema)
         cat.overwrite("dd", docs)
         val v0 = cat.currentVersion("dd").get
-        graft.scd.DdlSql.execute(s, cat,
+        graft.scd.CatalogSql.execute(s, cat,
           "ALTER TABLE dd ADD COLUMNS (lang STRING, score BIGINT DEFAULT 0)")
-        graft.scd.DmlSql.execute(s, cat,
+        graft.scd.CatalogSql.execute(s, cat,
           "UPDATE dd SET lang = 'en', score = text_len * 2 " +
             "WHERE doc_id % 2 = 0")
         val old = cat.tableAsOfVersion("dd", v0)

@@ -424,13 +424,13 @@ object Round17Queries extends QueryGroup {
         cat.create("dd", docs.schema)
         cat.overwrite("dd", docs)
         val v0 = cat.currentVersion("dd").get
-        graft.scd.DdlSql.execute(s, cat,
+        graft.scd.CatalogSql.execute(s, cat,
           "ALTER TABLE dd ADD COLUMNS (score BIGINT DEFAULT 7)")
-        graft.scd.DdlSql.execute(s, cat,
+        graft.scd.CatalogSql.execute(s, cat,
           "ALTER TABLE dd RENAME COLUMN text_len TO len_chars")
-        graft.scd.DdlSql.execute(s, cat,
+        graft.scd.CatalogSql.execute(s, cat,
           "ALTER TABLE dd DROP COLUMN tag")
-        graft.scd.DmlSql.execute(s, cat,
+        graft.scd.CatalogSql.execute(s, cat,
           "UPDATE dd SET score = len_chars * 3 WHERE doc_id % 2 = 1")
         val old = cat.tableAsOfVersion("dd", v0)
           .select(col("doc_id"), col("text_len").as("old_len"),

@@ -164,17 +164,17 @@ object Round18Queries extends QueryGroup {
       docs.createOrReplaceTempView("q292docs")
       val root = Files.createTempDirectory("graft-q292").toString
       val cat = new graft.catalog.ParquetCatalog(s, root)
-      graft.scd.CtasSql.execute(s, cat,
+      graft.scd.CatalogSql.execute(s, cat,
         "CREATE TABLE d18 AS SELECT doc_id, text FROM q292docs " +
           "WHERE doc_id % 3 = 0")
       // a catalog STAGING table feeds the second statement's FROM:
       // the door must resolve catalog names inside the query
-      graft.scd.CtasSql.execute(s, cat,
+      graft.scd.CatalogSql.execute(s, cat,
         "CREATE TABLE staging18 AS SELECT doc_id, text FROM q292docs " +
           "WHERE doc_id % 3 = 1")
-      graft.scd.CtasSql.execute(s, cat,
+      graft.scd.CatalogSql.execute(s, cat,
         "INSERT INTO d18 SELECT doc_id, text FROM staging18")
-      graft.scd.CtasSql.execute(s, cat,
+      graft.scd.CatalogSql.execute(s, cat,
         "INSERT INTO d18 (text, doc_id) SELECT text, doc_id " +
           "FROM q292docs WHERE doc_id % 3 = 2")
       val d2 = docs.select(col("doc_id"), col("text").as("t2"))
@@ -418,11 +418,11 @@ object Round18Queries extends QueryGroup {
       cat.create("dt", docs.schema)
       cat.overwrite("dt", docs)
       val v0 = cat.currentVersion("dt").get
-      graft.scd.DdlSql.execute(s, cat,
+      graft.scd.CatalogSql.execute(s, cat,
         "ALTER TABLE dt ALTER COLUMN len TYPE BIGINT")
-      graft.scd.DmlSql.execute(s, cat,
+      graft.scd.CatalogSql.execute(s, cat,
         "UPDATE dt SET len = len * 100000000 WHERE doc_id % 5 = 0")
-      graft.scd.CtasSql.execute(s, cat,
+      graft.scd.CatalogSql.execute(s, cat,
         "INSERT INTO dt SELECT 1000000001, 3000000000")
       val pre = cat.tableAsOfVersion("dt", v0)
       val cur = cat.table("dt")

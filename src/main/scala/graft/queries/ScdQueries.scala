@@ -35,7 +35,7 @@ object ScdQueries extends QueryGroup {
 
     // The same merge through the ANSI MERGE INTO front door: Spark's
     // parsed MergeIntoTable compiled onto the engine's one-join plan
-    // (graft.scd.MergeSql), with the SCD-2 prep relation (synthetic
+    // (graft.scd.CatalogSql), with the SCD-2 prep relation (synthetic
     // reopen rows, precomputed surrogates/versions) generated by
     // MergeIntoScd. Same oracle as q13 — the door must reproduce the
     // 6-branch result hash-exactly.

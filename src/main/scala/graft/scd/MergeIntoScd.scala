@@ -3,7 +3,7 @@ package graft.scd
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The SCD Type-2 merge expressed through the ANSI `MERGE INTO` door
-  * ([[MergeSql]]) — the lakehouse-standard recipe: a preparatory source
+  * ([[CatalogSql]]) — the lakehouse-standard recipe: a preparatory source
   * relation carries the staging snapshot PLUS one synthetic
   * NULL-join-key row per version to open (a matched pair can only
   * update in MERGE semantics, never also insert, so reopened versions
@@ -28,7 +28,7 @@ object MergeIntoScd {
 
   private def q(c: String): String = s"`$c`"
 
-  /** SQL for the preparatory source relation over views `$dim` and
+  /** SQL for the preparatory source relation over relations `$dim` and
     * `$stag`: every staging row (join keys set), plus one NULL-key row
     * per version to open, carrying `__new_id` / `__new_version`.
     */
@@ -74,9 +74,9 @@ object MergeIntoScd {
        |FROM numbered""".stripMargin
   }
 
-  /** The MERGE statement against views `$dim` and `$src` (the relation
-    * [[sourceSql]] defines). Timestamps are SQL literals (`asOf`,
-    * `high` as `yyyy-MM-dd HH:mm:ss`).
+  /** The MERGE statement into `$dim` from `$src` (a relation name, or
+    * [[sourceSql]] as a parenthesized subquery). Timestamps are SQL
+    * literals (`asOf`, `high` as `yyyy-MM-dd HH:mm:ss`).
     */
   def mergeSql(schema: ScdSchema, dim: String, src: String,
       asOf: String, high: String): String = {
@@ -108,21 +108,17 @@ object MergeIntoScd {
        |  VALUES (${insVals.mkString(", ")})""".stripMargin
   }
 
-  private val viewSeq = new java.util.concurrent.atomic.AtomicLong
-
-  /** Register `production`/`staging` as temp views (names unique per
-    * call, so interleaved merges on one session never clobber each
-    * other's inputs), build the prepared source, and return the merged
-    * dimension as one lazy plan through the [[MergeSql]] door.
+  /** The merged dimension as one lazy plan through the
+    * [[CatalogSql]] door: one MERGE statement whose source is the
+    * [[sourceSql]] subquery, its relation names bound to `production`
+    * and `staging` by the door's lookup — no session view is
+    * registered, so interleaved merges on one session never see each
+    * other's inputs.
     */
   def apply(spark: SparkSession, production: DataFrame, staging: DataFrame,
       schema: ScdSchema, asOf: String, high: String): DataFrame = {
-    val tag = s"merge_scd_${viewSeq.incrementAndGet()}"
-    production.createOrReplaceTempView(s"${tag}_dim")
-    staging.createOrReplaceTempView(s"${tag}_stag")
-    spark.sql(s"CREATE OR REPLACE TEMP VIEW ${tag}_src AS\n" +
-      sourceSql(schema, s"${tag}_dim", s"${tag}_stag"))
-    MergeSql.plan(spark,
-      mergeSql(schema, s"${tag}_dim", s"${tag}_src", asOf, high))
+    val src = s"(${sourceSql(schema, "scd_dim", "scd_stag")})"
+    CatalogSql.planWith(spark, mergeSql(schema, "scd_dim", src, asOf, high),
+      Map("scd_dim" -> production, "scd_stag" -> staging).get)
   }
 }

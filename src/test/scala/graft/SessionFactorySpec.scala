@@ -9,8 +9,9 @@ import scala.util.matching.Regex
 
 /** Keeps [[SparkEntry.session]] the only place a session is built,
   * [[graft.streaming.StreamFold]] the only streaming fold,
-  * [[graft.catalog.IndexStore.publish]] the only index publish, and
-  * [[graft.dedup.Dedup]] the only MinHash-LSH implementation.
+  * [[graft.catalog.IndexStore.publish]] the only index publish,
+  * [[graft.dedup.Dedup]] the only MinHash-LSH implementation, and
+  * [[graft.scd.CatalogSql]] the only SQL statement parser.
   */
 class SessionFactorySpec extends AnyFunSuite {
 
@@ -58,5 +59,10 @@ class SessionFactorySpec extends AnyFunSuite {
       Seq("Dedup.scala", "TextHash.scala"))
     val signature = "(?s)transform\\([^;]{0,160}?PortableHash\\.minhash\\(".r
     assert(sourcesMatching(signature, "src/main/scala").isEmpty)
+  }
+
+  test("CatalogSql.scala is the only source that parses SQL statements") {
+    val call = "sqlParser" + ".parsePlan" // split: this file is scanned too
+    assert(sourcesWith(call, "src/main/scala") == Seq("CatalogSql.scala"))
   }
 }

@@ -274,14 +274,77 @@ class CatalogSpec extends SparkSpec {
     }
     val del = "DELETE FROM t WHERE tag = 'drop'"
     val upd = "UPDATE t SET n = n + 1 WHERE tag = 'bump'"
-    graft.scd.DmlSql.executeMor(spark, catMor, del, "id")
-    graft.scd.DmlSql.executeMor(spark, catMor, upd, "id")
-    graft.scd.DmlSql.execute(spark, catCow, del)
-    graft.scd.DmlSql.execute(spark, catCow, upd)
+    graft.scd.CatalogSql.executeMor(spark, catMor, del, "id")
+    graft.scd.CatalogSql.executeMor(spark, catMor, upd, "id")
+    graft.scd.CatalogSql.execute(spark, catCow, del)
+    graft.scd.CatalogSql.execute(spark, catCow, upd)
     val mor = catMor.table("t").as[(Long, String, Long)].collect().toSet
     val cow = catCow.table("t").as[(Long, String, Long)].collect().toSet
     assert(mor === cow)
     assert(catMor.deltaChainLength("t") === 2)
     assert(catCow.deltaChainLength("t") === 0)
+  }
+
+  /** One random DELETE/UPDATE over `t(id, g, s, n)`: predicates that
+    * evaluate to NULL on the NULL-bearing columns, and an optional
+    * alias whose (or the table name's) qualifier prefixes references
+    * and assignment keys.
+    */
+  private def randomDml(rnd: scala.util.Random): String = {
+    val (as, q) = rnd.nextInt(3) match {
+      case 0 => ("", "")
+      case 1 => ("", "t.")
+      case _ => (" AS x", "x.")
+    }
+    def pred(): String = rnd.nextInt(8) match {
+      case 0 => s"${q}g > ${rnd.nextInt(10)}"
+      case 1 => s"${q}s = 'k${rnd.nextInt(5)}'"
+      case 2 => s"${q}n % ${2 + rnd.nextInt(5)} = ${rnd.nextInt(2)}"
+      case 3 => s"NOT (${q}g < ${rnd.nextInt(10)})"
+      case 4 => s"${q}g = NULL"
+      case 5 => val a = rnd.nextInt(200); s"${q}id BETWEEN $a AND ${a + 40}"
+      case 6 => s"(${pred()} AND ${pred()})"
+      case _ => s"(${pred()} OR ${pred()})"
+    }
+    if (rnd.nextInt(3) == 0) s"DELETE FROM t$as WHERE ${pred()}"
+    else {
+      val sets = rnd.shuffle(Seq(
+        s"${q}n = ${q}n + ${1 + rnd.nextInt(9)}",
+        s"${q}s = concat(coalesce(${q}s, ''), '!')",
+        s"${q}g = NULL",
+        s"${q}g = ${q}g * 2")).take(1 + rnd.nextInt(2))
+      val where = if (rnd.nextInt(5) == 0) "" else s" WHERE ${pred()}"
+      s"UPDATE t$as SET ${sets.mkString(", ")}$where"
+    }
+  }
+
+  Seq(3L, 17L, 101L).foreach { seed =>
+    test(s"merge-on-read == copy-on-write at every version (seed $seed)") {
+      val rnd = new scala.util.Random(seed)
+      val df = (0L until 200L).map { i =>
+        (i, if (i % 7 == 3) None else Some(rnd.nextInt(10)),
+          if (i % 5 == 1) None else Some(s"k${rnd.nextInt(5)}"),
+          rnd.nextInt(100).toLong)
+      }.toDF("id", "g", "s", "n")
+      val (catMor, catCow) = (freshCatalog(), freshCatalog())
+      Seq(catMor, catCow).foreach(_.createAs("t", df))
+      def version(c: ParquetCatalog) = c.currentVersion("t").get
+      val statements = Seq.fill(7)(randomDml(rnd))
+      val versions = (version(catMor), version(catCow)) +: statements.map {
+        sql =>
+          graft.scd.CatalogSql.executeMor(spark, catMor, sql, "id")
+          graft.scd.CatalogSql.execute(spark, catCow, sql)
+          (version(catMor), version(catCow))
+      }
+      def rows(d: org.apache.spark.sql.DataFrame) = d.collect().toSet
+      versions.zip("" +: statements).foreach { case ((vm, vc), sql) =>
+        assert(rows(catMor.tableAsOfVersion("t", vm)) ===
+          rows(catCow.tableAsOfVersion("t", vc)), s"after: $sql")
+      }
+      assert(catMor.deltaChainLength("t") === statements.length)
+      catMor.compact("t")
+      assert(catMor.deltaChainLength("t") === 0)
+      assert(rows(catMor.table("t")) === rows(catCow.table("t")))
+    }
   }
 }

@@ -30,7 +30,7 @@ class DdlSqlSpec extends SparkSpec {
     val (cat, root) = freshCat()
     seed(cat)
     val v0 = cat.currentVersion("t").get
-    DdlSql.execute(spark, cat,
+    CatalogSql.execute(spark, cat,
       "ALTER TABLE t ADD COLUMNS (lang STRING, score BIGINT)")
     assert(cat.currentVersion("t").get == v0 + 1)
     assert(cat.table("t").columns.toSeq ==
@@ -46,11 +46,11 @@ class DdlSqlSpec extends SparkSpec {
   test("DEFAULT literal fills existing rows; UPDATE can then reassign") {
     val (cat, root) = freshCat()
     seed(cat)
-    DdlSql.execute(spark, cat,
+    CatalogSql.execute(spark, cat,
       "ALTER TABLE t ADD COLUMN score BIGINT DEFAULT 7")
     assert(cat.table("t").select(sum(col("score"))).head().getLong(0)
       == 21L)
-    DmlSql.execute(spark, cat,
+    CatalogSql.execute(spark, cat,
       "UPDATE t SET score = id * 10 WHERE id >= 2")
     assert(cat.table("t").orderBy(col("id"))
       .select(col("score")).as[Long].collect().toSeq ==
@@ -63,7 +63,7 @@ class DdlSqlSpec extends SparkSpec {
     val (cat, root) = freshCat()
     seed(cat)
     val v0 = cat.currentVersion("t").get
-    DdlSql.execute(spark, cat, "ALTER TABLE t RENAME COLUMN v TO label")
+    CatalogSql.execute(spark, cat, "ALTER TABLE t RENAME COLUMN v TO label")
     assert(cat.currentVersion("t").get == v0 + 1)
     assert(cat.table("t").columns.toSeq == Seq("id", "label"))
     assert(cat.table("t").orderBy(col("id"))
@@ -72,10 +72,10 @@ class DdlSqlSpec extends SparkSpec {
     assert(cat.tableAsOfVersion("t", v0).columns.toSeq == Seq("id", "v"))
     // renaming onto an existing name, or a missing source, is loud
     intercept[IllegalArgumentException] {
-      DdlSql.execute(spark, cat, "ALTER TABLE t RENAME COLUMN label TO id")
+      CatalogSql.execute(spark, cat, "ALTER TABLE t RENAME COLUMN label TO id")
     }
     intercept[IllegalArgumentException] {
-      DdlSql.execute(spark, cat, "ALTER TABLE t RENAME COLUMN nope TO x")
+      CatalogSql.execute(spark, cat, "ALTER TABLE t RENAME COLUMN nope TO x")
     }
     Streams.rmTree(root)
   }
@@ -85,20 +85,20 @@ class DdlSqlSpec extends SparkSpec {
     val (cat, root) = freshCat()
     seed(cat)
     val v0 = cat.currentVersion("t").get
-    DdlSql.execute(spark, cat, "ALTER TABLE t DROP COLUMN v")
+    CatalogSql.execute(spark, cat, "ALTER TABLE t DROP COLUMN v")
     assert(cat.currentVersion("t").get == v0 + 1)
     assert(cat.table("t").columns.toSeq == Seq("id"))
     assert(cat.tableAsOfVersion("t", v0).columns.toSeq == Seq("id", "v"))
     // missing without IF EXISTS: loud; with IF EXISTS: no-op version
     intercept[IllegalArgumentException] {
-      DdlSql.execute(spark, cat, "ALTER TABLE t DROP COLUMN nope")
+      CatalogSql.execute(spark, cat, "ALTER TABLE t DROP COLUMN nope")
     }
     val vBefore = cat.currentVersion("t").get
-    DdlSql.execute(spark, cat,
+    CatalogSql.execute(spark, cat,
       "ALTER TABLE t DROP COLUMN IF EXISTS nope")
     assert(cat.currentVersion("t").get == vBefore)
     intercept[IllegalArgumentException] { // last column must survive
-      DdlSql.execute(spark, cat, "ALTER TABLE t DROP COLUMN id")
+      CatalogSql.execute(spark, cat, "ALTER TABLE t DROP COLUMN id")
     }
     Streams.rmTree(root)
   }
@@ -111,30 +111,30 @@ class DdlSqlSpec extends SparkSpec {
     cat.create("w", df.schema)
     cat.overwrite("w", df)
     val v0 = cat.currentVersion("w").get
-    DdlSql.execute(spark, cat, "ALTER TABLE w ALTER COLUMN n TYPE BIGINT")
+    CatalogSql.execute(spark, cat, "ALTER TABLE w ALTER COLUMN n TYPE BIGINT")
     assert(cat.table("w").schema("n").dataType ==
       org.apache.spark.sql.types.LongType)
     assert(cat.tableAsOfVersion("w", v0).schema("n").dataType ==
       org.apache.spark.sql.types.IntegerType)
     // the widened type is live: a 64-bit value flows through
-    DmlSql.execute(spark, cat,
+    CatalogSql.execute(spark, cat,
       "UPDATE w SET n = n * 400000000 WHERE id = 2")
     assert(cat.table("w").where(col("id") === 2).head().getLong(1) ==
       8000000000L)
     // values and positions stable for untouched rows
     assert(cat.table("w").where(col("id") === 1).head().getLong(1) == 10L)
     intercept[IllegalArgumentException] { // narrowing
-      DdlSql.execute(spark, cat, "ALTER TABLE w ALTER COLUMN n TYPE INT")
+      CatalogSql.execute(spark, cat, "ALTER TABLE w ALTER COLUMN n TYPE INT")
     }
     intercept[IllegalArgumentException] { // cross-family
-      DdlSql.execute(spark, cat,
+      CatalogSql.execute(spark, cat,
         "ALTER TABLE w ALTER COLUMN id TYPE STRING")
     }
     intercept[IllegalArgumentException] { // same type: no-op rejected
-      DdlSql.execute(spark, cat, "ALTER TABLE w ALTER COLUMN n TYPE BIGINT")
+      CatalogSql.execute(spark, cat, "ALTER TABLE w ALTER COLUMN n TYPE BIGINT")
     }
     intercept[IllegalArgumentException] { // missing column
-      DdlSql.execute(spark, cat, "ALTER TABLE w ALTER COLUMN z TYPE BIGINT")
+      CatalogSql.execute(spark, cat, "ALTER TABLE w ALTER COLUMN z TYPE BIGINT")
     }
     Streams.rmTree(root)
   }
@@ -144,20 +144,20 @@ class DdlSqlSpec extends SparkSpec {
     val (cat, root) = freshCat()
     seed(cat)
     intercept[IllegalArgumentException] {
-      DdlSql.execute(spark, cat, "ALTER TABLE t ADD COLUMN v STRING")
+      CatalogSql.execute(spark, cat, "ALTER TABLE t ADD COLUMN v STRING")
     }
     intercept[IllegalArgumentException] {
-      DdlSql.execute(spark, cat, "ALTER TABLE t ADD COLUMN s.f STRING")
+      CatalogSql.execute(spark, cat, "ALTER TABLE t ADD COLUMN s.f STRING")
     }
     intercept[IllegalArgumentException] {
-      DdlSql.execute(spark, cat,
+      CatalogSql.execute(spark, cat,
         "ALTER TABLE t ADD COLUMN w STRING FIRST")
     }
     intercept[IllegalArgumentException] {
-      DdlSql.execute(spark, cat, "SELECT 1")
+      CatalogSql.execute(spark, cat, "SELECT 1")
     }
     intercept[IllegalArgumentException] {
-      DdlSql.execute(spark, cat, "ALTER TABLE missing ADD COLUMN x INT")
+      CatalogSql.execute(spark, cat, "ALTER TABLE missing ADD COLUMN x INT")
     }
     Streams.rmTree(root)
   }

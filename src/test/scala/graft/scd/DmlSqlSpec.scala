@@ -19,7 +19,7 @@ class DmlSqlSpec extends SparkSpec {
 
   test("DELETE: TRUE deletes, FALSE and NULL keep") {
     seed.createOrReplaceTempView("dml_t")
-    val got = DmlSql.plan(spark, "DELETE FROM dml_t WHERE v > 15")
+    val got = CatalogSql.plan(spark, "DELETE FROM dml_t WHERE v > 15")
       .orderBy($"id").collect().map(_.getLong(0)).toSeq
     // v>15: id3,id4 TRUE (deleted); id1 FALSE, id2 NULL (kept)
     assert(got == Seq(1L, 2L))
@@ -27,7 +27,7 @@ class DmlSqlSpec extends SparkSpec {
 
   test("UPDATE: assignments apply only where the predicate is TRUE") {
     seed.createOrReplaceTempView("dml_t")
-    val got = DmlSql.plan(spark,
+    val got = CatalogSql.plan(spark,
         "UPDATE dml_t SET name = concat(name, '!'), v = v + 1 WHERE v >= 30")
       .orderBy($"id").collect()
       .map(r => (r.getLong(0), r.getString(1),
@@ -38,7 +38,7 @@ class DmlSqlSpec extends SparkSpec {
 
   test("aliased target with qualified assignment and no WHERE") {
     seed.createOrReplaceTempView("dml_t")
-    val got = DmlSql.plan(spark, "UPDATE dml_t AS x SET x.v = 0")
+    val got = CatalogSql.plan(spark, "UPDATE dml_t AS x SET x.v = 0")
       .agg(sum($"v")).collect().head.getLong(0)
     assert(got == 0L)
   }
@@ -50,8 +50,8 @@ class DmlSqlSpec extends SparkSpec {
     cat.create("t", seed.schema)
     cat.overwrite("t", seed)
     val v0 = cat.currentVersion("t").get
-    DmlSql.execute(spark, cat, "DELETE FROM t WHERE id % 2 = 0")
-    DmlSql.execute(spark, cat,
+    CatalogSql.execute(spark, cat, "DELETE FROM t WHERE id % 2 = 0")
+    CatalogSql.execute(spark, cat,
       "UPDATE t SET name = upper(name) WHERE v IS NOT NULL")
     assert(cat.currentVersion("t").get == v0 + 2)
     val fin = cat.table("t").orderBy($"id").collect()
@@ -65,9 +65,16 @@ class DmlSqlSpec extends SparkSpec {
   test("non-DML statements and unknown columns are rejected") {
     seed.createOrReplaceTempView("dml_t")
     intercept[IllegalArgumentException](
-      DmlSql.plan(spark, "SELECT * FROM dml_t"))
+      CatalogSql.plan(spark, "SELECT * FROM dml_t"))
     intercept[IllegalArgumentException](
-      DmlSql.plan(spark, "UPDATE dml_t SET nope = 1"))
+      CatalogSql.plan(spark, "UPDATE dml_t SET nope = 1"))
+    // a value that does not convert to the column type is loud, never
+    // a silent retype of the column
+    val e = intercept[Exception](
+      CatalogSql.plan(spark, "UPDATE dml_t SET v = 'x' WHERE id = 1")
+        .collect())
+    assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains("not coercible"))))
   }
 
   test("executeMor pins its base: a stale-base delta publish is loud") {
@@ -84,7 +91,7 @@ class DmlSqlSpec extends SparkSpec {
       cat.publishDelta("t", "id", Seq(2L).toDF("id"),
         expectedBase = Some(v)))
     // unraced, the pinned path publishes and resolves normally
-    val got = DmlSql.executeMor(spark, cat,
+    val got = CatalogSql.executeMor(spark, cat,
       "DELETE FROM t WHERE id = 1", "id")
     assert(got.orderBy($"id").collect().map(_.getLong(0)).toSeq ==
       Seq(2L, 3L))

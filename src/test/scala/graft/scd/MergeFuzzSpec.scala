@@ -8,7 +8,7 @@ private[scd] case class MergeFuzzRow(id: Long, name: String, v: Long)
 
 /** Fuzz the MERGE INTO door: random tables and random clause sets from
   * a closed template space, each statement executed twice — through
-  * MergeSql's compiled plan and through an independent plain-Scala
+  * CatalogSql.plan and through an independent plain-Scala
   * interpreter of ANSI MERGE semantics (first-match-wins per row
   * class) — and compared as row multisets.
   */
@@ -127,7 +127,7 @@ class MergeFuzzSpec extends SparkSpec {
           case a: TDel => clauseSql("NOT MATCHED BY SOURCE", a, "DELETE")
           case o => sys.error(s"$o")
         }).mkString("\n")
-      val got = MergeSql.plan(spark, sql).collect()
+      val got = CatalogSql.plan(spark, sql).collect()
         .map(r => MergeFuzzRow(r.getLong(0), r.getString(1), r.getLong(2)))
         .groupBy(identity).view.mapValues(_.size).toMap
       val want = interpret(tgt, src, matched, notMatched, bySource)

@@ -24,7 +24,7 @@ class MergeSqlSpec extends SparkSpec {
 
   test("update / delete / insert clauses with conditions, first-match-wins") {
     fixture()
-    val out = MergeSql.plan(spark,
+    val out = CatalogSql.plan(spark,
       """MERGE INTO msql_t t USING msql_s s ON t.id = s.id
         |WHEN MATCHED AND s.v > 100 THEN UPDATE SET name = s.name, v = s.v
         |WHEN MATCHED THEN DELETE
@@ -40,7 +40,7 @@ class MergeSqlSpec extends SparkSpec {
 
   test("NOT MATCHED BY SOURCE clauses update or delete unmatched target rows") {
     fixture()
-    val out = MergeSql.plan(spark,
+    val out = CatalogSql.plan(spark,
       """MERGE INTO msql_t t USING msql_s s ON t.id = s.id
         |WHEN MATCHED THEN UPDATE SET v = s.v
         |WHEN NOT MATCHED BY SOURCE AND t.v > 5 THEN UPDATE SET name = 'stale'
@@ -51,7 +51,7 @@ class MergeSqlSpec extends SparkSpec {
 
   test("UPDATE SET * and INSERT * star forms") {
     fixture()
-    val out = MergeSql.plan(spark,
+    val out = CatalogSql.plan(spark,
       """MERGE INTO msql_t t USING msql_s s ON t.id = s.id
         |WHEN MATCHED THEN UPDATE SET *
         |WHEN NOT MATCHED THEN INSERT *
@@ -63,7 +63,7 @@ class MergeSqlSpec extends SparkSpec {
 
   test("USING an aliased subquery (recovered from the statement text)") {
     fixture()
-    val out = MergeSql.plan(spark,
+    val out = CatalogSql.plan(spark,
       """MERGE INTO msql_t t
         |USING (SELECT id, upper(name) AS name, v * 10 AS v
         |       FROM msql_s WHERE v >= 40) s
@@ -85,7 +85,7 @@ class MergeSqlSpec extends SparkSpec {
     // the target row must not duplicate through the pairwise join
     Seq((2L, "x", 1L), (2L, "y", 2L), (9L, "new", 90L))
       .toDF("id", "name", "v").createOrReplaceTempView("msql_multi")
-    val out = MergeSql.plan(spark,
+    val out = CatalogSql.plan(spark,
       """MERGE INTO msql_t t USING msql_multi s ON t.id = s.id
         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
       .orderBy("id").collect().map(r => (r.getLong(0), r.getString(1)))
@@ -94,17 +94,28 @@ class MergeSqlSpec extends SparkSpec {
 
   test("assignment keys resolve case-insensitively; unknown columns error") {
     fixture()
-    val out = MergeSql.plan(spark,
+    val out = CatalogSql.plan(spark,
       """MERGE INTO msql_t t USING msql_s s ON t.id = s.id
         |WHEN MATCHED THEN UPDATE SET V = s.v""".stripMargin)
       .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(2)))
     assert(out.toSeq == Seq((1L, 10L), (2L, 200L), (3L, 30L)))
     val e = intercept[IllegalArgumentException] {
-      MergeSql.plan(spark,
+      CatalogSql.plan(spark,
         """MERGE INTO msql_t t USING msql_s s ON t.id = s.id
           |WHEN MATCHED THEN UPDATE SET nosuch = s.v""".stripMargin)
     }
     assert(e.getMessage.contains("unknown target column"))
+    // a qualifier on an assignment key must name the target
+    val q = CatalogSql.plan(spark,
+      """MERGE INTO msql_t t USING msql_s s ON t.id = s.id
+        |WHEN MATCHED THEN UPDATE SET t.v = s.v""".stripMargin)
+      .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(2)))
+    assert(q.toSeq == Seq((1L, 10L), (2L, 200L), (3L, 30L)))
+    intercept[IllegalArgumentException] {
+      CatalogSql.plan(spark,
+        """MERGE INTO msql_t t USING msql_s s ON t.id = s.id
+          |WHEN MATCHED THEN UPDATE SET s.v = s.v""".stripMargin)
+    }
   }
 
   test("execute publishes atomically through the catalog and rejects " +
@@ -116,7 +127,7 @@ class MergeSqlSpec extends SparkSpec {
       StructField("name", StringType), StructField("v", LongType)))
     cat.create("msql_dim", schema)
     cat.overwrite("msql_dim", spark.table("msql_t"))
-    val out = MergeSql.execute(spark, cat,
+    val out = CatalogSql.execute(spark, cat,
       """MERGE INTO msql_dim t USING msql_s s ON t.id = s.id
         |WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *
         |""".stripMargin)
@@ -127,13 +138,34 @@ class MergeSqlSpec extends SparkSpec {
     Seq((2L, "x", 1L), (2L, "y", 2L)).toDF("id", "name", "v")
       .createOrReplaceTempView("msql_dup")
     val e = intercept[IllegalArgumentException] {
-      MergeSql.execute(spark, cat,
+      CatalogSql.execute(spark, cat,
         """MERGE INTO msql_dim t USING msql_dup s ON t.id = s.id
           |WHEN MATCHED THEN UPDATE SET *""".stripMargin)
     }
     assert(e.getMessage.contains("cardinality"))
     // the failed merge must not have touched the published table
     assert(cat.table("msql_dim").count() == 4)
+  }
+
+  test("execute resolves a USING subquery's relations catalog-first") {
+    fixture()
+    val cat = new ParquetCatalog(spark,
+      java.nio.file.Files.createTempDirectory("graft-msql-sub").toString)
+    cat.createAs("msql_sub_t", spark.table("msql_t"))
+    // the source table lives only in the catalog: no session view of it
+    cat.createAs("msql_sub_s", spark.table("msql_s"))
+    assert(!spark.catalog.tableExists("msql_sub_s"))
+    val out = CatalogSql.execute(spark, cat,
+      """MERGE INTO msql_sub_t t
+        |USING (SELECT id, upper(name) AS name, v * 10 AS v
+        |       FROM msql_sub_s WHERE v >= 40) m
+        |ON t.id = m.id
+        |WHEN MATCHED THEN UPDATE SET *
+        |WHEN NOT MATCHED THEN INSERT *
+        |""".stripMargin)
+      .orderBy("id").collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+    assert(out.toSeq == Seq(
+      (1L, "a", 10L), (2L, "B", 2000L), (3L, "c", 30L), (4L, "D", 400L)))
   }
 
   test("checked plan (the execute path) joins target against source ONCE " +
@@ -143,19 +175,19 @@ class MergeSqlSpec extends SparkSpec {
       """MERGE INTO msql_t t USING msql_s s ON t.id = s.id
         |WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *
         |""".stripMargin
-    val checked = MergeSql.planChecked(spark, sql)
+    val checked = CatalogSql.planChecked(spark, sql)
     val joins = checked.queryExecution.optimizedPlan.collect {
       case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
     }
     assert(joins.length == 1, s"expected ONE join, got:\n${joins.mkString}")
     // same content as the unchecked plan when cardinality holds
     assert(checked.orderBy("id").collect().toSeq ==
-      MergeSql.plan(spark, sql).orderBy("id").collect().toSeq)
+      CatalogSql.plan(spark, sql).orderBy("id").collect().toSeq)
     // and the guard still fires from inside that single-join plan
     import spark.implicits._
     Seq((2L, "x", 1L), (2L, "y", 2L)).toDF("id", "name", "v")
       .createOrReplaceTempView("msql_dup2")
-    val bad = MergeSql.planChecked(spark,
+    val bad = CatalogSql.planChecked(spark,
       """MERGE INTO msql_t t USING msql_dup2 s ON t.id = s.id
         |WHEN MATCHED THEN DELETE""".stripMargin)
     val e = intercept[Exception] { bad.count() }
@@ -167,7 +199,7 @@ class MergeSqlSpec extends SparkSpec {
 
   test("non-coercible assignment values raise instead of writing NULL") {
     fixture()
-    val bad = MergeSql.plan(spark,
+    val bad = CatalogSql.plan(spark,
       """MERGE INTO msql_t t USING msql_s s ON t.id = s.id
         |WHEN MATCHED THEN UPDATE SET v = 'not-a-number'""".stripMargin)
     // collect(), not count(): a bare count lets Catalyst prune the
@@ -178,7 +210,7 @@ class MergeSqlSpec extends SparkSpec {
     assert(chain(e).exists(t =>
       Option(t.getMessage).exists(_.contains("not coercible"))))
     // a legitimately-coercible string still converts
-    val ok = MergeSql.plan(spark,
+    val ok = CatalogSql.plan(spark,
       """MERGE INTO msql_t t USING msql_s s ON t.id = s.id
         |WHEN MATCHED THEN UPDATE SET v = '77'""".stripMargin)
       .filter(col("id") === 2).collect()
@@ -202,6 +234,22 @@ class MergeSqlSpec extends SparkSpec {
     assert(rows(viaMerge) == rows(viaEngine))
   }
 
+  test("MergeIntoScd registers no session views") {
+    import ScdMergeSpec._
+    val production = spark.createDataFrame(java.util.Arrays.asList(
+      Row(1, "user1", true, "a1", "123", "John", "Doe", 1980, 1,
+        ts("2024-04-01 00:00:00"), high, true)), prodSchema)
+    val staging = spark.createDataFrame(java.util.Arrays.asList(
+      Row("user1", "John", "Doe", 1980, true, "a2", "123")), stagSchema)
+    def tables() = spark.catalog.listTables().collect()
+      .map(t => (t.name, t.isTemporary)).toSet
+    val before = tables()
+    val merged = (1 to 5).map(_ => MergeIntoScd(spark, production, staging,
+      dimUser, "2024-05-25 12:00:00", "2200-01-01 00:00:00")).last
+    assert(tables() == before)
+    assert(merged.count() == 2) // v1 closed, v2 opened
+  }
+
   // ---- schema evolution (opt-in, Delta autoMerge-style) --------------
 
   private def evoFixture(): Unit = {
@@ -215,13 +263,13 @@ class MergeSqlSpec extends SparkSpec {
   test("evolution off: star forms ignore extra source columns; explicit " +
       "assignment to an unknown column still errors") {
     evoFixture()
-    val out = MergeSql.plan(spark,
+    val out = CatalogSql.plan(spark,
       """MERGE INTO msql_et t USING msql_es s ON t.id = s.id
         |WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *
         |""".stripMargin)
     assert(out.columns.toSeq == Seq("id", "name"))
     val e = intercept[IllegalArgumentException] {
-      MergeSql.plan(spark,
+      CatalogSql.plan(spark,
         """MERGE INTO msql_et t USING msql_es s ON t.id = s.id
           |WHEN MATCHED THEN UPDATE SET region = s.region""".stripMargin)
     }
@@ -231,7 +279,7 @@ class MergeSqlSpec extends SparkSpec {
   test("evolution: INSERT */UPDATE SET * append new source columns; " +
       "pre-existing rows read NULL there") {
     evoFixture()
-    val out = MergeSql.plan(spark,
+    val out = CatalogSql.plan(spark,
       """MERGE INTO msql_et t USING msql_es s ON t.id = s.id
         |WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *
         |""".stripMargin, evolveSchema = true)
@@ -245,7 +293,7 @@ class MergeSqlSpec extends SparkSpec {
 
   test("evolution: explicit assignments define new typed columns") {
     evoFixture()
-    val out = MergeSql.plan(spark,
+    val out = CatalogSql.plan(spark,
       """MERGE INTO msql_et t USING msql_es s ON t.id = s.id
         |WHEN MATCHED THEN UPDATE SET region = s.region
         |WHEN NOT MATCHED THEN INSERT (id, name, region)
@@ -262,7 +310,7 @@ class MergeSqlSpec extends SparkSpec {
   test("evolution composes with NOT MATCHED BY SOURCE and the " +
       "cardinality check") {
     evoFixture()
-    val out = MergeSql.planChecked(spark,
+    val out = CatalogSql.planChecked(spark,
       """MERGE INTO msql_et t USING msql_es s ON t.id = s.id
         |WHEN MATCHED THEN UPDATE SET *
         |WHEN NOT MATCHED THEN INSERT *
@@ -278,7 +326,7 @@ class MergeSqlSpec extends SparkSpec {
       .toDF("id", "name", "v", "region")
       .createOrReplaceTempView("msql_edup")
     val e = intercept[Exception] {
-      MergeSql.planChecked(spark,
+      CatalogSql.planChecked(spark,
         """MERGE INTO msql_et t USING msql_edup s ON t.id = s.id
           |WHEN MATCHED THEN UPDATE SET *""".stripMargin,
         evolveSchema = true).collect()
@@ -298,7 +346,7 @@ class MergeSqlSpec extends SparkSpec {
       StructField("name", StringType))))
     cat.overwrite("msql_edim", spark.table("msql_et"))
     val v0 = cat.currentVersion("msql_edim").get
-    MergeSql.execute(spark, cat,
+    CatalogSql.execute(spark, cat,
       """MERGE INTO msql_edim t USING msql_es s ON t.id = s.id
         |WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *
         |""".stripMargin, evolveSchema = true)
