@@ -4,17 +4,35 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Comparator
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Minimal versioned table catalog over Parquet directories — the engine
   * analogue of the reference's Hive DDL + `INSERT OVERWRITE` publish
   * (reference `SCD_script.txt:3-4,141`; operators O1-O4, O22, O23 of
   * SURVEY.md §2.1).
   *
-  * Layout: `<root>/<table>/v_<n>/part-*.parquet` plus a `_CURRENT` pointer
-  * file naming the live version. Publishing writes the NEW version
-  * directory first, then atomically replaces `_CURRENT` (POSIX rename over
-  * an existing file) — so:
+  * Layout of one table:
+  * {{{
+  *   <table>/_CURRENT                      names the live version
+  *   <table>/v_<n>/part-*.parquet          the version's rows
+  *   <table>/v_<n>/_graft_schema.json      their schema (df.schema.json)
+  *   <table>/v_<n>/_graft_meta.properties  writer metadata, if any
+  * }}}
+  * and, in a delta version ([[publishDelta]]):
+  * {{{
+  *   <table>/v_<n>/_graft_base.properties  base version and key column
+  *   <table>/v_<n>/_dv/part-*.parquet      the deletion vector
+  *   <table>/v_<n>/_dv/_graft_schema.json  its schema
+  * }}}
+  * Every `_` file is staged with the data and commits with it. The
+  * stored schema lets a read build its relation with no Spark job (no
+  * footer inference); versions without one — written before the
+  * sidecar existed, or hive-partitioned (`partitionBy`), whose
+  * partition-column types come from directory names — are read by
+  * inference. Publishing writes the NEW version directory first, then
+  * atomically replaces `_CURRENT` (POSIX rename over an existing file)
+  * — so:
   *
   *  - readers never observe a partial table (the reference gets this from
   *    HDFS directory replace; we get it from the pointer swap);
@@ -31,6 +49,7 @@ final class ParquetCatalog(spark: SparkSession, root: String) {
 
   private val MetaFile = "_graft_meta.properties"
   private val BaseFile = "_graft_base.properties"
+  private val SchemaFile = "_graft_schema.json"
 
   private def tableDir(name: String): Path = Paths.get(root, name)
   private def versionDir(name: String, v: Long): Path =
@@ -72,10 +91,9 @@ final class ParquetCatalog(spark: SparkSession, root: String) {
     else if (!ifExists) throw new IllegalArgumentException(s"no table $name")
   }
 
-  /** O5: scan the current committed snapshot. Plain inference: parquet
-    * footers carry the schema even for empty tables, and an explicit
-    * schema(read(...).schema) would just list files and read footers a
-    * second time.
+  /** O5: scan the current committed snapshot. Building the DataFrame
+    * runs no Spark job: the version's stored schema stands in for
+    * parquet footer inference ([[readParquet]]).
     */
   def table(name: String): DataFrame = {
     val v = currentVersion(name)
@@ -96,39 +114,80 @@ final class ParquetCatalog(spark: SparkSession, root: String) {
     val dir = versionDir(name, v)
     require(Files.exists(dir), s"no version v_$v of $name")
     deltaBase(name, v) match {
-      case None => spark.read.parquet(dir.toString)
+      case None => readParquet(dir)
       case Some((baseV, key)) =>
         val base = readVersion(name, baseV)
         val dvDir = dir.resolve("_dv")
         val afterDel =
           if (Files.exists(dvDir))
-            base.join(spark.read.parquet(dvDir.toString), Seq(key),
-              "left_anti")
+            base.join(readParquet(dvDir), Seq(key), "left_anti")
           else base
-        if (hasDataFiles(dir))
-          afterDel.unionByName(spark.read.parquet(dir.toString))
+        if (dataFiles(dir).nonEmpty) afterDel.unionByName(readParquet(dir))
         else afterDel
     }
   }
+
+  /** The parquet rows under `dir`, the one read every version goes
+    * through. With the schema its publish stored ([[SchemaFile]]) the
+    * relation is built from that schema, and Spark runs no job to infer
+    * it from a footer; the file source makes it nullable exactly as
+    * inference does. A directory without one falls back to inference.
+    *
+    * Spark's file index hides (and warns about) a root path named like
+    * `_dv`, so a deletion vector is read through its part files — unless
+    * there are more than the index lists on the driver, where naming
+    * each file would start a listing job instead.
+    */
+  private def readParquet(dir: Path): DataFrame = {
+    val files =
+      if (dir.getFileName.toString.startsWith("_")) dataFiles(dir) else Nil
+    val listedOnDriver = spark.conf
+      .get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
+    val paths =
+      if (files.nonEmpty && files.size <= listedOnDriver) files.map(_.toString)
+      else Seq(dir.toString)
+    val stored = dir.resolve(SchemaFile)
+    if (Files.exists(stored))
+      spark.read.schema(DataType.fromJson(Files.readString(stored))
+        .asInstanceOf[StructType]).parquet(paths: _*)
+    else spark.read.parquet(paths: _*)
+  }
+
+  /** Stage `schema` beside the parquet files just written to `dir`. */
+  private def writeSchema(dir: Path, schema: StructType): Unit =
+    Files.writeString(dir.resolve(SchemaFile), schema.json)
 
   /** (base version, key column) if `v` is a delta version. */
   private def deltaBase(name: String, v: Long): Option[(Long, String)] = {
     val p = versionDir(name, v).resolve(BaseFile)
     if (!Files.exists(p)) None
     else {
-      val props = new java.util.Properties()
-      val in = Files.newInputStream(p)
-      try props.load(in) finally in.close()
-      Some((props.getProperty("base").toLong, props.getProperty("key")))
+      val props = readProps(p)
+      Some((props("base").toLong, props("key")))
     }
   }
 
-  private def hasDataFiles(dir: Path): Boolean = {
+  private def readProps(p: Path): Map[String, String] = {
+    val props = new java.util.Properties()
+    val in = Files.newInputStream(p)
+    try props.load(in) finally in.close()
+    props.asScala.toMap
+  }
+
+  private def writeProps(p: Path, kv: Map[String, String]): Unit = {
+    val props = new java.util.Properties()
+    kv.foreach { case (k, v) => props.setProperty(k, v) }
+    val out = Files.newOutputStream(p)
+    try props.store(out, null) finally out.close()
+  }
+
+  /** The part files directly under `dir` (no `_` sidecars, no `.crc`). */
+  private def dataFiles(dir: Path): Seq[Path] = {
     val listing = Files.list(dir)
-    try listing.anyMatch { p =>
+    try listing.iterator().asScala.filter { p =>
       val n = p.getFileName.toString
       Files.isRegularFile(p) && !n.startsWith("_") && !n.startsWith(".")
-    } finally listing.close()
+    }.toList finally listing.close()
   }
 
   /** O22: INSERT INTO (append) — copy-on-write into a new version, so
@@ -200,15 +259,15 @@ final class ParquetCatalog(spark: SparkSession, root: String) {
       addRows match {
         case Some(rows) =>
           rows.write.mode("overwrite").parquet(tmpDir.toString)
+          writeSchema(tmpDir, rows.schema)
         case None => Files.createDirectories(tmpDir)
       }
-      delKeys.write.mode("overwrite")
-        .parquet(tmpDir.resolve("_dv").toString)
-      val props = new java.util.Properties()
-      props.setProperty("base", base.toString)
-      props.setProperty("key", keyCol)
-      val out = Files.newOutputStream(tmpDir.resolve(BaseFile))
-      try props.store(out, null) finally out.close()
+      // the vector's own schema: its key type may differ from the base's
+      val dvDir = tmpDir.resolve("_dv")
+      delKeys.write.mode("overwrite").parquet(dvDir.toString)
+      writeSchema(dvDir, delKeys.schema)
+      writeProps(tmpDir.resolve(BaseFile),
+        Map("base" -> base.toString, "key" -> keyCol))
     })
   }
 
@@ -232,14 +291,7 @@ final class ParquetCatalog(spark: SparkSession, root: String) {
     val v = currentVersion(name)
       .getOrElse(throw new IllegalArgumentException(s"no table $name"))
     val p = versionDir(name, v).resolve(MetaFile)
-    if (!Files.exists(p)) Map.empty
-    else {
-      val props = new java.util.Properties()
-      val in = Files.newInputStream(p)
-      try props.load(in) finally in.close()
-      import scala.jdk.CollectionConverters._
-      props.asScala.toMap
-    }
+    if (!Files.exists(p)) Map.empty else readProps(p)
   }
 
   /** Write `df` as the next version, then atomically swap the pointer.
@@ -262,14 +314,12 @@ final class ParquetCatalog(spark: SparkSession, root: String) {
       val writer = df.write.mode("overwrite")
       (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
         .parquet(tmpDir.toString)
-      if (meta.nonEmpty) {
-        // written BEFORE the atomic claim: metadata and data commit (or
-        // vanish) together
-        val props = new java.util.Properties()
-        meta.foreach { case (k, v) => props.setProperty(k, v) }
-        val out = Files.newOutputStream(tmpDir.resolve(MetaFile))
-        try props.store(out, null) finally out.close()
-      }
+      // a partitioned read takes its partition-column types from the
+      // directory names, which a stored schema would override
+      if (partitionBy.isEmpty) writeSchema(tmpDir, df.schema)
+      // written BEFORE the atomic claim: metadata and data commit (or
+      // vanish) together
+      if (meta.nonEmpty) writeProps(tmpDir.resolve(MetaFile), meta)
     })
 
   /** Stage-then-claim loop shared by every publish shape: `stage`

@@ -1,7 +1,7 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
@@ -10,8 +10,9 @@ import scala.util.matching.Regex
 /** Keeps [[SparkEntry.session]] the only place a session is built,
   * [[graft.streaming.StreamFold]] the only streaming fold,
   * [[graft.catalog.IndexStore.publish]] the only index publish,
-  * [[graft.dedup.Dedup]] the only MinHash-LSH implementation, and
-  * [[graft.scd.CatalogSql]] the only SQL statement parser.
+  * [[graft.dedup.Dedup]] the only MinHash-LSH implementation,
+  * [[graft.scd.CatalogSql]] the only SQL statement parser, and the
+  * catalog's one read helper the only place it reads parquet.
   */
 class SessionFactorySpec extends AnyFunSuite {
 
@@ -64,5 +65,25 @@ class SessionFactorySpec extends AnyFunSuite {
   test("CatalogSql.scala is the only source that parses SQL statements") {
     val call = "sqlParser" + ".parsePlan" // split: this file is scanned too
     assert(sourcesWith(call, "src/main/scala") == Seq("CatalogSql.scala"))
+  }
+
+  test("the catalog reads parquet in one helper, so every read uses the " +
+      "stored schema") {
+    // split: this file is scanned too
+    val (infer, stored) = ("read" + ".parquet(", "read" + ".schema(")
+    val root = Paths.get("src/main/scala/graft/catalog")
+    def count(token: String): Map[String, Int] =
+      Files.walk(root).iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .map(p => p.getFileName.toString ->
+          Regex.quote(token).r.findAllMatchIn(Files.readString(p)).size)
+        .filter(_._2 > 0).toMap
+    // the fallback and the stored-schema read, both in `readParquet`
+    assert(count(infer) == Map("ParquetCatalog.scala" -> 1))
+    assert(count(stored) == Map("ParquetCatalog.scala" -> 1))
+    val src = Files.readString(root.resolve("ParquetCatalog.scala"))
+    val helper = src.substring(src.indexOf("private def readParquet("))
+      .takeWhile(_ != '}')
+    assert(helper.contains(infer) && helper.contains(stored))
   }
 }

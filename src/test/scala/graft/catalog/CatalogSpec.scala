@@ -10,10 +10,9 @@ import org.apache.spark.sql.functions._
 class CatalogSpec extends SparkSpec {
   import spark.implicits._
 
-  def freshCatalog(): ParquetCatalog = {
-    val root = Files.createTempDirectory("graft-cat").toString
-    new ParquetCatalog(spark, root)
-  }
+  def freshCatalog(): ParquetCatalog = new ParquetCatalog(spark, freshRoot())
+
+  def freshRoot(): String = Files.createTempDirectory("graft-cat").toString
 
   test("create / createLike / drop / exists") {
     val cat = freshCatalog()
@@ -346,5 +345,132 @@ class CatalogSpec extends SparkSpec {
       assert(catMor.deltaChainLength("t") === 0)
       assert(rows(catMor.table("t")) === rows(catCow.table("t")))
     }
+  }
+
+  test("building a catalog or ScdTable read runs no Spark job") {
+    import ScdMergeSpec._
+    import org.apache.spark.graft.ListenerBridge
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val root = freshRoot()
+    val cat = new ParquetCatalog(spark, root)
+    val dim = new graft.scd.ScdTable(cat, "dim_user", dimUser)
+    dim.init(spark.createDataFrame(java.util.Arrays.asList(
+      org.apache.spark.sql.Row(1, "user1", true, "a1", "123", "John", "Doe",
+        1980, 1, ts("2024-04-01 00:00:00"), high, true)), prodSchema))
+    cat.createAs("t", (1L to 1000L).map(i => (i, s"v$i")).toDF("id", "v"))
+    // v1: a vector in more part files than Spark lists on the driver
+    cat.publishDelta("t", "id", (501L to 1000L).toDF("id").repartition(40))
+    val dv = Files.list(Paths.get(root, "t", "v_000001", "_dv"))
+    assert(try dv.filter(_.toString.endsWith(".parquet")).count() > 32
+      finally dv.close())
+    cat.publishDelta("t", "id", Seq(3).toDF("id"), // v2: an int vector
+      Some(Seq((3L, "c2")).toDF("id", "v")))
+    val facts = Seq(("user1", ts("2024-05-01 00:00:00"))).toDF("login", "ts")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf(build: => org.apache.spark.sql.DataFrame): Int = {
+      ListenerBridge.drain(sc)
+      jobs.set(0)
+      build
+      ListenerBridge.drain(sc)
+      jobs.get
+    }
+    sc.addSparkListener(listener)
+    val built = try Seq(
+      "table" -> jobsOf(cat.table("dim_user")),
+      "full version" -> jobsOf(cat.tableAsOfVersion("t", 0)),
+      "2-delta chain" -> jobsOf(cat.tableAsOfVersion("t", 2)),
+      "active" -> jobsOf(dim.active),
+      "asOf" -> jobsOf(dim.asOf(asOf)),
+      "asOfJoin" -> jobsOf(dim.asOfJoin(facts, Seq("login"), "ts")),
+      "asOfJoinNative" -> jobsOf(dim.asOfJoinNative(facts, Seq("login"), "ts")))
+    finally sc.removeSparkListener(listener)
+    assert(built.forall(_._2 == 0), s"jobs per relation built: $built")
+    assert(cat.table("t").as[(Long, String)].collect().toSet ===
+      (1L to 500L).map(i => (i, if (i == 3) "c2" else s"v$i")).toSet)
+    assert(dim.asOfJoin(facts, Seq("login"), "ts").count() === 1)
+  }
+
+  test("stored-schema reads equal inference for every publish shape") {
+    import graft.scd.CatalogSql
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val root = freshRoot()
+    val cat = new ParquetCatalog(spark, root)
+    // non-nullable columns of the kinds whose nullability or type a
+    // stored schema could get wrong
+    val wide = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("xs", ArrayType(IntegerType, containsNull = false),
+        nullable = false),
+      StructField("st", StructType(Seq(
+        StructField("a", StringType, nullable = false))), nullable = false),
+      StructField("amount", DecimalType(20, 3), nullable = false),
+      StructField("at", TimestampNTZType, nullable = false)))
+    val rows = (1L to 4L).map(i => Row(i, Seq(i.toInt), Row(s"s$i"),
+      new java.math.BigDecimal(s"$i.125"),
+      java.time.LocalDateTime.of(2024, 1, i.toInt, 0, 0)))
+    val wideDf = spark.createDataFrame(rows.asJava, wide)
+    cat.create("w", wide) // empty frame
+    cat.overwrite("w", wideDf)
+    cat.append("w", wideDf.limit(1))
+    cat.overwriteIf("w", wideDf, cat.currentVersion("w").get)
+    cat.compact("w")
+    cat.publishDelta("w", "id", Seq(1L).toDF("id")) // no rows
+    cat.publishDelta("w", "id", Seq(2).toDF("id"), // rows; int vector
+      Some(wideDf.filter(col("id") === 2).withColumn("amount",
+        col("amount") + lit(1))))
+    cat.createAs("c", Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+    CatalogSql.execute(spark, cat, "ALTER TABLE c ADD COLUMN score BIGINT")
+    CatalogSql.execute(spark, cat, "ALTER TABLE c DROP COLUMN v")
+    CatalogSql.execute(spark, cat, "ALTER TABLE c RENAME COLUMN score TO s")
+    cat.overwrite("c", cat.table("c").withColumn("f", lit(0.5))) // widened
+    // the same tables in the layout of versions published before the
+    // schema sidecar: every read there infers from parquet footers
+    val legacyRoot = freshRoot()
+    Files.walk(Paths.get(root)).iterator().asScala.toList.foreach { p =>
+      val to = Paths.get(legacyRoot).resolve(Paths.get(root).relativize(p))
+      if (Files.isDirectory(p)) Files.createDirectories(to)
+      else if (p.getFileName.toString != "_graft_schema.json") Files.copy(p, to)
+    }
+    val legacy = new ParquetCatalog(spark, legacyRoot)
+    def sorted(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(_.toString).sorted.toSeq
+    for (t <- Seq("w", "c"); v <- 0L to cat.currentVersion(t).get) {
+      val dir = Paths.get(root, t, f"v_$v%06d")
+      val stored = cat.tableAsOfVersion(t, v)
+      val delta = Files.exists(dir.resolve("_dv"))
+      assert(Files.exists(dir.resolve(if (delta) "_dv/_graft_schema.json"
+        else "_graft_schema.json")), s"$t v$v has no stored schema")
+      if (!delta)
+        assert(stored.schema === spark.read.parquet(dir.toString).schema,
+          s"$t v$v")
+      val inferred = legacy.tableAsOfVersion(t, v)
+      assert(stored.schema === inferred.schema, s"$t v$v")
+      assert(sorted(stored) === sorted(inferred), s"$t v$v")
+    }
+    assert(cat.table("c").columns.toSeq === Seq("id", "s", "f"))
+    assert(cat.table("w").count() === 3)
+  }
+
+  test("a partitioned publish keeps its inferred partition-column types") {
+    val root = freshRoot()
+    val cat = new ParquetCatalog(spark, root)
+    val df = Seq((1L, 7L), (2L, 8L)).toDF("id", "grp")
+    cat.createAs("p", df)
+    cat.overwrite("p", df, partitionBy = Seq("grp"))
+    val dir = Paths.get(root, "p", "v_000001")
+    assert(!Files.exists(dir.resolve("_graft_schema.json")))
+    // grp's type comes from the directory names (int), not the frame (long)
+    assert(cat.table("p").schema === spark.read.parquet(dir.toString).schema)
+    assert(cat.table("p").schema("grp").dataType ===
+      org.apache.spark.sql.types.IntegerType)
+    assert(cat.table("p").as[(Long, Int)].collect().toSet ===
+      Set((1L, 7), (2L, 8)))
   }
 }
